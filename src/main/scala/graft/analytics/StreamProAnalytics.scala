@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's full analytical workload (src/notebooks/analysis.ipynb,
@@ -56,9 +56,10 @@ object StreamProAnalytics {
       |LIMIT 10""".stripMargin)
 
   /** Days with multiple sessions — cell 8 (GROUP BY ordinal, HAVING,
-    * ordered GROUP_CONCAT → Spark 4 listagg WITHIN GROUP). */
+    * ordered GROUP_CONCAT → Spark 4 listagg WITHIN GROUP). Each user id
+    * binds as its own named parameter. */
   def dailyPatterns(spark: SparkSession, userIds: Seq[String]): DataFrame = {
-    val inList = userIds.map(u => s"'$u'").mkString(", ")
+    val params = userIds.zipWithIndex.map { case (u, i) => s"user$i" -> u }
     spark.sql(
       s"""SELECT
          |  SPLIT_PART(session_id, '_', 1) || '_' || SPLIT_PART(session_id, '_', 2) as user_id,
@@ -66,15 +67,17 @@ object StreamProAnalytics {
          |  COUNT(DISTINCT session_id) as sessions_per_day,
          |  listagg(SPLIT_PART(session_id, '_', 5)) WITHIN GROUP (ORDER BY session_id) as sub_session_indices
          |FROM trusted_events
-         |WHERE user_id IN ($inList)
+         |WHERE user_id IN (${params.map(":" + _._1).mkString(", ")})
          |GROUP BY 1, 2
          |HAVING COUNT(DISTINCT session_id) > 1
-         |ORDER BY 1, CAST(day_index AS INTEGER)""".stripMargin)
+         |ORDER BY 1, CAST(day_index AS INTEGER)""".stripMargin,
+      params.toMap)
   }
 
-  /** Session timeline for one user — cell 9 (conditional aggregation). */
+  /** Session timeline for one user — cell 9 (conditional aggregation);
+    * the user id binds as a named parameter. */
   def sessionTimeline(spark: SparkSession, userId: String): DataFrame = spark.sql(
-    s"""SELECT session_id,
+    """SELECT session_id,
        |  SPLIT_PART(session_id, '_', 4) as day_index,
        |  SPLIT_PART(session_id, '_', 5) as sub_session,
        |  MIN(timestamp) as session_start,
@@ -83,9 +86,10 @@ object StreamProAnalytics {
        |  COUNT(CASE WHEN event_name = 'watch_time' THEN 1 END) as watch_events,
        |  SUM(CASE WHEN event_name = 'watch_time' THEN CAST(value AS DOUBLE) ELSE 0 END) as total_watch_time
        |FROM trusted_events
-       |WHERE user_id = '$userId'
+       |WHERE user_id = :userId
        |GROUP BY session_id, day_index, sub_session
-       |ORDER BY CAST(day_index AS INTEGER), CAST(sub_session AS INTEGER)""".stripMargin)
+       |ORDER BY CAST(day_index AS INTEGER), CAST(sub_session AS INTEGER)""".stripMargin,
+    Map("userId" -> userId))
 
   /** Q1 — % of users reaching ≥30s watch time in their first session —
     * cell 10 (chained CTEs, composite-key join, left join, conditional
@@ -375,22 +379,24 @@ object StreamProAnalytics {
 
   /** Q3 composite drop-off scoring — cell 22's pandas post-pass as
     * DataFrame ops: deviations vs the overall benchmarks and
-    * 0.4/0.3/0.3-weighted composite, worst first. */
+    * 0.4/0.3/0.3-weighted composite, worst first. One lazy plan: the
+    * one-row benchmarks are broadcast and cross-joined in, so building
+    * the frame runs no job. */
   def q3CompositeScores(spark: SparkSession): DataFrame = {
-    val overall = q3OverallBenchmarks(spark).first()
-    // ROUND yields DecimalType here; go through Number for stability
-    def pct(name: String): Double = overall.getAs[Number](name).doubleValue()
-    val oSingle = pct("single_session_rate_pct")
-    val oLow = pct("low_watch_time_rate_pct")
-    val oNoDay1 = pct("no_day1_return_rate_pct")
-    q3DropOffMetrics(spark)
-      .withColumn("single_session_deviation", col("single_session_rate_pct") - oSingle)
-      .withColumn("low_watch_deviation", col("low_watch_time_rate_pct") - oLow)
-      .withColumn("no_day1_deviation", col("no_day1_return_rate_pct") - oNoDay1)
+    val rates = Seq("single_session_rate_pct", "low_watch_time_rate_pct", "no_day1_return_rate_pct")
+    // ROUND yields DecimalType; the deviations are doubles
+    val overall = q3OverallBenchmarks(spark)
+      .select(rates.map(r => col(r).cast("double").as(s"overall_$r")): _*)
+    def deviation(r: String): Column = col(r) - col(s"overall_$r")
+    q3DropOffMetrics(spark).crossJoin(broadcast(overall))
+      .withColumn("single_session_deviation", deviation("single_session_rate_pct"))
+      .withColumn("low_watch_deviation", deviation("low_watch_time_rate_pct"))
+      .withColumn("no_day1_deviation", deviation("no_day1_return_rate_pct"))
       .withColumn("composite_drop_off_score",
         col("single_session_deviation") * 0.4 +
           col("low_watch_deviation") * 0.3 +
           col("no_day1_deviation") * 0.3)
+      .drop(overall.columns.toSeq: _*)
       .orderBy(col("composite_drop_off_score").desc)
   }
 

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Sessions
 import graft.store.LayerPaths
 
 /** Sequential two-stage medallion pipeline — ref src/jobs/pipeline.py:
@@ -62,7 +63,7 @@ object Pipeline {
           opts.get("root"), date)
       else Config(opts.getOrElse("root",
         sys.error("--root <dir with landing/> required (or --env/--conf_dir)")), date)
-    val spark = SparkSession.builder()
+    val spark = Sessions.withEngineDefaults(SparkSession.builder())
       .master(opts.getOrElse("master", "local[4]"))
       .appName("graft-pipeline")
       .config("spark.sql.shuffle.partitions",

@@ -1,9 +1,12 @@
 package graft.pipeline
 
+import java.util.concurrent.Executors
+
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.store.{LayerPaths, Storage}
 
@@ -14,9 +17,13 @@ import graft.store.{LayerPaths, Storage}
   * failures are isolated (the remaining tables still load) and reported
   * in the JobResult — ref :114-116, 181-186.
   *
-  * Scale: each table is one Spark job; reads and writes stream through
-  * executors (nothing is collected to the driver), and the partition
-  * layout gives downstream queries pruning on ingestion_date for free.
+  * Scale: in enforce mode each table is one Spark job, its write. Raw
+  * files are read with their registry types (no inference scan), the
+  * row count is observed while the write runs (no read-back), and the
+  * tables load concurrently, one driver thread each. Reads and writes
+  * stream through executors (nothing is collected to the driver), and
+  * the partition layout gives downstream queries pruning on
+  * ingestion_date for free.
   */
 class RawToTrusted(
     spark: SparkSession,
@@ -29,20 +36,42 @@ class RawToTrusted(
   override def jobName: String = s"raw_to_trusted[$ingestionDate]"
 
   /** Read each table's raw file — dispatch on registered source format
-    * (ref raw_to_trusted_processor.py:100-104). */
+    * (ref raw_to_trusted_processor.py:100-104). Enforce mode reads with
+    * the registry types, so no schema-inference job runs; lax mode
+    * infers, as the reference does. */
   override def extract(): Seq[(SchemaRegistry.TableDef, Try[DataFrame])] =
     tables.map { t =>
       val ext = if (t.sourceFormat == "jsonl") "jsonl" else "csv"
       val path = paths.rawKey(ingestionDate, s"${t.name}_$ingestionDate.$ext")
       t -> Try {
-        if (t.sourceFormat == "jsonl") Storage.readJsonl(spark, path)
-        else Storage.readCsv(spark, path)
+        if (t.sourceFormat == "jsonl") {
+          if (enforceSchema) Storage.readJsonl(spark, path, t.withPartition)
+          else Storage.readJsonl(spark, path)
+        } else {
+          if (enforceSchema) Storage.readCsv(spark, path, csvSchema(t, path))
+          else Storage.readCsv(spark, path)
+        }
       }
     }
 
+  /** The CSV file's own columns in header order, each typed as the
+    * registry column it resolves to by name; columns the registry does
+    * not know stay strings. Matching by name keeps reordered or extra
+    * header columns loading as they did under inference. */
+  private def csvSchema(t: SchemaRegistry.TableDef, path: String): StructType = {
+    val header = Storage.readCsvHeader(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"$path is empty: no CSV header"))
+    val resolver = spark.sessionState.conf.resolver
+    StructType(header.map { name =>
+      val dataType = t.schema.fields.find(f => resolver(f.name, name)).map(_.dataType)
+      StructField(name, dataType.getOrElse(StringType))
+    })
+  }
+
   /** Append the partition literal (ref :131-132) and, in enforce mode,
     * cast/project to the registry schema (the reference never enforces —
-    * SURVEY.md §1.3 — so `enforceSchema=false` replicates lax mode). */
+    * SURVEY.md §1.3 — so `enforceSchema=false` replicates lax mode). A
+    * raw file's own ingestion_date wins where it is set. */
   override def transform(in: Seq[(SchemaRegistry.TableDef, Try[DataFrame])]) =
     in.map { case (t, tried) =>
       t -> tried.map { df =>
@@ -51,27 +80,37 @@ class RawToTrusted(
           else df.withColumn(SchemaRegistry.PartitionCol, lit(ingestionDate))
         if (enforceSchema) {
           val cols = t.schema.fields.map(f => col(f.name).cast(f.dataType)) :+
-            col(SchemaRegistry.PartitionCol).cast("string")
+            coalesce(col(SchemaRegistry.PartitionCol).cast("string"), lit(ingestionDate))
+              .as(SchemaRegistry.PartitionCol)
           withDate.select(cols: _*)
         } else withDate
       }
     }
 
-  /** Write each table; collect per-table failures without aborting the
-    * rest (ref :114-116). Returns total rows written. */
+  /** Write the tables concurrently, one thread per table; collect
+    * per-table failures without aborting the rest (ref :114-116).
+    * Returns total rows written. The pool is created here so its threads
+    * inherit the caller's Spark local properties (job group, scheduler
+    * pool). */
   override def load(in: Seq[(SchemaRegistry.TableDef, Try[DataFrame])]): Long = {
-    val results = in.map { case (t, tried) =>
-      t.name -> tried.flatMap { df =>
-        Try {
-          Storage.writeTrusted(df, SchemaRegistry.PartitionCol,
-            paths.trustedTable(t.locationSuffix))
-          spark.read.parquet(paths.trustedTable(t.locationSuffix))
-            .filter(col(SchemaRegistry.PartitionCol) === ingestionDate).count()
-        }
-      }
-    }
+    val pool = Executors.newFixedThreadPool(math.max(1, in.size))
+    val results =
+      try in.map { case (t, tried) =>
+        pool.submit[(String, Try[Long])](() => t.name -> tried.flatMap(df => Try(write(t, df))))
+      }.map(_.get())
+      finally pool.shutdown()
     failedTables = results.collect { case (n, Failure(_)) => n }
     results.collect { case (_, Success(n)) => n }.sum
+  }
+
+  /** One table's write; the rows it puts in this run's partition are
+    * counted by an observation of the same job. */
+  private def write(t: SchemaRegistry.TableDef, df: DataFrame): Long = {
+    val rows = Observation()
+    Storage.writeTrusted(
+      df.observe(rows, count(when(col(SchemaRegistry.PartitionCol) === ingestionDate, 1)).as("n")),
+      SchemaRegistry.PartitionCol, paths.trustedTable(t.locationSuffix))
+    rows.get("n").asInstanceOf[Long]
   }
 
   @volatile private var failedTables: Seq[String] = Seq.empty

@@ -1,5 +1,6 @@
 package graft.store
 
+import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -75,6 +76,32 @@ object Storage {
     * split + json.loads); Spark's json source is JSONL-native. */
   def readJsonl(spark: SparkSession, path: String): DataFrame =
     spark.read.json(path)
+
+  /** Typed CSV scan: `schema` names the file's columns in header order.
+    * No inference job runs, and FAILFAST makes a value that does not
+    * parse as its column's type fail the read instead of loading null. */
+  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).option("header", "true").option("mode", "FAILFAST").csv(path)
+
+  /** Typed JSON-Lines scan; same contract as the typed [[readCsv]]. */
+  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).option("mode", "FAILFAST").json(path)
+
+  /** A CSV file's header fields, read on the driver through the path's
+    * own FileSystem (one line, no Spark job); None for an empty file.
+    * Parsed like Spark's CSV source parses a header: surrounding
+    * whitespace is kept and an empty name becomes `_c<index>`. */
+  def readCsvHeader(spark: SparkSession, path: String): Option[Seq[String]] = {
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      fs(spark, path).open(new Path(path)), java.nio.charset.StandardCharsets.UTF_8))
+    try Option(in.readLine()).map { line =>
+      val settings = new CsvParserSettings
+      settings.setIgnoreLeadingWhitespaces(false)
+      settings.setIgnoreTrailingWhitespaces(false)
+      new CsvParser(settings).parseLine(line.stripPrefix("\uFEFF")).toSeq
+        .zipWithIndex.map { case (name, i) => Option(name).getOrElse(s"_c$i") }
+    } finally in.close()
+  }
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

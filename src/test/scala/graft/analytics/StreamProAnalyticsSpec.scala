@@ -2,7 +2,9 @@ package graft.analytics
 
 import java.nio.file.Files
 
-import graft.SparkSpecBase
+import org.apache.spark.sql.functions.col
+
+import graft.{JobCounter, SparkSpecBase}
 import graft.fixtures.StreamProFixture
 import graft.pipeline.Pipeline
 
@@ -95,5 +97,37 @@ class StreamProAnalyticsSpec extends SparkSpecBase {
     assert(overview.map(_.getAs[Long]("unique_users")).sum === 100)
     val genres = StreamProAnalytics.genresOverview(spark).collect()
     assert(genres.length === 4)
+  }
+
+  test("Q3 composite scores: one lazy plan, the same rows as the two-step computation") {
+    setup
+    val (scores, jobs) = JobCounter.count(spark)(StreamProAnalytics.q3CompositeScores(spark))
+    assert(jobs === 0)
+    // the notebook's two steps: fetch the overall rates, then deviate from literals
+    val overall = StreamProAnalytics.q3OverallBenchmarks(spark).first()
+    def pct(name: String): Double = overall.getAs[Number](name).doubleValue()
+    val twoStep = StreamProAnalytics.q3DropOffMetrics(spark)
+      .withColumn("single_session_deviation", col("single_session_rate_pct") - pct("single_session_rate_pct"))
+      .withColumn("low_watch_deviation", col("low_watch_time_rate_pct") - pct("low_watch_time_rate_pct"))
+      .withColumn("no_day1_deviation", col("no_day1_return_rate_pct") - pct("no_day1_return_rate_pct"))
+      .withColumn("composite_drop_off_score",
+        col("single_session_deviation") * 0.4 +
+          col("low_watch_deviation") * 0.3 +
+          col("no_day1_deviation") * 0.3)
+    assert(scores.schema === twoStep.schema)
+    val got = scores.collect()
+    assert(got.length === 20)
+    assert(got.toSet === twoStep.collect().toSet)
+    val composite = got.map(_.getAs[Double]("composite_drop_off_score"))
+    assert(composite.toSeq === composite.sorted.reverse.toSeq)
+  }
+
+  test("user ids bind as parameters: a quoted id neither breaks nor widens the query") {
+    setup
+    val hostile = "user_1' OR '1'='1"
+    assert(StreamProAnalytics.sessionTimeline(spark, hostile).collect().isEmpty)
+    assert(StreamProAnalytics.sessionTimeline(spark, "user_1").collect().length === 10)
+    val daily = StreamProAnalytics.dailyPatterns(spark, Seq(hostile, "user_1")).collect()
+    assert(daily.nonEmpty && daily.forall(_.getAs[String]("user_id") === "user_1"))
   }
 }

@@ -1,12 +1,19 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
-import graft.SparkSpecBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+import org.scalatest.concurrent.{ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
+
+import graft.{JobCounter, SparkSpecBase}
 import graft.fixtures.StreamProFixture
 import graft.store.{LayerPaths, Storage}
 
-class PipelineSpec extends SparkSpecBase {
+class PipelineSpec extends SparkSpecBase with TimeLimits {
+
+  private val Date = StreamProFixture.IngestionDate
 
   lazy val root: String = {
     val dir = Files.createTempDirectory("graft-pipeline")
@@ -141,5 +148,110 @@ class PipelineSpec extends SparkSpecBase {
     assert(!r.success)
     assert(r.failedTables === Seq("videos"))
     assert(r.recordsProcessed > 0) // other tables still loaded
+  }
+
+  /** A fresh lake holding the fixture's landing files, with `edit`
+    * applied to them, run through landing → raw. */
+  private def rawLake(edit: Path => Unit = _ => ()): LayerPaths = {
+    val dir = Files.createTempDirectory("graft-lake")
+    StreamProFixture.writeLanding(dir)
+    edit(dir.resolve("landing"))
+    val paths = LayerPaths(dir.toString)
+    assert(new LandingToRaw(spark, paths, Date).run().success)
+    paths
+  }
+
+  private def writeLanding(landing: Path, table: String, ext: String, lines: String*): Unit =
+    Files.write(landing.resolve(s"${table}_$Date.$ext"), java.util.Arrays.asList(lines: _*))
+
+  private def trusted(paths: LayerPaths, t: SchemaRegistry.TableDef): DataFrame =
+    Storage.readParquet(spark, paths.trustedTable(t.locationSuffix), t.withPartition)
+      .filter(col(SchemaRegistry.PartitionCol) === Date)
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("typed raw read loads the same trusted rows as inference plus the registry cast") {
+    val paths = rawLake()
+    val r = new RawToTrusted(spark, paths, Date).runWithFailures()
+    assert(r.success, r.error)
+    for (t <- SchemaRegistry.all) {
+      val raw = paths.rawKey(Date, s"${t.name}_$Date.${t.sourceFormat}")
+      val inferred =
+        if (t.sourceFormat == "jsonl") Storage.readJsonl(spark, raw) else Storage.readCsv(spark, raw)
+      val cast = inferred.select(t.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)) :+
+        lit(Date).as(SchemaRegistry.PartitionCol): _*)
+      val got = trusted(paths, t)
+      assert(got.schema.map(_.dataType) === cast.schema.map(_.dataType), t.name)
+      assert(got.count() === cast.count(), t.name)
+      assert(sameRows(got, cast), t.name)
+    }
+  }
+
+  test("a CSV with reordered and extra header columns still loads by name") {
+    val paths = rawLake { landing =>
+      writeLanding(landing, "videos", "csv",
+        "rating,duration_seconds,patent_id,genre,title,video_id",
+        "5,115,patent_2,Action,Video Title 1,video_1",
+        "3,152,patent_3,Comedy,Video Title 2,video_2")
+    }
+    val r = new RawToTrusted(spark, paths, Date).runWithFailures()
+    assert(r.success, r.error)
+    val videos = trusted(paths, SchemaRegistry.videos).orderBy("video_id").collect()
+    assert(videos.map(_.getAs[String]("video_id")).toSeq === Seq("video_1", "video_2"))
+    assert(videos.map(_.getAs[Int]("duration_seconds")).toSeq === Seq(115, 152))
+    assert(videos.map(_.getAs[String]("genre")).toSeq === Seq("Action", "Comedy"))
+    assert(!trusted(paths, SchemaRegistry.videos).columns.contains("rating"))
+  }
+
+  test("a value that does not parse as its registry type fails only its table, never loads null") {
+    val paths = rawLake { landing =>
+      writeLanding(landing, "videos", "csv",
+        "video_id,title,genre,duration_seconds,patent_id",
+        "video_1,Video Title 1,Action,abc,patent_2")
+      writeLanding(landing, "events", "jsonl",
+        """{"user_id": "user_1", "session_id": "user_1_sess_0_0", "value": "abc"}""")
+    }
+    val r = new RawToTrusted(spark, paths, Date).runWithFailures()
+    assert(!r.success)
+    assert(r.failedTables === Seq("videos", "events"))
+    assert(r.recordsProcessed === 100 + 5) // users + devices still loaded
+    for (t <- Seq(SchemaRegistry.videos, SchemaRegistry.events))
+      assert(!Storage.exists(spark,
+        s"${paths.trustedTable(t.locationSuffix)}/${SchemaRegistry.PartitionCol}=$Date"), t.name)
+  }
+
+  test("a header-only CSV and an empty JSONL load 0 rows without hanging") {
+    val paths = rawLake { landing =>
+      writeLanding(landing, "users", "csv", "user_id,signup_date,subscription_tier,age_group,gender")
+      Files.write(landing.resolve(s"events_$Date.jsonl"), Array.emptyByteArray)
+    }
+    implicit val signaler: ThreadSignaler.type = ThreadSignaler
+    val r = failAfter(2.minutes)(new RawToTrusted(spark, paths, Date).runWithFailures())
+    assert(r.success, r.error)
+    assert(r.failedTables.isEmpty)
+    assert(r.recordsProcessed === 20 + 5) // videos + devices
+    assert(spark.table("trusted_users").count() === 0)
+    assert(spark.table("trusted_events").count() === 0)
+  }
+
+  test("re-running an ingestion date reports the same row count, not a doubled one") {
+    val dir = Files.createTempDirectory("graft-rerun")
+    StreamProFixture.writeLanding(dir)
+    val cfg = Pipeline.Config(dir.toString, Date)
+    val events = Files.readAllLines(dir.resolve(s"landing/events_$Date.jsonl")).size
+    val first = Pipeline.run(spark, cfg).last
+    val second = Pipeline.run(spark, cfg).last
+    assert(first.success && second.success)
+    assert(first.recordsProcessed === 100 + 20 + 5 + events)
+    assert(second.recordsProcessed === first.recordsProcessed)
+    assert(spark.table("trusted_events").count() === events)
+  }
+
+  test("enforce-mode extract launches no Spark job") {
+    val paths = rawLake()
+    val (in, jobs) = JobCounter.count(spark)(new RawToTrusted(spark, paths, Date).extract())
+    assert(in.forall(_._2.isSuccess))
+    assert(jobs === 0)
   }
 }

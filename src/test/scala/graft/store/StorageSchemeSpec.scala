@@ -48,6 +48,9 @@ class StorageSchemeSpec extends SparkSpecBase {
     assert(listed.exists(_.endsWith("nested/copy.csv")))
     assert(listed.forall(_.startsWith("graftfs:")), listed.mkString(", "))
 
+    // driver-side header read goes through the scheme too
+    assert(Storage.readCsvHeader(spark, cpUri) === Some(Seq("id", "name")))
+
     // Spark scan + sink surface over the scheme
     val df = Storage.readCsv(spark, cpUri)
     assert(df.count() === 2)
