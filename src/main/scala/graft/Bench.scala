@@ -204,14 +204,13 @@ object Bench {
     // signature-stage-only probes isolate the base-hash cost (end-to-end
     // dd_minhash is band-join dominated at small SF, which would hide it)
     def sigOnly(fast: Boolean): (SparkSession, String) => DataFrame = (s, dir) => {
-      graft.GraftExtensions.register(s)
       graft.sources.Tables.documents(s, dir)
         .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
         .select(col("doc_id"),
           TextFunctions.shinglesFromTokens(col("toks"), graft.operators.Dedup.DefaultShingleN).as("sh"))
         .select(col("doc_id"),
-          call_function("graft_minhash", col("sh"),
-            lit(graft.operators.Dedup.DefaultMinhashK), lit(fast)).as("sig"))
+          graft.functions.NativeFunctions.minhash(col("sh"),
+            graft.operators.Dedup.DefaultMinhashK, fast).as("sig"))
     }
     Map(
       "dd_minhash_xx" -> ((s, dir) =>

@@ -8,15 +8,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
-import graft.plans.{DotProduct, MaxMultiplicity, MinHashSignature, NearestCenter, NearestCenters, NGramMaxMultiplicity, SimHash64}
+import graft.plans.{DotProduct, MinHashSignature, NearestCenter, NearestCenters, NGramMaxMultiplicity, SimHash64}
 
 /** SparkSessionExtensions entry point: registers this engine's native
-  * Catalyst expressions as SQL functions. Usable two ways:
+  * Catalyst expressions as `graft_*` SQL functions, plus the
+  * DotProductRewrite optimizer rule. This is the SQL-TEXT surface only:
+  * operators build the same expressions as columns directly
+  * (graft.functions.NativeFunctions), so no operator needs — or calls —
+  * this. Usable two ways:
   *
   *   - config: `spark.sql.extensions=graft.GraftExtensions`
-  *   - runtime: `GraftExtensions.register(spark)` (idempotent) for
-  *     sessions the caller doesn't configure — how the driver-contract
-  *     queries attach to the provided session.
+  *   - runtime: `GraftExtensions.register(spark)` (idempotent) for a
+  *     session the caller wants to write `graft_*` SQL against.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -49,14 +52,6 @@ object GraftExtensions {
     (args: Seq[Expression]) => {
       require(args.size == 2, "graft_dot(a, b)")
       DotProduct(args(0), args(1))
-    })
-
-  private val maxMultFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_maxmult"),
-    new ExpressionInfo(classOf[MaxMultiplicity].getName, "graft_maxmult"),
-    (args: Seq[Expression]) => {
-      require(args.size == 1, "graft_maxmult(arr)")
-      MaxMultiplicity(args.head)
     })
 
   /** Unpack the (centers, cids) literal arguments shared by both
@@ -220,14 +215,14 @@ object GraftExtensions {
       graft.plans.ScoreTopK(args(0), args(1), k)
     })
 
-  private val all = Seq(minhashFunction, dotFunction, maxMultFunction,
+  private val all = Seq(minhashFunction, dotFunction,
     nearestCenterFunction, nearestCentersFunction, simhashFunction,
     ngramMaxMultFunction, topkFunction, md5w60Function, spanKeysFunction,
     packedPairsFunction, jaccardPairsFunction, scoreTopkFunction)
 
-  /** Idempotent runtime registration into an existing session: SQL
-    * functions via the registry, the dot-product rewrite via the
-    * experimental extra-optimizations hook (the runtime twin of
+  /** Idempotent runtime registration into an existing session, for SQL
+    * text only: SQL functions via the registry, the dot-product rewrite
+    * via the experimental extra-optimizations hook (the runtime twin of
     * injectOptimizerRule for sessions not configured with
     * spark.sql.extensions). */
   def register(spark: SparkSession): Unit = {

@@ -77,9 +77,8 @@ object TextFunctions {
     if (fast) xxhash64(s)
     else md5w60(s)
 
-  // direct expression construction (no FunctionRegistry dependence —
-  // baseHash/shingleKey run inside operators that may not have called
-  // GraftExtensions.register on the session)
+  // direct expression construction, like every native column
+  // (NativeFunctions): no FunctionRegistry dependence
   private def md5w60(s: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.plans.Md5Word60(ColumnBridge.expression(s)))
@@ -192,11 +191,6 @@ object TextFunctions {
         (b, i) => call_function("shiftleft", b.cast("long"), i)),
       lit(0L), (acc, x) => acc.bitwiseOR(x))
   }
-
-  /** Hamming distance between two equal-length bit arrays. */
-  def hamming(bitsA: Column, bitsB: Column): Column =
-    aggregate(zip_with(bitsA, bitsB, (a, b) => when(a =!= b, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x)
 
   /** Exact Jaccard similarity of two (distinct-element) arrays. */
   def jaccard(a: Column, b: Column): Column =

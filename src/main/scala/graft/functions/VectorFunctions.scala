@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import graft.plans.DotProduct
 
 /** Dense-vector primitives over `array<float|double>` columns, written
   * as higher-order-function expressions (codegen'd, deterministic
@@ -14,14 +17,15 @@ object VectorFunctions {
   def asDoubles(v: Column): Column = v.cast("array<double>")
 
   /** Dot product via the native codegen'd expression (graft.plans.
-    * DotProduct, registered as `graft_dot`): the d-length loop compiles
+    * DotProduct, `graft_dot` in SQL text): the d-length loop compiles
     * to straight Java instead of ~4·d interpreted HOF node evaluations —
-    * this is the inner loop of bucketing, scoring, and assignment, so
-    * every vector operator entry point registers GraftExtensions first.
-    * Accumulation order (sequential left-to-right) is bit-identical to
-    * `dotHof` and to DuckDB's list_dot_product (asserted in spec), so
-    * oracle parity is unchanged. */
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+    * the inner loop of bucketing, scoring, and assignment. The column
+    * carries the expression itself, so it needs nothing registered on
+    * the session. Accumulation order (sequential left-to-right) is
+    * bit-identical to `dotHof` and to DuckDB's list_dot_product
+    * (asserted in spec), so oracle parity is unchanged. */
+  def dot(a: Column, b: Column): Column =
+    ColumnBridge.column(DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** The HOF formulation — kept as the executable spec of `dot`'s
     * accumulation order. */

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.NativeFunctions
 import graft.functions.VectorFunctions._
 
 /** Document/embedding clustering for training-data curation (semantic
@@ -73,8 +74,7 @@ object Clustering {
       }: _*))
       element_at(cells, 1).getField("cid")
     } else
-      call_function("graft_nearest_center", col("v"),
-        typedLit(cs.map(_._2.toSeq)), typedLit(cs.map(_._1)))
+      NativeFunctions.nearestCenter(col("v"), cs.map(_._2).toArray, cs.map(_._1).toArray)
 
   /** The trained centroids alone — seed (k lowest-id vectors) + `iters`
     * Lloyd rounds. Shared by kmeansAssign and ivfNeighbors' refined
@@ -84,7 +84,6 @@ object Clustering {
       k: Int = 8, iters: Int = 2, roundDp: Int = 6,
       literalMaxTerms: Int = LiteralAssignMaxTerms): Seq[(Long, Array[Double])] = {
     require(k >= 1 && iters >= 0 && roundDp >= 0)
-    graft.GraftExtensions.register(corpus.sparkSession)
     val e = corpus
       .select(col(idCol).cast("long").as("id"), asDoubles(col(vecCol)).as("v"))
 

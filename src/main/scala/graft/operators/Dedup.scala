@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.NativeFunctions
 import graft.functions.TextFunctions._
 
 /** Document deduplication operators for large-scale training-data
@@ -20,6 +21,10 @@ import graft.functions.TextFunctions._
   *   - `maxDocFreq` optionally drops ubiquitous shingles before the
   *     inverted-index join — the standard skew guard when a boilerplate
   *     shingle would otherwise create a quadratic hot key.
+  *   - The banded pair walks (MinHash, SimHash, pHash) run one native
+  *     kernel each (plans.JaccardBucketPairs / PackedBucketPairs) on one
+  *     path: ids must be bigint, and any other id type is refused up
+  *     front rather than cast.
   */
 object Dedup {
 
@@ -318,8 +323,9 @@ object Dedup {
   }
 
   /** Candidate pairs from banded signatures (`doc, sig, band, bkey`):
-    * group each LSH bucket once and enumerate member pairs via an
-    * indexed-lambda explode. This beats the natural self-join on
+    * group each LSH bucket once and enumerate member pairs in-row with a
+    * native pair walk (`walk(ms, band)` — plans.JaccardBucketPairs /
+    * plans.PackedBucketPairs). This beats the natural self-join on
     * (band,bkey), which computes the signature plan twice (Spark cannot
     * reuse the exchange into a broadcast build side) — one pass + one
     * shuffle instead.
@@ -330,16 +336,12 @@ object Dedup {
     * pair is kept only in its FIRST colliding band, decided IN-ROW from
     * the signatures both members carry: bands `0 until band` must
     * disagree on their `r`-wide slices. Exact-once by construction, zero
-    * extra exchanges.
+    * extra exchanges. The symmetric score is computed in-row too, so
+    * the emitted candidate is (doc_a, doc_b, score), never both
+    * signatures.
     *
-    * The caller's symmetric `score` (est-Jaccard, Hamming) is computed
-    * IN-ROW inside the pair lambda, so the emitted candidate struct is
-    * (doc_a, doc_b, score, keep) — ~40 bytes — instead of dragging both
-    * full signatures (~1 KB at k=64) through the expansion: the exact
-    * branch's peak per-bucket memory drops ~25× for free.
-    *
-    * Hot-bucket guard (`maxBucket`): a bucket with m > cap members
-    * would otherwise materialize O(m²) candidate structs inside one
+    * Hot-bucket guard (the walk's `cap`): a bucket with m > cap members
+    * would otherwise materialize O(m²) candidates inside one
     * aggregation row — the executor-OOM regime when a boilerplate
     * near-dup cluster (routine in web crawls) lands in one bucket. Above
     * the cap the bucket switches to survivor-pairs + representative
@@ -365,69 +367,33 @@ object Dedup {
     * cluster — and is the irreducible approximation of bounding bucket
     * work in-row. When NO band bucket exceeds the cap (every gated
     * fixture; the dormancy spec), results are bit-identical to the
-    * unguarded plan. */
-  private def bucketPairs(
-      banded: DataFrame, r: Int,
-      score: (Column, Column) => Column,
-      maxBucket: Option[Int]): DataFrame = {
-    maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
-    def bandSlice(sig: Column, b: Column): Column =
-      slice(sig, b * r + 1, lit(r))
-    def pair(x: Column, y: Column): Column = {
-      val keep = when(col("band") === 0, lit(true))
-        .otherwise(forall(
-          // sequence() steps DOWNWARD for an empty range, hence the
-          // band === 0 guard above
-          sequence(lit(0), col("band") - 1),
-          b => !(bandSlice(x.getField("sig"), b) === bandSlice(y.getField("sig"), b))))
-      struct(
-        least(x.getField("doc"), y.getField("doc")).as("doc_a"),
-        greatest(x.getField("doc"), y.getField("doc")).as("doc_b"),
-        score(x.getField("sig"), y.getField("sig")).as("score"),
-        keep.as("keep"))
-    }
-    def allPairs(ms: Column): Column =
-      flatten(transform(ms, (a, i) =>
-        transform(slice(ms, i + 2, size(ms)), b => pair(a, b))))
-    val pairsCol = maxBucket match {
-      case None => allPairs(col("ms"))
-      case Some(cap) =>
-        // struct sort = doc ascending (doc is the first field), so the
-        // survivor set and the representative are order-independent.
-        // `__mss` is a MATERIALIZED projection, not an inline
-        // array_sort: an inline `sorted` re-evaluates at every
-        // reference inside the pair-walk lambdas — a re-SORT of the
-        // whole bucket per chained element, O(m²·log m) on exactly the
-        // hot buckets the cap exists for (measured: the capped walk ran
-        // 2× the UNCAPPED walk on 2.2-2.9k-member buckets, round 16)
-        val sorted = col("__mss")
-        when(size(col("ms")) <= cap, allPairs(col("ms")))
-          .otherwise(concat(
-            allPairs(slice(sorted, 1, cap)),
-            transform(slice(sorted, lit(cap + 1), size(col("ms")) - cap),
-              x => pair(element_at(sorted, 1), x))))
-    }
-    val grouped = banded.groupBy("band", "bkey")
+    * unguarded plan.
+    *
+    * The walks are compiled loops because Catalyst higher-order
+    * functions are not whole-stage-codegen'd: a lambda walk paid an
+    * interpreted eval + struct allocation per candidate pair (~800
+    * ns/pair measured at sf0.1 — ≈2 s of dd_phash's 2.6-3.7 s wall). */
+  private def bucketPairs(banded: DataFrame,
+      walk: (Column, Column) => Column): DataFrame =
+    banded.groupBy("band", "bkey")
       .agg(collect_list(struct(col("doc"), col("sig"))).as("ms"))
       .filter(size(col("ms")) > 1)
-    // the sorted image is computed once per OVER-cap bucket (the when()
-    // leaves it null below the cap), so dormant-cap plans pay one size()
-    // test per bucket and results there stay bit-identical
-    val staged = maxBucket match {
-      case None => grouped
-      case Some(cap) => grouped.withColumn("__mss",
-        when(size(col("ms")) > cap, array_sort(col("ms"))))
-    }
-    staged
       // outer + null-drop: a non-outer explode's inferred filter
-      // (InferFiltersFromGenerate) re-evaluates the whole pair-
-      // enumeration lambda twice more per bucket row (see
-      // ngramJaccardPairs); an all-suppressed bucket's empty array
-      // becomes one null row, dropped here
-      .select(explode_outer(filter(pairsCol, p => p.getField("keep"))).as("p"))
+      // (InferFiltersFromGenerate) re-evaluates the whole pair walk
+      // twice more per bucket row (see ngramJaccardPairs); an
+      // all-suppressed bucket's empty array becomes one null row,
+      // dropped here
+      .select(explode_outer(walk(col("ms"), col("band"))).as("p"))
       .filter(col("p").isNotNull)
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
         col("p.score").as("score"))
+
+  /** The pair walks need bigint ids: fail fast, naming the column,
+    * rather than casting (a cast could silently merge distinct ids). */
+  private[operators] def requireLongId(df: DataFrame, idCol: String, op: String): Unit = {
+    val t = df.schema(idCol).dataType
+    require(t == org.apache.spark.sql.types.LongType,
+      s"$op needs a bigint id column, but '$idCol' is ${t.catalogString}")
   }
 
   /** MinHash + LSH near-duplicate pairs. k-component signatures are cut
@@ -442,21 +408,16 @@ object Dedup {
   def minhashBanded(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands, native: Boolean = true,
+      bands: Int = DefaultMinhashBands,
       fast: Boolean = false): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    // native path: codegen'd Catalyst expression (graft.plans.
-    // MinHashSignature) — bit-identical to the HOF formulation, but the
-    // k×n loop compiles instead of interpreting; registered on demand
-    // via GraftExtensions. `fast` swaps the md5-derived base hash for
-    // xxhash64 (the production mode when no cross-engine oracle is
-    // needed; see TextFunctions.baseHash).
-    val sigCol =
-      if (native) {
-        graft.GraftExtensions.register(df.sparkSession)
-        call_function("graft_minhash", shinglesFromTokens(col("toks"), n), lit(k), lit(fast))
-      } else minhashSignature(shinglesFromTokens(col("toks"), n), k, fast)
+    // codegen'd Catalyst expression (graft.plans.MinHashSignature) —
+    // bit-identical to the HOF TextFunctions.minhashSignature, but the
+    // k×n loop compiles instead of interpreting. `fast` swaps the
+    // md5-derived base hash for xxhash64 (the production mode when no
+    // cross-engine oracle is needed; see TextFunctions.baseHash).
+    val sigCol = NativeFunctions.minhash(shinglesFromTokens(col("toks"), n), k, fast)
     val sig = df
       .select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
       // docs shorter than the shingle width have NO shingles; left in,
@@ -468,9 +429,9 @@ object Dedup {
     // string (not hashed — the join key must be recomputable by the
     // DuckDB oracle, and the slice itself is exactly as shuffle-compact
     // at r=4 components)
-    // posexplode_OUTER + null-drop (see signatureBanded): a non-outer
-    // generate's inferred filter would substitute the full graft_minhash
-    // expression and re-evaluate it twice more per row
+    // posexplode_OUTER + null-drop (see packedSignatureBanded): a
+    // non-outer generate's inferred filter would substitute the full
+    // graft_minhash expression and re-evaluate it twice more per row
     sig.select(
       col("doc"), col("sig"),
       posexplode_outer(transform(sequence(lit(0), lit(bands - 1)), i =>
@@ -483,45 +444,20 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
       bands: Int = DefaultMinhashBands,
-      threshold: Double = DefaultMinhashThreshold, native: Boolean = true,
+      threshold: Double = DefaultMinhashThreshold,
       fast: Boolean = false,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame = {
     require(k % bands == 0, "bands must divide k")
-    val banded = minhashBanded(df, idCol, textCol, n, k, bands, native, fast)
-    jaccardBucketPairs(banded, k / bands, maxBucket, Some(threshold))
+    maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
+    requireLongId(df, idCol, "minhashPairs")
+    val r = k / bands
+    // the walk scores by estimated Jaccard and pushes the threshold
+    // inside the loop; the Filter below keeps the plan's contract explicit
+    bucketPairs(minhashBanded(df, idCol, textCol, n, k, bands, fast),
+      (ms, band) => NativeFunctions.jaccardPairs(ms, band, r,
+        maxBucket.getOrElse(-1), threshold))
       .filter(col("score") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("score").as("est_jaccard"))
-  }
-
-  /** [[bucketPairs]] with the estimated-Jaccard score, NATIVE when the
-    * banded frame carries (doc: long, sig: array<long>) — the MinHash
-    * production shape (see [[packedBucketPairs]]'s native-walk note;
-    * the HOF walk interprets a zip_with+aggregate tree per candidate
-    * pair). `minScore` pushes the caller's `score >= minScore` filter
-    * inside the walk; emitted pairs are unchanged. Exotic schemas fall
-    * back to the generic HOF walk (then `minScore` is a no-op and the
-    * caller's downstream Filter does the work). */
-  private def jaccardBucketPairs(banded: DataFrame, r: Int,
-      maxBucket: Option[Int], minScore: Option[Double] = None): DataFrame = {
-    maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
-    import org.apache.spark.sql.types.{ArrayType, LongType}
-    val nativeTypes =
-      banded.schema("doc").dataType == LongType &&
-        (banded.schema("sig").dataType match {
-          case ArrayType(LongType, _) => true
-          case _ => false
-        })
-    if (!nativeTypes) return bucketPairs(banded, r, estJaccard, maxBucket)
-    graft.GraftExtensions.register(banded.sparkSession)
-    banded.groupBy("band", "bkey")
-      .agg(collect_list(struct(col("doc"), col("sig"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .select(explode_outer(call_function("graft_jaccard_pairs",
-        col("ms"), col("band"), lit(r), lit(maxBucket.getOrElse(-1)),
-        lit(minScore.getOrElse(-1.0)))).as("p"))
-      .filter(col("p").isNotNull)
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-        col("p.score").as("score"))
   }
 
   /** INCREMENTAL MinHash dedup: near-duplicate pairs between a NEW
@@ -549,13 +485,13 @@ object Dedup {
       delta: DataFrame, corpus: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
       bands: Int = DefaultMinhashBands,
-      threshold: Double = DefaultMinhashThreshold, native: Boolean = true,
+      threshold: Double = DefaultMinhashThreshold,
       fast: Boolean = false,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
     minhashPairsIncrementalFromIndex(
       delta,
-      minhashBandIndex(corpus, idCol, textCol, n, k, bands, native, fast, maxBucket),
-      idCol, textCol, n, k, bands, threshold, native, fast)
+      minhashBandIndex(corpus, idCol, textCol, n, k, bands, fast, maxBucket),
+      idCol, textCol, n, k, bands, threshold, fast)
 
   /** The corpus side of [[minhashPairsIncremental]] as a PERSISTABLE
     * index: banded signature rows with the occupancy cap applied at
@@ -566,11 +502,11 @@ object Dedup {
   def minhashBandIndex(
       corpus: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands, native: Boolean = true,
+      bands: Int = DefaultMinhashBands,
       fast: Boolean = false,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
     capBandBuckets(
-      minhashBanded(corpus, idCol, textCol, n, k, bands, native, fast), maxBucket)
+      minhashBanded(corpus, idCol, textCol, n, k, bands, fast), maxBucket)
 
   /** Single-column band join key `bb` = band ':' bkey — bijective with
     * (band, bkey): band is a plain integer and ':' occurs in neither
@@ -593,9 +529,9 @@ object Dedup {
       delta: DataFrame, corpusIndex: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
       bands: Int = DefaultMinhashBands,
-      threshold: Double = DefaultMinhashThreshold, native: Boolean = true,
+      threshold: Double = DefaultMinhashThreshold,
       fast: Boolean = false): DataFrame = {
-    val bd = minhashBanded(delta, idCol, textCol, n, k, bands, native, fast)
+    val bd = minhashBanded(delta, idCol, textCol, n, k, bands, fast)
       .select(col("doc").as("delta_id"), col("sig").as("sig_d"),
         bandKey.as("bb"))
     val withBb =
@@ -624,11 +560,11 @@ object Dedup {
       corpus: DataFrame, idCol: String, textCol: String,
       table: String, nBuckets: Int, path: Option[String] = None,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands, native: Boolean = true,
+      bands: Int = DefaultMinhashBands,
       fast: Boolean = false,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): Unit =
     graft.store.Bucketing.writeBucketed(
-      minhashBandIndex(corpus, idCol, textCol, n, k, bands, native, fast, maxBucket)
+      minhashBandIndex(corpus, idCol, textCol, n, k, bands, fast, maxBucket)
         .withColumn("bb", bandKey),
       table, "bb", nBuckets, path)
 
@@ -642,10 +578,10 @@ object Dedup {
       batch: DataFrame, idCol: String, textCol: String,
       table: String, nBuckets: Int,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands, native: Boolean = true,
+      bands: Int = DefaultMinhashBands,
       fast: Boolean = false): Unit =
     graft.store.Bucketing.appendBucketed(
-      minhashBanded(batch, idCol, textCol, n, k, bands, native, fast)
+      minhashBanded(batch, idCol, textCol, n, k, bands, fast)
         .withColumn("bb", bandKey),
       table, "bb", nBuckets)
 
@@ -909,64 +845,8 @@ object Dedup {
     ClusterMergeParts(mapping, nodeLab, fresh)
   }
 
-  /** Band-explode a PRECOMPUTED signature table (`idCol`, `sigCol` an
-    * equal-length bit/component array) into the family's (doc, sig,
-    * band, bkey) rows — the [[simhashBanded]] projection with the
-    * signature supplied by the caller, so non-text modalities (the
-    * perceptual image hash) ride the same candidate machinery without
-    * re-deriving it. */
-  def signatureBanded(sigs: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int): DataFrame = {
-    require(bits % bands == 0, "bands must divide bits")
-    val r = bits / bands
-    // posexplode_OUTER + null-drop: a non-outer generate feeds
-    // InferFiltersFromGenerate, and pushdown substitutes `sig`'s whole
-    // defining expression (a full signature computation) into the
-    // inferred (size > 0, isnotnull) filter — two extra signature
-    // evaluations per row (see ngramJaccardPairs). The band array is
-    // never empty (bands ≥ 1), so the filter drops nothing.
-    sigs.select(col(idCol).as("doc"), col(sigCol).as("sig"))
-      .select(col("doc"), col("sig"),
-        posexplode_outer(transform(sequence(lit(0), lit(bands - 1)), i =>
-          array_join(slice(col("sig"), i * r + 1, lit(r)).cast("array<string>"), "_")))
-          .as(Seq("band", "bkey")))
-      .filter(col("band").isNotNull)
-  }
-
-  /** Near-duplicate pairs over a precomputed signature table — the
-    * banded LSH candidate walk ([[bucketPairs]]: one bucket pass,
-    * first-colliding-band dedup, hot-bucket cap) with a caller-supplied
-    * symmetric `score`. Output (doc_a, doc_b, score). */
-  def signaturePairs(sigs: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int, score: (Column, Column) => Column,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
-    bucketPairs(signatureBanded(sigs, idCol, sigCol, bits, bands),
-      bits / bands, score, maxBucket)
-
-  /** A precomputed-signature corpus as a PERSISTABLE banded index
-    * ([[simhashBandIndex]]'s shape): plain columns, occupancy cap
-    * applied at build time. */
-  def signatureBandIndex(sigs: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
-    capBandBuckets(signatureBanded(sigs, idCol, sigCol, bits, bands), maxBucket)
-
-  /** O(Δ) ingest against a [[signatureBandIndex]] (possibly persisted,
-    * possibly bucketed on a stored `bb`): the delta's banded signatures
-    * equi-join the index on the fused band key, per-pair collapse by
-    * max score. Output (delta_id, corpus_id, score); the caller applies
-    * its threshold direction (≥ for similarity scores, ≤ for
-    * distances — hence no filter here). */
-  def signaturePairsIncrementalFromIndex(deltaSigs: DataFrame,
-      corpusIndex: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int, score: (Column, Column) => Column): DataFrame =
-    bandedIncrementalJoin(
-      signatureBanded(deltaSigs, idCol, sigCol, bits, bands),
-      corpusIndex, score)
-
-  /** The ONE copy of the banded O(Δ) ingest join all the incremental
-    * signature families share (array SimHash, precomputed signatures,
-    * packed pHash): the delta's banded rows equi-join the corpus index
+  /** The ONE copy of the banded O(Δ) ingest join the packed incremental
+    * signature families share (SimHash, pHash): the delta's banded rows equi-join the corpus index
     * on the fused band key, self-pairs drop, per-pair collapse by max
     * score. A stored `bb` column (the bucketed layout) carries the
     * scan's partitioning into the join so the corpus side shuffles
@@ -995,19 +875,22 @@ object Dedup {
   // ~250-byte bit-array struct to 8 bytes, turns the Hamming score into
   // bit_count(a XOR b) (one instruction span vs a 63-element zip), and
   // turns band keys into shift+mask integers instead of joined strings.
-  // The band-b key covers signature positions [b·r, b·r+r) — the SAME
-  // position partition as signatureBanded's array slices — so the
-  // candidate set, survivor logic, and scores are identical bit-for-bit
-  // to the array form and an oracle written against either matches.
+  // The band-b key covers signature positions [b·r, b·r+r) — the same
+  // position partition as contiguous array slices — so the candidate
+  // set, survivor logic, and scores are identical bit-for-bit to the
+  // bit-array form and an oracle written against either matches.
 
-  /** [[signatureBanded]] for a signature packed into one long (`sigCol`,
-    * bit i = signature position i, `bits` ≤ 64). Output (doc, sig,
-    * band, bkey) with integer `bkey`. A full 64-bit signature may put
-    * bit 63 in the sign position — safe throughout: xor and bit_count
-    * are sign-agnostic, and the band slice is an ARITHMETIC shift
-    * masked to r bits, whose kept positions [0, r) carry the true bits
-    * [b·r, b·r+r) for every band that tiles the word (sign fill only
-    * reaches positions ≥ 64 − b·r, all masked away). */
+  /** Band-explode a PRECOMPUTED signature table whose signature is
+    * packed into one long (`sigCol`, bit i = signature position i,
+    * `bits` ≤ 64) into the family's (doc, sig, band, bkey) rows, with
+    * integer `bkey` — so non-text modalities (the perceptual image hash)
+    * ride the same candidate machinery as SimHash. A full 64-bit
+    * signature may put bit 63 in the sign position — safe throughout:
+    * xor and bit_count are sign-agnostic, and the band slice is an
+    * ARITHMETIC shift masked to r bits, whose kept positions [0, r)
+    * carry the true bits [b·r, b·r+r) for every band that tiles the
+    * word (sign fill only reaches positions ≥ 64 − b·r, all masked
+    * away). */
   def packedSignatureBanded(sigs: DataFrame, idCol: String, sigCol: String,
       bits: Int, bands: Int): DataFrame = {
     require(bits % bands == 0, "bands must divide bits")
@@ -1021,9 +904,12 @@ object Dedup {
       "bands = 1 requires bits <= 63 (a 64-bit single band key would need an unmasked word)")
     val r = bits / bands
     val mask = (1L << r) - 1
-    // posexplode_OUTER + null-drop: see signatureBanded — keeps
-    // InferFiltersFromGenerate from re-evaluating the signature twice
-    // more per row; the band array is never empty.
+    // posexplode_OUTER + null-drop: a non-outer generate feeds
+    // InferFiltersFromGenerate, and pushdown substitutes `sig`'s whole
+    // defining expression (a full signature computation) into the
+    // inferred (size > 0, isnotnull) filter — two extra signature
+    // evaluations per row (see ngramJaccardPairs). The band array is
+    // never empty (bands ≥ 1), so the filter drops nothing.
     sigs.select(col(idCol).as("doc"), col(sigCol).cast("long").as("sig"))
       .select(col("doc"), col("sig"),
         posexplode_outer(transform(sequence(lit(0), lit(bands - 1)), b =>
@@ -1033,22 +919,30 @@ object Dedup {
       .filter(col("band").isNotNull)
   }
 
-  /** [[signaturePairs]] over packed signatures, Hamming-scored: the
-    * banded candidate walk ([[bucketPairs]]'s semantics — one bucket
-    * pass, first-colliding-band dedup, hot-bucket cap) with slices and
-    * score fused into long bit arithmetic. Output (doc_a, doc_b, score =
-    * Hamming distance). `maxScore` (when set) pushes the caller's
-    * `score <= maxScore` filter inside the walk so non-qualifying pairs
-    * are never materialized as rows — emitted pairs are unchanged. */
+  /** Near-duplicate pairs over a precomputed packed signature table,
+    * Hamming-scored: the banded candidate walk ([[bucketPairs]] — one
+    * bucket pass, first-colliding-band dedup, hot-bucket cap) with
+    * slices and score fused into long bit arithmetic. Output (doc_a,
+    * doc_b, score = Hamming distance). `maxScore` (when set) pushes the
+    * caller's `score <= maxScore` filter inside the walk so
+    * non-qualifying pairs are never materialized as rows — emitted
+    * pairs are unchanged. */
   def packedSignaturePairs(sigs: DataFrame, idCol: String, sigCol: String,
       bits: Int, bands: Int,
       maxBucket: Option[Int] = Some(DefaultMaxBucket),
-      maxScore: Option[Int] = None): DataFrame =
-    packedBucketPairs(packedSignatureBanded(sigs, idCol, sigCol, bits, bands),
-      bits / bands, maxBucket, maxScore)
+      maxScore: Option[Int] = None): DataFrame = {
+    maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
+    requireLongId(sigs, idCol, "packedSignaturePairs")
+    val r = bits / bands
+    bucketPairs(packedSignatureBanded(sigs, idCol, sigCol, bits, bands),
+      (ms, band) => NativeFunctions.packedPairs(ms, band, r,
+        maxBucket.getOrElse(-1), maxScore.getOrElse(-1)))
+  }
 
-  /** [[signatureBandIndex]] over packed signatures: a persistable
-    * (doc, sig, band, bkey) index — three longs and an int per row. */
+  /** A precomputed packed-signature corpus as a PERSISTABLE banded
+    * index ([[simhashBandIndex]]'s shape): plain (doc, sig, band, bkey)
+    * columns — three longs and an int per row — with the occupancy cap
+    * applied at build time. */
   def packedSignatureBandIndex(sigs: DataFrame, idCol: String, sigCol: String,
       bits: Int, bands: Int,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
@@ -1063,104 +957,6 @@ object Dedup {
     bandedIncrementalJoin(
       packedSignatureBanded(deltaSigs, idCol, sigCol, bits, bands),
       corpusIndex, (a, b) => bit_count(a.bitwiseXOR(b)))
-
-  /** [[bucketPairs]] specialized to packed long signatures: band slices
-    * are shift+mask, the score is bit_count(xor). Same candidate and
-    * survivor semantics (see [[bucketPairs]]'s cap scaladoc).
-    *
-    * NATIVE walk (round 18): when the banded frame carries (doc: long,
-    * sig: long) — every production caller — the in-row pair enumeration
-    * runs as the compiled `graft_packed_pairs` expression
-    * (plans.PackedBucketPairs) instead of nested Catalyst HOF lambdas:
-    * higher-order functions are not whole-stage-codegen'd, so the HOF
-    * walk paid an interpreted lambda eval + struct allocation per
-    * candidate pair (~800 ns/pair measured at sf0.1 — ≈2 s of
-    * dd_phash's 2.6-3.7 s wall on ~2.5M in-bucket pairs). Pair set,
-    * survivor/chain semantics and scores are bit-identical
-    * (differential-spec'd in BucketPairsNativeSpec; oracle-gated by the
-    * dd_phash/dd_simhash families including the cap-engaged capped
-    * gates). Exotic schemas keep the HOF walk. */
-  private def packedBucketPairs(banded: DataFrame, r: Int,
-      maxBucket: Option[Int], maxScore: Option[Int] = None): DataFrame = {
-    maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
-    val nativeTypes =
-      banded.schema("doc").dataType == org.apache.spark.sql.types.LongType &&
-        banded.schema("sig").dataType == org.apache.spark.sql.types.LongType
-    if (nativeTypes) {
-      graft.GraftExtensions.register(banded.sparkSession)
-      val grouped = banded.groupBy("band", "bkey")
-        .agg(collect_list(struct(col("doc"), col("sig"))).as("ms"))
-        .filter(size(col("ms")) > 1)
-      return grouped
-        // outer + null-drop: an empty pair array (all pairs suppressed
-        // or thresholded) becomes one null row, dropped here — the HOF
-        // walk's explode_outer convention
-        .select(explode_outer(call_function("graft_packed_pairs",
-          col("ms"), col("band"), lit(r), lit(maxBucket.getOrElse(-1)),
-          lit(maxScore.getOrElse(-1)))).as("p"))
-        .filter(col("p").isNotNull)
-        .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-          col("p.score").as("score"))
-    }
-    val mask = (1L << r) - 1
-    def bandSlice(sig: Column, b: Column): Column =
-      call_function("shiftright", sig, (b * r).cast("int")).bitwiseAND(lit(mask))
-    def pair(x: Column, y: Column): Column = {
-      val keep = when(col("band") === 0, lit(true))
-        .otherwise(forall(
-          // sequence() steps DOWNWARD for an empty range, hence the
-          // band === 0 guard above
-          sequence(lit(0), col("band") - 1),
-          b => !(bandSlice(x.getField("sig"), b) === bandSlice(y.getField("sig"), b))))
-      struct(
-        least(x.getField("doc"), y.getField("doc")).as("doc_a"),
-        greatest(x.getField("doc"), y.getField("doc")).as("doc_b"),
-        bit_count(x.getField("sig").bitwiseXOR(y.getField("sig"))).as("score"),
-        keep.as("keep"))
-    }
-    def allPairs(ms: Column): Column =
-      flatten(transform(ms, (a, i) =>
-        transform(slice(ms, i + 2, size(ms)), b => pair(a, b))))
-    val pairsCol = maxBucket match {
-      case None => allPairs(col("ms"))
-      case Some(cap) =>
-        // struct sort = doc ascending (doc is the first field), so the
-        // survivor set and the representative are order-independent.
-        // `__mss` is a MATERIALIZED projection, not an inline
-        // array_sort: an inline `sorted` re-evaluates at every
-        // reference inside the pair-walk lambdas — a re-SORT of the
-        // whole bucket per chained element, O(m²·log m) on exactly the
-        // hot buckets the cap exists for (measured: the capped walk ran
-        // 2× the UNCAPPED walk on 2.2-2.9k-member buckets, round 16)
-        val sorted = col("__mss")
-        when(size(col("ms")) <= cap, allPairs(col("ms")))
-          .otherwise(concat(
-            allPairs(slice(sorted, 1, cap)),
-            transform(slice(sorted, lit(cap + 1), size(col("ms")) - cap),
-              x => pair(element_at(sorted, 1), x))))
-    }
-    val grouped = banded.groupBy("band", "bkey")
-      .agg(collect_list(struct(col("doc"), col("sig"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-    // the sorted image is computed once per OVER-cap bucket (the when()
-    // leaves it null below the cap), so dormant-cap plans pay one size()
-    // test per bucket and results there stay bit-identical
-    val staged = maxBucket match {
-      case None => grouped
-      case Some(cap) => grouped.withColumn("__mss",
-        when(size(col("ms")) > cap, array_sort(col("ms"))))
-    }
-    staged
-      // outer + null-drop: a non-outer explode's inferred filter
-      // (InferFiltersFromGenerate) re-evaluates the whole pair-
-      // enumeration lambda twice more per bucket row (see
-      // ngramJaccardPairs); an all-suppressed bucket's empty array
-      // becomes one null row, dropped here
-      .select(explode_outer(filter(pairsCol, p => p.getField("keep"))).as("p"))
-      .filter(col("p").isNotNull)
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-        col("p.score").as("score"))
-  }
 
   // ---- MULTIPROBE over packed signatures ------------------------------
   //
@@ -1215,7 +1011,7 @@ object Dedup {
   /** The probe expansion alone, over an ALREADY-banded frame. */
   private def multiprobeExpand(banded: DataFrame, r: Int, flips: Int): DataFrame = {
     val masks = typedLit(0L +: flipMasks(r, flips).toSeq)
-    // outer + null-drop (see signatureBanded); the mask array is a
+    // outer + null-drop (see packedSignatureBanded); the mask array is a
     // non-empty literal, so nothing drops
     banded
       .select(col("doc"), col("sig"), col("band"),
@@ -1357,28 +1153,21 @@ object Dedup {
     * TextFunctions.packBits). */
   private def simhashPackedSigs(
       df: DataFrame, idCol: String, textCol: String,
-      bits: Int, minTokens: Int, native: Boolean = true): DataFrame = {
-    // native path (the minhashBanded convention): codegen'd Catalyst
-    // expression (graft.plans.SimHash64) — bit-identical to
-    // packBits(simhashBits(toks)) by differential spec, but the 64-vote
-    // loop compiles instead of interpreting 64 per-bit expression trees
-    // per token (profiled at ~5 s of dd_simhash's 6 s at sf0.1; the md5
-    // calls themselves — the cross-engine-verifiability anchor — are
-    // negligible).
-    val sigCol =
-      if (native) {
-        require(bits == 64, "graft_simhash64 packs exactly 64 bits")
-        graft.GraftExtensions.register(df.sparkSession)
-        call_function("graft_simhash64", col("toks"))
-      } else graft.functions.TextFunctions.packBits(
-        simhashBits(col("toks"), bits), bits)
+      bits: Int, minTokens: Int): DataFrame = {
+    // codegen'd Catalyst expression (graft.plans.SimHash64) —
+    // bit-identical to packBits(simhashBits(toks)) by differential spec,
+    // but the 64-vote loop compiles instead of interpreting 64 per-bit
+    // expression trees per token (profiled at ~5 s of dd_simhash's 6 s
+    // at sf0.1; the md5 calls themselves — the cross-engine-
+    // verifiability anchor — are negligible).
+    require(bits == 64, s"SimHash signatures are 64 bits; bits = $bits is not supported")
     df.select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
       // degenerate-doc guard: tokens('') = [''] so every empty/whitespace
       // doc would share one signature, spuriously pairing at hamming 0 —
       // and at scale a mass of degenerate docs is one LSH bucket with a
       // B² pair blowup. Require ≥ minTokens non-empty tokens.
       .filter(size(array_remove(col("toks"), "")) >= minTokens)
-      .select(col("doc"), sigCol.as("sig"))
+      .select(col("doc"), NativeFunctions.simhash64(col("toks")).as("sig"))
   }
 
   /** INCREMENTAL SimHash dedup: near-duplicate (delta, corpus) pairs by

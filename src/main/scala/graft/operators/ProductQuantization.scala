@@ -69,7 +69,6 @@ object ProductQuantization {
       : IndexedSeq[Seq[(Long, Array[Double])]] = {
     require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m subspaces")
     require(k >= 1 && iters >= 0 && roundDp >= 0)
-    graft.GraftExtensions.register(corpus.sparkSession)
     val sub = dim / m
     val e = corpus
       .select(col(idCol).cast("long").as("id"), asDoubles(col(vecCol)).as("v"))
@@ -262,7 +261,6 @@ object ProductQuantization {
   def encode(
       corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: IndexedSeq[Seq[(Long, Array[Double])]], dim: Int): DataFrame = {
-    graft.GraftExtensions.register(corpus.sparkSession)
     val m = codebooks.size
     val sub = dim / m
     corpus
@@ -332,7 +330,6 @@ object ProductQuantization {
       query: DataFrame, codebooks: IndexedSeq[Seq[(Long, Array[Double])]],
       rerank: Int = 100, topK: Int = 10): DataFrame = {
     require(rerank >= topK, s"rerank pool $rerank must cover topK $topK")
-    graft.GraftExtensions.register(encoded.sparkSession)
     val xhat = xhatFromCodes(codebooks)
     val scored = encoded
       .crossJoin(broadcast(query.select(asDoubles(col("qvec")).as("q"))))
@@ -426,7 +423,6 @@ object ProductQuantization {
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
       dim: Int, nCells: Int = 16, coarseIters: Int = 2,
       m: Int = 8, k: Int = 16, iters: Int = 1, roundDp: Int = 6): IvfPqModel = {
-    graft.GraftExtensions.register(corpus.sparkSession)
     val cents = Clustering.kmeansCentroids(
       corpus, idCol, vecCol, k = nCells, iters = coarseIters, roundDp = roundDp)
     val books = trainCodebooks(corpus, idCol, vecCol, dim, m, k, iters, roundDp)
@@ -478,7 +474,6 @@ object ProductQuantization {
     * union under the same model, which is exactly that contract). */
   def appendToIvfPqIndex(
       delta: DataFrame, idCol: String, vecCol: String, path: String): IvfPqModel = {
-    graft.GraftExtensions.register(delta.sparkSession)
     val model = IvfPqModel.load(path, delta.sparkSession)
     val m = model.codebooks.size
     val sub = model.dim / m
@@ -522,7 +517,6 @@ object ProductQuantization {
       driftFactor: Double = 2.0): DataFrame = {
     require(driftFactor > 0, "driftFactor must be positive")
     val spark = delta.sparkSession
-    graft.GraftExtensions.register(spark)
     val model = IvfPqModel.load(indexPath, spark)
     val m = model.codebooks.size
     val sub = model.dim / m
@@ -573,7 +567,6 @@ object ProductQuantization {
     require(rerank >= topK, s"rerank pool $rerank must cover topK $topK")
     require(nProbe >= 1, "nProbe must be >= 1")
     val spark = corpus.sparkSession
-    graft.GraftExtensions.register(spark)
     val mdl = model.getOrElse(IvfPqModel.load(indexPath, spark))
     val qRows = query.select(asDoubles(col("qvec")).as("q")).take(1)
     require(qRows.nonEmpty,
@@ -630,7 +623,6 @@ object ProductQuantization {
     require(nProbe >= 1, "nProbe must be >= 1")
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.GraftExtensions.register(spark)
     val mdl = model.getOrElse(IvfPqModel.load(indexPath, spark))
     // driver-side routing: the serving batch is the bounded unit
     val qRows = queries

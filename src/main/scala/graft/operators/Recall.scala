@@ -46,7 +46,6 @@ object Recall {
       corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, sampleEveryNth: Long = 1L): DataFrame = {
     require(k >= 1 && sampleEveryNth >= 1)
-    graft.GraftExtensions.register(corpus.sparkSession)
     val base0 = corpus
       .select(col(idCol).cast("long").as("id"), asDoubles(col(vecCol)).as("v"))
       .select(col("id"), col("v"), norm(col("v")).as("nrm"))

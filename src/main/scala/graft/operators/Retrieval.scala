@@ -68,7 +68,6 @@ object Retrieval {
         if (qRows.isEmpty) "0 rows" else ">=2 rows"} in `query` — " +
         "batch serving goes through the multi-query index paths instead")
     val qVec: Seq[Double] = qRows.head.getSeq[Double](0)
-    graft.GraftExtensions.register(docs.sparkSession)
 
     // Dense candidates: distributed top-nDense by rounded cosine, then
     // rank the bounded survivors (the window input is <= nDense rows).

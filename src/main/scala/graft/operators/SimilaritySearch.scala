@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 
+import graft.functions.NativeFunctions
 import graft.functions.VectorFunctions._
 
 /** Approximate/exact nearest-neighbor search over an embedding column
@@ -26,8 +27,10 @@ import graft.functions.VectorFunctions._
   * would shuffle every candidate pair — the anti-pattern this plan
   * exists to avoid). With multiple plane tables (the recall knob),
   * candidates span tables, and the per-vector top-k is bounded MAP-SIDE
-  * by the typed TopKAggregator instead (shuffle carries ≤ k rows per
-  * vector per partition, never all pairs).
+  * by the native top-k aggregate instead (shuffle carries ≤ k rows per
+  * vector per partition, never all pairs). The in-group scoring of the
+  * LSH and IVF walks is one native kernel (plans.ScoreTopK) with one
+  * path: ids must be bigint, and any other id type is refused up front.
   */
 object SimilaritySearch {
 
@@ -36,7 +39,6 @@ object SimilaritySearch {
   def bruteForceTopK(
       corpus: DataFrame, idCol: String, vecCol: String,
       query: DataFrame, k: Int): DataFrame = {
-    graft.GraftExtensions.register(corpus.sparkSession)
     corpus
       .select(col(idCol).as("vec_id"), asDoubles(col(vecCol)).as("v"))
       .crossJoin(broadcast(query.select(asDoubles(col("qvec")).as("q"))))
@@ -199,16 +201,6 @@ object SimilaritySearch {
     transform(sequence(lit(0), floor((size(ms) - 1) / lit(chunk)).cast("int")),
       c => slice(ms, c * chunk + 1, lit(chunk)))
 
-  /** Comparator: cosine descending, neighbor_id ascending — the same
-    * total order as `ORDER BY cos DESC, neighbor_id ASC`, so the local
-    * top-k matches the window/row_number formulation row-for-row. */
-  private def byCosDescIdAsc(l: Column, r: Column): Column =
-    when(l.getField("cos") > r.getField("cos"), -1)
-      .when(l.getField("cos") < r.getField("cos"), 1)
-      .when(l.getField("neighbor_id") < r.getField("neighbor_id"), -1)
-      .when(l.getField("neighbor_id") > r.getField("neighbor_id"), 1)
-      .otherwise(0)
-
   /** One projection: id, vector (as doubles), its norm (computed once
     * per vector, not once per candidate pair), bucket key(s). */
   private def bucketedMembers(
@@ -219,7 +211,7 @@ object SimilaritySearch {
       // posexplode_OUTER + null-drop: a non-outer generate feeds
       // InferFiltersFromGenerate, whose pushed filter re-evaluates the
       // hyperplane bucket expressions twice more per row (see
-      // Dedup.signatureBanded); the table array is never empty
+      // Dedup.packedSignatureBanded); the table array is never empty
       .select(col("id"), col("v"), norm(col("v")).as("nrm"),
         posexplode_outer(array(bucketCols: _*)).as(Seq("tbl", "bucket")))
       .filter(col("tbl").isNotNull)
@@ -241,7 +233,7 @@ object SimilaritySearch {
       maxBucket: Option[Int] = Some(DefaultMaxBucketOccupancy)): DataFrame = {
     require(nTables >= 1, "nTables must be >= 1")
     maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
-    graft.GraftExtensions.register(corpus.sparkSession)
+    Dedup.requireLongId(corpus, idCol, "lshNeighbors")
     // nBits = 0 (the default) derives the corpus-scaled posture — the
     // one a 100× scale-up needs; gated fixtures pin explicit values.
     // The memoized count is driver-side metadata (one count job per
@@ -257,59 +249,34 @@ object SimilaritySearch {
       .agg(collect_list(struct(col("id"), col("v"), col("nrm"))).as("ms"))
       .filter(size(col("ms")) > 1)
 
-    // per member a: score every pool candidate once (norms precomputed)
-    def scored(pool: Column, a: Column): Column = transform(
-      filter(pool, b => b.getField("id") =!= a.getField("id")),
-      b => struct(
-        (dot(a.getField("v"), b.getField("v")) /
-          (a.getField("nrm") * b.getField("nrm"))).as("cos"),
-        b.getField("id").as("neighbor_id")))
-
     val pooled = grouped.select(col("ms"),
       maxBucket.fold(col("ms"))(cap => candidatePool(col("ms"), cap)).as("pool"))
 
-    // NATIVE visitor×pool scoring + per-visitor top-k (round 18,
-    // plans.ScoreTopK — see its scaladoc for the equivalence argument):
-    // the HOF tree interprets a lambda per candidate; ids here are
-    // longs on every production corpus, so the guard below is about
-    // exotic callers only (they keep the HOF walk).
-    val nativeIds = corpus.schema(idCol).dataType ==
-      org.apache.spark.sql.types.LongType
-
+    // NATIVE visitor×pool scoring + per-visitor top-k (plans.ScoreTopK —
+    // see its scaladoc for the equivalence argument): one compiled loop
+    // per bucket row instead of an interpreted lambda per candidate.
+    // Outer + null-drop on every generate in this walk: a non-outer
+    // explode feeds InferFiltersFromGenerate, whose pushed filter
+    // re-evaluates the scoring/chunking expressions twice more per
+    // bucket row (see Dedup.packedSignatureBanded).
     if (nTables == 1) {
       // single table ⇒ all of a's candidates sit in this one group row:
-      // sort + slice k INSIDE the group — the whole query is one
-      // shuffle. Per-visitor scored arrays are transient (≤ |pool|), so
-      // this path's in-row peak is O(m + pool), no visitor chunking
-      // needed; the pool cap bounds the O(m·pool) TIME a hot bucket
-      // would otherwise spend on m² dot products in one task.
-      if (nativeIds)
-        return pooled.select(explode_outer(call_function("graft_score_topk",
-          col("ms"), col("pool"), lit(k))).as("p"))
-          .filter(col("p").isNotNull)
-          .select(col("p.vec_id").as("vec_id"),
-            col("p.neighbor_id").as("neighbor_id"), col("p.cos"))
-      val topk = transform(col("ms"), a =>
-        transform(
-          slice(array_sort(scored(col("pool"), a), byCosDescIdAsc), 1, k),
-          c => struct(
-            a.getField("id").as("vec_id"),
-            c.getField("neighbor_id").as("neighbor_id"),
-            c.getField("cos").as("cos"))))
-      // outer + null-drop on every generate in this walk: a non-outer
-      // explode feeds InferFiltersFromGenerate, whose pushed filter
-      // re-evaluates the scoring/chunking lambdas twice more per bucket
-      // row (see Dedup.signatureBanded)
-      pooled.select(explode_outer(flatten(topk)).as("p"))
+      // the per-visitor top-k is final INSIDE the group — the whole
+      // query is one shuffle. Per-visitor scoring is transient
+      // (≤ |pool|), so this path's in-row peak is O(m + pool), no
+      // visitor chunking needed; the pool cap bounds the O(m·pool) TIME
+      // a hot bucket would otherwise spend on m² dot products in one
+      // task.
+      pooled.select(explode_outer(NativeFunctions.scoreTopK(
+        col("ms"), col("pool"), k)).as("p"))
         .filter(col("p").isNotNull)
         .select(col("p.vec_id").as("vec_id"),
           col("p.neighbor_id").as("neighbor_id"), col("p.cos"))
     } else {
       // multi-table ⇒ a's candidates span tables: bound the per-vector
-      // top-k map-side with the typed aggregator (duplicate candidates
-      // from multiple colliding tables collapse inside its ≤k buffer —
-      // no global dropDuplicates shuffle needed). This path materializes
-      // the visitor×pool expansion in-row before the explode, so hot
+      // top-k map-side with the native top-k aggregate (duplicate
+      // candidates from multiple colliding tables collapse inside its
+      // ≤k buffer — no global dropDuplicates shuffle needed). Hot
       // buckets are additionally re-sharded into visitor chunks.
       val rows = maxBucket match {
         case None => pooled.select(col("ms").as("vs"), col("pool"))
@@ -317,27 +284,22 @@ object SimilaritySearch {
           explode_outer(visitorChunks(col("ms"), VisitorChunk)).as("vs"), col("pool"))
           .filter(col("vs").isNotNull)
       }
-      // native: ≤ k candidates per (visitor, bucket row) reach the
-      // aggregator instead of the whole scored pool — lossless for the
-      // global top-k (ScoreTopK scaladoc), duplicates still collapse
-      val pairs =
-        if (nativeIds)
-          rows.select(explode_outer(call_function("graft_score_topk",
-            col("vs"), col("pool"), lit(k))).as("p"))
-            .filter(col("p").isNotNull)
-            .select(col("p.vec_id").as("vec_id"),
-              col("p.cos").as("cos"), col("p.neighbor_id").as("neighbor_id"))
-        else rows.select(explode_outer(flatten(transform(col("vs"), a =>
-          transform(scored(col("pool"), a), c => struct(
-            a.getField("id").as("vec_id"),
-            c.getField("neighbor_id").as("neighbor_id"),
-            c.getField("cos").as("cos")))))).as("p"))
-          .filter(col("p").isNotNull)
-          .select(col("p.vec_id").cast("long").as("vec_id"),
-            col("p.cos").as("cos"), col("p.neighbor_id").cast("long").as("neighbor_id"))
-      topKPerVector(pairs, k)
+      // ≤ k candidates per (visitor, bucket row) reach the aggregator
+      // instead of the whole scored pool — lossless for the global
+      // top-k (ScoreTopK scaladoc), duplicates still collapse
+      topKPerVector(scoredTopK(rows, k), k)
     }
   }
+
+  /** (vec_id, cos, neighbor_id) rows: each visitor of `vs`'s ≤ k best
+    * `pool` candidates, scored natively (plans.ScoreTopK) — the input
+    * of [[topKPerVector]] for the multi-table LSH and IVF walks. */
+  private def scoredTopK(rows: DataFrame, k: Int): DataFrame =
+    rows.select(explode_outer(NativeFunctions.scoreTopK(
+      col("vs"), col("pool"), k)).as("p"))
+      .filter(col("p").isNotNull)
+      .select(col("p.vec_id").as("vec_id"), col("p.cos").as("cos"),
+        col("p.neighbor_id").as("neighbor_id"))
 
   /** INCREMENTAL embedding neighbor search: each NEW vector's top-k
     * nearest among the EXISTING corpus — the O(Δ)-per-ingest twin of
@@ -349,13 +311,12 @@ object SimilaritySearch {
     * at `maxBucket` (the same guard/convention as the full path's
     * candidate pool — a dense semantic cluster in one bucket must not
     * cost |Δ_bucket|·|cluster| dot products); the per-delta top-k is
-    * bounded map-side by the typed TopKAggregator. Output:
+    * bounded map-side by the native top-k aggregate. Output:
     * (delta_id, corpus_id, cos), ranked (cos DESC, corpus_id ASC). */
   def lshNeighborsIncremental(
       delta: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, nBits: Int = 0, k: Int = 3,
       maxBucket: Option[Int] = Some(DefaultMaxBucketOccupancy)): DataFrame = {
-    graft.GraftExtensions.register(delta.sparkSession)
     val bits = if (nBits == 0) nBitsFor(postureCount(corpus)) else nBits
     lshNeighborsIncrementalFromIndex(
       delta, embBucketIndex(corpus, idCol, vecCol, dim, bits, maxBucket),
@@ -377,7 +338,6 @@ object SimilaritySearch {
       maxBucket: Option[Int] = Some(DefaultMaxBucketOccupancy)): DataFrame = {
     require(nBits >= 1, "nBits must be explicit for a persistable index")
     maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
-    graft.GraftExtensions.register(corpus.sparkSession)
     val cRaw = bucketedMembers(corpus, idCol, vecCol, lshBucketCols(dim, nBits, 1))
       .select(col("id").as("corpus_id"), col("v").as("vc"),
         col("nrm").as("nc"), col("bucket"))
@@ -401,7 +361,6 @@ object SimilaritySearch {
       delta: DataFrame, corpusIndex: DataFrame, idCol: String, vecCol: String,
       dim: Int, nBits: Int, k: Int = 3): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    graft.GraftExtensions.register(delta.sparkSession)
     val d = bucketedMembers(delta, idCol, vecCol, lshBucketCols(dim, nBits, 1))
       .select(col("id").as("delta_id"), col("v").as("vd"),
         col("nrm").as("nd"), col("bucket"))
@@ -464,7 +423,6 @@ object SimilaritySearch {
   def lshBuckets(
       corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, nBits: Int = 0, nTables: Int = 1): DataFrame = {
-    graft.GraftExtensions.register(corpus.sparkSession)
     val bits = if (nBits == 0) nBitsFor(postureCount(corpus)) else nBits
     bucketedMembers(corpus, idCol, vecCol, lshBucketCols(dim, bits, nTables))
       .select(col("id"), col("tbl"), col("bucket"))
@@ -481,7 +439,6 @@ object SimilaritySearch {
     * an encoder round-trip per buffer update — measured as the dominant
     * cost of every recall/ANN gate at sf0.1 (round 15). */
   private[operators] def topKPerVector(pairs: DataFrame, k: Int): DataFrame = {
-    graft.GraftExtensions.register(pairs.sparkSession)
     // POSITIONAL input contract (group, score, member) — same as the
     // typed as[(Long, Double, Long)] form this replaced: callers feed
     // differently-named triples (delta_id/cos/corpus_id, …). Preserve
@@ -492,7 +449,7 @@ object SimilaritySearch {
     val Seq(g, s, m) = pairs.columns.take(3).map(col).toSeq
     pairs
       .groupBy(g.as("vec_id"))
-      .agg(call_function("graft_topk", s, m, lit(k)).as("top"))
+      .agg(NativeFunctions.topK(s, m, k).as("top"))
       .select(col("vec_id"), explode_outer(col("top")).as("t"))
       .filter(col("t").isNotNull)
       .select(col("vec_id"), col("t.neighbor_id").as("neighbor_id"),
@@ -529,6 +486,7 @@ object SimilaritySearch {
     // cheap argument validation BEFORE ivfMembers runs the corpus count
     // and quantizer training jobs
     maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
+    Dedup.requireLongId(corpus, idCol, "ivfNeighbors")
     val base = ivfMembers(corpus, idCol, vecCol, dim, nCentroids, nProbe,
       literalMaxTerms, refineIters)
     val grouped = widenIfNarrow(base, col("bucket"))
@@ -550,28 +508,7 @@ object SimilaritySearch {
     // the lshNeighbors convention; extra struct fields like is_member
     // ride along untouched). Lossless for the cross-cell top-k merge:
     // a visitor's global top-k candidate survives every per-cell cut.
-    val nativeIds = corpus.schema(idCol).dataType ==
-      org.apache.spark.sql.types.LongType
-    val pairs =
-      if (nativeIds)
-        rows.select(explode_outer(call_function("graft_score_topk",
-          col("vs"), col("pool"), lit(k))).as("p"))
-          .filter(col("p").isNotNull)
-          .select(col("p.vec_id").as("vec_id"), col("p.cos").as("cos"),
-            col("p.neighbor_id").as("neighbor_id"))
-      else rows
-        .select(explode_outer(flatten(transform(col("vs"), a =>
-          transform(
-            filter(col("pool"), b => b.getField("id") =!= a.getField("id")),
-            b => struct(
-              a.getField("id").as("vec_id"),
-              b.getField("id").as("neighbor_id"),
-              (dot(a.getField("v"), b.getField("v")) /
-                (a.getField("nrm") * b.getField("nrm"))).as("cos")))))).as("p"))
-        .filter(col("p").isNotNull)
-        .select(col("p.vec_id").as("vec_id"), col("p.cos").as("cos"),
-          col("p.neighbor_id").as("neighbor_id"))
-    topKPerVector(pairs, k)
+    topKPerVector(scoredTopK(rows, k), k)
   }
 
   /** The (id, v, nrm, pidx, bucket, is_member) probe rows ivfNeighbors
@@ -590,7 +527,6 @@ object SimilaritySearch {
       if (nCentroids == 0) nCentroidsFor(postureCount(corpus)) else nCentroids
     require(nCents >= 1 && nProbe >= 1 && nProbe <= nCents)
     require(refineIters >= 0)
-    graft.GraftExtensions.register(corpus.sparkSession)
     // Quantizer: refineIters=0 is the oracle-gated legacy surface — a
     // deterministic corpus sample ranked by raw inner product.
     // refineIters>0 runs Lloyd rounds over the sample (Clustering
@@ -642,9 +578,8 @@ object SimilaritySearch {
         // smaller than nCentroids); the literal path degrades by slicing
         // the available cells, so the native path must clamp p the same
         // way rather than fail NearestCenters' p <= centers.length check
-        call_function("graft_nearest_centers", rankVec,
-          typedLit(cents.map(_._2).toSeq), typedLit(cents.map(_._1).toSeq),
-          lit(math.min(nProbe, cents.length)))
+        NativeFunctions.nearestCenters(rankVec, cents.map(_._2.toArray),
+          cents.map(_._1), math.min(nProbe, cents.length))
     corpus
       .select(col(idCol).cast("long").as("id"), asDoubles(col(vecCol)).as("v"))
       // outer + null-drop (see bucketedMembers): the inferred filter
@@ -692,7 +627,6 @@ object SimilaritySearch {
   def buildLshBucketIndex(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
       dim: Int, nBits: Int, seed: Long = DefaultPlaneSeed): Unit = {
-    graft.GraftExtensions.register(corpus.sparkSession)
     val planes = hyperplanes(nBits, dim, seed)
     corpus
       .select(col(idCol).cast("long").as("vec_id"), asDoubles(col(vecCol)).as("v"))
@@ -763,7 +697,6 @@ object SimilaritySearch {
       query: DataFrame, dim: Int, nBits: Int,
       k: Int = 10, probeBits: Int = 1, seed: Long = DefaultPlaneSeed): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    graft.GraftExtensions.register(spark)
     // knob validation against the build-time sidecar: a mismatched dim
     // or seed would compute same-LENGTH bucket strings, probe the wrong
     // partitions, and return plausible-but-wrong neighbors with no
@@ -810,7 +743,6 @@ object SimilaritySearch {
       dim: Int, nBits: Int,
       k: Int = 10, probeBits: Int = 1, seed: Long = DefaultPlaneSeed): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     readLshMeta(spark, indexPath).foreach { case (mDim, mBits, mSeed) =>
       require(mDim == dim && mBits == nBits && mSeed == seed,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.NativeFunctions
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions.roundFixed
 
@@ -131,8 +132,8 @@ object TextAnalysis {
   }
 
   /** The HOF formulation of max gram multiplicity (longest run in the
-    * sorted array) — kept as the executable spec of `graft_maxmult`
-    * (equality asserted on random inputs in MaxMultiplicityExprSpec). */
+    * sorted array) — with [[grams]], the executable spec of
+    * `graft_maxmult_ngram` (equality asserted in MaxMultiplicityExprSpec). */
   private[graft] def topRunCountHof(gramArr: Column): Column = aggregate(
     array_sort(gramArr),
     struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
@@ -150,21 +151,21 @@ object TextAnalysis {
     * loops. Computed entirely IN-ROW — zero shuffles, embarrassingly
     * parallel (the first-cut explode + groupBy(doc, gram) + max +
     * join-back shape measured 7.0s at sf0.1 against sub-second for this
-    * projection). The per-doc count is the native `graft_maxmult` hash
-    * loop (plans/MaxMultiplicityExpr): the sorted-run HOF it replaces
-    * interpreted ~2 node evaluations per gram per step. */
+    * projection). The per-doc count is the native fused n-gram hash
+    * loop (plans/NGramMaxMultiplicityExpr): the sorted-run HOF over
+    * gram strings it replaces interpreted ~2 node evaluations per gram
+    * per step. */
   def repetitionStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.GraftExtensions.register(df.sparkSession)
     // fused native n-gram counting (graft.plans.NGramMaxMultiplicity):
-    // the former grams(·) ∘ graft_maxmult composition materialized every
+    // the former grams(·) ∘ max-multiplicity composition materialized every
     // gram as an interpreted concat_ws string — n element_at evals + one
     // allocation per position per row, ta_repetition's dominant term;
     // the fused expression counts n-token windows over the existing
     // array (equality asserted in MaxMultiplicityExprSpec)
     df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol), size(col("__toks")).as("n_tokens"),
-        call_function("graft_maxmult_ngram", col("__toks"), lit(2)).as("top_bigram_count"),
-        call_function("graft_maxmult_ngram", col("__toks"), lit(3)).as("top_trigram_count"))
+        NativeFunctions.maxMultNgram(col("__toks"), 2).as("top_bigram_count"),
+        NativeFunctions.maxMultNgram(col("__toks"), 3).as("top_trigram_count"))
       .select(
         col(idCol),
         col("n_tokens").cast("long").as("n_tokens"),

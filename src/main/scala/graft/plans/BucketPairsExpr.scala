@@ -8,9 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native banded-LSH pair walks — the compiled twins of the
-  * higher-order-function (HOF) bucket walks in `Dedup.bucketPairs` /
-  * `Dedup.packedBucketPairs`.
+/** Native banded-LSH pair walks — the in-row pair enumeration of
+  * `Dedup.bucketPairs`.
   *
   * Why native (the SimHash64/SpanKeys argument once more, now for the
   * walk itself): Catalyst higher-order functions (`transform`, `filter`,
@@ -19,12 +18,12 @@ import org.apache.spark.sql.types._
   * pair walk applies a nested lambda PER CANDIDATE PAIR. At sf0.1 the
   * uncapped dd_phash walk enumerates ~2.5M in-bucket pairs and was
   * measured at ~800 ns/pair (≈ 2 s of the gate's 2.6-3.7 s wall); the
-  * same double loop in compiled Scala is a handful of ns/pair. Semantics
-  * are IDENTICAL to the HOF form by construction (same first-colliding-
-  * band dedup, same hot-bucket survivor+chain branch, same
-  * least/greatest direction, same scores — differential-spec'd in
-  * BucketPairsNativeSpec and oracle-gated through every dd_phash/
-  * dd_simhash/dd_minhash family gate), so plans swap freely.
+  * same double loop in compiled Scala is a handful of ns/pair. The
+  * semantics (first-colliding-band dedup, hot-bucket survivor+chain
+  * branch, least/greatest direction, scores) are differential-spec'd
+  * against the test-side reference model in BucketPairsNativeSpec and
+  * oracle-gated through every dd_phash/dd_simhash/dd_minhash family
+  * gate.
   *
   * Two concrete walks (one per signature representation):
   *   - `graft_packed_pairs(ms, band, r, cap, maxScore)` over
@@ -38,8 +37,8 @@ import org.apache.spark.sql.types._
   *
   * `cap` < 0 disables the hot-bucket guard (the maxBucket = None
   * posture); `maxScore` < 0 / `minScore` < 0 disable the score
-  * threshold (then every surviving pair is emitted, exactly like the
-  * HOF walk before its downstream Filter). Thresholds only skip pairs
+  * threshold (then every surviving pair is emitted and the caller's
+  * downstream Filter decides). Thresholds only skip pairs
   * the downstream Filter would drop anyway — pushed inside the loop so
   * non-qualifying pairs are never materialized as rows.
   */

@@ -41,39 +41,52 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    val d = DotProduct.dot(x, y)
+    if (java.lang.Double.isNaN(d) && !DotProduct.defined(x, y)) null else d
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = DotProduct.getClass.getName.stripSuffix("$") + "$"
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"""${ev.value} = $cls.MODULE$$.dot($x, $y);
+         |if (Double.isNaN(${ev.value}) && !$cls.MODULE$$.defined($x, $y)) {
+         |  ${ev.isNull} = true;
+         |}""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DotProduct =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+
+  /** The sequential left-to-right dot product, shared by eval and
+    * codegen. An undefined product (length mismatch, null element)
+    * returns NaN, so a NaN result is ambiguous: callers tell a NULL from
+    * a genuine NaN with [[defined]], which runs only on NaN results. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
-    if (n != y.numElements()) return null
+    if (n != y.numElements()) return Double.NaN
     var acc = 0.0
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      if (x.isNullAt(i) || y.isNullAt(i)) return Double.NaN
       acc += x.getDouble(i) * y.getDouble(i)
       i += 1
     }
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += $x.getDouble($i) * $y.getDouble($i);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $acc; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
+  /** Equal lengths and no null element: the product is not NULL. */
+  def defined(x: ArrayData, y: ArrayData): Boolean = {
+    val n = x.numElements()
+    if (n != y.numElements()) return false
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
 }

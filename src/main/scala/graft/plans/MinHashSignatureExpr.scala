@@ -11,9 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * place in this engine where built-in operators genuinely can't deliver
   * (SURVEY.md §4 "custom-code spots"): Spark's higher-order functions
   * are interpreted (no whole-stage codegen, no CSE), and a k-component
-  * signature is a tight k×n numeric loop. This UnaryExpression supplies
-  * both `nullSafeEval` and `doGenCode`, so the loop compiles to straight
-  * Java inside the surrounding WholeStageCodegen span.
+  * signature is a tight k×n numeric loop. Eval and codegen both call the
+  * one compiled Scala kernel (`MinHashSignature.signature`), so the loop
+  * runs as JVM bytecode inside the surrounding WholeStageCodegen span.
   *
   * Semantics are bit-identical to
   * `graft.functions.TextFunctions.minhashSignature` (same md5-derived
@@ -37,56 +37,15 @@ case class MinHashSignature(child: Expression, k: Int, fast: Boolean = false)
 
   @transient private lazy val (coefA, coefB) = MinHashSignature.coefficients(k)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val sig = Array.fill(k)(Long.MaxValue)
-    val n = arr.numElements()
-    var j = 0
-    while (j < n) {
-      if (!arr.isNullAt(j)) {
-        val h =
-          if (fast) MinHashSignature.fastHash(arr.getUTF8String(j))
-          else MinHashSignature.baseHash(arr.getUTF8String(j))
-        var i = 0
-        while (i < k) {
-          val v = (coefA(i) * h + coefB(i)) % MinHashSignature.P
-          if (v < sig(i)) sig(i) = v
-          i += 1
-        }
-      }
-      j += 1
-    }
-    new GenericArrayData(sig)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MinHashSignature.signature(input.asInstanceOf[ArrayData], coefA, coefB, fast)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val aRef = ctx.addReferenceObj("minhashA", coefA, "long[]")
     val bRef = ctx.addReferenceObj("minhashB", coefB, "long[]")
     val cls = MinHashSignature.getClass.getName.stripSuffix("$") + "$"
-    nullSafeCodeGen(ctx, ev, arr => {
-      val sig = ctx.freshName("sig")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val n = ctx.freshName("n")
-      val hashFn = if (fast) "fastHash" else "baseHash"
-      s"""
-         |long[] $sig = new long[$k];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |final int $n = $arr.numElements();
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if (!$arr.isNullAt($j)) {
-         |    final long $h = $cls.MODULE$$.$hashFn($arr.getUTF8String($j));
-         |    for (int $i = 0; $i < $k; $i++) {
-         |      final long $v = ($aRef[$i] * $h + $bRef[$i]) % ${MinHashSignature.P}L;
-         |      if ($v < $sig[$i]) $sig[$i] = $v;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, arr =>
+      s"${ev.value} = $cls.MODULE$$.signature($arr, $aRef, $bRef, $fast);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
@@ -100,6 +59,31 @@ object MinHashSignature {
   /** Same coefficient stream as TextFunctions.minhashCoefficients. */
   def coefficients(k: Int): (Array[Long], Array[Long]) =
     graft.functions.TextFunctions.minhashCoefficients(k)
+
+  /** The k×n min-hash loop, shared by eval and codegen: component i is
+    * the min over non-null shingles of (a_i·h + b_i) mod P. */
+  def signature(arr: ArrayData, coefA: Array[Long], coefB: Array[Long],
+      fast: Boolean): ArrayData = {
+    val k = coefA.length
+    val sig = Array.fill(k)(Long.MaxValue)
+    val n = arr.numElements()
+    var j = 0
+    while (j < n) {
+      if (!arr.isNullAt(j)) {
+        val h =
+          if (fast) fastHash(arr.getUTF8String(j))
+          else baseHash(arr.getUTF8String(j))
+        var i = 0
+        while (i < k) {
+          val v = (coefA(i) * h + coefB(i)) % P
+          if (v < sig(i)) sig(i) = v
+          i += 1
+        }
+      }
+      j += 1
+    }
+    new GenericArrayData(sig)
+  }
 
   private val md5 = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =

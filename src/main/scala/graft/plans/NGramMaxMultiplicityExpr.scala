@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Max multiplicity of the word `n`-grams of a token array — the fused
-  * form of `TextAnalysis.grams(toks, n)` ∘ `graft_maxmult`, the per-
-  * document inner loop of the repetition quality signals. The composed
+  * form of `TextAnalysis.topRunCountHof(TextAnalysis.grams(toks, n))`,
+  * the per-document inner loop of the repetition quality signals. The composed
   * pipeline materializes every gram as a concat_ws STRING through an
   * interpreted `transform` (n element_at evaluations + one allocation
   * per position per row — profiled as ta_repetition's dominant term);

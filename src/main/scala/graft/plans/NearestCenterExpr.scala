@@ -63,67 +63,57 @@ case class NearestCenter(
     Iterator(child, s"k=${cids.length}", s"dim=$dim")
 
   override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    if (v.numElements() != dim) return null
-    val x = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (v.isNullAt(i)) return null
-      x(i) = v.getDouble(i); i += 1
-    }
-    var best = Double.NegativeInfinity
-    var bestCid = cids(0)
-    var c = 0
-    while (c < centers.length) {
-      val cen = centers(c)
-      var s = 0.0; var j = 0
-      while (j < dim) { s += x(j) * cen(j); j += 1 }
-      s -= halfNorms(c)
-      if (s > best) { best = s; bestCid = cids(c) }
-      c += 1
-    }
-    bestCid
+    val c = NearestCenter.nearest(a.asInstanceOf[ArrayData], centers, halfNorms)
+    if (c < 0) null else cids(c)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cenRef = ctx.addReferenceObj("centers", centers, "double[][]")
     val cidRef = ctx.addReferenceObj("cids", cids, "long[]")
     val hnRef = ctx.addReferenceObj("halfNorms", halfNorms, "double[]")
+    val cls = NearestCenter.getClass.getName.stripSuffix("$") + "$"
     nullSafeCodeGen(ctx, ev, v => {
-      val x = ctx.freshName("x")
-      val i = ctx.freshName("i")
       val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val cen = ctx.freshName("cen")
-      val best = ctx.freshName("best")
-      val bestCid = ctx.freshName("bestCid")
-      s"""
-         |if ($v.numElements() != $dim) {
+      s"""final int $c = $cls.MODULE$$.nearest($v, $cenRef, $hnRef);
+         |if ($c < 0) {
          |  ${ev.isNull} = true;
          |} else {
-         |  double[] $x = new double[$dim];
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if ($v.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $x[$i] = $v.getDouble($i);
-         |  }
-         |  if (!${ev.isNull}) {
-         |    double $best = Double.NEGATIVE_INFINITY;
-         |    long $bestCid = $cidRef[0];
-         |    for (int $c = 0; $c < $cenRef.length; $c++) {
-         |      double[] $cen = $cenRef[$c];
-         |      double $s = 0.0;
-         |      for (int $j = 0; $j < $dim; $j++) { $s += $x[$j] * $cen[$j]; }
-         |      $s -= $hnRef[$c];
-         |      if ($s > $best) { $best = $s; $bestCid = $cidRef[$c]; }
-         |    }
-         |    ${ev.value} = $bestCid;
-         |  }
-         |}
-       """.stripMargin
+         |  ${ev.value} = $cidRef[$c];
+         |}""".stripMargin
     })
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCenter =
     copy(child = newChild)
+}
+
+object NearestCenter {
+
+  /** Index of the best centroid by (v·c − ½|c|²), scanned in order with
+    * a strict `>` so ties keep the earlier index; −1 when the vector is
+    * NULL-valued (a null element or a dim mismatch). Shared by eval and
+    * codegen. */
+  def nearest(v: ArrayData, centers: Array[Array[Double]],
+      halfNorms: Array[Double]): Int = {
+    val dim = centers(0).length
+    if (v.numElements() != dim) return -1
+    val x = new Array[Double](dim)
+    var i = 0
+    while (i < dim) {
+      if (v.isNullAt(i)) return -1
+      x(i) = v.getDouble(i); i += 1
+    }
+    var best = Double.NegativeInfinity
+    var bestC = 0
+    var c = 0
+    while (c < centers.length) {
+      val cen = centers(c)
+      var s = 0.0; var j = 0
+      while (j < dim) { s += x(j) * cen(j); j += 1 }
+      s -= halfNorms(c)
+      if (s > best) { best = s; bestC = c }
+      c += 1
+    }
+    bestC
+  }
 }

@@ -47,16 +47,39 @@ case class NearestCenters(
   override def stringArgs: Iterator[Any] =
     Iterator(child, s"n=${cids.length}", s"dim=$dim", s"p=$p")
 
-  /** Insert candidate c (scanned in ascending-cid order) into the
-    * best-first buffers with STRICT comparison: equal scores keep the
-    * earlier — smaller — cid, the composed sort's tie order. A NaN
+  override def nullSafeEval(a: Any): Any =
+    NearestCenters.topP(a.asInstanceOf[ArrayData], centers, cids, p)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cenRef = ctx.addReferenceObj("centers", centers, "double[][]")
+    val cidRef = ctx.addReferenceObj("cids", cids, "long[]")
+    val cls = NearestCenters.getClass.getName.stripSuffix("$") + "$"
+    nullSafeCodeGen(ctx, ev, v =>
+      s"""${ev.value} = $cls.MODULE$$.topP($v, $cenRef, $cidRef, $p);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCenters =
+    copy(child = newChild)
+}
+
+object NearestCenters {
+
+  /** The `p` best centroid ids by inner product, best first; null when
+    * the vector is NULL-valued (a null element or a dim mismatch).
+    * Shared by eval and codegen.
+    *
+    * Candidates are scanned in ascending-cid order and inserted into
+    * the best-first buffers with STRICT comparison: equal scores keep
+    * the earlier — smaller — cid, the composed sort's tie order. A NaN
     * score (non-finite inputs) ranks BELOW every real score — `s >
     * NaN` alone is false both ways, which would freeze a NaN that
     * entered the buffer above later real candidates; the explicit
     * buffer-NaN check reproduces the composed path's total order
     * (array_sort places the NaN negsim last). */
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
+  def topP(v: ArrayData, centers: Array[Array[Double]], cids: Array[Long],
+      p: Int): ArrayData = {
+    val dim = centers(0).length
     if (v.numElements() != dim) return null
     val x = new Array[Double](dim)
     var i = 0
@@ -88,63 +111,4 @@ case class NearestCenters(
     }
     new GenericArrayData(bestC.take(filled))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cenRef = ctx.addReferenceObj("centers", centers, "double[][]")
-    val cidRef = ctx.addReferenceObj("cids", cids, "long[]")
-    val arrayDataCls = classOf[GenericArrayData].getName
-    nullSafeCodeGen(ctx, ev, v => {
-      val x = ctx.freshName("x")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val m = ctx.freshName("m")
-      val pos = ctx.freshName("pos")
-      val last = ctx.freshName("last")
-      val cen = ctx.freshName("cen")
-      val bestS = ctx.freshName("bestS")
-      val bestC = ctx.freshName("bestC")
-      val filled = ctx.freshName("filled")
-      val outArr = ctx.freshName("outArr")
-      s"""
-         |if ($v.numElements() != $dim) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double[] $x = new double[$dim];
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if ($v.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $x[$i] = $v.getDouble($i);
-         |  }
-         |  if (!${ev.isNull}) {
-         |    double[] $bestS = new double[$p];
-         |    long[] $bestC = new long[$p];
-         |    int $filled = 0;
-         |    for (int $c = 0; $c < $cenRef.length; $c++) {
-         |      double[] $cen = $cenRef[$c];
-         |      double $s = 0.0;
-         |      for (int $j = 0; $j < $dim; $j++) { $s += $x[$j] * $cen[$j]; }
-         |      int $pos = $filled;
-         |      while ($pos > 0 && ($s > $bestS[$pos - 1] ||
-         |          (Double.isNaN($bestS[$pos - 1]) && !Double.isNaN($s)))) $pos--;
-         |      if ($pos < $p) {
-         |        int $last = java.lang.Math.min($filled, $p - 1);
-         |        for (int $m = $last; $m > $pos; $m--) {
-         |          $bestS[$m] = $bestS[$m - 1]; $bestC[$m] = $bestC[$m - 1];
-         |        }
-         |        $bestS[$pos] = $s; $bestC[$pos] = $cidRef[$c];
-         |        if ($filled < $p) $filled++;
-         |      }
-         |    }
-         |    long[] $outArr = new long[$filled];
-         |    System.arraycopy($bestC, 0, $outArr, 0, $filled);
-         |    ${ev.value} = new $arrayDataCls($outArr);
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCenters =
-    copy(child = newChild)
 }

@@ -24,15 +24,17 @@ import org.apache.spark.sql.types._
   *   - cos = dot(a.v, b.v) / (a.nrm · b.nrm), dot strictly sequential
   *     (the DotProduct contract — bit-identical cross-engine);
   *   - rank = (cos DESC, neighbor_id ASC) under Java double comparison
-  *     (the byCosDescIdAsc comparator's `when(> …).when(< …)` chain);
+  *     (`ORDER BY cos DESC, neighbor_id ASC`);
   *   - output = each visitor's ≤ k best, best first, visitors in input
   *     order — exactly `slice(array_sort(scored), 1, k)`.
   * Emitting k per (visitor, bucket row) is lossless for the downstream
   * global top-k: a candidate in the visitor's GLOBAL top-k can be
   * outranked by fewer than k candidates in ANY bucket row containing
   * it, so it survives every local cut (duplicates across rows collapse
-  * in the aggregator as before). Differential-spec'd in
-  * ScoreTopKNativeSpec; oracle-gated by the ss_ann/ss_recall families.
+  * in the aggregator as before). Differential-spec'd against the
+  * test-side reference model in ScoreTopKNativeSpec; oracle-gated by
+  * the ss_ann/ss_recall families. The ids are bigint: lshNeighbors and
+  * ivfNeighbors refuse any other id type up front.
   *
   * Input structs need (id: long, v: array<double>, nrm: double) as
   * their first three fields; extra fields (IVF's is_member) ride along
@@ -131,9 +133,9 @@ object ScoreTopK {
           while (j < d) { acc += x(j) * y(j); j += 1 }
           val cos = acc / (an * pn(b))
           val nid = pid(b)
-          // rank: cos DESC, id ASC under Java double comparison (the
-          // byCosDescIdAsc `when` chain: NaN compares false both ways
-          // and falls through to the id tiebreak)
+          // rank: cos DESC, id ASC under Java double comparison (NaN
+          // compares false both ways and falls through to the id
+          // tiebreak)
           var pos = nBest
           while (pos > 0 && {
             val c = bc(pos - 1); val id2 = bi(pos - 1)

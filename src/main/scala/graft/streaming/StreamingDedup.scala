@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.NativeFunctions
 import graft.operators.{Dedup, SimilaritySearch}
 
 /** Streaming MinHash near-duplicate detection — the streaming twin of
@@ -67,7 +68,6 @@ object StreamingDedup {
     require(horizonMinutes >= 1)
     import spark.implicits._
     import graft.functions.TextFunctions._
-    graft.GraftExtensions.register(spark)
     val r = k / bands
     val horizonMs = horizonMinutes * 60 * 1000L
 
@@ -82,11 +82,9 @@ object StreamingDedup {
       conv(substring(md5(lower(trim(col("__text")))), 1, 15), 16, 10).cast("long"), k)
     val sigExpr =
       if (!fingerprintShortDocs)
-        call_function("graft_minhash",
-          shinglesFromTokens(col("toks"), n), lit(k), lit(fast))
+        NativeFunctions.minhash(shinglesFromTokens(col("toks"), n), k, fast)
       else when(isLong,
-        call_function("graft_minhash",
-          shinglesFromTokens(col("toks"), n), lit(k), lit(fast)))
+        NativeFunctions.minhash(shinglesFromTokens(col("toks"), n), k, fast))
         .otherwise(fpSig)
     val bandIdx =
       if (!fingerprintShortDocs) sequence(lit(0), lit(bands - 1))
@@ -203,7 +201,6 @@ object StreamingDedup {
     require(maxBucketState >= 2, "maxBucketState must be >= 2")
     import spark.implicits._
     import graft.functions.VectorFunctions
-    graft.GraftExtensions.register(spark)
     val horizonMs = horizonMinutes * 60 * 1000L
 
     val bucketCols = SimilaritySearch.lshBucketCols(dim, nBits, nTables)
@@ -349,9 +346,10 @@ object StreamingDedup {
       maxBucketState: Int = Dedup.DefaultMaxBucket): DataFrame = {
     import graft.functions.TextFunctions
     require(horizonMinutes >= 1)
+    require(bits == 64,
+      s"simhashDupStream: bits must be 64 (the packed SimHash width), got bits = $bits")
     require(bits % bands == 0 && bands >= 2, "bands must divide bits, >= 2")
     require(maxBucketState >= 2, "maxBucketState must be >= 2")
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val horizonMs = horizonMinutes * 60 * 1000L
     val banded = docs
@@ -359,14 +357,10 @@ object StreamingDedup {
         to_timestamp(col(timeCol)).as("event_time"),
         TextFunctions.tokens(col(textCol)).as("__t"))
       .filter(size(array_remove(col("__t"), "")) >= minTokens)
-      .select(col("doc_id"), col("event_time"), {
-        // the batch side's native signature (graft.plans.SimHash64 —
-        // registered above by this method's GraftExtensions.register):
-        // bit-identical to packBits(simhashBits(·)), codegen'd
-        if (bits == 64) call_function("graft_simhash64", col("__t"))
-        else TextFunctions.packBits(
-          TextFunctions.simhashBits(col("__t"), bits), bits)
-      }.as("sig"))
+      // the batch side's native signature (graft.plans.SimHash64):
+      // bit-identical to packBits(simhashBits(·)), codegen'd
+      .select(col("doc_id"), col("event_time"),
+        NativeFunctions.simhash64(col("__t")).as("sig"))
       .withWatermark("event_time", s"$horizonMinutes minutes")
       .select(col("doc_id"), col("event_time"), col("sig"),
         packedBandKeys(col("sig"), bands, bits / bands).as("bkey"))

@@ -62,7 +62,6 @@ object StreamingSpanDedup {
     require(maxPostings >= 2, "maxPostings must be >= 2")
     import spark.implicits._
     import graft.functions.TextFunctions._
-    graft.GraftExtensions.register(spark)
     val horizonMs = horizonMinutes * 60 * 1000L
 
     val posted = docs

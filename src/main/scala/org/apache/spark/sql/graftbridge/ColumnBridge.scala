@@ -9,9 +9,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * the session FunctionRegistry — the standard extension-library
   * technique (Delta/Frameless do the same) for Spark 4's sql-api
   * `Column`, whose Expression constructor moved behind
-  * `classic.ExpressionUtils`. Used by the graft function builders so
-  * native expressions work on sessions that never called
-  * `GraftExtensions.register`. */
+  * `classic.ExpressionUtils`. Every operator builds its native
+  * expressions through this (graft.functions.NativeFunctions), so
+  * sessions never need `GraftExtensions.register`, which is only for
+  * writing `graft_*` SQL text. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

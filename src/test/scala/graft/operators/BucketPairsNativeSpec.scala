@@ -6,16 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 import graft.sources.Tables
 
-/** Differential gate for the round-18 NATIVE pair walks
+/** Differential gate for the NATIVE pair walks
   * (plans.PackedBucketPairs / plans.JaccardBucketPairs): the compiled
-  * walk must reproduce the HOF walk's pairs BIT-FOR-BIT — same
+  * walk must reproduce the banded walk's pairs BIT-FOR-BIT — same
   * first-colliding-band dedup, same hot-bucket survivor+chain branch,
   * same least/greatest direction, same scores — across dormant AND
-  * engaged cap regimes. The HOF reference is the SAME code path every
-  * pre-round-18 gate ran: `packedBucketPairs`/`bucketPairs` fall back to
-  * it whenever the doc column is not a long, so widening doc to
-  * decimal(18,0) (numeric order identical to long) drives the identical
-  * query through the old walk. */
+  * engaged cap regimes. The reference ("HOF walk" in the test names,
+  * after the interpreted walk it replaced) is the test-side
+  * ReferenceModels.bandedPairs over the collected signatures. */
 class BucketPairsNativeSpec extends SparkSpecBase {
 
   /** Random packed-signature corpus with planted near-duplicate
@@ -42,18 +40,16 @@ class BucketPairsNativeSpec extends SparkSpecBase {
   private val prevSig = scala.collection.mutable.Map.empty[Long, Long]
 
   private def collectPairs(df: DataFrame): Set[(Long, Long, Any)] =
-    df.select(col("doc_a").cast("long"), col("doc_b").cast("long"), col("score"))
+    df.select(col("doc_a"), col("doc_b"), col("score"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.get(2))).toSet
 
   private def packedBoth(sigs: DataFrame, bits: Int, bands: Int,
       cap: Option[Int]): (Set[(Long, Long, Any)], Set[(Long, Long, Any)]) = {
     val native = Dedup.packedSignaturePairs(sigs, "doc", "sig", bits, bands, cap)
-    // decimal doc → the HOF fallback walk (numeric least/greatest order
-    // identical to long, so pairs and direction match)
-    val hof = Dedup.packedSignaturePairs(
-      sigs.select(col("doc").cast("decimal(18,0)").as("doc"), col("sig")),
-      "doc", "sig", bits, bands, cap)
-    (collectPairs(native), collectPairs(hof))
+    val rows = sigs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val model = ReferenceModels.bandedPairs[Long, Any](rows, bands,
+      ReferenceModels.packedSlice(bits / bands), ReferenceModels.hammingLong, cap)
+    (collectPairs(native), model)
   }
 
   test("native packed walk == HOF walk (dormant cap, several band cuts)") {
@@ -93,17 +89,16 @@ class BucketPairsNativeSpec extends SparkSpecBase {
 
   test("native jaccard walk == HOF walk on the real corpus (dormant + engaged caps)") {
     val docs = Tables.documents(spark, sfDir)
+    val sigs = ReferenceModels.minhashSigs(docs, "doc_id", "text")
+    val r = Dedup.DefaultMinhashK / Dedup.DefaultMinhashBands
     for (cap <- Seq(Some(Dedup.DefaultMaxBucket), Some(2), Some(4))) {
       val native = Dedup.minhashPairs(docs, "doc_id", "text", maxBucket = cap)
-      val hof = Dedup.minhashPairs(
-        docs.select(col("doc_id").cast("decimal(18,0)").as("doc_id"), col("text")),
-        "doc_id", "text", maxBucket = cap)
-      def canon(df: DataFrame) = df.select(
-        col("doc_a").cast("long"), col("doc_b").cast("long"),
-        col("est_jaccard")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(canon(native) === canon(hof), s"cap=$cap jaccard mismatch")
-      assert(canon(native).nonEmpty, s"cap=$cap found no pairs — vacuous test")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val model = ReferenceModels.bandedPairs(sigs, Dedup.DefaultMinhashBands,
+        ReferenceModels.arraySlice[Long](r), ReferenceModels.estJaccard, cap)
+        .filter(_._3 >= Dedup.DefaultMinhashThreshold)
+      assert(native === model, s"cap=$cap jaccard mismatch")
+      assert(native.nonEmpty, s"cap=$cap found no pairs — vacuous test")
     }
   }
 

@@ -72,13 +72,15 @@ class DedupSpec extends SparkSpecBase {
             s"doc ${r.getLong(0)}: bit $i diverges between packed and array")
         }
       }
-    // 2. the packed bucket walk = the array bucket walk (same bands,
-    //    same cap, same first-colliding-band dedup), scores included
-    val ref = Dedup.signaturePairs(
-      arraySigs, "doc", "sig", 64, Dedup.DefaultSimhashBands,
-      TextFunctions.hamming)
-      .filter(col("score") <= Dedup.DefaultMaxHamming)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    // 2. the packed bucket walk = the reference banded walk over the bit
+    //    ARRAYS (same bands, same cap, same first-colliding-band dedup),
+    //    scores included
+    val bitRows = arraySigs.collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSeq
+    val ref = ReferenceModels.bandedPairs[Seq[Int], Int](bitRows, Dedup.DefaultSimhashBands,
+      ReferenceModels.arraySlice[Int](64 / Dedup.DefaultSimhashBands),
+      (x, y) => x.zip(y).count { case (a, b) => a != b },
+      Some(Dedup.DefaultMaxBucket))
+      .filter(_._3 <= Dedup.DefaultMaxHamming)
     val got = Dedup.simhashPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got.nonEmpty && got === ref)

@@ -1,0 +1,102 @@
+package graft.operators
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.functions.{TextFunctions, VectorFunctions}
+
+/** Test-side Scala reference models of the native pair walks and ANN
+  * scorers, run over collected rows. They state the operators' contracts
+  * in plain collection code, independent of the compiled kernels, so the
+  * differential specs compare every native path against them
+  * bit-for-bit. */
+object ReferenceModels {
+
+  /** Candidate pairs (doc_a, doc_b, score) of a banded LSH walk over
+    * (doc, sig) rows, doc ids unique.
+    *
+    *   - Bucketing: in band b, two docs share a bucket iff
+    *     `slice(sig, b)` agrees.
+    *   - Cap: a bucket of m > cap members keeps only its `cap` lowest
+    *     ids as survivors (all pairs among them) plus one chain from the
+    *     lowest id to every other member.
+    *   - First colliding band: a pair found in band b is kept only if its
+    *     slices differ in every band before b, so it is reported once.
+    */
+  def bandedPairs[S, A](sigs: Seq[(Long, S)], bands: Int,
+      slice: (S, Int) => Any, score: (S, S) => A,
+      cap: Option[Int]): Set[(Long, Long, A)] =
+    (0 until bands).flatMap { b =>
+      sigs.groupBy { case (_, s) => slice(s, b) }.values.flatMap { bucket =>
+        val ms = bucket.sortBy(_._1).toIndexedSeq
+        val survivors = cap.fold(ms.size)(c => math.min(c, ms.size))
+        val inner = for (i <- 0 until survivors; j <- i + 1 until survivors)
+          yield (ms(i), ms(j))
+        val chains = (survivors until ms.size).map(j => (ms(0), ms(j)))
+        (inner ++ chains).collect {
+          case ((dx, x), (dy, y)) if (0 until b).forall(e => slice(x, e) != slice(y, e)) =>
+            (math.min(dx, dy), math.max(dx, dy), score(x, y))
+        }
+      }
+    }.toSet
+
+  /** Band slice `b` of a packed long signature: `r` bits from b·r. */
+  def packedSlice(r: Int)(sig: Long, b: Int): Long = (sig >> (b * r)) & ((1L << r) - 1)
+
+  def hammingLong(x: Long, y: Long): Int = java.lang.Long.bitCount(x ^ y)
+
+  /** Band slice `b` of an array signature: components [b·r, b·r+r). */
+  def arraySlice[T](r: Int)(sig: Seq[T], b: Int): Seq[T] = sig.slice(b * r, b * r + r)
+
+  /** Fraction of agreeing components (TextFunctions.estJaccard). */
+  def estJaccard(x: Seq[Long], y: Seq[Long]): Double =
+    x.zip(y).count { case (a, b) => a == b }.toDouble / x.size.toDouble
+
+  /** (doc, signature) rows of minhashPairs' signature stage, computed
+    * with the HOF TextFunctions.minhashSignature: docs with fewer than
+    * `n` tokens have no shingles and are left out. */
+  def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
+      n: Int = Dedup.DefaultShingleN, k: Int = Dedup.DefaultMinhashK): Seq[(Long, Seq[Long])] =
+    docs.select(col(idCol).cast("long").as("doc"), TextFunctions.tokens(col(textCol)).as("toks"))
+      .filter(size(col("toks")) >= n)
+      .select(col("doc"), TextFunctions.minhashSignature(
+        TextFunctions.shinglesFromTokens(col("toks"), n), k).as("sig"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
+
+  /** An embedding as the ANN walks see it: doubles and their norm. */
+  final case class Vec(id: Long, v: Array[Double], nrm: Double)
+
+  private def dot(x: Array[Double], y: Array[Double]): Double =
+    x.indices.foldLeft(0.0)((acc, i) => acc + x(i) * y(i))
+
+  def vectors(emb: DataFrame): Map[Long, Vec] =
+    emb.select(col("vec_id"), VectorFunctions.asDoubles(col("embedding")))
+      .collect().map { r =>
+        val v = r.getSeq[Double](1).toArray
+        r.getLong(0) -> Vec(r.getLong(0), v, math.sqrt(dot(v, v)))
+      }.toMap
+
+  /** The candidate pool of a bucket: every member, or above `cap` the
+    * `cap` members with the lowest (xxhash64(id), id). */
+  def pool(members: Seq[Vec], cap: Option[Int]): Seq[Vec] = cap match {
+    case Some(c) if members.size > c =>
+      members.sortBy(m => (xxhash64Long(m.id), m.id)).take(c)
+    case _ => members
+  }
+
+  private def xxhash64Long(id: Long): Long =
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L)
+
+  /** Each visitor's k nearest (vec_id, neighbor_id, cos) over the union
+    * of its (visitor, pool) scoring groups: candidates exclude the
+    * visitor itself, cos = sequential dot / (norm · norm), ranked
+    * (cos DESC, neighbor_id ASC), a neighbor reached through several
+    * groups counted once. */
+  def topKNeighbors(groups: Seq[(Seq[Vec], Seq[Vec])], k: Int): Set[(Long, Long, Double)] =
+    groups.flatMap { case (visitors, pool) =>
+      for (a <- visitors; b <- pool if b.id != a.id)
+        yield (a.id, b.id, dot(a.v, b.v) / (a.nrm * b.nrm))
+    }.distinct.groupBy(_._1).values.flatMap { cands =>
+      cands.sortWith { (x, y) => x._3 > y._3 || (x._3 == y._3 && x._2 < y._2) }.take(k)
+    }.toSet
+}

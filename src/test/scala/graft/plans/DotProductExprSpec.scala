@@ -9,7 +9,8 @@ import graft.sources.Tables
 class DotProductExprSpec extends SparkSpecBase {
 
   test("native graft_dot is bit-identical to the HOF formulation") {
-    GraftExtensions.register(spark)
+    // no registration: the DotProductRewrite rule it installs would turn
+    // the HOF side into graft_dot as well
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), VectorFunctions.asDoubles(col("embedding")).as("v"))
     val paired = e.as("a").crossJoin(e.as("b"))
@@ -26,7 +27,6 @@ class DotProductExprSpec extends SparkSpecBase {
   }
 
   test("graft_dot participates in whole-stage codegen") {
-    GraftExtensions.register(spark)
     val plan = Tables.embeddings(spark, sfDir)
       .select(VectorFunctions.dot(
         VectorFunctions.asDoubles(col("embedding")),

@@ -3,33 +3,14 @@ package graft.plans
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.functions.NativeFunctions.maxMultNgram
+import graft.operators.TextAnalysis.{grams, topRunCountHof}
 
 class MaxMultiplicityExprSpec extends SparkSpecBase {
 
   import spark.implicits._
 
-  test("graft_maxmult equals the sorted-run HOF formulation on random gram arrays") {
-    graft.GraftExtensions.register(spark)
-    val rnd = new scala.util.Random(0x3A95)
-    val rows = (1 to 400).map { i =>
-      val n = rnd.nextInt(60)
-      (i.toLong, (0 until n).map(_ => s"g${rnd.nextInt(12)}"))
-    }
-    val df = rows.toDF("id", "grams")
-    val out = df.select(col("id"),
-        call_function("graft_maxmult", col("grams")).as("native"),
-        graft.operators.TextAnalysis.topRunCountHof(col("grams")).as("hof"))
-      .collect()
-    out.foreach(r => assert(r.getLong(1) === r.getLong(2), s"row ${r.getLong(0)}"))
-    // and against a driver-side reference
-    val ref = rows.map { case (i, gs) =>
-      i -> (if (gs.isEmpty) 0L else gs.groupBy(identity).values.map(_.size).max.toLong)
-    }.toMap
-    out.foreach(r => assert(r.getLong(1) === ref(r.getLong(0))))
-  }
-
-  test("graft_maxmult_ngram equals the grams∘graft_maxmult composition (corpus + random + degenerate)") {
-    graft.GraftExtensions.register(spark)
+  test("graft_maxmult_ngram equals topRunCountHof∘grams (corpus + random + degenerate)") {
     // the real corpus (the ta_repetition input) at the gated n = 2, 3
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id").as("id"),
@@ -41,41 +22,22 @@ class MaxMultiplicityExprSpec extends SparkSpecBase {
       (100000L + i, (0 until rnd.nextInt(30)).map(_ => s"w${rnd.nextInt(5)}"))
     } ++ Seq((200001L, Seq.empty[String]), (200002L, Seq("solo"))))
       .toDF("id", "t")
-    Seq(docs, synth).foreach { df =>
+    // null ELEMENTS: concat_ws skips them — the fused fallback must agree
+    val nullElem = spark.sql(
+      "SELECT 0L AS id, array('a', CAST(NULL AS STRING), 'a', NULL, 'a') AS t")
+    Seq(docs, synth, nullElem).foreach { df =>
       Seq(2, 3).foreach { n =>
         val bad = df.select(
-            call_function("graft_maxmult_ngram", col("t"), lit(n)).as("fused"),
-            call_function("graft_maxmult",
-              graft.operators.TextAnalysis.grams(col("t"), n)).as("composed"))
-          .filter(col("fused") =!= col("composed")).count()
+            maxMultNgram(col("t"), n).as("fused"),
+            topRunCountHof(grams(col("t"), n)).as("composed"))
+          .filter(!(col("fused") <=> col("composed"))).count()
         assert(bad === 0L, s"n=$n: fused n-gram maxmult diverges from the composition")
       }
     }
-    // null ELEMENTS: concat_ws skips them — the fused fallback must agree
-    val nullElem = spark.sql(
-      "SELECT graft_maxmult_ngram(array('a', CAST(NULL AS STRING), 'a', NULL, 'a'), 2) AS f, " +
-        "graft_maxmult(transform(sequence(0, 3), i -> concat_ws(' ', " +
-        "element_at(array('a', CAST(NULL AS STRING), 'a', NULL, 'a'), i + 1), " +
-        "element_at(array('a', CAST(NULL AS STRING), 'a', NULL, 'a'), i + 2)))) AS c")
-      .collect()(0)
-    assert(nullElem.getLong(0) === nullElem.getLong(1))
-  }
-
-  test("graft_maxmult: empty array is 0, null array is null, null elements skipped") {
-    graft.GraftExtensions.register(spark)
-    val df = Seq(
-      (1L, Some(Seq[String]())),
-      (2L, None),
-      (3L, Some(Seq("a", "a", "b")))).toDF("id", "grams")
-    val out = df.select(col("id"),
-        call_function("graft_maxmult", col("grams")).as("m"))
+    // a null array is null; fewer than n tokens count 0
+    val edge = Seq((1L, None), (2L, Some(Seq("x")))).toDF("id", "t")
+      .select(col("id"), maxMultNgram(col("t"), 2).as("m"))
       .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
-    assert(out(1L) === Some(0L))
-    assert(out(2L) === None)
-    assert(out(3L) === Some(2L))
-    val withNullElem = spark.sql(
-      "SELECT graft_maxmult(array('x', CAST(NULL AS STRING), 'x', 'x')) AS m")
-      .collect()(0).getLong(0)
-    assert(withNullElem === 3L)
+    assert(edge === Map(1L -> None, 2L -> Some(0L)))
   }
 }

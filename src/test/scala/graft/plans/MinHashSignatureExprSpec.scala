@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{GraftExtensions, SparkSpecBase}
 import graft.functions.TextFunctions
-import graft.operators.Dedup
+import graft.operators.{Dedup, ReferenceModels}
 import graft.sources.Tables
 
 class MinHashSignatureExprSpec extends SparkSpecBase {
@@ -32,11 +32,16 @@ class MinHashSignatureExprSpec extends SparkSpecBase {
   }
 
   test("minhashPairs native and HOF paths agree end-to-end") {
+    // the native operator vs the reference banded walk over signatures
+    // computed by the HOF TextFunctions.minhashSignature
     val docs = Tables.documents(spark, sfDir)
-    val nat = Dedup.minhashPairs(docs, "doc_id", "text", native = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hof = Dedup.minhashPairs(docs, "doc_id", "text", native = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val nat = Dedup.minhashPairs(docs, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val hof = ReferenceModels.bandedPairs(
+      ReferenceModels.minhashSigs(docs, "doc_id", "text"), Dedup.DefaultMinhashBands,
+      ReferenceModels.arraySlice[Long](Dedup.DefaultMinhashK / Dedup.DefaultMinhashBands),
+      ReferenceModels.estJaccard, Some(Dedup.DefaultMaxBucket))
+      .filter(_._3 >= Dedup.DefaultMinhashThreshold)
     assert(nat === hof)
     assert(nat.nonEmpty)
   }

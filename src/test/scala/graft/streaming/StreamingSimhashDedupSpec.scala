@@ -91,4 +91,17 @@ class StreamingSimhashDedupSpec extends SparkSpecBase {
     assert(notices.toSet === Set((7L, 6L)),
       s"expected only the in-horizon re-copy to flag, got ${notices.toSeq}")
   }
+
+  test("bits other than 64 is refused at the entry, naming the parameter") {
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("text", StringType),
+      StructField("ts", StringType)))
+    val src = Files.createTempDirectory("graft-ssh-bits-src").toString
+    val e = intercept[IllegalArgumentException](StreamingDedup.simhashDupStream(spark,
+      spark.readStream.schema(schema).parquet(src), "doc_id", "text",
+      timeCol = "ts", bits = 32, bands = 4))
+    assert(e.getMessage.contains("bits must be 64"), e.getMessage)
+    assert(e.getMessage.contains("bits = 32"), e.getMessage)
+  }
 }
