@@ -235,7 +235,7 @@ object Bench {
       // the span family's production mode (xxhash64 shingle keys — no
       // DuckDB twin exists, spec-anchored): benched to track how much
       // of dd_spans' >2x-DuckDB residual is the md5 verifiability term
-      // (tools/SpanProfile decomposes the rest)
+      // (the rest is decomposed in Dedup.sharedSpans' residual-cost note)
       "dd_spans_xx" -> ((s, dir) =>
         graft.operators.Dedup.sharedSpans(
           graft.sources.Tables.documents(s, dir), "doc_id", "text", fast = true)
@@ -340,6 +340,11 @@ object Bench {
           nProbe = 2, k = 3)
       }))
   }
+
+  /** A gate by name: the driver's `SparkEntry.queries` first, then
+    * [[benchOnly]]. */
+  def gate(name: String): Option[(SparkSession, String) => DataFrame] =
+    SparkEntry.queries.get(name).orElse(benchOnly.get(name))
 
   private val corpusCount = scala.collection.mutable.Map.empty[String, Long]
   private val ivfPqIndexCache =
@@ -497,20 +502,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // Resident-engine settings via graft.Sessions — the round-18
-    // extraction of the round-17 codegen-cache fix into deployment
-    // configuration shared by any long-lived session running this
-    // workload (see Sessions.scala for the measurement and sizing
-    // rationale; same value as round 17, bench numbers comparable).
-    val spark = graft.Sessions.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench", cpus)
     // Silence the known-benign AQE/accumulator-GC race ("Failed to
     // update accumulator … attempted to access non-existent
     // accumulator", an ERROR-level DAGScheduler stack): it consumed the
@@ -546,7 +540,7 @@ object Bench {
       org.apache.logging.log4j.Level.ERROR)
 
     def exec(name: String, dir: String): Unit =
-      SparkEntry.queries.getOrElse(name, benchOnly(name))(spark, dir)
+      gate(name).getOrElse(sys.error(s"unknown gate: $name"))(spark, dir)
         .write.format("noop").mode("overwrite").save()
 
     // Per-query failure REASONS land in the JSON artifact: a -1.0 says a
@@ -570,9 +564,7 @@ object Bench {
       if (sys.env.contains("SPARK_GRAFT_BENCH_HEAVY") || onlySet.isDefined)
         headline ++ heavyHeadline
       else headline
-    val names = suite.filter(n =>
-      (SparkEntry.queries.contains(n) || benchOnly.contains(n)) &&
-        onlySet.forall(_.contains(n)))
+    val names = suite.filter(n => gate(n).isDefined && onlySet.forall(_.contains(n)))
     names.foreach { n =>
       try exec(n, sfDir)
       catch { case e: Throwable =>
@@ -684,21 +676,12 @@ object Bench {
         System.err.println(s"[bench] recall measurement failed: ${e.getMessage}")
         "{}"
       }
-    // minimal JSON string escaping for the failure messages (quotes,
-    // backslashes, control chars — exception text is arbitrary)
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     // only queries whose RECORDED value is a failure carry a reason: a
     // warm-up hiccup followed by three clean reps is not a failure, but
     // one failed rep among three (value -1.0) keeps its diagnosis
     val failed = results.filter(_._2 < 0).map(_._1).toSet
     val fails = failures.toSeq.filter(kv => failed(kv._1)).sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + jstr(v) }
+      .map { case (k, v) => Verify.jsonString(k) + ":" + Verify.jsonString(v) }
       .mkString("{", ",", "}")
     // the bench-only twins (no cross-engine oracle exists — xxhash64 has
     // no DuckDB equivalent; ss_ann_ivf_scaled runs the production
@@ -785,7 +768,7 @@ object Bench {
     // adjudicable); unknown names are ignored
     val forcedIsolate = sys.env.get("SPARK_GRAFT_ISOLATE")
       .map(_.split(',').toSet).getOrElse(Set.empty)
-      .filter(n => SparkEntry.queries.contains(n) || benchOnly.contains(n))
+      .filter(gate(_).isDefined)
     // end-of-suite isolation ONLY for run-time-derived weak gates not
     // already covered by the fixed pre-suite block; their position is
     // confounded by construction, so the artifact names them separately
@@ -840,7 +823,7 @@ object Bench {
         val ratio = if (m > 0 && main > 0) main / m else -1.0
         "\"" + name + "\":[" + sec3(m) + "," + sec3(main) + "," + sec3(ratio) + "]"
       }.mkString("{", ",", "}")
-      s""","scaling":{"alt_sf":${jstr(altDir)},"main_sf":${jstr(sfDir)},"queries":$entries}"""
+      s""","scaling":{"alt_sf":${Verify.jsonString(altDir)},"main_sf":${Verify.jsonString(sfDir)},"queries":$entries}"""
     }.getOrElse("")
     // MINIMAL stdout line — the ONLY stdout output. The driver
     // tail-captures stdout and has truncated every per-query line that
@@ -900,10 +883,10 @@ object Bench {
     // machine yardstick LAST (after the suite) so it cannot perturb the
     // timed reps; both are comparable round-over-round
     val (machSt, machMt, machThreads) =
-      try cpuYardstick(cpus.toInt) catch { case _: Throwable => (-1.0, -1.0, 0) }
+      try cpuYardstick(cpus) catch { case _: Throwable => (-1.0, -1.0, 0) }
     val machJson = String.format(java.util.Locale.ROOT,
       """{"sha256_st_mbs":%.1f,"sha256_mt_mbs":%.1f,"threads":%d,"threads_req":%s,"cores":%d}""",
-      Double.box(machSt), Double.box(machMt), Int.box(machThreads), cpus,
+      Double.box(machSt), Double.box(machMt), Int.box(machThreads), Int.box(cpus),
       Int.box(Runtime.getRuntime.availableProcessors))
     // Gates whose STANDING-STATE build is memoized per (session, dir)
     // and therefore excluded from the timed reps (round-17 verdict item

@@ -2,14 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session configuration for a RESIDENT graft engine — the
-  * deployment-level settings that belong to every long-lived
-  * SparkSession running this library's full workload, extracted from
-  * the bench harness (round-17 verdict item: a consumer embedding these
-  * operators in its own session would otherwise silently re-inherit the
-  * defaults and re-pay the measured costs).
+/** Session construction for this library's mains and specs.
   *
-  * Contents (each workload-keyed, not machine- or scale-keyed):
+  * [[withEngineDefaults]] holds the settings every long-lived session
+  * running the full workload needs, workload-keyed rather than machine-
+  * or scale-keyed:
   *
   *   - `spark.sql.codegen.cache.maxEntries = 4096` (static conf — must
   *     be set BEFORE the session exists). Spark's generated-class cache
@@ -20,21 +17,38 @@ import org.apache.spark.sql.SparkSession
   *     query in suite context vs 0 single-query; raising the cap
   *     removed them all and cut the 25-gate weak-subset total 23%).
   *     The cache is keyed by generated source and lives per JVM, so the
-  *     value depends on the number of distinct plans in the workload —
-  *     the same 4096 is right on a cluster driver/executor regardless
-  *     of core count or data scale. Override: SPARK_GRAFT_CODEGEN_CACHE.
+  *     value depends on the number of distinct plans in the workload,
+  *     not on core count or data scale.
   *
-  * Deliberately NOT here: shuffle partitioning, AQE knobs, broadcast
-  * thresholds — those are machine/data-scale decisions the guide says
-  * to leave to AQE and per-deployment sizing. */
+  * Shuffle partitioning, AQE knobs and broadcast thresholds are NOT
+  * engine defaults: they are machine/data-scale decisions left to AQE and
+  * per-deployment sizing. [[local]] makes the one local-mode sizing choice
+  * the bench, the tools and the specs share: `cpus` task slots and as many
+  * shuffle partitions. */
 object Sessions {
 
   val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+  val CodegenCacheEntries = 4096L
 
-  def codegenCacheEntries: String =
-    sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096")
+  /** Local task slots: `SPARK_GRAFT_CPUS`, else every available core. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** Apply the resident-engine settings to a session builder. */
   def withEngineDefaults(b: SparkSession.Builder): SparkSession.Builder =
-    b.config(CodegenCacheKey, codegenCacheEntries)
+    b.config(CodegenCacheKey, CodegenCacheEntries)
+
+  /** A `local[cpus]` session with `cpus` shuffle partitions, UTC session
+    * time, no UI, WARN logging and the engine defaults. */
+  def local(appName: String, cpus: Int = Sessions.cpus): SparkSession = {
+    val spark = withEngineDefaults(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1393,8 +1393,8 @@ object Dedup {
     * per-pair argmax is a map-side-combinable struct `max`, not a second
     * window.
     *
-    * Residual-cost note (round-12 re-profile at sf0.1, warmed JVM —
-    * tools/SpanProfile): sharedSpans measures 1.97 s, of which the
+    * Residual-cost note (round-12 re-profile at sf0.1, warmed JVM, each
+    * stage timed on its own): sharedSpans measures 1.97 s, of which the
     * posting projection ALONE — tokenize → positional shingles →
     * shingle hash, before ANY join or fold — is 1.28 s (65%); the
     * match join + island fold + per-pair argmax is the remaining
@@ -1528,7 +1528,7 @@ object Dedup {
     * doc-freq here must be count(DISTINCT doc) — unlike the Jaccard
     * index, whose per-doc-distinct posting lists make plain count()
     * equal. */
-  private[graft] def positionalPosting(
+  private def positionalPosting(
       df: DataFrame, idCol: String, textCol: String, k: Int,
       maxDocFreqFraction: Option[Double], fast: Boolean = false): DataFrame = {
     // posexplode_OUTER + null-drop (the ngramJaccardPairs rationale):
@@ -1571,14 +1571,6 @@ object Dedup {
 
   /** Corpus self-join shingle matches (doc_a < doc_b), on the hashed
     * shingle key. */
-  /** Profiling taps for tools.SpanProfile (diagnostic surface only). */
-  private[graft] def selfSpanMatchesForProfile(
-      df: DataFrame, idCol: String, textCol: String): DataFrame =
-    selfSpanMatches(df, idCol, textCol, DefaultSpanK,
-      Some(DefaultMaxDocFreqFraction))
-  private[graft] def spanFoldForProfile(matches: DataFrame): DataFrame =
-    spanFold(matches, DefaultSpanK, DefaultMinSpanTokens)
-
   private def selfSpanMatches(
       df: DataFrame, idCol: String, textCol: String, k: Int,
       maxDocFreqFraction: Option[Double], fast: Boolean = false): DataFrame = {

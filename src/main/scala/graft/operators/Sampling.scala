@@ -308,7 +308,7 @@ object Sampling {
       // incremental plan Catalyst analyzes roots on a LogicalRDD instead
       // of embedding the whole prior fill's plan tree — which cost
       // 0.8-1.0 s of DRIVER analysis per execution when `taken` was the
-      // full corpus-fill twin (round-16 FloorProfile), a fixed tax at
+      // full corpus-fill twin (round-16 job profile), a fixed tax at
       // any data scale. The guard inside the aggregation still fires at
       // staging time; the materialized bytes are identical, so every
       // oracle gate hashes unchanged.

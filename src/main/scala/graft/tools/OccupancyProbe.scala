@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: print the bucket-occupancy summaries
   * (Occupancy.stats) for every banded/bucketed operator surface at each
   * testdata SF — the tool that validates the hot-bucket guard caps
@@ -16,13 +14,7 @@ object OccupancyProbe {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-occupancy-probe")
     def show(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       val r = df.collect().head
       println(f"  $name%-22s n_buckets=${r.getLong(0)}%-8d max=${r.getLong(1)}%-6d " +

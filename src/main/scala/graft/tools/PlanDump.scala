@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: dump `.explain("formatted")` for named gates to
   * files — `runMain graft.tools.PlanDump out_dir gate1,gate2 [sfDir]`.
   *
@@ -9,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * plan (Exchange placement, join strategy, PushedFilters/ReadSchema,
   * WholeStageCodegen spans) — the committed before/after evidence the
   * optimization rounds require (plans/r<N>/<query>_{before,after}.txt).
-  * Uses the same session shape as Bench (local[32], 32 shuffle
-  * partitions) so plans match what the bench times. */
+  * Uses the same session as Bench (`Sessions.local`: `SPARK_GRAFT_CPUS`
+  * task slots and shuffle partitions) so plans match what the bench
+  * times; Exchange partition counts in the plans follow that setting. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump out_dir gate1,gate2 [sfDir]")
@@ -18,16 +17,9 @@ object PlanDump {
     val gates = args(1).split(',')
     val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("graft-plandump")
     gates.foreach { g =>
-      val df = graft.SparkEntry.queries
-        .getOrElse(g, graft.Bench.benchOnly(g))(spark, dir)
+      val df = graft.Bench.gate(g).getOrElse(sys.error(s"unknown gate: $g"))(spark, dir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: print the Bench recall metrics (production-posture
   * ANN + MinHash pair recall vs exact ground truth) for each testdata
   * SF — the tool used to choose and re-validate RecallSpec's asserted
@@ -11,13 +9,7 @@ object RecallProbe {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-recall-probe")
     for (dir <- dirs) {
       val t0 = System.nanoTime()
       val r = graft.Bench.measureRecall(spark, dir)

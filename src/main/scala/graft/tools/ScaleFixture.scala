@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main: synthesize a larger scale-factor fixture from an
@@ -39,13 +39,7 @@ object ScaleFixture {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/root/repo/target/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-scale-fixture")
 
     def stack(name: String, remap: (DataFrame, Int) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$name.parquet")

@@ -4,15 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. */
+/** Shared local SparkSession for specs: the tools' session factory at a
+  * fixed 4 task slots and 4 shuffle partitions. */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local("graft-test", cpus = 4)
 
   val sfDir = "/root/testdata/sf0.001"
 
