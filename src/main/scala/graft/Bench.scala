@@ -434,20 +434,18 @@ object Bench {
     // pHash pair recall vs the UNCAPPED truth: the capped fine cut
     // (9×7 — the 1,152-bucket-ceiling posture the round-12 verdict
     // flagged) against the capped corpus-scaled multiprobe plan
-    // (bandPlanFor) — the evidence that the planned posture retains
+    // (BandIndex.planFor) — the evidence that the planned posture retains
     // recall where the fine cut's fixed keyspace would shed it under
     // the guard cap. Truth = the lossless walk with the cap off.
-    import graft.operators.{Multimodal, PerceptualHash}
+    import graft.operators.{BandIndex, Multimodal, PerceptualHash}
     val media = Multimodal.syntheticImagesFromText(
       docs.filter(pmod(c("doc_id"), lit(3)) === 0), "doc_id", "text")
     val phTruth = PerceptualHash.phashPairs(media, maxBucket = None)
       .select(c("doc_a"), c("doc_b")).cache()
     val phFine = PerceptualHash.phashPairs(media)
-    val phPlanned = PerceptualHash.phashPairsPlanned(
-      media, PerceptualHash.bandPlanFor(
-        media.select("media_id").count(), PerceptualHash.DefaultMaxHamming))
-    val phMp = PerceptualHash.phashPairsPlanned(
-      media, PerceptualHash.BandPlan(7, 1))
+    val phPlanned = PerceptualHash.phashPairsAuto(media)
+    val phMp = PerceptualHash.phashPairs(
+      media, BandIndex.BandPlan(PerceptualHash.PhashBits, 7, 1))
     val out = Seq(
       "ss_ann_lsh_t1" -> Recall.recallAtK(lsh(1), truth),
       "ss_ann_lsh_t8" -> Recall.recallAtK(lsh(8), truth),

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.NativeFunctions
@@ -21,12 +20,15 @@ import graft.functions.TextFunctions._
   *   - `maxDocFreq` optionally drops ubiquitous shingles before the
   *     inverted-index join — the standard skew guard when a boilerplate
   *     shingle would otherwise create a quadratic hot key.
-  *   - The banded pair walks (MinHash, SimHash, pHash) run one native
+  *   - The banded families (MinHash, SimHash, pHash) share one index
+  *     layout, [[BandIndex]]: each family supplies only its banded
+  *     projection and its pair score. The pair walks run one native
   *     kernel each (plans.JaccardBucketPairs / PackedBucketPairs) on one
   *     path: ids must be bigint, and any other id type is refused up
   *     front rather than cast.
   */
 object Dedup {
+  import BandIndex.BandPlan
 
   /** Named defaults shared between the Spark operators and the DuckDB
     * oracle templates (TrainingDataQueries): deriving the oracle's
@@ -49,9 +51,10 @@ object Dedup {
     * not duplication). 4 × 16 is equally lossless with a 262,144-key
     * universe: identical final pairs (both schemes lossless ⊆ the exact
     * Hamming filter), ~256× fewer random collisions, half the band
-    * rows. Beyond ~67M docs, [[simhashBandPlanFor]] climbs to the
+    * rows. Beyond ~67M docs, [[BandIndex.planFor]] climbs to the
     * 2 × 32 multiprobe rung. */
   val DefaultSimhashBands = 4
+  val DefaultSimhashPlan: BandPlan = BandPlan(DefaultSimhashBits, DefaultSimhashBands)
   val DefaultMaxHamming = 3
 
   /** Default skew-guard posture for the inverted-index join: drop
@@ -241,7 +244,7 @@ object Dedup {
 
   /** The EVAL side of [[contaminationPairs]] as a PERSISTABLE index —
     * the decontamination family's entry in the frozen-index convention
-    * every other dedup modality carries (minhashBandIndex,
+    * every other dedup modality carries (BandIndex.build,
     * spanPostingIndex, …): guarded (eval_id, n_sh, h) posting rows,
     * plain columns storable and re-readable as parquet. Eval suites
     * change rarely while training corpora ingest continuously, so
@@ -322,72 +325,6 @@ object Dedup {
       .select("train_id", "eval_id", "containment")
   }
 
-  /** Candidate pairs from banded signatures (`doc, sig, band, bkey`):
-    * group each LSH bucket once and enumerate member pairs in-row with a
-    * native pair walk (`walk(ms, band)` — plans.JaccardBucketPairs /
-    * plans.PackedBucketPairs). This beats the natural self-join on
-    * (band,bkey), which computes the signature plan twice (Spark cannot
-    * reuse the exchange into a broadcast build side) — one pass + one
-    * shuffle instead.
-    *
-    * A pair colliding in SEVERAL bands must still be emitted once.
-    * Rather than a `dropDuplicates` — a second full shuffle of the
-    * candidate set, the largest intermediate in the whole dedup — each
-    * pair is kept only in its FIRST colliding band, decided IN-ROW from
-    * the signatures both members carry: bands `0 until band` must
-    * disagree on their `r`-wide slices. Exact-once by construction, zero
-    * extra exchanges. The symmetric score is computed in-row too, so
-    * the emitted candidate is (doc_a, doc_b, score), never both
-    * signatures.
-    *
-    * Hot-bucket guard (the walk's `cap`): a bucket with m > cap members
-    * would otherwise materialize O(m²) candidates inside one
-    * aggregation row — the executor-OOM regime when a boilerplate
-    * near-dup cluster (routine in web crawls) lands in one bucket. Above
-    * the cap the bucket switches to survivor-pairs + representative
-    * chains: the `cap` lowest-id members (deterministic and key-stable —
-    * bucket membership alone decides) enumerate pairs exactly, every
-    * remaining member CHAINS to the bucket representative (the min doc).
-    * Per-bucket work becomes O(cap² + m), and connectivity is preserved
-    * — every member stays linked to the rep, so `duplicateClusters`
-    * resolves a capped cluster to exactly the same component. The price
-    * is pair-level completeness among non-survivors, which is the right
-    * trade in the regime that triggers it: a bucket only grows hot when
-    * near-identical documents share band slices, where chain scores
-    * match pair scores.
-    *
-    * Guard/keep interaction, stated precisely: `keep` assumes the FIRST
-    * colliding band represented the pair, so a pair of non-survivors
-    * whose first collision is a hot band exists only through that
-    * band's chains — a later COLD collision of the same pair is still
-    * suppressed by `keep`. If such a pair's chain scores fall below the
-    * caller's threshold, its component can split. This requires a hot
-    * bucket whose members are NOT mutually similar — with md5-derived
-    * r-component slices that is a degenerate banding, not a boilerplate
-    * cluster — and is the irreducible approximation of bounding bucket
-    * work in-row. When NO band bucket exceeds the cap (every gated
-    * fixture; the dormancy spec), results are bit-identical to the
-    * unguarded plan.
-    *
-    * The walks are compiled loops because Catalyst higher-order
-    * functions are not whole-stage-codegen'd: a lambda walk paid an
-    * interpreted eval + struct allocation per candidate pair (~800
-    * ns/pair measured at sf0.1 — ≈2 s of dd_phash's 2.6-3.7 s wall). */
-  private def bucketPairs(banded: DataFrame,
-      walk: (Column, Column) => Column): DataFrame =
-    banded.groupBy("band", "bkey")
-      .agg(collect_list(struct(col("doc"), col("sig"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      // outer + null-drop: a non-outer explode's inferred filter
-      // (InferFiltersFromGenerate) re-evaluates the whole pair walk
-      // twice more per bucket row (see ngramJaccardPairs); an
-      // all-suppressed bucket's empty array becomes one null row,
-      // dropped here
-      .select(explode_outer(walk(col("ms"), col("band"))).as("p"))
-      .filter(col("p").isNotNull)
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-        col("p.score").as("score"))
-
   /** The pair walks need bigint ids: fail fast, naming the column,
     * rather than casting (a cast could silently merge distinct ids). */
   private[operators] def requireLongId(df: DataFrame, idCol: String, op: String): Unit = {
@@ -396,11 +333,6 @@ object Dedup {
       s"$op needs a bigint id column, but '$idCol' is ${t.catalogString}")
   }
 
-  /** MinHash + LSH near-duplicate pairs. k-component signatures are cut
-    * into `bands` bands of k/bands rows; documents colliding in any band
-    * become candidates; candidates are scored by signature-estimated
-    * Jaccard. With k=64, bands=16 (r=4) the LSH S-curve crosses ~0.5 —
-    * tuned for finding ≥0.8-similar training-corpus duplicates. */
   /** The banded LSH index rows (`doc, sig, band, bkey`) minhashPairs
     * buckets on — exposed as the occupancy-observability surface (feed
     * to `Occupancy.stats(_, cap, "band", "bkey")` to see the skew regime
@@ -440,6 +372,11 @@ object Dedup {
       .filter(col("band").isNotNull)
   }
 
+  /** MinHash + LSH near-duplicate pairs. k-component signatures are cut
+    * into `bands` bands of k/bands rows; documents colliding in any band
+    * become candidates; candidates are scored by signature-estimated
+    * Jaccard. With k=64, bands=16 (r=4) the LSH S-curve crosses ~0.5 —
+    * tuned for finding ≥0.8-similar training-corpus duplicates. */
   def minhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
@@ -453,7 +390,7 @@ object Dedup {
     val r = k / bands
     // the walk scores by estimated Jaccard and pushes the threshold
     // inside the loop; the Filter below keeps the plan's contract explicit
-    bucketPairs(minhashBanded(df, idCol, textCol, n, k, bands, fast),
+    BandIndex.pairs(minhashBanded(df, idCol, textCol, n, k, bands, fast),
       (ms, band) => NativeFunctions.jaccardPairs(ms, band, r,
         maxBucket.getOrElse(-1), threshold))
       .filter(col("score") >= threshold)
@@ -464,165 +401,23 @@ object Dedup {
     * batch (`delta`) and an EXISTING corpus — the shape a 100 TB
     * pipeline actually runs on every ingest, where re-banding the whole
     * corpus daily is the difference between O(|delta|) and O(|corpus|)
-    * signature work (the corpus side here is its banded index, which a
-    * production deployment persists once and reads back; both sides'
-    * band rows are plain columns, so the stored index IS this
-    * DataFrame). Within-delta duplicates are `minhashPairs(delta)`,
-    * composable on top.
-    *
-    * Shape: two zero-shuffle banded projections, ONE equi-join on
-    * (band, bkey), then a per-pair collapse (a pair colliding in
-    * several bands must surface once) via a map-side-combinable max —
-    * the estimate is signature-determined, so identical on every
-    * colliding band. Join skew on a hot bucket spills and AQE-splits
-    * like any equi-join — there is no in-row pair expansion on this
-    * path. Re-ingesting a doc already in the corpus must NOT report the
-    * doc as its own duplicate, so identical-id pairs are filtered at
-    * the join (cheapest point: before the per-pair collapse). The
-    * corpus index rides through [[capBandBuckets]] — the incremental
-    * twin of the full path's candidate-pool guard. */
+    * signature work. The corpus side is its banded index
+    * (`BandIndex.build(minhashBanded(corpus))`, built in-plan, persisted
+    * as parquet, or a `BandIndex.write` table — plain columns, so the
+    * stored index IS that DataFrame); the delta pays one signature
+    * projection and one [[BandIndex.probe]]. Within-delta duplicates
+    * are `minhashPairs(delta)`, composable on top. The band cut must
+    * match the index's. */
   def minhashPairsIncremental(
-      delta: DataFrame, corpus: DataFrame, idCol: String, textCol: String,
-      n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands,
-      threshold: Double = DefaultMinhashThreshold,
-      fast: Boolean = false,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
-    minhashPairsIncrementalFromIndex(
-      delta,
-      minhashBandIndex(corpus, idCol, textCol, n, k, bands, fast, maxBucket),
-      idCol, textCol, n, k, bands, threshold, fast)
-
-  /** The corpus side of [[minhashPairsIncremental]] as a PERSISTABLE
-    * index: banded signature rows with the occupancy cap applied at
-    * BUILD time — plain (doc, sig, band, bkey) columns, storable and
-    * re-readable as parquet (DedupSpec proves the round trip), so a
-    * production ingest loop pays the signature pass and the cap shuffle
-    * once per corpus version, not once per delta batch. */
-  def minhashBandIndex(
-      corpus: DataFrame, idCol: String, textCol: String,
-      n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands,
-      fast: Boolean = false,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
-    capBandBuckets(
-      minhashBanded(corpus, idCol, textCol, n, k, bands, fast), maxBucket)
-
-  /** Single-column band join key `bb` = band ':' bkey — bijective with
-    * (band, bkey): band is a plain integer and ':' occurs in neither
-    * part (bkey joins numeric components with '_'), so an equi-join on
-    * `bb` produces exactly the (band, bkey) join's rows while giving
-    * the persisted bucketed layouts ONE column to bucket-and-sort on
-    * (Spark's bucketed scan satisfies a join's distribution only
-    * through its bucket column). */
-  private def bandKey: Column = concat_ws(":", col("band"), col("bkey"))
-
-  /** [[minhashPairsIncremental]] against an already-built (possibly
-    * persisted-and-reloaded) [[minhashBandIndex]]: the O(Δ) ingest path
-    * pays only the delta's signature projection and the band join. The
-    * join runs on the single fused `bb` key — computed here unless the
-    * index already STORES it (the [[writeMinhashBandIndexBucketed]]
-    * layout), in which case the stored column carries the scan's bucket
-    * partitioning into the join and the corpus side shuffles ZERO rows
-    * (MinhashIndexBucketingSpec asserts the single-exchange plan). */
-  def minhashPairsIncrementalFromIndex(
       delta: DataFrame, corpusIndex: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
       bands: Int = DefaultMinhashBands,
       threshold: Double = DefaultMinhashThreshold,
-      fast: Boolean = false): DataFrame = {
-    val bd = minhashBanded(delta, idCol, textCol, n, k, bands, fast)
-      .select(col("doc").as("delta_id"), col("sig").as("sig_d"),
-        bandKey.as("bb"))
-    val withBb =
-      if (corpusIndex.columns.contains("bb")) corpusIndex
-      else corpusIndex.withColumn("bb", bandKey)
-    val bc = withBb
-      .select(col("doc").as("corpus_id"), col("sig").as("sig_c"), col("bb"))
-    bd.join(bc, Seq("bb"))
-      .filter(col("delta_id") =!= col("corpus_id"))
-      .groupBy("delta_id", "corpus_id")
-      .agg(max(estJaccard(col("sig_d"), col("sig_c"))).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-  }
-
-  /** Persist the MinHash band index as a BUCKETED-and-sorted table on
-    * the fused band key — the span family's round-9 shuffle-elimination
-    * layout ([[writeSpanPostingIndexBucketed]]) applied to the MinHash
-    * sibling: every subsequent [[minhashPairsIncrementalFromIndex]] run
-    * against `spark.table(table)` shuffles ONLY the delta's band rows;
-    * the corpus index — the overwhelming bulk at 100 TB — is read
-    * bucket-in-place with no exchange. The occupancy cap is applied at
-    * build time (capping is idempotent), so the stored index is the
-    * guarded one and ingest pays neither the cap shuffle nor the corpus
-    * shuffle. */
-  def writeMinhashBandIndexBucketed(
-      corpus: DataFrame, idCol: String, textCol: String,
-      table: String, nBuckets: Int, path: Option[String] = None,
-      n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands,
-      fast: Boolean = false,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): Unit =
-    graft.store.Bucketing.writeBucketed(
-      minhashBandIndex(corpus, idCol, textCol, n, k, bands, fast, maxBucket)
-        .withColumn("bb", bandKey),
-      table, "bb", nBuckets, path)
-
-  /** APPEND a new batch's band rows into an existing bucketed MinHash
-    * band index — [[appendToSpanPostingIndexBucketed]]'s signature-family
-    * twin, same frozen-decision contract: the build-time occupancy cap
-    * is not re-run (appends can push a bucket past it; rebuild — which
-    * is idempotent over the stored index — re-caps), and the layout is
-    * preserved so ingest joins stay delta-only-exchange. */
-  def appendToMinhashBandIndexBucketed(
-      batch: DataFrame, idCol: String, textCol: String,
-      table: String, nBuckets: Int,
-      n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands,
-      fast: Boolean = false): Unit =
-    graft.store.Bucketing.appendBucketed(
-      minhashBanded(batch, idCol, textCol, n, k, bands, fast)
-        .withColumn("bb", bandKey),
-      table, "bb", nBuckets)
-
-  /** [[appendToMinhashBandIndexBucketed]]'s SimHash twin — same frozen
-    * cap contract, same preserved layout. */
-  def appendToSimhashBandIndexBucketed(
-      batch: DataFrame, idCol: String, textCol: String,
-      table: String, nBuckets: Int,
-      bits: Int = DefaultSimhashBits, bands: Int = DefaultSimhashBands,
-      minTokens: Int = 1): Unit =
-    graft.store.Bucketing.appendBucketed(
-      simhashBanded(batch, idCol, textCol, bits, bands, minTokens)
-        .withColumn("bb", bandKey),
-      table, "bb", nBuckets)
-
-  /** Key-stable per-(band, bkey) occupancy cap on a banded index — the
-    * incremental twins' version of the full paths' candidate-pool
-    * guard: a hot bucket's members are sampled to `cap` by
-    * (xxhash64(doc), doc) rank before the delta join, bounding the
-    * per-bucket join fan-out at |delta bucket|·cap instead of
-    * |delta bucket|·|corpus bucket|. SimHash makes this load-bearing,
-    * not hygienic: an r-bit band key has ≤2^r values (256 at the 64/8
-    * default), so EVERY corpus doc shares a band bucket with ~n/256
-    * others — unguarded, a single ingest joins against O(n) rows per
-    * delta doc. Costs one shuffle of the index per call here; a
-    * production deployment pays it ONCE at index-persist time (the
-    * capped index is what gets stored — capping is idempotent).
-    * Dormant (pass-through, bit-identical) while every bucket fits the
-    * cap, which holds for every gated fixture; in the guard-active
-    * regime the result is a key-stable subsample of the uncapped pair
-    * set, exactly like the full path under its own guard. */
-  private def capBandBuckets(banded: DataFrame, maxBucket: Option[Int]): DataFrame =
-    maxBucket match {
-      case None => banded
-      case Some(cap) =>
-        require(cap >= 2, "maxBucket must be >= 2")
-        val w = Window.partitionBy("band", "bkey")
-          .orderBy(xxhash64(col("doc")), col("doc"))
-        banded.withColumn("__r", row_number().over(w))
-          .filter(col("__r") <= cap).drop("__r")
-    }
+      fast: Boolean = false): DataFrame =
+    BandIndex.probe(minhashBanded(delta, idCol, textCol, n, k, bands, fast),
+      corpusIndex, estJaccard)
+      .filter(col("score") >= threshold)
+      .select(col("delta_id"), col("corpus_id"), col("score").as("est_jaccard"))
 
   /** MinHash LSH candidates re-ranked by *exact* n-gram Jaccard — the
     * standard production dedup pipeline: LSH bounds the candidate set
@@ -649,34 +444,80 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
+  /** Edge-count bound under which [[duplicateClusters]] resolves the
+    * component labels ON THE DRIVER (union-find over the collected edge
+    * list) instead of running the distributed propagation loop.
+    * Near-duplicate pair graphs are overwhelmingly TINY relative to
+    * their corpus (duplicate groups of a few members), while every
+    * propagation round costs ~3 scheduled jobs plus a driver re-plan —
+    * measured at sf0.1 as ~1.5-2 s of dd_clusters' 2.5-3 s wall for a
+    * graph of a few hundred edges. The bound keeps the collect
+    * broadcast-sized (16 B/edge ⇒ ≤ ~3 MB), the same scale contract as
+    * the IVF centroid / Bloom-filter driver collects; past it the loop
+    * runs unchanged. */
+  val CcDriverMaxEdges: Long = 200000L
+
   /** Connected components over a near-duplicate pair graph → duplicate
     * CLUSTERS with a canonical representative (the minimum doc id in the
     * component) — what a production dedup actually keeps/drops, beyond
-    * raw pairs. Iterative min-label propagation: each round every doc
-    * takes the min of its own label and its neighbors' labels, so labels
-    * converge to the component minimum in O(graph diameter) rounds. Each
-    * round is one shuffle join + one aggregation over the EDGE list
-    * (never materializing anything quadratic); persist + a driver-side
+    * raw pairs. A graph of long ids with at most [[CcDriverMaxEdges]]
+    * directed edges resolves in one driver-side union-find pass; any
+    * other graph runs [[propagateLabels]]. Both return the same
+    * converged min-label components (differential-spec'd in
+    * DuplicateClustersDriverSpec). `maxIters` bounds the loop only. */
+  def duplicateClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
+    val edges = pairs
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .transform(Materialize.stage(_, eager = true))
+    // the driver path saves the loop's O(rounds) job/checkpoint/
+    // convergence-probe cadence; long ids only (every production
+    // caller), other id types keep the loop
+    import org.apache.spark.sql.types.LongType
+    val longIds = edges.schema("src").dataType == LongType &&
+      edges.schema("dst").dataType == LongType
+    if (!longIds || edges.count() > CcDriverMaxEdges) return propagateLabels(edges, maxIters)
+    val es = edges.select(col("src"), col("dst")).collect()
+    val parent = new java.util.HashMap[Long, Long](es.length * 2)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    var i = 0
+    while (i < es.length) {
+      val s = es(i).getLong(0); val d = es(i).getLong(1)
+      if (!parent.containsKey(s)) parent.put(s, s)
+      if (!parent.containsKey(d)) parent.put(d, d)
+      val rs = find(s); val rd = find(d)
+      if (rs != rd) parent.put(math.max(rs, rd), math.min(rs, rd))
+      i += 1
+    }
+    // component label = min member id: with min-root unions the root
+    // IS the component minimum
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val labels = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
+    val it = parent.keySet().iterator()
+    while (it.hasNext) { val doc = it.next(); labels += ((doc, find(doc))) }
+    labels.toSeq.toDF("doc_id", "cluster_id")
+  }
+
+  /** Distributed connected components over symmetric (src, dst) edges:
+    * iterative min-label propagation — each round every doc takes the
+    * min of its own label and its neighbors' labels, so labels converge
+    * to the component minimum in O(graph diameter) rounds. Each round is
+    * one shuffle join + one aggregation over the EDGE list (never
+    * materializing anything quadratic); a pin + a driver-side
     * convergence count per round bounds lineage — the standard
     * structure of distributed iterative graph algorithms (GraphX's
     * connected components does the same under the hood). Near-dup
     * components are overwhelmingly tiny (duplicate groups), so rounds ≈
-    * 2-4 in practice; `maxIters` is a runaway bound, not a tuning knob. */
-  /** Edge-count bound under which [[duplicateClusters]] resolves the
-    * component labels ON THE DRIVER (union-find over the collected edge
-    * list) instead of running the distributed propagation loop —
-    * session-overridable via `spark.graft.ccDriverMaxEdges` (0 disables
-    * the driver path entirely). Near-duplicate pair graphs are
-    * overwhelmingly TINY relative to their corpus (duplicate groups of
-    * a few members), while every propagation round costs ~3 scheduled jobs
-    * plus a driver re-plan — measured at sf0.1 as ~1.5-2 s of
-    * dd_clusters' 2.5-3 s wall for a graph of a few hundred edges. The
-    * bound keeps the collect broadcast-sized (16 B/edge ⇒ ≤ ~3 MB at
-    * the default), the same scale contract as the IVF centroid /
-    * Bloom-filter driver collects; past it the loop runs unchanged. */
-  val DefaultCcDriverMaxEdges: Long = 200000L
-
-  def duplicateClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
+    * 2-4 in practice; `maxIters` is a runaway bound, not a tuning knob.
+    * Output (doc_id, cluster_id). */
+  private[operators] def propagateLabels(edges: DataFrame, maxIters: Int): DataFrame = {
     // localCheckpoint per round, not persist: caching truncates
     // recomputation but NOT the logical plan, which otherwise grows
     // exponentially across rounds (each round references the previous
@@ -684,51 +525,6 @@ object Dedup {
     // the standard iterative-algorithm failure GraphX solves the same
     // way. A production run with executor churn would point
     // spark.checkpoint.dir at reliable storage and use checkpoint().
-    val edges = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .transform(Materialize.stage(_, eager = true))
-    // Scale-adaptive driver path (round 18): a bounded pair graph
-    // resolves in one union-find pass — same converged min-label
-    // components the loop computes (differential-spec'd in
-    // DuplicateClustersDriverSpec), minus the O(rounds) job/
-    // checkpoint/convergence-probe cadence. Long ids only (every
-    // production caller); exotic id types keep the loop.
-    val spark = pairs.sparkSession
-    import org.apache.spark.sql.types.LongType
-    val driverMax =
-      try spark.conf.get("spark.graft.ccDriverMaxEdges",
-        DefaultCcDriverMaxEdges.toString).toLong
-      catch { case _: NumberFormatException => DefaultCcDriverMaxEdges }
-    val longIds = edges.schema("src").dataType == LongType &&
-      edges.schema("dst").dataType == LongType
-    if (longIds && driverMax > 0 && edges.count() <= driverMax) {
-      val es = edges.select(col("src"), col("dst")).collect()
-      val parent = new java.util.HashMap[Long, Long](es.length * 2)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      var i = 0
-      while (i < es.length) {
-        val s = es(i).getLong(0); val d = es(i).getLong(1)
-        if (!parent.containsKey(s)) parent.put(s, s)
-        if (!parent.containsKey(d)) parent.put(d, d)
-        val rs = find(s); val rd = find(d)
-        if (rs != rd) parent.put(math.max(rs, rd), math.min(rs, rd))
-        i += 1
-      }
-      // component label = min member id: with min-root unions the root
-      // IS the component minimum
-      import spark.implicits._
-      val labels = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-      val it = parent.keySet().iterator()
-      while (it.hasNext) { val doc = it.next(); labels += ((doc, find(doc))) }
-      return labels.toSeq.toDF("doc_id", "cluster_id")
-    }
     var (labels, releaseLabels) = Materialize.staged(
       edges.select(col("src").as("doc")).distinct()
         .withColumn("label", col("doc")),
@@ -845,64 +641,34 @@ object Dedup {
     ClusterMergeParts(mapping, nodeLab, fresh)
   }
 
-  /** The ONE copy of the banded O(Δ) ingest join the packed incremental
-    * signature families share (SimHash, pHash): the delta's banded rows equi-join the corpus index
-    * on the fused band key, self-pairs drop, per-pair collapse by max
-    * score. A stored `bb` column (the bucketed layout) carries the
-    * scan's partitioning into the join so the corpus side shuffles
-    * nothing. */
-  private def bandedIncrementalJoin(deltaBanded: DataFrame,
-      corpusIndex: DataFrame, score: (Column, Column) => Column): DataFrame = {
-    val bd = deltaBanded
-      .select(col("doc").as("delta_id"), col("sig").as("sig_d"),
-        bandKey.as("bb"))
-    val withBb =
-      if (corpusIndex.columns.contains("bb")) corpusIndex
-      else corpusIndex.withColumn("bb", bandKey)
-    val bc = withBb
-      .select(col("doc").as("corpus_id"), col("sig").as("sig_c"), col("bb"))
-    bd.join(bc, Seq("bb"))
-      .filter(col("delta_id") =!= col("corpus_id"))
-      .groupBy("delta_id", "corpus_id")
-      .agg(max(score(col("sig_d"), col("sig_c"))).as("score"))
-  }
-
-  // ---- PACKED (≤ 63-bit) signature family ----------------------------
+  // ---- PACKED (≤ 64-bit) signature family ----------------------------
   //
-  // A signature short enough for one long (the 63-bit perceptual hash)
-  // should never ride the array machinery: packing bit i of the
-  // signature into bit i of a LONG shrinks the shuffled payload from a
-  // ~250-byte bit-array struct to 8 bytes, turns the Hamming score into
-  // bit_count(a XOR b) (one instruction span vs a 63-element zip), and
-  // turns band keys into shift+mask integers instead of joined strings.
-  // The band-b key covers signature positions [b·r, b·r+r) — the same
-  // position partition as contiguous array slices — so the candidate
-  // set, survivor logic, and scores are identical bit-for-bit to the
-  // bit-array form and an oracle written against either matches.
+  // A signature short enough for one long (SimHash, the 63-bit
+  // perceptual hash) should never ride the array machinery: packing bit
+  // i of the signature into bit i of a LONG shrinks the shuffled payload
+  // from a ~250-byte bit-array struct to 8 bytes, turns the Hamming
+  // score into bit_count(a XOR b) (one instruction span vs a 63-element
+  // zip), and turns band keys into shift+mask integers instead of joined
+  // strings. The band-b key covers signature positions [b·r, b·r+r) —
+  // the same position partition as contiguous array slices — so the
+  // candidate set, survivor logic, and scores are identical bit-for-bit
+  // to the bit-array form and an oracle written against either matches.
+  // The band cut is a [[BandIndex.BandPlan]].
 
   /** Band-explode a PRECOMPUTED signature table whose signature is
     * packed into one long (`sigCol`, bit i = signature position i,
-    * `bits` ≤ 64) into the family's (doc, sig, band, bkey) rows, with
-    * integer `bkey` — so non-text modalities (the perceptual image hash)
-    * ride the same candidate machinery as SimHash. A full 64-bit
-    * signature may put bit 63 in the sign position — safe throughout:
-    * xor and bit_count are sign-agnostic, and the band slice is an
-    * ARITHMETIC shift masked to r bits, whose kept positions [0, r)
-    * carry the true bits [b·r, b·r+r) for every band that tiles the
-    * word (sign fill only reaches positions ≥ 64 − b·r, all masked
-    * away). */
+    * `plan.bits` ≤ 64) into the family's (doc, sig, band, bkey) rows at
+    * `plan`'s band cut, with integer `bkey` — so non-text modalities
+    * (the perceptual image hash) ride the same index as SimHash. A full
+    * 64-bit signature may put bit 63 in the sign position — safe
+    * throughout: xor and bit_count are sign-agnostic, and the band
+    * slice is an ARITHMETIC shift masked to r bits, whose kept positions
+    * [0, r) carry the true bits [b·r, b·r+r) for every band that tiles
+    * the word (sign fill only reaches positions ≥ 64 − b·r, all masked
+    * away). Multiprobe never changes these rows. */
   def packedSignatureBanded(sigs: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int): DataFrame = {
-    require(bits % bands == 0, "bands must divide bits")
-    require(bits <= 64, s"packed signatures hold at most 64 bits, got $bits")
-    // only the genuinely undefined case is rejected: bands = 1 over a
-    // full 64-bit signature would need an unmasked (1L << 64) word;
-    // bands = 1 with bits <= 63 has a well-defined mask and stays legal
-    // (round-13 ADVICE — the blanket bands >= 2 was a silent API
-    // tightening for external callers)
-    require(bands >= 2 || bits <= 63,
-      "bands = 1 requires bits <= 63 (a 64-bit single band key would need an unmasked word)")
-    val r = bits / bands
+      plan: BandPlan): DataFrame = {
+    val r = plan.r
     val mask = (1L << r) - 1
     // posexplode_OUTER + null-drop: a non-outer generate feeds
     // InferFiltersFromGenerate, and pushdown substitutes `sig`'s whole
@@ -912,174 +678,72 @@ object Dedup {
     // never empty (bands ≥ 1), so the filter drops nothing.
     sigs.select(col(idCol).as("doc"), col(sigCol).cast("long").as("sig"))
       .select(col("doc"), col("sig"),
-        posexplode_outer(transform(sequence(lit(0), lit(bands - 1)), b =>
+        posexplode_outer(transform(sequence(lit(0), lit(plan.bands - 1)), b =>
           call_function("shiftright", col("sig"), (b * r).cast("int"))
             .bitwiseAND(lit(mask))))
           .as(Seq("band", "bkey")))
       .filter(col("band").isNotNull)
   }
 
+  private val hamming: (Column, Column) => Column = (a, b) => bit_count(a.bitwiseXOR(b))
+
   /** Near-duplicate pairs over a precomputed packed signature table,
-    * Hamming-scored: the banded candidate walk ([[bucketPairs]] — one
-    * bucket pass, first-colliding-band dedup, hot-bucket cap) with
-    * slices and score fused into long bit arithmetic. Output (doc_a,
-    * doc_b, score = Hamming distance). `maxScore` (when set) pushes the
-    * caller's `score <= maxScore` filter inside the walk so
-    * non-qualifying pairs are never materialized as rows — emitted
-    * pairs are unchanged. */
+    * Hamming-scored. At a plan without flips this is the banded
+    * candidate walk ([[BandIndex.pairs]] — one bucket pass,
+    * first-colliding-band dedup, hot-bucket cap) with slices and score
+    * fused into long bit arithmetic; a multiprobe plan runs
+    * [[BandIndex.probePairs]] with the cap on the exact side. Output
+    * (doc_a, doc_b, score = Hamming distance). `maxScore` (when set)
+    * keeps only pairs with `score <= maxScore` — inside the walk, so
+    * non-qualifying pairs are never materialized as rows. */
   def packedSignaturePairs(sigs: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int,
+      plan: BandPlan,
       maxBucket: Option[Int] = Some(DefaultMaxBucket),
       maxScore: Option[Int] = None): DataFrame = {
     maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
     requireLongId(sigs, idCol, "packedSignaturePairs")
-    val r = bits / bands
-    bucketPairs(packedSignatureBanded(sigs, idCol, sigCol, bits, bands),
-      (ms, band) => NativeFunctions.packedPairs(ms, band, r,
-        maxBucket.getOrElse(-1), maxScore.getOrElse(-1)))
+    val banded = packedSignatureBanded(sigs, idCol, sigCol, plan)
+    if (plan.flips == 0)
+      BandIndex.pairs(banded, (ms, band) => NativeFunctions.packedPairs(ms, band,
+        plan.r, maxBucket.getOrElse(-1), maxScore.getOrElse(-1)))
+    else {
+      val ps = BandIndex.probePairs(banded, plan, maxBucket, hamming)
+      maxScore.fold(ps)(m => ps.filter(col("score") <= m))
+    }
   }
 
-  /** A precomputed packed-signature corpus as a PERSISTABLE banded
-    * index ([[simhashBandIndex]]'s shape): plain (doc, sig, band, bkey)
-    * columns — three longs and an int per row — with the occupancy cap
-    * applied at build time. */
-  def packedSignatureBandIndex(sigs: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
-    capBandBuckets(packedSignatureBanded(sigs, idCol, sigCol, bits, bands),
-      maxBucket)
-
-  /** O(Δ) ingest against a [[packedSignatureBandIndex]], Hamming-scored.
-    * Output (delta_id, corpus_id, score); threshold at the caller. */
-  def packedSignaturePairsIncrementalFromIndex(deltaSigs: DataFrame,
+  /** O(Δ) ingest of packed delta signatures against a packed banded
+    * index built AT THE SAME BAND CUT (`BandIndex.build(
+    * packedSignatureBanded(corpus, …, plan))` or its persisted form):
+    * the delta's rows expand to their `plan.flips` probe sets read-side
+    * ([[BandIndex.multiprobe]]), so a bucketed index still shuffles
+    * nothing corpus-side. Output (delta_id, corpus_id, score = Hamming
+    * distance); threshold at the caller. */
+  def packedSignaturePairsIncremental(deltaSigs: DataFrame,
       corpusIndex: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int): DataFrame =
-    bandedIncrementalJoin(
-      packedSignatureBanded(deltaSigs, idCol, sigCol, bits, bands),
-      corpusIndex, (a, b) => bit_count(a.bitwiseXOR(b)))
+      plan: BandPlan): DataFrame =
+    BandIndex.probe(
+      BandIndex.multiprobe(packedSignatureBanded(deltaSigs, idCol, sigCol, plan), plan),
+      corpusIndex, hamming)
 
-  // ---- MULTIPROBE over packed signatures ------------------------------
-  //
-  // The fine band cut's structural ceiling: losslessness at Hamming ≤ h
-  // by pigeonhole alone needs > h bands, so a 63-bit signature at h = 8
-  // is stuck with 9 bands × 7 bits = 1,152 possible (band, bkey)
-  // buckets TOTAL — at ≥ 10⁷ rows every bucket is hot no matter how
-  // balanced the bits are, the guard cap engages corpus-wide, and pair
-  // recall silently degrades. Multiprobe (the multi-probe LSH idea —
-  // Lv et al., VLDB'07 — applied to Hamming bands) trades probe volume
-  // for keyspace: cut FEWER, WIDER bands and additionally probe every
-  // key within `flips` bit-flips of the own band key. A pair within
-  // Hamming h differs by ≤ ⌊h/bands⌋ bits in its best band
-  // (pigeonhole), so flips ≥ ⌊h/bands⌋ regains losslessness while the
-  // bucket universe grows exponentially in the band width:
-  //
-  //     bands × width   flips   probes/row   keyspace
-  //          9 × 7        0          9          1,152
-  //          7 × 9        1         70          3,584
-  //          3 × 21       2        696      6,291,456
-  //
-  // The INDEX side stores exact keys only — identical layout to
-  // [[packedSignatureBandIndex]] at the same band cut, including the
-  // bucketed-on-`bb` persisted form — so multiprobe is purely a
-  // READ-side knob: the probe expansion happens on the (delta-sized)
-  // probing rows, never in the stored index.
-
-  /** All non-zero XOR masks of an `r`-bit key with popcount ≤ `flips`,
-    * driver-computed (r + r(r−1)/2 masks at flips = 2 — plan-literal
-    * sized, never data-sized). `key ^ mask` over these enumerates
-    * exactly the keys within Hamming ≤ flips of `key`. */
-  private[graft] def flipMasks(r: Int, flips: Int): Array[Long] = {
-    require(r >= 1 && r <= 62, s"band width must be in [1,62], got $r")
-    require(flips >= 0 && flips <= 2,
-      s"multiprobe supports flips in [0,2] (probe volume is C(r,flips)), got $flips")
-    val ms = scala.collection.mutable.ArrayBuffer.empty[Long]
-    if (flips >= 1) { var i = 0; while (i < r) { ms += (1L << i); i += 1 } }
-    if (flips >= 2)
-      for (i <- 0 until r; j <- (i + 1) until r) ms += ((1L << i) | (1L << j))
-    ms.toArray
+  /** The Hamming families' shared tail: refuse a plan that is lossy at
+    * `maxHamming` (pigeonhole: bands·(flips+1) must exceed it), keep the
+    * pairs within it, and name the score `hamming`. */
+  private[operators] def withinHamming(plan: BandPlan, maxHamming: Int)(
+      scored: DataFrame): DataFrame = {
+    require(plan.losslessMaxHamming >= maxHamming,
+      s"plan $plan is lossy at maxHamming=$maxHamming " +
+        s"(covers <= ${plan.losslessMaxHamming})")
+    scored.filter(col("score") <= maxHamming).withColumnRenamed("score", "hamming")
   }
 
-  /** The probe-side banded projection: [[packedSignatureBanded]] with
-    * each row's band key expanded to its multiprobe set (the own key
-    * plus every key within `flips` bit-flips). Output (doc, sig, band,
-    * bkey) like the exact form — `bkey` now enumerates probe targets. */
-  private def packedSignatureMultiprobed(sigs: DataFrame, idCol: String,
-      sigCol: String, bits: Int, bands: Int, flips: Int): DataFrame =
-    multiprobeExpand(packedSignatureBanded(sigs, idCol, sigCol, bits, bands),
-      bits / bands, flips)
-
-  /** The probe expansion alone, over an ALREADY-banded frame. */
-  private def multiprobeExpand(banded: DataFrame, r: Int, flips: Int): DataFrame = {
-    val masks = typedLit(0L +: flipMasks(r, flips).toSeq)
-    // outer + null-drop (see packedSignatureBanded); the mask array is a
-    // non-empty literal, so nothing drops
-    banded
-      .select(col("doc"), col("sig"), col("band"),
-        explode_outer(transform(masks, m => col("bkey").bitwiseXOR(m))).as("bkey"))
-      .filter(col("bkey").isNotNull)
-  }
-
-  /** [[packedSignaturePairs]] with MULTIPROBE candidate generation:
-    * lossless for any maxHamming < bands·(flips+1) — the coarse-cut
-    * scale posture (see the section comment). Candidates are probe→
-    * exact collisions on (band, bkey); each surviving pair collapses
-    * once (both directions of a qualifying pair collide, hence the
-    * least/greatest + groupBy — scores are signature-determined, so
-    * min = the exact Hamming distance). The hot-bucket cap bounds the
-    * EXACT side per bucket (the stored-index semantics), so a probe
-    * into a hot bucket meets ≤ cap members. */
-  def packedMultiprobePairs(sigs: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int, flips: Int,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame = {
-    // the banded projection is STAGED and shared by the exact and probe
-    // sides: both subtrees otherwise re-run the full signature lineage —
-    // for pHash that is the corpus DECODE pass, measured as ~7 s of
-    // dd_phash_multiprobe's ~10 s task time at sf0.1 (Spark reuses
-    // exchanges, not projection subtrees — the Curation/debiased-pHash
-    // convention). 24 B/row, one cheap pin; rows and scores unchanged.
-    val banded = packedSignatureBanded(sigs, idCol, sigCol, bits, bands)
-      .transform(Materialize.stage(_))
-    val exact = capBandBuckets(banded, maxBucket)
-      .select(col("doc").as("doc_e"), col("sig").as("sig_e"),
-        col("band"), col("bkey"))
-    val probes = multiprobeExpand(banded, bits / bands, flips)
-      .select(col("doc").as("doc_p"), col("sig").as("sig_p"),
-        col("band"), col("bkey"))
-    probes.join(exact, Seq("band", "bkey"))
-      .filter(col("doc_p") =!= col("doc_e"))
-      .groupBy(least(col("doc_p"), col("doc_e")).as("doc_a"),
-        greatest(col("doc_p"), col("doc_e")).as("doc_b"))
-      .agg(min(bit_count(col("sig_p").bitwiseXOR(col("sig_e")))).as("score"))
-  }
-
-  /** O(Δ) multiprobe ingest against a [[packedSignatureBandIndex]] AT
-    * THE SAME BAND CUT — the index stores exact keys (unchanged layout,
-    * bucketed `bb` included); only the delta's rows expand to their
-    * probe sets, so a stored bucketed layout still shuffles nothing on
-    * the corpus side. Output (delta_id, corpus_id, score); threshold at
-    * the caller. */
-  def packedMultiprobePairsIncrementalFromIndex(deltaSigs: DataFrame,
-      corpusIndex: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int, flips: Int): DataFrame = {
-    val bd = packedSignatureMultiprobed(
-      deltaSigs, idCol, sigCol, bits, bands, flips)
-      .select(col("doc").as("delta_id"), col("sig").as("sig_d"),
-        bandKey.as("bb"))
-    val withBb =
-      if (corpusIndex.columns.contains("bb")) corpusIndex
-      else corpusIndex.withColumn("bb", bandKey)
-    val bc = withBb
-      .select(col("doc").as("corpus_id"), col("sig").as("sig_c"), col("bb"))
-    bd.join(bc, Seq("bb"))
-      .filter(col("delta_id") =!= col("corpus_id"))
-      .groupBy("delta_id", "corpus_id")
-      .agg(min(bit_count(col("sig_d").bitwiseXOR(col("sig_c")))).as("score"))
-  }
-
-  /** SimHash near-duplicate pairs: `bits`-bit token-weight signatures,
-    * banded into `bands` contiguous slices for candidate generation (a
-    * pair within `maxHamming` of each other must agree on at least one
-    * band when bands > maxHamming), then exact Hamming filter.
+  /** SimHash near-duplicate pairs: 64-bit token-weight signatures,
+    * banded at `plan` for candidate generation (a pair within
+    * `maxHamming` of each other must agree on at least one band when
+    * bands > maxHamming, or within `flips` bits on one band under
+    * multiprobe), then exact Hamming filter. The default 4 × 16 plan
+    * serves up to ~67M docs; [[BandIndex.planFor]] picks the rung for a
+    * corpus size.
     *
     * PACKED execution (round 13): the signature rides one long through
     * banding and the bucket walk — identical candidates, survivors and
@@ -1091,62 +755,13 @@ object Dedup {
     * dd_simhash's 31s inside the interpreted per-pair lambdas. */
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
-      bits: Int = DefaultSimhashBits, bands: Int = DefaultSimhashBands,
+      plan: BandPlan = DefaultSimhashPlan,
       maxHamming: Int = DefaultMaxHamming, minTokens: Int = 1,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
     packedSignaturePairs(
-      simhashPackedSigs(df, idCol, textCol, bits, minTokens),
-      "doc", "sig", bits, bands, maxBucket, maxScore = Some(maxHamming))
-      .filter(col("score") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("score").as("hamming"))
-
-  /** SimHash's corpus-scaled (bands, flips) plan —
-    * PerceptualHash.bandPlanFor's 64-bit twin, closing the fixed-
-    * keyspace ceiling for this modality too: the cheapest lossless-at-
-    * `maxHamming` rung whose (band, bkey) universe keeps expected
-    * occupancy ≤ `targetBucketSize`. At the default Hamming ≤ 3:
-    *
-    *   n ≤ ~67M → 4 × 16, flips 0 —   262,144 keys,  4 probe rows/doc
-    *   beyond   → 2 × 32, flips 1 — 8.59e9 keys,   66 probe rows/doc
-    *
-    * Every rung returns the IDENTICAL final pair set (lossless
-    * candidates ⊆ the exact Hamming filter), so the plan is a free
-    * scale knob — the gates share one oracle across rungs. */
-  def simhashBandPlanFor(corpusSize: Long,
-      maxHamming: Int = DefaultMaxHamming,
-      targetBucketSize: Int = 256): (Int, Int) = {
-    require(corpusSize >= 0 && targetBucketSize >= 1)
-    val ladder = Seq(4, 2).flatMap { b =>
-      val f = maxHamming / b // smallest flips with b·(f+1) > maxHamming
-      if (f <= 2) Some((b, f)) else None
-    }
-    require(ladder.nonEmpty,
-      s"no lossless plan with <= 2 flips exists for maxHamming=$maxHamming")
-    val needed = (corpusSize + targetBucketSize - 1) / targetBucketSize
-    ladder.find { case (b, _) =>
-      (b.toLong << (DefaultSimhashBits / b)) >= needed
-    }.getOrElse(ladder.last)
-  }
-
-  /** [[simhashPairs]] at a multiprobe rung of [[simhashBandPlanFor]]'s
-    * ladder (Dedup.packedMultiprobePairs — wider bands, flipped-key
-    * probes on the probing side only; the index side stays exact-key).
-    * Identical final pairs to [[simhashPairs]] whenever
-    * bands·(flips+1) > maxHamming. */
-  def simhashPairsMultiprobe(
-      df: DataFrame, idCol: String, textCol: String,
-      bands: Int, flips: Int,
-      bits: Int = DefaultSimhashBits,
-      maxHamming: Int = DefaultMaxHamming, minTokens: Int = 1,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame = {
-    require(bands * (flips + 1) > maxHamming,
-      s"plan ($bands bands, $flips flips) is lossy at maxHamming=$maxHamming")
-    packedMultiprobePairs(
-      simhashPackedSigs(df, idCol, textCol, bits, minTokens),
-      "doc", "sig", bits, bands, flips, maxBucket)
-      .filter(col("score") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("score").as("hamming"))
-  }
+      simhashPackedSigs(df, idCol, textCol, plan.bits, minTokens),
+      "doc", "sig", plan, maxBucket, maxScore = Some(maxHamming))
+      .transform(withinHamming(plan, maxHamming))
 
   /** (doc, sig: long) packed SimHash signatures — [[simhashBits]]'s 64
     * votes folded into one long (bit i = classic signature position i,
@@ -1171,83 +786,37 @@ object Dedup {
   }
 
   /** INCREMENTAL SimHash dedup: near-duplicate (delta, corpus) pairs by
-    * signature Hamming distance — completing the O(Δ)-per-ingest family
-    * (exact dedup is trivially incremental; MinHash has
-    * [[minhashPairsIncremental]]; spans have
-    * [[sharedSpansIncremental]]). The corpus side is its persistable
-    * banded signature index (`simhashBanded`'s plain columns); the
-    * delta pays one signature pass and ONE (band, bkey) equi-join.
-    * Same per-pair collapse (a pair colliding in several band slices
-    * surfaces once — Hamming is signature-determined, identical on
-    * every colliding band) and the same re-ingest self-pair filter as
-    * the MinHash twin. The corpus index rides through
-    * [[capBandBuckets]] — load-bearing here (256-value band keys, see
-    * its scaladoc), not merely consistent with the full path. */
+    * signature Hamming distance — [[minhashPairsIncremental]]'s shape
+    * (spans have [[sharedSpansIncremental]]). The corpus side is its
+    * banded index at the same `plan` cut (`BandIndex.build(
+    * simhashBanded(corpus))` or its persisted form — the build-time cap
+    * is load-bearing here: an r-bit band key has ≤ 2^r values); the delta
+    * pays one signature pass and one [[BandIndex.probe]], multiprobed
+    * when the plan has flips. */
   def simhashPairsIncremental(
-      delta: DataFrame, corpus: DataFrame, idCol: String, textCol: String,
-      bits: Int = DefaultSimhashBits, bands: Int = DefaultSimhashBands,
-      maxHamming: Int = DefaultMaxHamming, minTokens: Int = 1,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
-    simhashPairsIncrementalFromIndex(
-      delta,
-      simhashBandIndex(corpus, idCol, textCol, bits, bands, minTokens, maxBucket),
-      idCol, textCol, bits, bands, maxHamming, minTokens)
-
-  /** The corpus side of [[simhashPairsIncremental]] as a PERSISTABLE
-    * index — [[minhashBandIndex]]'s SimHash twin: banded signature rows
-    * with the (load-bearing here — 256-value band keys) occupancy cap
-    * applied at build time. */
-  def simhashBandIndex(
-      corpus: DataFrame, idCol: String, textCol: String,
-      bits: Int = DefaultSimhashBits, bands: Int = DefaultSimhashBands,
-      minTokens: Int = 1,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
-    capBandBuckets(
-      simhashBanded(corpus, idCol, textCol, bits, bands, minTokens), maxBucket)
-
-  /** [[simhashPairsIncremental]] against an already-built (possibly
-    * persisted-and-reloaded) [[simhashBandIndex]] — same fused-`bb`
-    * join contract as the MinHash twin: a stored `bb` column (the
-    * bucketed layout) carries the scan's partitioning into the join and
-    * the corpus side shuffles nothing. */
-  def simhashPairsIncrementalFromIndex(
       delta: DataFrame, corpusIndex: DataFrame, idCol: String, textCol: String,
-      bits: Int = DefaultSimhashBits, bands: Int = DefaultSimhashBands,
+      plan: BandPlan = DefaultSimhashPlan,
       maxHamming: Int = DefaultMaxHamming, minTokens: Int = 1): DataFrame =
-    bandedIncrementalJoin(
-      simhashBanded(delta, idCol, textCol, bits, bands, minTokens),
-      corpusIndex, (a, b) => bit_count(a.bitwiseXOR(b)))
-      .filter(col("score") <= maxHamming)
-      .select(col("delta_id"), col("corpus_id"), col("score").as("hamming"))
-
-  /** [[writeMinhashBandIndexBucketed]]'s SimHash twin: the banded
-    * signature index persisted bucketed-and-sorted on the fused band
-    * key, so ingest joins shuffle only the delta. */
-  def writeSimhashBandIndexBucketed(
-      corpus: DataFrame, idCol: String, textCol: String,
-      table: String, nBuckets: Int, path: Option[String] = None,
-      bits: Int = DefaultSimhashBits, bands: Int = DefaultSimhashBands,
-      minTokens: Int = 1,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): Unit =
-    graft.store.Bucketing.writeBucketed(
-      simhashBandIndex(corpus, idCol, textCol, bits, bands, minTokens, maxBucket)
-        .withColumn("bb", bandKey),
-      table, "bb", nBuckets, path)
+    packedSignaturePairsIncremental(
+      simhashPackedSigs(delta, idCol, textCol, plan.bits, minTokens),
+      corpusIndex, "doc", "sig", plan)
+      .transform(withinHamming(plan, maxHamming))
 
   /** SimHash's banded index rows — the occupancy-observability surface,
-    * mirroring `minhashBanded`. SimHash bands are far more collision-
-    * prone than MinHash bands (an r-bit slice has ≤ 2^r distinct values
-    * and real token distributions skew them), so this is the projection
-    * to watch on clustered corpora. PACKED layout since round 13:
-    * (doc, sig: long, band, bkey: long) — the pHash index shape; a
-    * persisted pre-round-13 array-form index is rebuilt, not read. */
+    * mirroring `minhashBanded`, and the rows a SimHash index is built
+    * from. SimHash bands are far more collision-prone than MinHash bands
+    * (an r-bit slice has ≤ 2^r distinct values and real token
+    * distributions skew them), so this is the projection to watch on
+    * clustered corpora. PACKED layout since round 13: (doc, sig: long,
+    * band, bkey: long) — the pHash index shape; a persisted pre-round-13
+    * array-form index is rebuilt, not read. */
   def simhashBanded(
       df: DataFrame, idCol: String, textCol: String,
-      bits: Int = DefaultSimhashBits, bands: Int = DefaultSimhashBands,
+      plan: BandPlan = DefaultSimhashPlan,
       minTokens: Int = 1): DataFrame =
     packedSignatureBanded(
-      simhashPackedSigs(df, idCol, textCol, bits, minTokens),
-      "doc", "sig", bits, bands)
+      simhashPackedSigs(df, idCol, textCol, plan.bits, minTokens),
+      "doc", "sig", plan)
 
   /** Per-duplicate-cluster representative selection — the "keep the
     * BEST copy" finalization a curation pipeline actually wants

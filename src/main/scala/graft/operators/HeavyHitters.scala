@@ -293,29 +293,10 @@ object HeavyHitters {
       .orderBy(col("cnt").desc, col("gram"))
   }
 
-  /** Exact heavy hitters over corpus ∪ delta, touching the corpus text
-    * only for grams that PROVABLY might newly cross the threshold —
-    * usually none, making ingest O(Δ):
-    *
-    *   - indexed grams: exact corpus count from the index + one exact
-    *     delta count — no corpus access;
-    *   - non-indexed grams have corpus count ≤ ⌊N/capacity⌋ (the MG
-    *     bound), so a gram can newly cross T′ = ⌈φ·(N+M)⌉ only if its
-    *     exact delta count ≥ T′ − ⌊N/capacity⌋. The candidates for
-    *     that test come from the delta's OWN MG pass (anything
-    *     crossing needs delta frequency ≥ φ > 1/capacity, so the
-    *     delta sketch retains it); the survivors — a bounded set,
-    *     collected like IVF probe ids — trigger ONE corpus re-count
-    *     restricted to exactly those grams, skipped entirely when the
-    *     set is empty (HeavyHittersSpec plants both postures).
-    *
-    * The union of the three exact sources then thresholds at T′ — the
-    * output equals the from-scratch [[heavyHitters]] over
-    * corpus ∪ delta row for row (the gate shares the plain oracle). */
   /** APPEND a delta into the persisted index under the BUILT capacity —
     * the frozen-contract ingest every other persisted-index family has
-    * (appendToMinhashBandIndexBucketed, appendToSpanPostingIndexBucketed,
-    * appendToPhashBandIndexBucketed): after the merge, the index serves
+    * (BandIndex.append, appendToSpanPostingIndexBucketed,
+    * appendToEmbBucketIndexBucketed): after the merge, the index serves
     * ANY φ with capacity > 1/φ exactly, same as a from-scratch
     * [[buildIndex]] over corpus ∪ delta.
     *
@@ -395,6 +376,25 @@ object HeavyHitters {
     readCandidates(spark, indexPath)
   }
 
+  /** Exact heavy hitters over corpus ∪ delta, touching the corpus text
+    * only for grams that PROVABLY might newly cross the threshold —
+    * usually none, making ingest O(Δ):
+    *
+    *   - indexed grams: exact corpus count from the index + one exact
+    *     delta count — no corpus access;
+    *   - non-indexed grams have corpus count ≤ ⌊N/capacity⌋ (the MG
+    *     bound), so a gram can newly cross T′ = ⌈φ·(N+M)⌉ only if its
+    *     exact delta count ≥ T′ − ⌊N/capacity⌋. The candidates for
+    *     that test come from the delta's OWN MG pass (anything
+    *     crossing needs delta frequency ≥ φ > 1/capacity, so the
+    *     delta sketch retains it); the survivors — a bounded set,
+    *     collected like IVF probe ids — trigger ONE corpus re-count
+    *     restricted to exactly those grams, skipped entirely when the
+    *     set is empty (HeavyHittersSpec plants both postures).
+    *
+    * The union of the three exact sources then thresholds at T′ — the
+    * output equals the from-scratch [[heavyHitters]] over
+    * corpus ∪ delta row for row (the gate shares the plain oracle). */
   def heavyHittersIncremental(
       corpus: DataFrame, delta: DataFrame, textCol: String,
       indexPath: String, phi: Double): DataFrame = {

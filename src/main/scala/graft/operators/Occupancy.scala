@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * (MinHash/SimHash bands, LSH buckets, IVF cells).
   *
   * Why this exists: those operators bound per-bucket work via a
-  * hot-bucket guard (see Dedup.bucketPairs / SimilaritySearch), whose
+  * hot-bucket guard (see BandIndex.pairs / SimilaritySearch), whose
   * posture constants assume ~uniform occupancy. Real corpora are
   * clustered — boilerplate near-dup groups, dense semantic clusters —
   * and the operator a 100 TB run needs is the one that can REPORT its

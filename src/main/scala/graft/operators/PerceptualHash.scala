@@ -35,17 +35,19 @@ import org.apache.spark.sql.functions._
   * of [[Multimodal]]); each image collapses to ONE packed long (8
   * bytes) BEFORE any shuffle, so candidate search moves 8-byte
   * signatures, never pixels or bit arrays. Pairing rides the packed
-  * banded machinery ([[Dedup.packedSignaturePairs]] — shift+mask band
-  * keys, bit_count(xor) Hamming): 9 bands × 7 bits — a pair within
-  * Hamming ≤ 8 must collide in some band (pigeonhole), so the default
-  * ≤ 8 search is lossless. Caveat the banding does NOT fix: DCT sign
-  * bits of natural-image corpora are biased, so band keys occupy far
-  * fewer than 2^7 values and candidate volume grows near-quadratically
-  * on clustered corpora — [[phashBanded]] + Occupancy.stats is the
-  * pre-flight that detects the regime, and packing makes each surviving
-  * candidate cost one XOR+POPCNT instead of a 63-element array zip.
+  * banded index ([[Dedup.packedSignaturePairs]] over [[BandIndex]] —
+  * shift+mask band keys, bit_count(xor) Hamming): 9 bands × 7 bits — a
+  * pair within Hamming ≤ 8 must collide in some band (pigeonhole), so
+  * the default ≤ 8 search is lossless. Caveat the banding does NOT
+  * fix: DCT sign bits of natural-image corpora are biased, so band keys
+  * occupy far fewer than 2^7 values and candidate volume grows
+  * near-quadratically on clustered corpora — [[phashBanded]] +
+  * Occupancy.stats is the pre-flight that detects the regime, and
+  * packing makes each surviving candidate cost one XOR+POPCNT instead of
+  * a 63-element array zip.
   */
 object PerceptualHash {
+  import BandIndex.BandPlan
 
   /** Downsample side: every image is reduced to Size×Size. */
   val Size = 32
@@ -69,60 +71,10 @@ object PerceptualHash {
   val DefaultPhashBands = 9
   val DefaultMaxHamming = 8
 
-  /** A banded Hamming-search posture: `bands` contiguous slices of the
-    * 63-bit signature plus `flips`-bit multiprobe on the probing side
-    * (Dedup.packedMultiprobePairs). Lossless for maxHamming <
-    * bands·(flips+1); bucket universe = bands·2^(63/bands). */
-  final case class BandPlan(bands: Int, flips: Int) {
-    require(PhashBits % bands == 0, s"bands must divide $PhashBits, got $bands")
-    /** Band width in bits. */
-    def r: Int = PhashBits / bands
-    /** Total (band, bkey) bucket universe — the quantity that must
-      * scale with the corpus for the guard cap to stay dormant. */
-    def keyspace: Long = bands.toLong << r
-    /** Probe rows each signature ships through the candidate join
-      * (exact key + flipped keys, per band). */
-    def probesPerRow: Long =
-      bands.toLong * (1L + Dedup.flipMasks(r, flips).length)
-    /** The largest Hamming radius this plan's candidate walk covers
-      * losslessly (pigeonhole over bands with ≤ flips in-band misses). */
-    def losslessMaxHamming: Int = bands * (flips + 1) - 1
-  }
-
-  /** Corpus-scaled band plan — `SimilaritySearch.nBitsFor`'s pHash
-    * analogue, closing the family's last fixed-keyspace posture: the
-    * fine 9×7 cut has a 1,152-bucket CEILING (losslessness at
-    * Hamming ≤ 8 by pigeonhole alone needs > 8 bands), so at ≥ 10⁷
-    * images every bucket is hot regardless of bit balance and the
-    * guard cap degrades recall corpus-wide. The ladder below widens
-    * bands and buys losslessness back with multiprobe
-    * (Dedup.packedMultiprobePairs); the chosen plan is the cheapest
-    * (fewest probe rows) whose bucket universe keeps the EXPECTED
-    * occupancy at or under `targetBucketSize`:
-    *
-    *   n ≤ ~295k   → 9 × 7,  flips 0 —     1,152 buckets,   9 probes/row
-    *   n ≤ ~918k   → 7 × 9,  flips 1 —     3,584 buckets,  70 probes/row
-    *   beyond      → 3 × 21, flips 2 — 6,291,456 buckets, 696 probes/row
-    *
-    * The last rung covers ~1.6e9 images at the default target; past
-    * that the hot-bucket cap plus the [[phashBanded]] occupancy
-    * pre-flight govern, as everywhere else in the family. Expected
-    * occupancy assumes de-biased (~uniform) keys — biased corpora
-    * concentrate keys, which the occupancy probe detects and
-    * [[phashPairsDebiased]]'s corpus-median thresholds correct. */
-  def bandPlanFor(corpusSize: Long, maxHamming: Int = DefaultMaxHamming,
-      targetBucketSize: Int = 256): BandPlan = {
-    require(corpusSize >= 0, s"corpusSize must be >= 0, got $corpusSize")
-    require(targetBucketSize >= 1, s"targetBucketSize must be >= 1")
-    val ladder = Seq(9, 7, 3).flatMap { b =>
-      val f = maxHamming / b // smallest flips with b·(f+1) > maxHamming
-      if (f <= 2) Some(BandPlan(b, f)) else None
-    }
-    require(ladder.nonEmpty,
-      s"no lossless plan with <= 2 flips exists for maxHamming=$maxHamming")
-    val needed = (corpusSize + targetBucketSize - 1) / targetBucketSize
-    ladder.find(_.keyspace >= needed).getOrElse(ladder.last)
-  }
+  /** The fine 9 × 7 cut, lossless at the default Hamming ≤ 8 — the
+    * first rung of [[BandIndex.planFor]]'s pHash ladder, which serves
+    * up to ~295k images at the default bucket target. */
+  val DefaultPhashPlan: BandPlan = BandPlan(PhashBits, DefaultPhashBands)
 
   /** The shared fixed-point DCT-II row table: T(u)(x) =
     * round(cos((2x+1)uπ/64) · 2^14), u < 8, x < 32. Generated once from
@@ -225,147 +177,60 @@ object PerceptualHash {
   }
 
   /** Image near-duplicate pairs: banded Hamming search over the packed
-    * pHash signatures — [[Dedup.simhashPairs]]'s posture with the
-    * signature swapped for the perceptual one and the arithmetic on
-    * longs. Output (doc_a, doc_b, hamming). */
+    * pHash signatures at `plan` — [[Dedup.simhashPairs]]'s posture with
+    * the signature swapped for the perceptual one. The fine cut
+    * (flips = 0) rides the grouped bucket walk; a multiprobe plan rides
+    * the probe join ([[BandIndex.probePairs]]). Any plan lossless at
+    * `maxHamming` yields the identical pair set (the exact Hamming
+    * filter is the last word), so every plan shares the dd_phash oracle;
+    * a lossy plan is refused. Output (doc_a, doc_b, hamming). */
   def phashPairs(media: Dataset[Multimodal.MediaRow],
-      bands: Int = DefaultPhashBands,
+      plan: BandPlan = DefaultPhashPlan,
       maxHamming: Int = DefaultMaxHamming,
       maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)): DataFrame =
     Dedup.packedSignaturePairs(
-      phashSignatures(media), "media_id", "sig", PhashBits, bands, maxBucket,
+      phashSignatures(media), "media_id", "sig", plan, maxBucket,
       maxScore = Some(maxHamming))
-      .filter(col("score") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("score").as("hamming"))
+      .transform(Dedup.withinHamming(plan, maxHamming))
 
-  /** [[phashPairs]] at an explicit [[BandPlan]] — the corpus-scaled
-    * posture: the fine cut (flips = 0) rides the grouped bucket walk;
-    * a multiprobe plan rides Dedup.packedMultiprobePairs. Any plan
-    * lossless at `maxHamming` yields the identical pair set (the
-    * exact Hamming filter is the last word), so every plan shares the
-    * dd_phash oracle. */
-  def phashPairsPlanned(media: Dataset[Multimodal.MediaRow],
-      plan: BandPlan,
-      maxHamming: Int = DefaultMaxHamming,
-      maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)): DataFrame = {
-    require(plan.losslessMaxHamming >= maxHamming,
-      s"plan $plan is lossy at maxHamming=$maxHamming " +
-        s"(covers <= ${plan.losslessMaxHamming})")
-    val cands =
-      if (plan.flips == 0)
-        Dedup.packedSignaturePairs(
-          phashSignatures(media), "media_id", "sig", PhashBits, plan.bands,
-          maxBucket, maxScore = Some(maxHamming))
-      else
-        Dedup.packedMultiprobePairs(
-          phashSignatures(media), "media_id", "sig", PhashBits, plan.bands,
-          plan.flips, maxBucket)
-    cands.filter(col("score") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("score").as("hamming"))
-  }
-
-  /** [[phashPairs]] with the plan DERIVED from the corpus size — the
-    * production entry point (gates pin plans so their oracles stay
-    * deterministic). The count is posture metadata over the media
-    * table's id column (no decode). */
+  /** [[phashPairs]] with the plan DERIVED from the corpus size
+    * ([[BandIndex.planFor]]) — the production entry point (gates pin
+    * plans so their oracles stay deterministic). The count is posture
+    * metadata over the media table's id column (no decode). */
   def phashPairsAuto(media: Dataset[Multimodal.MediaRow],
       maxHamming: Int = DefaultMaxHamming,
       maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)): DataFrame =
-    phashPairsPlanned(media,
-      bandPlanFor(media.select("media_id").count(), maxHamming),
+    phashPairs(media,
+      BandIndex.planFor(PhashBits, media.select("media_id").count(), maxHamming),
       maxHamming, maxBucket)
 
   /** INCREMENTAL pHash dedup — each new image batch against the
-    * existing corpus's persistable signature index, the O(Δ) ingest
-    * family contract ([[Dedup.simhashPairsIncremental]]'s shape). */
+    * existing corpus's banded index at the same `plan` cut
+    * (`BandIndex.build(phashBanded(corpus, plan))` or its persisted
+    * form; the index stores exact keys only), the O(Δ) ingest family
+    * contract ([[Dedup.simhashPairsIncremental]]'s shape): under a
+    * multiprobe plan the delta's rows expand to their probe sets
+    * read-side, so a bucketed index still shuffles nothing corpus-side. */
   def phashPairsIncremental(delta: Dataset[Multimodal.MediaRow],
       corpusIndex: DataFrame,
-      bands: Int = DefaultPhashBands,
+      plan: BandPlan = DefaultPhashPlan,
       maxHamming: Int = DefaultMaxHamming): DataFrame =
-    Dedup.packedSignaturePairsIncrementalFromIndex(
-      phashSignatures(delta), corpusIndex, "media_id", "sig", PhashBits, bands)
-      .filter(col("score") <= maxHamming)
-      .select(col("delta_id"), col("corpus_id"), col("score").as("hamming"))
-
-  /** [[phashPairsIncremental]] at an explicit [[BandPlan]]: the index
-    * must be built AT THE SAME BAND CUT ([[phashBandIndexPlanned]] /
-    * [[writePhashBandIndexBucketed]] with plan.bands) — it stores
-    * exact keys only (unchanged layout, bucketed `bb` included); the
-    * delta's rows expand to their probe sets read-side, so a stored
-    * bucketed layout still shuffles nothing on the corpus side. */
-  def phashPairsIncrementalPlanned(delta: Dataset[Multimodal.MediaRow],
-      corpusIndex: DataFrame, plan: BandPlan,
-      maxHamming: Int = DefaultMaxHamming): DataFrame = {
-    require(plan.losslessMaxHamming >= maxHamming,
-      s"plan $plan is lossy at maxHamming=$maxHamming " +
-        s"(covers <= ${plan.losslessMaxHamming})")
-    val cands =
-      if (plan.flips == 0)
-        Dedup.packedSignaturePairsIncrementalFromIndex(
-          phashSignatures(delta), corpusIndex, "media_id", "sig",
-          PhashBits, plan.bands)
-      else
-        Dedup.packedMultiprobePairsIncrementalFromIndex(
-          phashSignatures(delta), corpusIndex, "media_id", "sig",
-          PhashBits, plan.bands, plan.flips)
-    cands.filter(col("score") <= maxHamming)
-      .select(col("delta_id"), col("corpus_id"), col("score").as("hamming"))
-  }
-
-  /** [[phashBandIndex]] at an explicit [[BandPlan]]'s cut — exact keys
-    * only (multiprobe never changes the stored index). */
-  def phashBandIndexPlanned(corpus: Dataset[Multimodal.MediaRow],
-      plan: BandPlan,
-      maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)): DataFrame =
-    Dedup.packedSignatureBandIndex(
-      phashSignatures(corpus), "media_id", "sig", PhashBits, plan.bands,
-      maxBucket)
-
-  /** The corpus side of [[phashPairsIncremental]] as a persistable
-    * banded index (plain (doc, sig: long, band, bkey: long) columns —
-    * parquet round-trippable like [[Dedup.simhashBandIndex]]). */
-  def phashBandIndex(corpus: Dataset[Multimodal.MediaRow],
-      bands: Int = DefaultPhashBands,
-      maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)): DataFrame =
-    Dedup.packedSignatureBandIndex(
-      phashSignatures(corpus), "media_id", "sig", PhashBits, bands, maxBucket)
-
-  /** [[Dedup.writeSimhashBandIndexBucketed]]'s pHash twin: the packed
-    * banded index persisted bucketed-and-sorted on the fused band key,
-    * so ingest joins shuffle only the delta. */
-  def writePhashBandIndexBucketed(corpus: Dataset[Multimodal.MediaRow],
-      table: String, nBuckets: Int, path: Option[String] = None,
-      bands: Int = DefaultPhashBands,
-      maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)): Unit =
-    graft.store.Bucketing.writeBucketed(
-      phashBandIndex(corpus, bands, maxBucket)
-        .withColumn("bb", concat_ws(":", col("band"), col("bkey"))),
-      table, "bb", nBuckets, path)
-
-  /** [[Dedup.appendToSimhashBandIndexBucketed]]'s pHash twin — same
-    * frozen-cap contract (the build-time occupancy cap is not re-run on
-    * append; rebuild re-caps), same preserved bucketed layout. */
-  def appendToPhashBandIndexBucketed(batch: Dataset[Multimodal.MediaRow],
-      table: String, nBuckets: Int,
-      bands: Int = DefaultPhashBands): Unit =
-    graft.store.Bucketing.appendBucketed(
-      Dedup.packedSignatureBanded(
-        phashSignatures(batch), "media_id", "sig", PhashBits, bands)
-        .withColumn("bb", concat_ws(":", col("band"), col("bkey"))),
-      table, "bb", nBuckets)
+    Dedup.packedSignaturePairsIncremental(
+      phashSignatures(delta), corpusIndex, "media_id", "sig", plan)
+      .transform(Dedup.withinHamming(plan, maxHamming))
 
   /** The banded occupancy-observability projection for pHash
-    * ([[Dedup.simhashBanded]]'s convention — feed to Occupancy.stats):
-    * sign bits of real image corpora are heavily biased (smooth images
-    * share low-frequency structure), so the 7-bit band keys occupy far
-    * fewer than 2^7 values and this is THE projection to watch before a
-    * large run — a max/p99 far above n/(bands·2^r) means the banding is
-    * in its skewed regime and the guard cap will chain, trading pair
-    * recall for boundedness. */
+    * ([[Dedup.simhashBanded]]'s convention — feed to Occupancy.stats),
+    * and the rows a pHash index is built from: sign bits of real image
+    * corpora are heavily biased (smooth images share low-frequency
+    * structure), so the 7-bit band keys occupy far fewer than 2^7
+    * values and this is THE projection to watch before a large run — a
+    * max/p99 far above n/(bands·2^r) means the banding is in its skewed
+    * regime and the guard cap will chain, trading pair recall for
+    * boundedness. */
   def phashBanded(media: Dataset[Multimodal.MediaRow],
-      bands: Int = DefaultPhashBands): DataFrame =
-    Dedup.packedSignatureBanded(
-      phashSignatures(media), "media_id", "sig", PhashBits, bands)
+      plan: BandPlan = DefaultPhashPlan): DataFrame =
+    Dedup.packedSignatureBanded(phashSignatures(media), "media_id", "sig", plan)
 
   // ---- DE-BIASED variant: corpus-median thresholds -------------------
   //
@@ -474,7 +339,7 @@ object PerceptualHash {
     * themselves. Ties (same pixel count — e.g. a byte-identical
     * re-encode) go to the smaller id, the family's determinism rule. */
   def curateImages(media: Dataset[Multimodal.MediaRow],
-      bands: Int = DefaultPhashBands,
+      plan: BandPlan = DefaultPhashPlan,
       maxHamming: Int = DefaultMaxHamming,
       maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)): DataFrame = {
     import media.sparkSession.implicits._
@@ -487,7 +352,7 @@ object PerceptualHash {
     }).toDF("doc_id", "quality_score")
     Dedup.keepBestStateScored(
       scored,
-      phashPairs(media, bands, maxHamming, maxBucket).select("doc_a", "doc_b"))
+      phashPairs(media, plan, maxHamming, maxBucket).select("doc_a", "doc_b"))
       .select(col("cluster_id"), col("doc_id").as("media_id"),
         col("quality_score").cast("long").as("pixels"), col("cluster_size"))
   }
@@ -498,7 +363,7 @@ object PerceptualHash {
     * once and scores deltas with [[phashSignaturesWithMedians]]).
     * Output (doc_a, doc_b, hamming). */
   def phashPairsDebiased(media: Dataset[Multimodal.MediaRow],
-      bands: Int = DefaultPhashBands,
+      plan: BandPlan = DefaultPhashPlan,
       maxHamming: Int = DefaultMaxHamming,
       maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)): DataFrame = {
     // ONE decode+DCT pass: the former composition ran the full
@@ -528,9 +393,7 @@ object PerceptualHash {
     val sigs = coefs.select(col("media_id"), sig.as("sig"))
       .transform(Materialize.stage(_))
     Dedup.packedSignaturePairs(
-      sigs, "media_id", "sig", PhashBits, bands, maxBucket,
-      maxScore = Some(maxHamming))
-      .filter(col("score") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("score").as("hamming"))
+      sigs, "media_id", "sig", plan, maxBucket, maxScore = Some(maxHamming))
+      .transform(Dedup.withinHamming(plan, maxHamming))
   }
 }

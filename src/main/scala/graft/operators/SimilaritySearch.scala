@@ -324,7 +324,7 @@ object SimilaritySearch {
   }
 
   /** The corpus side of [[lshNeighborsIncremental]] as a PERSISTABLE
-    * index — the embedding twin of `Dedup.minhashBandIndex`: one
+    * index — the embedding counterpart of a `BandIndex.build` index: one
     * zero-shuffle bucket/norm projection with the (load-bearing)
     * occupancy cap applied at build time. Plain (corpus_id, vc, nc,
     * bucket) columns, parquet-round-trippable. `nBits` must be explicit
@@ -337,21 +337,13 @@ object SimilaritySearch {
       dim: Int, nBits: Int,
       maxBucket: Option[Int] = Some(DefaultMaxBucketOccupancy)): DataFrame = {
     require(nBits >= 1, "nBits must be explicit for a persistable index")
-    maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
-    val cRaw = bucketedMembers(corpus, idCol, vecCol, lshBucketCols(dim, nBits, 1))
-      .select(col("id").as("corpus_id"), col("v").as("vc"),
-        col("nrm").as("nc"), col("bucket"))
-    maxBucket match {
-      case None => cRaw
-      case Some(cap) =>
-        // key-stable per-bucket cap on the persistable index side —
-        // paid once at index-persist time in production (idempotent)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("bucket")
-          .orderBy(xxhash64(col("corpus_id")), col("corpus_id"))
-        cRaw.withColumn("__r", row_number().over(w))
-          .filter(col("__r") <= cap).drop("__r")
-    }
+    // key-stable per-bucket cap on the persistable index side — paid
+    // once at index-persist time in production (idempotent)
+    BandIndex.build(
+      bucketedMembers(corpus, idCol, vecCol, lshBucketCols(dim, nBits, 1))
+        .select(col("id").as("corpus_id"), col("v").as("vc"),
+          col("nrm").as("nc"), col("bucket")),
+      maxBucket, keys = Seq("bucket"), doc = "corpus_id")
   }
 
   /** [[lshNeighborsIncremental]] against an already-built (possibly
@@ -388,7 +380,7 @@ object SimilaritySearch {
       embBucketIndex(corpus, idCol, vecCol, dim, nBits, maxBucket),
       table, "bucket", nBuckets, path)
 
-  /** `Dedup.appendToMinhashBandIndexBucketed`'s embedding twin: append
+  /** `BandIndex.append`'s embedding counterpart: append
     * a batch's (id, vec, norm, bucket) rows into the existing bucketed
     * layout with the build-time occupancy-cap decisions FROZEN (appends
     * can push a bucket past the cap; rebuild — idempotent over the

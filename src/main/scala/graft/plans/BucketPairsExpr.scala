@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native banded-LSH pair walks — the in-row pair enumeration of
-  * `Dedup.bucketPairs`.
+  * `BandIndex.pairs`.
   *
   * Why native (the SimHash64/SpanKeys argument once more, now for the
   * walk itself): Catalyst higher-order functions (`transform`, `filter`,

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Multimodal, SimilaritySearch, TextAnalysis}
+import graft.operators.{BandIndex, Dedup, Multimodal, SimilaritySearch, TextAnalysis}
 import graft.sources.Tables
 
 /** Training-data pipeline operators as driver-gated queries over the
@@ -1036,7 +1036,7 @@ object TrainingDataQueries {
        |ORDER BY doc_a, doc_b""".stripMargin
 
   /** The shared capped-walk oracle tail over `banded` + a per-pair
-    * score join: mirrors Dedup.bucketPairs' PRODUCTION posture — the
+    * score join: mirrors BandIndex.pairs' PRODUCTION posture — the
     * hot-bucket guard ON — exactly, because its survivor-chain
     * semantics are deterministic. A pair (a < b) surfaces iff, at its
     * FIRST colliding band (the `keep` suppression both engines agree
@@ -1096,7 +1096,8 @@ object TrainingDataQueries {
   }
 
   /** dd_minhash_incremental — new-batch-vs-corpus MinHash dedup
-    * (Dedup.minhashPairsIncremental): docs with id%5 = 0 are the
+    * (Dedup.minhashPairsIncremental against an in-plan
+    * BandIndex.build of the corpus): docs with id%5 = 0 are the
     * incoming delta, the rest the standing corpus; pairs are
     * delta×corpus band collisions only (within-corpus and within-delta
     * pairs never form), scored by the same signature estimate. The
@@ -1106,7 +1107,8 @@ object TrainingDataQueries {
     val docs = Tables.documents(s, dir)
     Dedup.minhashPairsIncremental(
       docs.filter(pmod(col("doc_id"), lit(5)) === 0),
-      docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
+      BandIndex.build(Dedup.minhashBanded(
+        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text")),
       "doc_id", "text")
       .orderBy("delta_id", "corpus_id")
   }
@@ -1131,7 +1133,7 @@ object TrainingDataQueries {
 
   /** dd_minhash_idx_bucketed — the incremental MinHash search against
     * the BUCKETED persisted band index
-    * (Dedup.writeMinhashBandIndexBucketed): the corpus's banded
+    * (BandIndex.write of the capped MinHash index): the corpus's banded
     * signature rows are written bucketed-and-sorted on the fused band
     * key, so the ingest join shuffles only the delta
     * (MinhashIndexBucketingSpec asserts the single-exchange plan). The
@@ -1143,14 +1145,15 @@ object TrainingDataQueries {
     val table = s"graft_mh_idx_${dirSlug(dir)}"
     indexMemo.getOrElseUpdate(s"mhidx:${System.identityHashCode(s)}:$dir", {
       s.sql(s"DROP TABLE IF EXISTS $table")
-      Dedup.writeMinhashBandIndexBucketed(
-        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text",
+      BandIndex.write(
+        BandIndex.build(Dedup.minhashBanded(
+          docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text")),
         table, nBuckets = 8,
         path = Some(java.nio.file.Files
           .createTempDirectory("graft-mh-idx-gate").toString))
       table
     })
-    Dedup.minhashPairsIncrementalFromIndex(
+    Dedup.minhashPairsIncremental(
       docs.filter(pmod(col("doc_id"), lit(5)) === 0), s.table(table),
       "doc_id", "text")
       .orderBy("delta_id", "corpus_id")
@@ -1223,7 +1226,7 @@ object TrainingDataQueries {
       .orderBy("doc_a", "doc_b")
 
   /** dd_simhash_multiprobe — SimHash at the DEEP rung of
-    * Dedup.simhashBandPlanFor's ladder (2 × 32-bit bands, 1-bit
+    * BandIndex.planFor's 64-bit ladder (2 × 32-bit bands, 1-bit
     * multiprobe — the ≥ 67M-doc posture, 8.59e9-key universe): the
     * probing side expands each 32-bit band key to its 33-key flip set,
     * the exact side stays plain keys. Shares dd_simhash's oracle
@@ -1232,8 +1235,9 @@ object TrainingDataQueries {
     * pair set (the property that makes the band plan a free scale
     * knob, proven across the family by this gate + the pHash pair). */
   val ddSimhashMultiprobe: Q = (s, dir) =>
-    Dedup.simhashPairsMultiprobe(
-      Tables.documents(s, dir), "doc_id", "text", bands = 2, flips = 1)
+    Dedup.simhashPairs(
+      Tables.documents(s, dir), "doc_id", "text",
+      plan = BandIndex.BandPlan(Dedup.DefaultSimhashBits, bands = 2, flips = 1))
       .orderBy("doc_a", "doc_b")
 
   val ddSimhashOracle: String = {
@@ -1275,7 +1279,8 @@ object TrainingDataQueries {
   }
 
   /** dd_simhash_incremental — new-batch-vs-corpus SimHash dedup
-    * (Dedup.simhashPairsIncremental): the dd_minhash_incremental split
+    * (Dedup.simhashPairsIncremental against an in-plan
+    * BandIndex.build of the corpus): the dd_minhash_incremental split
     * convention (id%5 = 0 is the delta) over the banded signature
     * index; pairs are delta×corpus band collisions only, scored by
     * signature Hamming distance. Oracle rides the shared signature
@@ -1284,7 +1289,8 @@ object TrainingDataQueries {
     val docs = Tables.documents(s, dir)
     Dedup.simhashPairsIncremental(
       docs.filter(pmod(col("doc_id"), lit(5)) === 0),
-      docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
+      BandIndex.build(Dedup.simhashBanded(
+        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text")),
       "doc_id", "text")
       .orderBy("delta_id", "corpus_id")
   }
@@ -1329,7 +1335,7 @@ object TrainingDataQueries {
   }
 
   /** dd_simhash_idx_bucketed — dd_minhash_idx_bucketed's SimHash twin
-    * (Dedup.writeSimhashBandIndexBucketed): bucketed persisted banded
+    * (BandIndex.write of the capped SimHash index): bucketed persisted banded
     * signatures, delta-only shuffle on ingest, results proven
     * layout-independent by sharing dd_simhash_incremental's oracle. */
   val ddSimhashIdxBucketed: Q = (s, dir) => {
@@ -1337,14 +1343,15 @@ object TrainingDataQueries {
     val table = s"graft_sh_idx_${dirSlug(dir)}"
     indexMemo.getOrElseUpdate(s"shidx:${System.identityHashCode(s)}:$dir", {
       s.sql(s"DROP TABLE IF EXISTS $table")
-      Dedup.writeSimhashBandIndexBucketed(
-        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text",
+      BandIndex.write(
+        BandIndex.build(Dedup.simhashBanded(
+          docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text")),
         table, nBuckets = 8,
         path = Some(java.nio.file.Files
           .createTempDirectory("graft-sh-idx-gate").toString))
       table
     })
-    Dedup.simhashPairsIncrementalFromIndex(
+    Dedup.simhashPairsIncremental(
       docs.filter(pmod(col("doc_id"), lit(5)) === 0), s.table(table),
       "doc_id", "text")
       .orderBy("delta_id", "corpus_id")
@@ -2644,14 +2651,6 @@ object TrainingDataQueries {
       maxBucket = None)
       .orderBy("doc_a", "doc_b")
 
-  /** The shared oracle CTE chain computing each PNG image's 63-bit
-    * pHash signature and its banded rows — ends with `sig (doc_id,
-    * sig)` and `banded (doc_id, sig, band, bkey)`; composed by both the
-    * full-pair and the incremental-index pHash oracles. The Spark side
-    * PACKS the same 63 bits into one long and bands by shift+mask
-    * (Dedup.packedSignatureBanded) — an identical position partition,
-    * so candidates and Hamming scores agree bit-for-bit with this
-    * list-based form. */
   /** Oracle CTE prefix computing each PNG image's 63 AC DCT
     * coefficients — ends with `c1 (doc_id, c)`; the per-image-median
     * and corpus-median signature tails both build on it. */
@@ -2693,6 +2692,14 @@ object TrainingDataQueries {
       |  FROM sig, range(9) r(band)
       |)""".stripMargin
 
+  /** The shared oracle CTE chain computing each PNG image's 63-bit
+    * pHash signature and its banded rows — ends with `sig (doc_id,
+    * sig)` and `banded (doc_id, sig, band, bkey)`; composed by both the
+    * full-pair and the incremental-index pHash oracles. The Spark side
+    * PACKS the same 63 bits into one long and bands by shift+mask
+    * (Dedup.packedSignatureBanded) — an identical position partition,
+    * so candidates and Hamming scores agree bit-for-bit with this
+    * list-based form. */
   private def phashSigCtes: String =
     s"""$phashCoefCtes, sigt AS (
       |  -- 63 AC values (drop DC c[1]); lower median = 32nd smallest
@@ -2754,7 +2761,7 @@ object TrainingDataQueries {
   }
 
   /** dd_phash_idx_bucketed — the O(Δ) pHash ingest against the BUCKETED
-    * persisted band index (PerceptualHash.writePhashBandIndexBucketed),
+    * persisted band index (BandIndex.write of PerceptualHash.phashBanded),
     * completing the bucketed-index family across every dedup modality
     * (spans, MinHash, SimHash, embeddings, images): the corpus images'
     * packed (doc, sig, band, bkey) rows are written bucketed-and-sorted
@@ -2768,13 +2775,14 @@ object TrainingDataQueries {
     val table = s"graft_ph_idx_${dirSlug(dir)}"
     indexMemo.getOrElseUpdate(s"phidx:${System.identityHashCode(s)}:$dir", {
       s.sql(s"DROP TABLE IF EXISTS $table")
-      graft.operators.PerceptualHash.writePhashBandIndexBucketed(
-        Multimodal.syntheticImagesFromText(
-          docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text"),
+      BandIndex.write(
+        BandIndex.build(graft.operators.PerceptualHash.phashBanded(
+          Multimodal.syntheticImagesFromText(
+            docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text")),
+          maxBucket = None),
         table, nBuckets = 4,
         path = Some(java.nio.file.Files
-          .createTempDirectory("graft-ph-idx-gate").toString),
-        maxBucket = None)
+          .createTempDirectory("graft-ph-idx-gate").toString))
       table
     })
     graft.operators.PerceptualHash.phashPairsIncremental(
@@ -2785,22 +2793,22 @@ object TrainingDataQueries {
   }
 
   /** dd_phash_multiprobe — the 100×-regime pHash posture
-    * (PerceptualHash.phashPairsPlanned at the 7 × 9-bit, 1-flip rung of
-    * PerceptualHash.bandPlanFor's ladder): the SAME near-dup pair set
+    * (PerceptualHash.phashPairs at the 7 × 9-bit, 1-flip rung of
+    * BandIndex.planFor's 63-bit ladder): the SAME near-dup pair set
     * generated with a coarser band cut whose bucket universe is 3,584
     * (vs the fine cut's hard 1,152 ceiling), losslessness at
     * Hamming ≤ 8 bought back by 1-bit multiprobe on the probing side
-    * (Dedup.packedMultiprobePairs — pigeonhole: ≤ 8 differing bits
+    * (BandIndex.probePairs — pigeonhole: ≤ 8 differing bits
     * across 7 bands leaves some band with ≤ 1). Shares dd_phash's
     * oracle VERBATIM: any lossless candidate scheme followed by the
     * exact Hamming ≤ 8 filter yields the identical pair set, which is
     * precisely the property that makes the plan a free knob at scale. */
   val ddPhashMultiprobe: Q = (s, dir) =>
-    graft.operators.PerceptualHash.phashPairsPlanned(
+    graft.operators.PerceptualHash.phashPairs(
       Multimodal.syntheticImagesFromText(
         Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(3)) === 0),
         "doc_id", "text"),
-      graft.operators.PerceptualHash.BandPlan(7, 1),
+      BandIndex.BandPlan(graft.operators.PerceptualHash.PhashBits, bands = 7, flips = 1),
       maxBucket = None)
       .orderBy("doc_a", "doc_b")
 
@@ -2814,13 +2822,13 @@ object TrainingDataQueries {
     * both equal the uncapped delta × corpus pair set. */
   val ddPhashMultiprobeIdx: Q = (s, dir) => {
     import graft.operators.PerceptualHash
-    val plan = PerceptualHash.BandPlan(3, 2)
+    val plan = BandIndex.BandPlan(PerceptualHash.PhashBits, bands = 3, flips = 2)
     val docs = Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(3)) === 0)
-    val idx = PerceptualHash.phashBandIndexPlanned(
+    val idx = BandIndex.build(PerceptualHash.phashBanded(
       Multimodal.syntheticImagesFromText(
         docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text"),
-      plan, maxBucket = None)
-    PerceptualHash.phashPairsIncrementalPlanned(
+      plan), maxBucket = None)
+    PerceptualHash.phashPairsIncremental(
       Multimodal.syntheticImagesFromText(
         docs.filter(pmod(col("doc_id"), lit(5)) === 0), "doc_id", "text"),
       idx, plan)

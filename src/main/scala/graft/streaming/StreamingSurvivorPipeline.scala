@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
-import graft.operators.Dedup
+import graft.operators.{BandIndex, Dedup}
 import graft.store.Snapshot
 
 /** The LIVE survivor pipeline — the full dedup state machine a
@@ -14,15 +14,15 @@ import graft.store.Snapshot
   *
   *   1. near-dup pairs of the batch: WITHIN-batch (`minhashPairs`) ∪
   *      batch-vs-corpus against the persisted BUCKETED band index
-  *      (`minhashPairsIncrementalFromIndex` — corpus side reads
-  *      bucket-in-place, only the batch shuffles);
+  *      (`minhashPairsIncremental` over a [[BandIndex.write]] table —
+  *      corpus side reads bucket-in-place, only the batch shuffles);
   *   2. cluster labels absorb the new pairs
   *      ([[Dedup.mergeClustersIncremental]] — delta-sized label graph);
   *   3. the keep-best survivor state folds the batch in
   *      ([[Dedup.keepBestStateIncremental]] — only the batch is scored,
   *      corpus text never re-read);
   *   4. the batch's band rows append into the index under the frozen
-  *      build-time layout ([[Dedup.appendToMinhashBandIndexBucketed]]).
+  *      build-time layout ([[BandIndex.append]]).
   *
   * Exactness, not approximation: a MinHash pair is emitted iff its
   * signatures collide in ≥1 band AND the signature estimate clears the
@@ -96,7 +96,7 @@ object StreamingSurvivorPipeline {
       .select(col("doc_a"), col("doc_b"))
     val cross =
       if (!hasIndex) within.limit(0)
-      else Dedup.minhashPairsIncrementalFromIndex(b, spark.table(p.indexTable),
+      else Dedup.minhashPairsIncremental(b, spark.table(p.indexTable),
         idCol, textCol)
         .select(col("delta_id").as("doc_a"), col("corpus_id").as("doc_b"))
     val newPairs = within.unionByName(cross).localCheckpoint(false)
@@ -107,12 +107,10 @@ object StreamingSurvivorPipeline {
       state, labels, b, idCol, textCol, newPairs).localCheckpoint()
     val labels2 = Dedup.mergeClustersIncremental(labels, newPairs)
       .localCheckpoint()
-    if (hasIndex)
-      Dedup.appendToMinhashBandIndexBucketed(b, idCol, textCol,
-        p.indexTable, p.nBuckets)
-    else
-      Dedup.writeMinhashBandIndexBucketed(b, idCol, textCol,
-        p.indexTable, p.nBuckets, path = Some(p.indexPath))
+    val banded = Dedup.minhashBanded(b, idCol, textCol)
+    if (hasIndex) BandIndex.append(banded, p.indexTable, p.nBuckets)
+    else BandIndex.write(BandIndex.build(banded), p.indexTable, p.nBuckets,
+      path = Some(p.indexPath))
     Snapshot.commit(spark, p.snapshotBase,
       Map("labels" -> labels2, "state" -> state2))
     Snapshot.vacuum(spark, p.snapshotBase)

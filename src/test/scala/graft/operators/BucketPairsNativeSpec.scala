@@ -45,7 +45,8 @@ class BucketPairsNativeSpec extends SparkSpecBase {
 
   private def packedBoth(sigs: DataFrame, bits: Int, bands: Int,
       cap: Option[Int]): (Set[(Long, Long, Any)], Set[(Long, Long, Any)]) = {
-    val native = Dedup.packedSignaturePairs(sigs, "doc", "sig", bits, bands, cap)
+    val native =
+      Dedup.packedSignaturePairs(sigs, "doc", "sig", BandIndex.BandPlan(bits, bands), cap)
     val rows = sigs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val model = ReferenceModels.bandedPairs[Long, Any](rows, bands,
       ReferenceModels.packedSlice(bits / bands), ReferenceModels.hammingLong, cap)
@@ -80,9 +81,9 @@ class BucketPairsNativeSpec extends SparkSpecBase {
   test("native packed maxScore pushdown == post-filter") {
     val sigs = packedSigs(300, seed = 21L)
     val pushed = collectPairs(Dedup.packedSignaturePairs(
-      sigs, "doc", "sig", 63, 9, Some(8), maxScore = Some(8)))
+      sigs, "doc", "sig", BandIndex.BandPlan(63, 9), Some(8), maxScore = Some(8)))
     val post = collectPairs(Dedup.packedSignaturePairs(
-      sigs, "doc", "sig", 63, 9, Some(8)).filter(col("score") <= 8))
+      sigs, "doc", "sig", BandIndex.BandPlan(63, 9), Some(8)).filter(col("score") <= 8))
     assert(pushed === post)
     assert(pushed.nonEmpty, "no pairs within Hamming 8 — vacuous test")
   }

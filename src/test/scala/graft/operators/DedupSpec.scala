@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpecBase
+import graft.operators.BandIndex.BandPlan
 import graft.sources.Tables
 
 class DedupSpec extends SparkSpecBase {
@@ -93,16 +94,16 @@ class DedupSpec extends SparkSpecBase {
     val fine = pairsOf(Dedup.simhashPairs(docs, "doc_id", "text"))
     // the legacy 8×8 cut, the new default 4×16, and the deep 2×32+1-flip
     // multiprobe rung: all lossless at Hamming ≤ 3 ⇒ all equal
-    val legacy = pairsOf(Dedup.simhashPairs(docs, "doc_id", "text", bands = 8))
-    val deep = pairsOf(Dedup.simhashPairsMultiprobe(
-      docs, "doc_id", "text", bands = 2, flips = 1))
+    val legacy = pairsOf(Dedup.simhashPairs(docs, "doc_id", "text", plan = BandPlan(64, 8)))
+    val deep = pairsOf(Dedup.simhashPairs(
+      docs, "doc_id", "text", plan = BandPlan(64, bands = 2, flips = 1)))
     assert(fine.nonEmpty && legacy === fine && deep === fine)
     // a lossy plan is refused, not silently degraded
     intercept[IllegalArgumentException](
-      Dedup.simhashPairsMultiprobe(docs, "doc_id", "text", bands = 2, flips = 0))
+      Dedup.simhashPairs(docs, "doc_id", "text", plan = BandPlan(64, bands = 2, flips = 0)))
     // the ladder scales the keyspace with the corpus
-    assert(Dedup.simhashBandPlanFor(1000) == ((4, 0)))
-    assert(Dedup.simhashBandPlanFor(100000000L) == ((2, 1)))
+    assert(BandIndex.planFor(64, 1000, Dedup.DefaultMaxHamming) == BandPlan(64, 4, 0))
+    assert(BandIndex.planFor(64, 100000000L, Dedup.DefaultMaxHamming) == BandPlan(64, 2, 1))
   }
 
   test("minhashPairsVerified equals the exact-jaccard ground truth on this corpus") {
@@ -456,7 +457,8 @@ class DedupSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val inc = Dedup.minhashPairsIncremental(
       docs.filter(pmod(col("doc_id"), lit(5)) === 0),
-      docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
+      BandIndex.build(Dedup.minhashBanded(
+        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text")),
       "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // full-corpus pairs are (min,max)-ordered; incremental is
@@ -513,11 +515,11 @@ class DedupSpec extends SparkSpecBase {
 
     // MinHash band index: write → reload → search must equal the
     // direct (index-derived-in-query) run row for row
-    Dedup.minhashBandIndex(corpus, "doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/mh")
-    val mhDirect = Dedup.minhashPairsIncremental(delta, corpus, "doc_id", "text")
+    val mhIndex = BandIndex.build(Dedup.minhashBanded(corpus, "doc_id", "text"))
+    mhIndex.write.mode("overwrite").parquet(s"$dir/mh")
+    val mhDirect = Dedup.minhashPairsIncremental(delta, mhIndex, "doc_id", "text")
       .collect().map(_.toSeq).toSet
-    val mhReloaded = Dedup.minhashPairsIncrementalFromIndex(
+    val mhReloaded = Dedup.minhashPairsIncremental(
       delta, spark.read.parquet(s"$dir/mh"), "doc_id", "text")
       .collect().map(_.toSeq).toSet
     assert(mhDirect.nonEmpty && mhReloaded === mhDirect)
@@ -557,7 +559,8 @@ class DedupSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue)).toSet
     val inc = Dedup.simhashPairsIncremental(
       docs.filter(pmod(col("doc_id"), lit(5)) === 0),
-      docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
+      BandIndex.build(Dedup.simhashBanded(
+        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text")),
       "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue)).toSet
     val incNorm = inc.map { case (d, c, h) => (math.min(d, c), math.max(d, c), h) }
@@ -567,7 +570,8 @@ class DedupSpec extends SparkSpecBase {
     assert(inc.nonEmpty, "fixture plants cross-split near-duplicates")
     // re-ingest safety: an indexed doc arriving again is not its own dup
     val re = Dedup.simhashPairsIncremental(
-      docs.filter(col("doc_id") < 50), docs, "doc_id", "text")
+      docs.filter(col("doc_id") < 50),
+      BandIndex.build(Dedup.simhashBanded(docs, "doc_id", "text")), "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(re.forall { case (d, c) => d != c },
       s"self-pairs leaked: ${re.filter(p => p._1 == p._2).toSeq}")
@@ -581,7 +585,8 @@ class DedupSpec extends SparkSpecBase {
     // self-pair filter must drop exactly those identity pairs while
     // keeping genuine cross-doc duplicates
     val delta = docs.filter(col("doc_id") < 50)
-    val pairs = Dedup.minhashPairsIncremental(delta, docs, "doc_id", "text")
+    val pairs = Dedup.minhashPairsIncremental(
+      delta, BandIndex.build(Dedup.minhashBanded(docs, "doc_id", "text")), "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(pairs.forall { case (d, c) => d != c },
       s"self-pairs leaked: ${pairs.filter(p => p._1 == p._2)}")

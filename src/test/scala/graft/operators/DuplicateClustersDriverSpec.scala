@@ -8,10 +8,11 @@ import graft.sources.Tables
 
 /** Differential gate for the round-18 driver-side union-find path of
   * [[Dedup.duplicateClusters]]: for any pair graph under the
-  * `spark.graft.ccDriverMaxEdges` bound, the collected union-find must
+  * [[Dedup.CcDriverMaxEdges]] bound, the collected union-find must
   * produce EXACTLY the distributed propagation loop's converged labels
   * (every doc that appears in a pair, labeled with its component's
-  * minimum id). The loop is reachable by setting the bound to 0. */
+  * minimum id). The reference calls the loop, [[Dedup.propagateLabels]],
+  * directly. */
 class DuplicateClustersDriverSpec extends SparkSpecBase {
 
   private def canon(df: DataFrame): Set[(Long, Long)] =
@@ -19,12 +20,10 @@ class DuplicateClustersDriverSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   private def both(pairs: DataFrame): (Set[(Long, Long)], Set[(Long, Long)]) = {
-    spark.conf.unset("spark.graft.ccDriverMaxEdges")
     val driver = canon(Dedup.duplicateClusters(pairs))
-    spark.conf.set("spark.graft.ccDriverMaxEdges", "0")
-    val loop =
-      try canon(Dedup.duplicateClusters(pairs))
-      finally spark.conf.unset("spark.graft.ccDriverMaxEdges")
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val loop = canon(Dedup.propagateLabels(edges, maxIters = 25))
     (driver, loop)
   }
 

@@ -25,7 +25,7 @@ class LongIdBoundarySpec extends SparkSpecBase {
   private val entries: Seq[(String, String, String => DataFrame)] = Seq(
     ("minhashPairs", "doc_id", t => Dedup.minhashPairs(docs(t), "doc_id", "text")),
     ("packedSignaturePairs", "doc_id",
-      t => Dedup.packedSignaturePairs(sigs(t), "doc_id", "sig", 64, 4)),
+      t => Dedup.packedSignaturePairs(sigs(t), "doc_id", "sig", BandIndex.BandPlan(64, 4))),
     ("lshNeighbors", "vec_id",
       t => SimilaritySearch.lshNeighbors(emb(t), "vec_id", "embedding", dim = 64, nBits = 3)),
     ("ivfNeighbors", "vec_id",

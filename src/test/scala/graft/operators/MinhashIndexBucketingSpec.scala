@@ -10,15 +10,18 @@ import org.apache.spark.sql.functions._
 /** The bucketed persisted MinHash/SimHash band indexes — the span
   * family's round-9 shuffle-elimination layout
   * (SpanIndexBucketingSpec) applied to the signature siblings: the
-  * O(Δ) ingest join against a `write*BandIndexBucketed` table must
+  * O(Δ) ingest join against a `BandIndex.write` table must
   * shuffle ONLY the delta side — the corpus band rows read
   * bucket-in-place — and return exactly what the direct
-  * (recompute-the-corpus) incremental path returns. */
+  * (recompute-the-corpus) incremental path returns. The
+  * write → append → probe contract is BandIndexSpec's, per family. */
 class MinhashIndexBucketingSpec extends SparkSpecBase {
 
   private def docs = Tables.documents(spark, sfDir)
   private def delta = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
   private def corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
+  private def mhBanded(df: DataFrame) = Dedup.minhashBanded(df, "doc_id", "text")
+  private def shBanded(df: DataFrame) = Dedup.simhashBanded(df, "doc_id", "text")
 
   /** Assert the single-exchange bucketed-join shape: exactly one
     * bb-partitioned exchange (the delta's) and a bucketed corpus scan. */
@@ -48,94 +51,35 @@ class MinhashIndexBucketingSpec extends SparkSpecBase {
     val table = "mh_idx_bucketed_spec"
     val path = Files.createTempDirectory("graft-mh-bidx").toString
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    Dedup.writeMinhashBandIndexBucketed(
-      corpus, "doc_id", "text", table, nBuckets = 4, path = Some(path))
+    BandIndex.write(BandIndex.build(mhBanded(corpus)), table, nBuckets = 4, path = Some(path))
     try withNoBroadcast {
-      val viaBucketed = Dedup.minhashPairsIncrementalFromIndex(
+      val viaBucketed = Dedup.minhashPairsIncremental(
         delta, spark.table(table), "doc_id", "text")
         .orderBy("delta_id", "corpus_id")
       val direct = Dedup.minhashPairsIncremental(
-        delta, corpus, "doc_id", "text")
+        delta, BandIndex.build(mhBanded(corpus)), "doc_id", "text")
         .orderBy("delta_id", "corpus_id")
       val got = viaBucketed.collect().toSeq
       assert(got.nonEmpty && got === direct.collect().toSeq)
       assertDeltaOnlyExchange(viaBucketed)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
-  test("minhash append preserves layout and equals the union-of-band-rows contract") {
-    val base = corpus.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val batch = corpus.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val table = "mh_idx_append_spec"
-    val path = Files.createTempDirectory("graft-mh-aidx").toString
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    Dedup.writeMinhashBandIndexBucketed(
-      base, "doc_id", "text", table, nBuckets = 4, path = Some(path))
-    Dedup.appendToMinhashBandIndexBucketed(
-      batch, "doc_id", "text", table, nBuckets = 4)
-    withNoBroadcast {
-      val viaAppended = Dedup.minhashPairsIncrementalFromIndex(
-        delta, spark.table(table), "doc_id", "text")
-        .orderBy("delta_id", "corpus_id")
-      // frozen-decision reference: capped base index ∪ uncapped batch rows
-      val reference = Dedup.minhashPairsIncrementalFromIndex(
-        delta,
-        Dedup.minhashBandIndex(base, "doc_id", "text")
-          .unionByName(Dedup.minhashBandIndex(
-            batch, "doc_id", "text", maxBucket = None)),
-        "doc_id", "text")
-        .orderBy("delta_id", "corpus_id")
-      val got = viaAppended.collect().toSeq
-      assert(got.nonEmpty && got === reference.collect().toSeq)
-      assertDeltaOnlyExchange(viaAppended)
-    }
-    spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("bucketed-index incremental simhash: delta-only exchange, identical results") {
     val table = "sh_idx_bucketed_spec"
     val path = Files.createTempDirectory("graft-sh-bidx").toString
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    Dedup.writeSimhashBandIndexBucketed(
-      corpus, "doc_id", "text", table, nBuckets = 4, path = Some(path))
+    BandIndex.write(BandIndex.build(shBanded(corpus)), table, nBuckets = 4, path = Some(path))
     try withNoBroadcast {
-      val viaBucketed = Dedup.simhashPairsIncrementalFromIndex(
+      val viaBucketed = Dedup.simhashPairsIncremental(
         delta, spark.table(table), "doc_id", "text")
         .orderBy("delta_id", "corpus_id")
       val direct = Dedup.simhashPairsIncremental(
-        delta, corpus, "doc_id", "text")
+        delta, BandIndex.build(shBanded(corpus)), "doc_id", "text")
         .orderBy("delta_id", "corpus_id")
       val got = viaBucketed.collect().toSeq
       assert(got.nonEmpty && got === direct.collect().toSeq)
       assertDeltaOnlyExchange(viaBucketed)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
-  test("simhash append preserves layout and equals the union-of-band-rows contract") {
-    val base = corpus.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val batch = corpus.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val table = "sh_idx_append_spec"
-    val path = Files.createTempDirectory("graft-sh-aidx").toString
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    Dedup.writeSimhashBandIndexBucketed(
-      base, "doc_id", "text", table, nBuckets = 4, path = Some(path))
-    Dedup.appendToSimhashBandIndexBucketed(
-      batch, "doc_id", "text", table, nBuckets = 4)
-    withNoBroadcast {
-      val viaAppended = Dedup.simhashPairsIncrementalFromIndex(
-        delta, spark.table(table), "doc_id", "text")
-        .orderBy("delta_id", "corpus_id")
-      val reference = Dedup.simhashPairsIncrementalFromIndex(
-        delta,
-        Dedup.simhashBandIndex(base, "doc_id", "text")
-          .unionByName(Dedup.simhashBandIndex(
-            batch, "doc_id", "text", maxBucket = None)),
-        "doc_id", "text")
-        .orderBy("delta_id", "corpus_id")
-      val got = viaAppended.collect().toSeq
-      assert(got.nonEmpty && got === reference.collect().toSeq)
-      assertDeltaOnlyExchange(viaAppended)
-    }
-    spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 }

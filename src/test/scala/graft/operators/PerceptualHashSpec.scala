@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.operators.BandIndex.BandPlan
 import graft.operators.Multimodal.MediaRow
 
 /** Perceptual image hash: the dedup property the byte/text families
@@ -58,6 +59,16 @@ class PerceptualHashSpec extends SparkSpecBase {
   private def ham(a: Array[Int], b: Array[Int]): Int =
     a.zip(b).count { case (x, y) => x != y }
 
+  /** A pHash band plan and the pHash ladder at the default radius. */
+  private def plan(bands: Int, flips: Int): BandPlan =
+    BandPlan(PerceptualHash.PhashBits, bands, flips)
+  private def bandPlanFor(n: Long): BandPlan =
+    BandIndex.planFor(PerceptualHash.PhashBits, n, PerceptualHash.DefaultMaxHamming)
+  private def phashIndex(media: org.apache.spark.sql.Dataset[MediaRow],
+      p: BandPlan = PerceptualHash.DefaultPhashPlan,
+      maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)) =
+    BandIndex.build(PerceptualHash.phashBanded(media, p), maxBucket)
+
   test("re-encode invariance: PNG vs JPEG of the same pixels hash within maxHamming") {
     val png = hashOf(MediaCodec.encodePng24(W, H, baseA))
     val jpg = hashOf(MediaCodec.encodeJpeg24(W, H, baseA))
@@ -101,7 +112,7 @@ class PerceptualHashSpec extends SparkSpecBase {
     import spark.implicits._
     val delta = spark.createDataset(mediaRows.filter(_.media_id == 2L))
     val corpus = spark.createDataset(mediaRows.filter(_.media_id != 2L))
-    val idx = PerceptualHash.phashBandIndex(corpus)
+    val idx = phashIndex(corpus)
     val inc = PerceptualHash.phashPairsIncremental(delta, idx)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(inc == Set((2L, 1L), (2L, 3L)), s"got $inc")
@@ -111,7 +122,7 @@ class PerceptualHashSpec extends SparkSpecBase {
     import spark.implicits._
     val corpus = spark.createDataset(mediaRows.filter(_.media_id != 2L))
     val p = java.nio.file.Files.createTempDirectory("phash-idx").toString
-    PerceptualHash.phashBandIndex(corpus).write.mode("overwrite").parquet(p)
+    phashIndex(corpus).write.mode("overwrite").parquet(p)
     val delta = spark.createDataset(mediaRows.filter(_.media_id == 2L))
     val inc = PerceptualHash.phashPairsIncremental(delta, spark.read.parquet(p))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -162,14 +173,12 @@ class PerceptualHashSpec extends SparkSpecBase {
     val meds = PerceptualHash.phashMedians(corpus)
     // frozen model: the delta's signature must depend only on the
     // stored medians — score it against the corpus's banded index
-    val idx = Dedup.packedSignatureBandIndex(
+    val idx = BandIndex.build(Dedup.packedSignatureBanded(
       PerceptualHash.phashSignaturesWithMedians(corpus, meds),
-      "media_id", "sig", PerceptualHash.PhashBits,
-      PerceptualHash.DefaultPhashBands)
-    val inc = Dedup.packedSignaturePairsIncrementalFromIndex(
+      "media_id", "sig", PerceptualHash.DefaultPhashPlan))
+    val inc = Dedup.packedSignaturePairsIncremental(
       PerceptualHash.phashSignaturesWithMedians(delta, meds), idx,
-      "media_id", "sig", PerceptualHash.PhashBits,
-      PerceptualHash.DefaultPhashBands)
+      "media_id", "sig", PerceptualHash.DefaultPhashPlan)
       .filter(col("score") <= PerceptualHash.DefaultMaxHamming)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(inc == Set((2L, 1L), (2L, 3L)), s"got $inc")
@@ -229,13 +238,12 @@ class PerceptualHashSpec extends SparkSpecBase {
     val table = "ph_idx_bucketed_spec"
     val path = java.nio.file.Files.createTempDirectory("graft-ph-bidx").toString
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    PerceptualHash.writePhashBandIndexBucketed(
-      corpus, table, nBuckets = 4, path = Some(path))
+    BandIndex.write(phashIndex(corpus), table, nBuckets = 4, path = Some(path))
     try withNoBroadcast {
       val via = PerceptualHash.phashPairsIncremental(delta, spark.table(table))
         .orderBy("delta_id", "corpus_id")
       val direct = PerceptualHash.phashPairsIncremental(
-        delta, PerceptualHash.phashBandIndex(corpus))
+        delta, phashIndex(corpus))
         .orderBy("delta_id", "corpus_id")
       val got = via.collect().toSeq
       assert(got.nonEmpty && got === direct.collect().toSeq)
@@ -253,17 +261,15 @@ class PerceptualHashSpec extends SparkSpecBase {
     val table = "ph_idx_append_spec"
     val path = java.nio.file.Files.createTempDirectory("graft-ph-aidx").toString
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    PerceptualHash.writePhashBandIndexBucketed(
-      base, table, nBuckets = 4, path = Some(path))
-    PerceptualHash.appendToPhashBandIndexBucketed(batch, table, nBuckets = 4)
+    BandIndex.write(phashIndex(base), table, nBuckets = 4, path = Some(path))
+    BandIndex.append(PerceptualHash.phashBanded(batch), table, nBuckets = 4)
     withNoBroadcast {
       val viaAppended = PerceptualHash.phashPairsIncremental(delta, spark.table(table))
         .orderBy("delta_id", "corpus_id")
       // frozen-decision reference: capped base index ∪ uncapped batch rows
       val reference = PerceptualHash.phashPairsIncremental(
         delta,
-        PerceptualHash.phashBandIndex(base).unionByName(
-          PerceptualHash.phashBandIndex(batch, maxBucket = None)))
+        phashIndex(base).unionByName(phashIndex(batch, maxBucket = None)))
         .orderBy("delta_id", "corpus_id")
       val got = viaAppended.collect().toSeq
       assert(got.map(r => (r.getLong(0), r.getLong(1))).toSet ==
@@ -279,37 +285,36 @@ class PerceptualHashSpec extends SparkSpecBase {
   test("flipMasks enumerates exactly the <=flips-bit neighborhoods") {
     // flips=1 over r bits: the r single-bit masks; flips=2 adds C(r,2)
     Seq(7, 9, 21).foreach { r =>
-      val f1 = Dedup.flipMasks(r, 1)
+      val f1 = BandIndex.flipMasks(r, 1)
       assert(f1.length == r && f1.toSet.size == r)
       assert(f1.forall(m => java.lang.Long.bitCount(m) == 1 && m < (1L << r)))
-      val f2 = Dedup.flipMasks(r, 2)
+      val f2 = BandIndex.flipMasks(r, 2)
       assert(f2.length == r + r * (r - 1) / 2 && f2.toSet.size == f2.length)
       assert(f2.forall(m =>
         java.lang.Long.bitCount(m) >= 1 && java.lang.Long.bitCount(m) <= 2 &&
           m < (1L << r)))
-      assert(Dedup.flipMasks(r, 0).isEmpty)
+      assert(BandIndex.flipMasks(r, 0).isEmpty)
     }
-    intercept[IllegalArgumentException](Dedup.flipMasks(7, 3))
+    intercept[IllegalArgumentException](BandIndex.flipMasks(7, 3))
   }
 
   test("bandPlanFor: keyspace scales with corpus size, lossless at maxHamming") {
-    import PerceptualHash.{BandPlan, bandPlanFor}
-    assert(BandPlan(9, 0).keyspace == 1152L &&
-      BandPlan(7, 1).keyspace == 3584L &&
-      BandPlan(3, 2).keyspace == 6291456L)
+    assert(plan(9, 0).keyspace == 1152L &&
+      plan(7, 1).keyspace == 3584L &&
+      plan(3, 2).keyspace == 6291456L)
     // default target 256: the fine cut serves ~295k, then the ladder climbs
-    assert(bandPlanFor(0) == BandPlan(9, 0))
-    assert(bandPlanFor(100000) == BandPlan(9, 0))
-    assert(bandPlanFor(500000) == BandPlan(7, 1))
-    assert(bandPlanFor(10000000) == BandPlan(3, 2))
-    assert(bandPlanFor(100000000000L) == BandPlan(3, 2)) // last rung + cap governs
+    assert(bandPlanFor(0) == plan(9, 0))
+    assert(bandPlanFor(100000) == plan(9, 0))
+    assert(bandPlanFor(500000) == plan(7, 1))
+    assert(bandPlanFor(10000000) == plan(3, 2))
+    assert(bandPlanFor(100000000000L) == plan(3, 2)) // last rung + cap governs
     // every rung covers the default Hamming radius losslessly
     Seq(bandPlanFor(0), bandPlanFor(500000), bandPlanFor(10000000)).foreach {
       p => assert(p.losslessMaxHamming >= PerceptualHash.DefaultMaxHamming)
     }
     // probe volume ladder: 9, 70, 696 rows per signature
-    assert(BandPlan(9, 0).probesPerRow == 9L &&
-      BandPlan(7, 1).probesPerRow == 70L && BandPlan(3, 2).probesPerRow == 696L)
+    assert(plan(9, 0).probesPerRow == 9L &&
+      plan(7, 1).probesPerRow == 70L && plan(3, 2).probesPerRow == 696L)
   }
 
   test("multiprobe pairs equal the fine-cut pairs on every lossless plan") {
@@ -320,14 +325,14 @@ class PerceptualHashSpec extends SparkSpecBase {
     val fine = pairsOf(PerceptualHash.phashPairs(media, maxBucket = None)
       .select(col("doc_a"), col("doc_b"), col("hamming").cast("int")))
     assert(fine.map(p => (p._1, p._2)).contains((1L, 2L))) // non-degenerate
-    Seq(PerceptualHash.BandPlan(7, 1), PerceptualHash.BandPlan(3, 2)).foreach { plan =>
-      val mp = pairsOf(PerceptualHash.phashPairsPlanned(media, plan, maxBucket = None)
+    Seq(plan(7, 1), plan(3, 2)).foreach { p =>
+      val mp = pairsOf(PerceptualHash.phashPairs(media, p, maxBucket = None)
         .select(col("doc_a"), col("doc_b"), col("hamming").cast("int")))
-      assert(mp === fine, s"plan $plan diverged from the fine cut")
+      assert(mp === fine, s"plan $p diverged from the fine cut")
     }
     // a lossy plan is refused, not silently degraded
     intercept[IllegalArgumentException](
-      PerceptualHash.phashPairsPlanned(media, PerceptualHash.BandPlan(7, 0)))
+      PerceptualHash.phashPairs(media, plan(7, 0)))
   }
 
   test("phashPairsAuto picks the fine cut at fixture scale and matches it") {
@@ -341,17 +346,16 @@ class PerceptualHashSpec extends SparkSpecBase {
   test("multiprobe incremental against the bucketed 7-band index: " +
     "delta-only exchange, equals the fine-cut incremental") {
     import spark.implicits._
-    val plan = PerceptualHash.BandPlan(7, 1)
+    val mp = plan(7, 1)
     val delta = spark.createDataset(mediaRows.filter(_.media_id == 2L))
     val corpus = spark.createDataset(mediaRows.filter(_.media_id != 2L))
     val table = "ph_idx_mp_spec"
     val path = java.nio.file.Files.createTempDirectory("graft-ph-mpidx").toString
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    PerceptualHash.writePhashBandIndexBucketed(
-      corpus, table, nBuckets = 4, path = Some(path), bands = plan.bands)
+    BandIndex.write(phashIndex(corpus, mp), table, nBuckets = 4, path = Some(path))
     try withNoBroadcast {
-      val via = PerceptualHash.phashPairsIncrementalPlanned(
-        delta, spark.table(table), plan)
+      val via = PerceptualHash.phashPairsIncremental(
+        delta, spark.table(table), mp)
         .orderBy("delta_id", "corpus_id")
       val got = via.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == Set((2L, 1L), (2L, 3L)), s"got $got")
@@ -367,11 +371,11 @@ class PerceptualHashSpec extends SparkSpecBase {
     // cut, so every 21-bit bucket is a SUBSET of each of its three
     // 7-bit super-buckets — max occupancy is monotonically non-
     // increasing as the plan widens (the hot-bucket relief the ladder
-    // exists to buy; the keyspace row in bandPlanFor's scaladoc is the
+    // exists to buy; the keyspace row in BandIndex.planFor's scaladoc is the
     // other half of the argument)
     val media = spark.createDataset(debiasRows)
     def maxOcc(bands: Int): Long =
-      Occupancy.stats(PerceptualHash.phashBanded(media, bands), 2048, "band", "bkey")
+      Occupancy.stats(PerceptualHash.phashBanded(media, plan(bands, 0)), 2048, "band", "bkey")
         .select(col("max_occ")).head.getLong(0)
     val fine = maxOcc(9); val mid = maxOcc(7); val wide = maxOcc(3)
     assert(wide <= fine, s"21-bit buckets ($wide) must refine 7-bit ones ($fine)")

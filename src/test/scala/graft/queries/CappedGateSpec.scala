@@ -40,7 +40,7 @@ class CappedGateSpec extends SparkSpecBase {
       "doc_id", "text")
     val banded = Dedup.packedSignatureBanded(
       PerceptualHash.phashSignatures(media), "media_id", "sig",
-      PerceptualHash.PhashBits, PerceptualHash.DefaultPhashBands)
+      PerceptualHash.DefaultPhashPlan)
     val maxM = banded.groupBy("band", "bkey").count()
       .agg(max("count")).head.getLong(0)
     assert(maxM > 8,

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.types._
 
 import graft.SparkSpecBase
-import graft.operators.Dedup
+import graft.operators.{BandIndex, Dedup}
 
 /** The live survivor pipeline: replayed document batches must land on
   * EXACTLY the from-scratch batch survivor state over everything
@@ -99,8 +99,8 @@ class StreamingSurvivorPipelineSpec extends SparkSpecBase {
     StreamingSurvivorPipeline.foldBatch(
       spark, batches.head.toDF("doc_id", "text"), "doc_id", "text", p)
     // the torn half-fold: ONLY the index append of batch 2 happens
-    Dedup.appendToMinhashBandIndexBucketed(
-      batches(1).toDF("doc_id", "text"), "doc_id", "text",
+    BandIndex.append(
+      Dedup.minhashBanded(batches(1).toDF("doc_id", "text"), "doc_id", "text"),
       p.indexTable, p.nBuckets)
     // redelivery of batch 2 = the recovery refold
     StreamingSurvivorPipeline.foldBatch(
