@@ -451,8 +451,8 @@ object Dedup {
     * their corpus (duplicate groups of a few members), while every
     * propagation round costs ~3 scheduled jobs plus a driver re-plan —
     * measured at sf0.1 as ~1.5-2 s of dd_clusters' 2.5-3 s wall for a
-    * graph of a few hundred edges. The bound keeps the collect
-    * broadcast-sized (16 B/edge ⇒ ≤ ~3 MB), the same scale contract as
+    * graph of a few hundred edges. The bound keeps the union-find input
+    * broadcast-sized (16 B/pair ⇒ ≤ ~1.6 MB), the same scale contract as
     * the IVF centroid / Bloom-filter driver collects; past it the loop
     * runs unchanged. */
   val CcDriverMaxEdges: Long = 200000L
@@ -461,23 +461,31 @@ object Dedup {
     * CLUSTERS with a canonical representative (the minimum doc id in the
     * component) — what a production dedup actually keeps/drops, beyond
     * raw pairs. A graph of long ids with at most [[CcDriverMaxEdges]]
-    * directed edges resolves in one driver-side union-find pass; any
-    * other graph runs [[propagateLabels]]. Both return the same
-    * converged min-label components (differential-spec'd in
+    * directed edges (half as many pairs) resolves in one driver-side
+    * union-find pass over the pairs, fetched by ONE bounded action: each
+    * partition returns at most `CcDriverMaxEdges / 2 + 1` pairs, so the
+    * fetch never holds more than that per partition and a graph over the
+    * bound shows as more pairs than it allows. The fallback builds the
+    * symmetric edge list, stages it and runs [[propagateLabels]]; it
+    * runs when the ids are not bigint (decided from the schema, before
+    * any job) or the graph is over the bound (the pairs are then
+    * computed again for the staging). Both return the same converged
+    * min-label components (differential-spec'd in
     * DuplicateClustersDriverSpec). `maxIters` bounds the loop only. */
   def duplicateClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    val edges = pairs
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.types.LongType
+    def loop(): DataFrame = propagateLabels(pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .transform(Materialize.stage(_, eager = true))
-    // the driver path saves the loop's O(rounds) job/checkpoint/
-    // convergence-probe cadence; long ids only (every production
-    // caller), other id types keep the loop
-    import org.apache.spark.sql.types.LongType
-    val longIds = edges.schema("src").dataType == LongType &&
-      edges.schema("dst").dataType == LongType
-    if (!longIds || edges.count() > CcDriverMaxEdges) return propagateLabels(edges, maxIters)
-    val es = edges.select(col("src"), col("dst")).collect()
+      .transform(Materialize.stage(_, eager = true)), maxIters)
+    val ab = pairs.select(col("doc_a"), col("doc_b"))
+    if (!ab.schema.forall(_.dataType == LongType)) return loop()
+    val maxPairs = CcDriverMaxEdges / 2
+    val bound = (maxPairs + 1).toInt
+    val es = ab.as[(Long, Long)].mapPartitions(_.take(bound)).collect()
+    if (es.length > maxPairs) return loop()
     val parent = new java.util.HashMap[Long, Long](es.length * 2)
     def find(x: Long): Long = {
       var r = x
@@ -488,7 +496,7 @@ object Dedup {
     }
     var i = 0
     while (i < es.length) {
-      val s = es(i).getLong(0); val d = es(i).getLong(1)
+      val (s, d) = es(i)
       if (!parent.containsKey(s)) parent.put(s, s)
       if (!parent.containsKey(d)) parent.put(d, d)
       val rs = find(s); val rd = find(d)
@@ -497,8 +505,6 @@ object Dedup {
     }
     // component label = min member id: with min-root unions the root
     // IS the component minimum
-    val spark = pairs.sparkSession
-    import spark.implicits._
     val labels = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
     val it = parent.keySet().iterator()
     while (it.hasNext) { val doc = it.next(); labels += ((doc, find(doc))) }

@@ -246,7 +246,7 @@ object HeavyHitters {
 
   /** The CURRENT snapshot's candidate counts. */
   private def readCandidates(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(
+    graft.store.Storage.readParquet(spark,
       graft.store.Snapshot.currentPath(spark, path, "candidates")
         .getOrElse(sys.error(s"no heavy-hitters index committed at $path")))
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{BandIndex, Dedup, Multimodal, SimilaritySearch, TextAnalysis}
 import graft.sources.Tables
+import graft.store.Storage
 
 /** Training-data pipeline operators as driver-gated queries over the
   * `documents` and `embeddings` testdata tables.
@@ -972,7 +973,7 @@ object TrainingDataQueries {
       path
     })
     Dedup.contaminationPairsFromIndex(
-      docs.filter(pmod(col("doc_id"), lit(20)) =!= 0), s.read.parquet(path),
+      docs.filter(pmod(col("doc_id"), lit(20)) =!= 0), Storage.readParquet(s, path),
       "doc_id", "text")
       .orderBy("train_id", "eval_id")
   }

@@ -3,12 +3,17 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.store.Storage
+
 /** Canonical readers for the driver-generated testdata tables
   * (`/root/testdata/sf*`; see TESTDATA.md).
   *
   * Design notes for scale:
   *   - Everything is a plain parquet scan → Catalyst gets full predicate
   *     pushdown + column pruning; callers must NOT cache or collect here.
+  *   - Every read goes through [[Storage.readParquet]], which takes the
+  *     schema from a driver-side footer read: building a table's frame
+  *     starts no Spark job.
   *   - `events.ts` has shipped in two layouts across testdata
   *     regenerations (INT64 TIMESTAMP(NANOS) and native timestamp[us]);
   *     [[events]] branches on the footer schema so both load as
@@ -26,7 +31,7 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, dir)
-      case other    => spark.read.parquet(path(dir, other))
+      case other    => Storage.readParquet(spark, path(dir, other))
     }
 
   /** events with `ts` as a proper TimestampType (µs), adapting to however
@@ -53,7 +58,7 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     if (spark.conf.getOption(key).forall(_ != "true")) spark.conf.set(key, "true")
-    val raw = spark.read.parquet(path(dir, "events"))
+    val raw = Storage.readParquet(spark, path(dir, "events"))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -89,10 +94,10 @@ object Tables {
 
   /** Register every table as a temp view (idempotent) so SQL-text entry
     * points (SURVEY §2 A22) can run against the same relations the DuckDB
-    * oracle sees. Views are lazy — no materialization happens here — but
-    * creating them reads parquet footers, so registration is memoized
-    * per (session, dir): repeated query invocations in one session pay
-    * nothing. */
+    * oracle sees. Views are lazy and their schemas come from memoized
+    * driver-side footer reads, so registering starts no Spark job; it is
+    * still memoized per (session, dir), so repeated query invocations in
+    * one session do not even re-list the files. */
   private val registered =
     new java.util.WeakHashMap[SparkSession, String]()
 

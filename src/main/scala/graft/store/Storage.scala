@@ -1,8 +1,16 @@
 package graft.store
 
+import scala.util.Try
+
 import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.{FileMetaData, ParquetMetadata}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Layered object-store layout + IO, the Spark counterpart of the
@@ -103,8 +111,72 @@ object Storage {
     } finally in.close()
   }
 
+  /** Parquet scan with the schema read from a footer on the driver: the
+    * same schema `spark.read.parquet` infers, without the Spark job its
+    * inference runs. For a directory the footer is the one Spark's own
+    * inference reads: a `_common_metadata` or `_metadata` summary, else
+    * the first data file in path order. Only when no such file is
+    * readable, or its schema does not convert, does the scan infer (and
+    * report the missing path or the illegal type) as Spark does.
+    *
+    * The footer (parquet schema plus key/value metadata) is memoized per
+    * (path, length, modification time), so a rewritten file is read
+    * again. Its conversion to a Spark schema runs on every call under
+    * the calling session's conf: `nanosAsLong`, `inferTimestampNTZ`,
+    * `binaryAsString` and the other conversion confs of one session are
+    * never served to another. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Try(schemaFooter(spark, path).map(ParquetFileFormat.readSchemaFromFooter(
+      _, new ParquetToSparkSchemaConverter(spark.sessionState.conf)))).toOption.flatten match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** Footer metadata per file path, valid while the file keeps the
+    * (length, modification time) it was read at. */
+  private val footers =
+    new java.util.concurrent.ConcurrentHashMap[Path, (Long, Long, FileMetaData)]()
+
+  /** The footer [[readParquet]] takes its schema from; None when `path`
+    * holds no parquet file. */
+  private def schemaFooter(spark: SparkSession, path: String): Option[Footer] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val f = fs(spark, path)
+    val root = f.getFileStatus(new Path(path))
+    val file =
+      if (!root.isDirectory) Some(root)
+      else {
+        val leaves = leafFiles(f, root).sortBy(_.getPath.toString)
+        val summaries = Seq("_common_metadata", "_metadata")
+        summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+          .orElse(leaves.find(s => !summaries.contains(s.getPath.getName)))
+      }
+    file.map { st =>
+      val key = st.getPath
+      val cached = Option(footers.get(key))
+        .filter { case (len, mtime, _) => len == st.getLen && mtime == st.getModificationTime }
+      val meta = cached.map(_._3).getOrElse {
+        val options = HadoopReadOptions.builder(conf)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), options)
+        val m = try reader.getFooter.getFileMetaData finally reader.close()
+        footers.put(key, (st.getLen, st.getModificationTime, m))
+        m
+      }
+      new Footer(key, new ParquetMetadata(meta, java.util.Collections.emptyList()))
+    }
+  }
+
+  /** Files under `dir` that Spark's file index lists: names starting
+    * with `_` or `.` are skipped (directories too, except `k=v`
+    * partitions), apart from the parquet summary files. */
+  private def leafFiles(f: FileSystem, dir: FileStatus): Seq[FileStatus] =
+    f.listStatus(dir.getPath).toSeq.filter { s =>
+      val n = s.getPath.getName
+      val hidden = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+      !hidden || n.startsWith("_common_metadata") || n.startsWith("_metadata")
+    }.flatMap(s => if (s.isDirectory) leafFiles(f, s) else Seq(s))
 
   /** Typed parquet scan over a trusted table (schema-on-read like the
     * Trino external tables — trino_client.py:86-96). */

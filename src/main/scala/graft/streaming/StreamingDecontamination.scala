@@ -49,7 +49,7 @@ object StreamingDecontamination {
     // micro-batch broadcasts the (guarded, pruned) posting rows —
     // broadcastEval = false is the giant-eval-union off-switch, passed
     // straight through to the batch operator
-    val evalIndex = spark.read.parquet(evalIndexPath)
+    val evalIndex = graft.store.Storage.readParquet(spark, evalIndexPath)
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val pairs = Dedup.contaminationPairsFromIndex(

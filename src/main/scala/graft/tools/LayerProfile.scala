@@ -7,6 +7,7 @@ import scala.collection.mutable
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Diagnostic main: split each warmed rep of a gate into its layers —
   * `runMain graft.tools.LayerProfile gate1,gate2 [sfDir]` (`sfDir`
@@ -21,8 +22,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * phases (jobs, with the per-phase split; stages; tasks; summed task ms;
   * shuffle-write and spill bytes), the exec driver gap (exec wall minus
   * the union of its job spans: analysis, scheduling and result handling
-  * on the driver) and the Janino compiles per phase (codegen-cache
-  * misses). The session is the one Bench runs (`Sessions.local`). */
+  * on the driver), the Janino compiles per phase (codegen-cache misses)
+  * and the call site of each construct job (the first `graft.` frame
+  * that started it, with its job count). The session is the one Bench
+  * runs (`Sessions.local`). */
 object LayerProfile {
 
   private val Key = "graft.layerProfile"
@@ -36,6 +39,11 @@ object LayerProfile {
     var taskMs = 0L
     var shuffleWriteBytes = 0L
     var spillBytes = 0L
+    /** Call site of each job, in start order: the first `graft.` frame
+      * of its stage details or, for a job submitted from a thread without
+      * one (an adaptive query stage, a broadcast), of the details of the
+      * SQL execution it belongs to; else the stage's short call site. */
+    val sites = mutable.ArrayBuffer.empty[String]
     /** (start, end) epoch ms of each finished job. */
     val jobSpans = mutable.ArrayBuffer.empty[(Long, Long)]
 
@@ -60,10 +68,26 @@ object LayerProfile {
     val work = new Work
     private val stages = mutable.Set.empty[Int]
     private val jobStart = mutable.Map.empty[Int, Long]
+    /** First `graft.` frame of each SQL execution's call site, by id. */
+    private val executionSites = mutable.Map.empty[String, String]
+
+    private def graftFrame(details: String): Option[String] =
+      Option(details).flatMap(_.linesIterator.map(_.trim).find(_.startsWith("graft.")))
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized {
+        graftFrame(s.details).foreach(executionSites(s.executionId.toString) = _)
+      }
+      case _ =>
+    }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       if (e.properties != null && e.properties.getProperty(Key) == tag) {
         work.jobs += 1
+        val execution = Seq("spark.sql.execution.id", "spark.sql.execution.root.id")
+          .flatMap(k => Option(e.properties.getProperty(k))).flatMap(executionSites.get)
+        work.sites += e.stageInfos.headOption.fold("?")(s =>
+          graftFrame(s.details).orElse(execution.headOption).getOrElse(s.name))
         jobStart(e.jobId) = e.time
         stages ++= e.stageIds
       }
@@ -136,6 +160,11 @@ object LayerProfile {
     Seq("construct" -> construct, "plan" -> plan, "exec" -> exec)
   }
 
+  /** Distinct call sites of a phase's jobs, first seen first, each with
+    * its job count. */
+  private def sites(w: Work): String =
+    w.sites.distinct.map(s => s"$s x${w.sites.count(_ == s)}").mkString("[", ", ", "]")
+
   def main(args: Array[String]): Unit = {
     val usage = "usage: LayerProfile gate1,gate2 [sfDir] (sfDir defaults to SPARK_GRAFT_SF_DIR)"
     require(args.nonEmpty, usage)
@@ -157,7 +186,8 @@ object LayerProfile {
           s" stages=${sum(_.stages)} tasks=${sum(_.tasks)} task_ms=${sum(_.taskMs)}" +
           f" driver_gap=${exec.driverGapMs}%.0fms" +
           s" shuffle_write=${sum(_.shuffleWriteBytes)}B spill=${sum(_.spillBytes)}B" +
-          s" compiles=${phases.map(_._2.compiles).mkString("/")}")
+          s" compiles=${phases.map(_._2.compiles).mkString("/")}" +
+          s" construct_sites=${sites(phases.head._2.work)}")
       }
     }
     spark.stop()

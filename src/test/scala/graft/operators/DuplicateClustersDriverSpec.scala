@@ -1,9 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpecBase
+import graft.{JobCounter, SparkSpecBase}
 import graft.sources.Tables
 
 /** Differential gate for the round-18 driver-side union-find path of
@@ -12,12 +13,23 @@ import graft.sources.Tables
   * produce EXACTLY the distributed propagation loop's converged labels
   * (every doc that appears in a pair, labeled with its component's
   * minimum id). The reference calls the loop, [[Dedup.propagateLabels]],
-  * directly. */
+  * directly. The path a call took shows in its result: the driver path
+  * returns a local relation, the loop a staged one. */
 class DuplicateClustersDriverSpec extends SparkSpecBase {
 
   private def canon(df: DataFrame): Set[(Long, Long)] =
     df.select(col("doc_id").cast("long"), col("cluster_id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def onDriver(clusters: DataFrame): Boolean =
+    clusters.queryExecution.analyzed.collectFirst { case r: LocalRelation => r }.isDefined
+
+  /** Disjoint 2-node components (2i, 2i + 1), i < n: the union-find
+    * answer labels both members 2i. */
+  private def disjointPairs(n: Long, partitions: Int): (DataFrame, Set[(Long, Long)]) =
+    (spark.range(0, n, 1, partitions)
+      .select((col("id") * 2).as("doc_a"), (col("id") * 2 + 1).as("doc_b")),
+      (0L until n).flatMap(i => Seq((2 * i, 2 * i), (2 * i + 1, 2 * i))).toSet)
 
   private def both(pairs: DataFrame): (Set[(Long, Long)], Set[(Long, Long)]) = {
     val driver = canon(Dedup.duplicateClusters(pairs))
@@ -65,5 +77,41 @@ class DuplicateClustersDriverSpec extends SparkSpecBase {
     assert(d === l)
     assert(d.forall(_._2 == 0L))
     assert(d.map(_._1) === (0L until 20L).toSet)
+  }
+
+  test("the driver path over a materialized pair frame runs one job") {
+    val (pairs, expected) = disjointPairs(50, 4)
+    val staged = pairs.localCheckpoint()
+    val (clusters, jobs) = JobCounter.count(spark)(Dedup.duplicateClusters(staged))
+    assert(jobs === 1)
+    assert(onDriver(clusters))
+    assert(canon(clusters) === expected)
+  }
+
+  test("a pair graph just over CcDriverMaxEdges takes the loop and equals union-find") {
+    // one partition reaches the per-partition fetch bound; four stay
+    // under it and go over only in total
+    for (partitions <- Seq(1, 4)) {
+      val (pairs, expected) = disjointPairs(Dedup.CcDriverMaxEdges / 2 + 1, partitions)
+      val clusters = Dedup.duplicateClusters(pairs)
+      assert(!onDriver(clusters), s"$partitions partitions")
+      assert(canon(clusters) === expected, s"$partitions partitions")
+    }
+    val (atBound, _) = disjointPairs(Dedup.CcDriverMaxEdges / 2, 4)
+    assert(onDriver(Dedup.duplicateClusters(atBound)))
+  }
+
+  test("decimal ids take the loop") {
+    val rnd = new scala.util.Random(6L)
+    import spark.implicits._
+    val pairs = (0 until 20).flatMap { c =>
+      val base = c * 100L
+      (1 until 2 + rnd.nextInt(4)).map(i => (base + rnd.nextInt(i), base + i))
+    }.toDF("doc_a", "doc_b")
+    val decimal = pairs.select(
+      col("doc_a").cast("decimal(20,0)").as("doc_a"), col("doc_b").cast("decimal(20,0)").as("doc_b"))
+    val clusters = Dedup.duplicateClusters(decimal)
+    assert(!onDriver(clusters))
+    assert(canon(clusters) === canon(Dedup.duplicateClusters(pairs)))
   }
 }

@@ -37,6 +37,7 @@ class LayerProfileSpec extends SparkSpecBase {
     assert(jobs === all.get)
     val exec = phases.last._2
     assert(exec.work.jobSpans.size === exec.work.jobs)
+    assert(works.forall(w => w.sites.size === w.jobs))
     val (_, counted) = JobCounter.count(spark)(run())
     assert(counted === jobs)
   }
