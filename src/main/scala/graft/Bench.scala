@@ -19,57 +19,7 @@ package graft
   */
 object Bench {
   import org.apache.spark.sql.{DataFrame, SparkSession}
-
-  /** The timed set: the relational operator suite + the scalable
-    * curation ops. The quadratic-oracle and pair-enumeration dedup
-    * variants (dd_ngram, dd_simhash) are correctness queries, not
-    * throughput headlines — excluded deliberately. */
-  val headline: Seq[String] = Seq(
-    "q01_pricing_summary", "q02_filter_project", "q03_multi_distinct",
-    "q04_conditional_agg", "q05_join_agg", "q06_left_join",
-    "q07_ordinal_having", "q08_string_agg", "q09_window_top1",
-    "q10_distinct", "q11_topk", "q12_scalar_subquery",
-    "q13_cte_retention", "q14_union", "q15_rollup", "q16_string_funcs",
-    "q17_date_funcs", "q18_semi_anti", "q19_json_extract",
-    "q20_window_running", "q21_asof_join", "q22_range_join", "q23_percentiles",
-    "q24_cube", "q25_pivot", "q26_set_ops",
-    "q27_grouping_sets", "q28_window_suite",
-    "q29_correlated_subquery", "q30_set_ops_all",
-    "dd_spans", "dd_span_decontaminate", "ss_ann_pq", "ss_ann_ivf_pq_pruned",
-    "ss_ann_lsh_pruned", "dd_spans_idx_bucketed", "ta_bpe_train", "mm_features_img",
-    "ta_bpe_encode", "ta_perplexity", "ta_perplexity_incremental",
-    "ta_quality_clf", "dd_minhash_idx_bucketed",
-    "ta_dup_fraction", "dd_minhash_incremental", "tx_canonicalize",
-    "tp_trim_spans",
-    "dd_exact", "dd_minhash", "dd_minhash_xx", "dd_spans_xx", "dd_phash",
-    "dd_minhash_capped", "dd_phash_capped",
-    "dd_phash_idx_bucketed", "dd_phash_debiased",
-    "dd_phash_multiprobe", "dd_phash_multiprobe_idx", "dd_simhash_multiprobe",
-    "mh_sig_md5", "mh_sig_xx", "ta_token_stats",
-    "ta_langid", "ta_repetition", "tp_pack",
-    "ss_topk_cosine", "ss_ann_lsh", "ss_ann_ivf_scaled", "ss_ann_ivf_pq_search",
-    "ss_ann_serve_batch", "ss_ann_serve_batch_lsh",
-    "cl_kmeans", "ta_tfidf", "ss_bm25", "ss_hybrid_rrf",
-    "tp_shuffle", "tp_mixture", "op_merge_scd2",
-    "ta_vocab", "op_zorder", "op_zorder3", "ds_cap_per_group", "ds_semantic_cap",
-    "ft_normalize", "tp_chunk", "ds_weighted", "ds_token_budget",
-    "ds_token_budget_incremental", "sk_heavy_hitters", "op_sessionize",
-    "sk_heavy_hitters_incremental",
-    // previously-unbenched gates cheap enough for the per-round driver
-    // run (≤ ~3s each at sf0.1, measured round 13 — the heavy
-    // composites live in `heavyHeadline` below). Excluded deliberately:
-    // the quadratic pair-enumeration correctness fixtures
-    // (dd_ngram_jaccard, dd_minhash_verified, dd_recall_minhash) and
-    // the ss_recall_* recall fixtures — correctness queries, not
-    // throughput headlines.
-    "dd_spans_incremental", "dd_decontaminate", "dd_decontaminate_idx",
-    "dd_embedding", "dd_embedding_incremental", "dd_embedding_idx_bucketed",
-    "sk_heavy_hitters_idx", "sk_sketches", "sk_sketches_only", "cl_kmeans_native",
-    "ta_quality", "ta_quality_clf_incremental", "ta_fingerprint",
-    "ta_token_bpe", "ds_sample_stratified", "ds_split", "mm_features",
-    "op_bloom_join", "op_salted_agg", "tx_redact",
-    "ss_ann_ivf", "ss_ann_ivf_native", "ss_ann_ivf_pq", "ss_ann_lsh_multi",
-    "ss_ann_pq_codes")
+  import graft.queries.Gate
 
   /** The HEAVY previously-unbenched gates (round-12 verdict item 4):
     * the curation composites, the cluster/keep-best state family, and
@@ -135,6 +85,28 @@ object Bench {
     "tp_trim_spans", "ta_bpe_train", "ta_bpe_encode", "ta_perplexity",
     "ta_quality_clf", "ds_token_budget", "ds_token_budget_incremental")
 
+  /** Round 18 (scaling-evidence gap, round-17 verdict item 2): the
+    * stdout map ADDITIONALLY carries these declared data-bound gates,
+    * so the driver's two-core-count probe observes queries
+    * whose wall actually moves with the core count — the q* set is
+    * all sub-second and floor-bound at sf0.1, which is why every r17
+    * ratio sat at ≈1 and the probe flagged `suspect_cpus_ignored`.
+    * Measured at sf0.1 (this round, 8 vs 32 cores): the codec/decode
+    * gates run 1.6-1.8× FASTER at 8 cores (dd_phash 0.44 vs 0.69,
+    * dd_phash_debiased 0.92 vs 1.62, mm_features_img 0.37 vs 0.63) —
+    * at this scale per-task scheduling overhead dominates and more
+    * cores mean more overhead, so ratios far BELOW 1 are the honest
+    * small-scale signature of a cpus-sensitive gate. Core-ratio ≈
+    * core-count needs data-bound scale: the committed sf1 c8-vs-c32
+    * sweep (BENCH_local_r18_sf1_c*) carries that evidence. ~14 names
+    * ≈ +0.35 KB on the stdout line — still well inside the driver's
+    * ~2.3 KB capture window. */
+  val scalingVisible: Set[String] = Set(
+    "dd_phash", "dd_phash_debiased", "mm_features_img",
+    "dd_minhash", "dd_minhash_xx", "dd_spans", "dd_spans_xx",
+    "ta_dup_fraction", "tp_trim_spans", "mh_sig_md5", "mh_sig_xx",
+    "dd_simhash_multiprobe", "ta_tfidf", "ta_bpe_encode")
+
   /** DuckDB per-query baseline from the newest committed DUCK_r<N>.json
     * in the working directory (override: SPARK_GRAFT_DUCK_JSON), for
     * deriving the weak set at run time. "TIMEOUT" entries map to the
@@ -198,9 +170,11 @@ object Bench {
     * oracle exists for xxhash64 — DuckDB has no such function — so it is
     * spec-anchored instead, and benched here to track the md5-vs-fast
     * gap that dominates dedup cost at scan-bound scale). */
-  val benchOnly: Map[String, (SparkSession, String) => DataFrame] = {
+  val benchOnly: Seq[Gate] = {
     import org.apache.spark.sql.functions._
     import graft.functions.TextFunctions
+    def variant(name: String, memo: String = "")(q: Gate.Q): Gate =
+      Gate(name, q, oracle = None, memo = memo)
     // signature-stage-only probes isolate the base-hash cost (end-to-end
     // dd_minhash is band-join dominated at small SF, which would hide it)
     def sigOnly(fast: Boolean): (SparkSession, String) => DataFrame = (s, dir) => {
@@ -212,8 +186,8 @@ object Bench {
           graft.functions.NativeFunctions.minhash(col("sh"),
             graft.operators.Dedup.DefaultMinhashK, fast).as("sig"))
     }
-    Map(
-      "dd_minhash_xx" -> ((s, dir) =>
+    Seq(
+      variant("dd_minhash_xx")((s, dir) =>
         graft.operators.Dedup.minhashPairs(
           graft.sources.Tables.documents(s, dir), "doc_id", "text", fast = true)
           .orderBy("doc_a", "doc_b")),
@@ -224,7 +198,7 @@ object Bench {
       // bounded growth a committed sf1 artifact instead of SURVEY prose
       // (round-16 verdict item 2); the capped OUTPUT semantics are
       // gated by dd_phash_capped/dd_minhash_capped.
-      "mm_curate_capped" -> ((s, dir) =>
+      variant("mm_curate_capped")((s, dir) =>
         graft.operators.PerceptualHash.curateImages(
           graft.operators.Multimodal.syntheticImagesFromText(
             graft.sources.Tables.documents(s, dir)
@@ -236,18 +210,18 @@ object Bench {
       // DuckDB twin exists, spec-anchored): benched to track how much
       // of dd_spans' >2x-DuckDB residual is the md5 verifiability term
       // (the rest is decomposed in Dedup.sharedSpans' residual-cost note)
-      "dd_spans_xx" -> ((s, dir) =>
+      variant("dd_spans_xx")((s, dir) =>
         graft.operators.Dedup.sharedSpans(
           graft.sources.Tables.documents(s, dir), "doc_id", "text", fast = true)
           .orderBy("doc_a", "doc_b")),
-      "mh_sig_md5" -> sigOnly(fast = false),
-      "mh_sig_xx" -> sigOnly(fast = true),
+      variant("mh_sig_md5")(sigOnly(fast = false)),
+      variant("mh_sig_xx")(sigOnly(fast = true)),
       // the PRODUCTION cost of sk_sketches: the constant-memory sketch
       // aggregation alone (HLL++ + one KLL summary per group). The
       // gated twin couples it to an exact-percentile VERIFIER whose
       // cost is the harness, not the operator — this row records what
       // a user actually pays (round-13 verdict item 4)
-      "sk_sketches_only" -> ((s, dir) =>
+      variant("sk_sketches_only")((s, dir) =>
         graft.sources.Tables.events(s, dir)
           .groupBy("event_type")
           .agg(
@@ -262,7 +236,7 @@ object Bench {
       // builds once and searches many — this twin memoizes the built
       // index per sfDir (the warm-up pass pays the build) and times the
       // partition-pruned search alone
-      "ss_ann_ivf_pq_search" -> ((s, dir) => {
+      variant("ss_ann_ivf_pq_search", memo = "state")((s, dir) => {
         import graft.operators.ProductQuantization
         val emb = graft.sources.Tables.embeddings(s, dir)
         val corpus = emb.filter(col("vec_id") =!= 0)
@@ -285,7 +259,7 @@ object Bench {
       // Compare per-query cost against ss_ann_ivf_pq_search's
       // one-query-one-plan time: the batch pays the probe routing and
       // pruned scan once for every query that shares a cell.
-      "ss_ann_serve_batch" -> ((s, dir) => {
+      variant("ss_ann_serve_batch", memo = "state")((s, dir) => {
         import graft.operators.ProductQuantization
         val emb = graft.sources.Tables.embeddings(s, dir)
         val corpus = emb.filter(col("vec_id") >= 8)
@@ -308,7 +282,7 @@ object Bench {
       // batched pass over the memoized hyperplane bucket index
       // (lshTopKBatchFromIndex — union-of-multiprobes PartitionFilter,
       // shared pruned scan, per-query TopK reduction)
-      "ss_ann_serve_batch_lsh" -> ((s, dir) => {
+      variant("ss_ann_serve_batch_lsh", memo = "state")((s, dir) => {
         import graft.operators.SimilaritySearch
         val emb = graft.sources.Tables.embeddings(s, dir)
         val idx = lshIndexCache.getOrElseUpdate(dir, {
@@ -328,7 +302,7 @@ object Bench {
       // IVF with centroids scaled to the corpus (the production posture;
       // the gated ss_ann_ivf fixes nCentroids=16 for its cross-engine
       // oracle, which over-fills cells at larger SF)
-      "ss_ann_ivf_scaled" -> ((s, dir) => {
+      variant("ss_ann_ivf_scaled", memo = "counts")((s, dir) => {
         import graft.operators.SimilaritySearch
         val emb = graft.sources.Tables.embeddings(s, dir)
         // corpus size is bench METADATA, not part of the measured query —
@@ -341,10 +315,30 @@ object Bench {
       }))
   }
 
-  /** A gate by name: the driver's `SparkEntry.queries` first, then
-    * [[benchOnly]]. */
+  /** Every gate Bench can time: the driver's registry, then [[benchOnly]]. */
+  val gates: Seq[Gate] = Gate.uniquelyNamed(SparkEntry.gates ++ benchOnly)
+
+  private val byName: Map[String, Gate] = gates.map(g => g.name -> g).toMap
+
+  /** The local-iteration subset `SPARK_GRAFT_BENCH_ONLY=a,b,c` names
+    * (the driver never sets it — full suite). A name no gate has stops
+    * the run before the session starts. */
+  def onlySelection(env: Option[String]): Option[Set[String]] =
+    env.map(_.split(',').toSet).map { only =>
+      val unknown = only.filterNot(byName.contains)
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_BENCH_ONLY names no gate: ${unknown.toSeq.sorted.mkString(", ")}")
+      only
+    }
+
+  /** A gate's query by name. */
   def gate(name: String): Option[(SparkSession, String) => DataFrame] =
-    SparkEntry.queries.get(name).orElse(benchOnly.get(name))
+    byName.get(name).map(_.query)
+
+  /** The timed set: every gate outside [[heavyHeadline]] — the relational
+    * operator suite, the scalable training-data operators and the
+    * bench-only variants. */
+  val headline: Seq[String] = gates.map(_.name).filterNot(heavyHeadline.contains)
 
   private val corpusCount = scala.collection.mutable.Map.empty[String, Long]
   private val ivfPqIndexCache =
@@ -502,6 +496,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Sessions.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val onlySet = onlySelection(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = Sessions.local("graft-bench", cpus)
     // Silence the known-benign AQE/accumulator-GC race ("Failed to
     // update accumulator … attempted to access non-existent
@@ -552,17 +547,13 @@ object Bench {
     val failures = scala.collection.mutable.Map.empty[String, String]
     def reasonOf(e: Throwable): String =
       s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(400)}"
-    // local-iteration subset: SPARK_GRAFT_BENCH_ONLY=a,b,c times just
-    // those headline queries (the driver never sets it — full suite)
-    val onlySet = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').toSet)
     // heavy gates join under the env flag, and are always addressable
     // through an explicit SPARK_GRAFT_BENCH_ONLY selection
     val suite =
       if (sys.env.contains("SPARK_GRAFT_BENCH_HEAVY") || onlySet.isDefined)
         headline ++ heavyHeadline
       else headline
-    val names = suite.filter(n => gate(n).isDefined && onlySet.forall(_.contains(n)))
+    val names = suite.filter(n => onlySet.forall(_.contains(n)))
     names.foreach { n =>
       try exec(n, sfDir)
       catch { case e: Throwable =>
@@ -685,7 +676,7 @@ object Bench {
     // no DuckDB equivalent; ss_ann_ivf_scaled runs the production
     // posture the fixed-knob oracle can't) are FLAGGED so an artifact
     // parser never counts them as oracle-gated queries
-    val benchOnlyList = names.filter(benchOnly.contains)
+    val benchOnlyList = names.filter(byName(_).oracle.isEmpty)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     // per-SF scaling evidence: queries are also timed (median of
     // `reps`, round-robin) at a second scale factor and the file
@@ -834,29 +825,8 @@ object Bench {
     // (self-contained, committed per round). Full line → stderr.
     // Explicit relational-name set (q01..q30 shape), not startsWith("q"):
     // a future training-data gate named "quality_*" must not leak in and
-    // regrow the line past the driver's capture window.
-    //
-    // Round 18 (scaling-evidence gap, round-17 verdict item 2): the
-    // stdout map ADDITIONALLY carries the declared data-bound gates
-    // below, so the driver's two-core-count probe observes queries
-    // whose wall actually moves with the core count — the q* set is
-    // all sub-second and floor-bound at sf0.1, which is why every r17
-    // ratio sat at ≈1 and the probe flagged `suspect_cpus_ignored`.
-    // Measured at sf0.1 (this round, 8 vs 32 cores): the codec/decode
-    // gates run 1.6-1.8× FASTER at 8 cores (dd_phash 0.44 vs 0.69,
-    // dd_phash_debiased 0.92 vs 1.62, mm_features_img 0.37 vs 0.63) —
-    // at this scale per-task scheduling overhead dominates and more
-    // cores mean more overhead, so ratios far BELOW 1 are the honest
-    // small-scale signature of a cpus-sensitive gate. Core-ratio ≈
-    // core-count needs data-bound scale: the committed sf1 c8-vs-c32
-    // sweep (BENCH_local_r18_sf1_c*) carries that evidence. ~14 names
-    // ≈ +0.35 KB on the stdout line — still well inside the driver's
-    // ~2.3 KB capture window.
-    val scalingVisible: Set[String] = Set(
-      "dd_phash", "dd_phash_debiased", "mm_features_img",
-      "dd_minhash", "dd_minhash_xx", "dd_spans", "dd_spans_xx",
-      "ta_dup_fraction", "tp_trim_spans", "mh_sig_md5", "mh_sig_xx",
-      "dd_simhash_multiprobe", "ta_tfidf", "ta_bpe_encode")
+    // regrow the line past the driver's capture window. The declared
+    // data-bound gates of `scalingVisible` ride along.
     val qsBounded = results
       .filter(kv => kv._1.matches("^q\\d\\d_.*") || scalingVisible(kv._1))
       .map { case (k, v) => "\"" + k + "\":" + sec3(v) }
@@ -896,22 +866,10 @@ object Bench {
     // Corpus-count METADATA (nBitsFor/nCentroidsFor/stride posture
     // knobs) is also memoized per (session, dir) for the ss_recall_*/
     // ss_ann_ivf_scaled gates — counts, not state; listed separately.
-    val memoizedJson = Seq(
-      "dd_spans_idx_bucketed", "dd_decontaminate_idx",
-      "dd_minhash_idx_bucketed", "dd_simhash_idx_bucketed",
-      "dd_phash_idx_bucketed", "dd_embedding_idx_bucketed",
-      "ss_ann_lsh_pruned", "ss_ann_ivf_pq_pruned",
-      "sk_heavy_hitters_incremental", "sk_heavy_hitters_idx",
-      "ds_token_budget_incremental",
-      "ss_ann_ivf_pq_search", "ss_ann_serve_batch", "ss_ann_serve_batch_lsh")
-      .filter(n => names.contains(n))
+    // Each gate declares which in its registry record (`Gate.memo`).
+    def memoizedJson(memo: String) = names.filter(byName(_).memo == memo)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val memoizedCountsJson = Seq(
-      "ss_recall_lsh", "ss_recall_lsh_t8", "ss_recall_ivf",
-      "ss_recall_ivf_p8", "ss_ann_ivf_scaled")
-      .filter(n => names.contains(n))
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$reps,"bench_only":$benchOnlyList,"dispersion":$disp,"failures":$fails,"isolated":$isolatedJson,"isolated_fixed":$isolatedFixedJson,"isolated_post":$isolatedPostJson,"isolated_position":"fixed set pre-suite after warm-up; isolated_post end-of-suite","memoized":$memoizedJson,"memoized_counts":$memoizedCountsJson,"jvm":$jvmJson,"machine":$machJson,"recall":$recall$scalingJson,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$reps,"bench_only":$benchOnlyList,"dispersion":$disp,"failures":$fails,"isolated":$isolatedJson,"isolated_fixed":$isolatedFixedJson,"isolated_post":$isolatedPostJson,"isolated_position":"fixed set pre-suite after warm-up; isolated_post end-of-suite","memoized":${memoizedJson("state")},"memoized_counts":${memoizedJson("counts")},"jvm":$jvmJson,"machine":$machJson,"recall":$recall$scalingJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_out.json"),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

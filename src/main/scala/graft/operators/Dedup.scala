@@ -31,7 +31,7 @@ object Dedup {
   import BandIndex.BandPlan
 
   /** Named defaults shared between the Spark operators and the DuckDB
-    * oracle templates (TrainingDataQueries): deriving the oracle's
+    * oracle templates (the `queries` gate families): deriving the oracle's
     * constants from the same definitions keeps the two sides in lockstep —
     * changing a default here regenerates the matching oracle SQL instead
     * of silently desynchronizing the gate. */

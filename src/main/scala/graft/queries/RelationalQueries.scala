@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -34,7 +34,7 @@ object RelationalQueries {
   private def dec4(c: Column): Column = c.cast(DecimalType(18, 4))
   private def asDouble(c: Column): Column = c.cast("double")
 
-  type Q = (SparkSession, String) => DataFrame
+  import Gate.Q
 
   /** q01 — scan + filter + multi-key hash aggregate (B1,B2,B3,B5,B19):
     * TPC-H Q1-shaped pricing summary. Ref: analysis.ipynb cell 9 (grouped
@@ -988,67 +988,35 @@ object RelationalQueries {
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q01_pricing_summary" -> q01PricingSummary,
-    "q02_filter_project" -> q02FilterProject,
-    "q03_multi_distinct" -> q03MultiDistinct,
-    "q04_conditional_agg" -> q04ConditionalAgg,
-    "q05_join_agg" -> q05JoinAgg,
-    "q06_left_join" -> q06LeftJoin,
-    "q07_ordinal_having" -> q07OrdinalHaving,
-    "q08_string_agg" -> q08StringAgg,
-    "q09_window_top1" -> q09WindowTop1,
-    "q10_distinct" -> q10Distinct,
-    "q11_topk" -> q11TopK,
-    "q12_scalar_subquery" -> q12ScalarSubquery,
-    "q13_cte_retention" -> q13CteRetention,
-    "q14_union" -> q14Union,
-    "q15_rollup" -> q15Rollup,
-    "q16_string_funcs" -> q16StringFuncs,
-    "q17_date_funcs" -> q17DateFuncs,
-    "q18_semi_anti" -> q18SemiAnti,
-    "q19_json_extract" -> q19JsonExtract,
-    "q20_window_running" -> q20WindowRunning,
-    "q21_asof_join" -> q21AsOfJoin,
-    "q22_range_join" -> q22RangeJoin,
-    "q23_percentiles" -> q23Percentiles,
-    "q24_cube" -> q24Cube,
-    "q25_pivot" -> q25Pivot,
-    "q26_set_ops" -> q26SetOps,
-    "q27_grouping_sets" -> q27GroupingSets,
-    "q28_window_suite" -> q28WindowSuite,
-    "q29_correlated_subquery" -> q29CorrelatedSubquery,
-    "q30_set_ops_all" -> q30SetOpsAll)
-
-  val oracles: Map[String, String] = Map(
-    "q21_asof_join" -> q21Oracle,
-    "q22_range_join" -> q22Oracle,
-    "q23_percentiles" -> q23Oracle,
-    "q24_cube" -> q24Oracle,
-    "q25_pivot" -> q25Oracle,
-    "q26_set_ops" -> q26Oracle,
-    "q27_grouping_sets" -> q27Oracle,
-    "q28_window_suite" -> q28Oracle,
-    "q29_correlated_subquery" -> q29Oracle,
-    "q30_set_ops_all" -> q30Oracle,
-    "q15_rollup" -> q15Oracle,
-    "q18_semi_anti" -> q18Oracle,
-    "q19_json_extract" -> q19Oracle,
-    "q20_window_running" -> q20Oracle,
-    "q01_pricing_summary" -> q01Oracle,
-    "q02_filter_project" -> q02Oracle,
-    "q03_multi_distinct" -> q03Oracle,
-    "q04_conditional_agg" -> q04Oracle,
-    "q05_join_agg" -> q05Oracle,
-    "q06_left_join" -> q06Oracle,
-    "q07_ordinal_having" -> q07Oracle,
-    "q08_string_agg" -> q08Oracle,
-    "q09_window_top1" -> q09Oracle,
-    "q10_distinct" -> q10Oracle,
-    "q11_topk" -> q11Oracle,
-    "q12_scalar_subquery" -> q12Oracle,
-    "q13_cte_retention" -> q13Oracle,
-    "q14_union" -> q14Oracle,
-    "q16_string_funcs" -> q16Oracle,
-    "q17_date_funcs" -> q17Oracle)
+  val gates: Seq[Gate] = Seq(
+    Gate("q01_pricing_summary", q01PricingSummary, Some(q01Oracle)),
+    Gate("q02_filter_project", q02FilterProject, Some(q02Oracle)),
+    Gate("q03_multi_distinct", q03MultiDistinct, Some(q03Oracle)),
+    Gate("q04_conditional_agg", q04ConditionalAgg, Some(q04Oracle)),
+    Gate("q05_join_agg", q05JoinAgg, Some(q05Oracle)),
+    Gate("q06_left_join", q06LeftJoin, Some(q06Oracle)),
+    Gate("q07_ordinal_having", q07OrdinalHaving, Some(q07Oracle)),
+    Gate("q08_string_agg", q08StringAgg, Some(q08Oracle)),
+    Gate("q09_window_top1", q09WindowTop1, Some(q09Oracle)),
+    Gate("q10_distinct", q10Distinct, Some(q10Oracle)),
+    Gate("q11_topk", q11TopK, Some(q11Oracle)),
+    Gate("q12_scalar_subquery", q12ScalarSubquery, Some(q12Oracle)),
+    Gate("q13_cte_retention", q13CteRetention, Some(q13Oracle)),
+    Gate("q14_union", q14Union, Some(q14Oracle)),
+    Gate("q15_rollup", q15Rollup, Some(q15Oracle)),
+    Gate("q16_string_funcs", q16StringFuncs, Some(q16Oracle)),
+    Gate("q17_date_funcs", q17DateFuncs, Some(q17Oracle)),
+    Gate("q18_semi_anti", q18SemiAnti, Some(q18Oracle)),
+    Gate("q19_json_extract", q19JsonExtract, Some(q19Oracle)),
+    Gate("q20_window_running", q20WindowRunning, Some(q20Oracle)),
+    Gate("q21_asof_join", q21AsOfJoin, Some(q21Oracle)),
+    Gate("q22_range_join", q22RangeJoin, Some(q22Oracle)),
+    Gate("q23_percentiles", q23Percentiles, Some(q23Oracle)),
+    Gate("q24_cube", q24Cube, Some(q24Oracle)),
+    Gate("q25_pivot", q25Pivot, Some(q25Oracle)),
+    Gate("q26_set_ops", q26SetOps, Some(q26Oracle)),
+    Gate("q27_grouping_sets", q27GroupingSets, Some(q27Oracle)),
+    Gate("q28_window_suite", q28WindowSuite, Some(q28Oracle)),
+    Gate("q29_correlated_subquery", q29CorrelatedSubquery, Some(q29Oracle)),
+    Gate("q30_set_ops_all", q30SetOpsAll, Some(q30Oracle)))
 }

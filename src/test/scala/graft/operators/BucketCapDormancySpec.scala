@@ -47,7 +47,7 @@ class BucketCapDormancySpec extends SparkSpecBase {
   test("ngram doc-freq guard is DORMANT on the incremental cluster/keep-best fixtures") {
     // dd_clusters_incremental / dd_keep_best_incremental derive their
     // corpus-side pair fixture by FILTERING one full-corpus
-    // ngramJaccardPairs enumeration (TrainingDataQueries) — which
+    // ngramJaccardPairs enumeration (DedupQueries) — which
     // equals an independent subset-corpus enumeration only while the
     // relative doc-frequency guard drops nothing on EITHER corpus (the
     // posting lists and the df limit both shift with composition).

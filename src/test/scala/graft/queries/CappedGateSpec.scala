@@ -18,7 +18,7 @@ import graft.sources.Tables
   * capped branch). These tests pin the engagement precondition itself.
   *
   * The caps asserted here mirror the gates' pinned knobs in
-  * TrainingDataQueries (MinhashCappedCap = 2, PhashCappedCap = 8). */
+  * DedupQueries (MinhashCappedCap = 2) and ImageQueries (PhashCappedCap = 8). */
 class CappedGateSpec extends SparkSpecBase {
 
   private val gateDir = "/root/testdata/sf0.01"

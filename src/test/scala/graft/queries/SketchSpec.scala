@@ -5,7 +5,7 @@ import graft.SparkSpecBase
 class SketchSpec extends SparkSpecBase {
 
   test("gated sk_sketches: HLL++ stays within its rsd bound of exact distinct") {
-    val rows = TrainingDataQueries.skSketches(spark, sfDir).collect()
+    val rows = SketchQueries.skSketches(spark, sfDir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_events") > 0)
@@ -23,7 +23,7 @@ class SketchSpec extends SparkSpecBase {
     // (round 15): it is a verifier, not an operator a user pays for —
     // asserted at two SFs so the bound property stays round-gated
     for (dir <- Seq(sfDir, "/root/testdata/sf0.01")) {
-      val rows = TrainingDataQueries.skSketchesVerified(spark, dir).collect()
+      val rows = SketchQueries.skSketchesVerified(spark, dir).collect()
       assert(rows.nonEmpty, dir)
       rows.foreach { r =>
         assert(r.getAs[Boolean]("approx_users_ok"), s"$dir ${r.toString}")
