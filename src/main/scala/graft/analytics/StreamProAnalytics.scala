@@ -13,10 +13,15 @@ import org.apache.spark.sql.functions._
   * timestamps; the pandas composite-score pass (cell 22) becomes
   * DataFrame arithmetic.
   *
-  * Scale: every query is a Catalyst plan over partition-pruned parquet;
-  * the per-user CTEs shuffle once on user_id and reuse that partitioning
-  * across the chained joins (AQE coalesces the small side at low SF,
-  * SMJ takes over at cluster scale).
+  * Scale: every query is a Catalyst plan over partition-pruned parquet.
+  * The Q1–Q3 statements share one windowed pass, `ev`: `trusted_events`
+  * shuffled once on user_id, each row carrying its user's first session
+  * id and date as window columns. Every per-user CTE of those cells is a
+  * filter or a conditional aggregate over `ev` grouped by user_id, so it
+  * keeps `ev`'s partitioning, and the cells' joins of `trusted_events`
+  * back to its own per-user `GROUP BY` are gone. The literal cell SQL is
+  * the test-side `NotebookReference`, which the differential spec
+  * compares every rewritten statement against.
   */
 object StreamProAnalytics {
 
@@ -91,27 +96,42 @@ object StreamProAnalytics {
        |ORDER BY CAST(day_index AS INTEGER), CAST(sub_session AS INTEGER)""".stripMargin,
     Map("userId" -> userId))
 
-  /** Q1 — % of users reaching ≥30s watch time in their first session —
-    * cell 10 (chained CTEs, composite-key join, left join, conditional
-    * distinct counts, NULLIF/ROUND). */
-  def q1Analysis(spark: SparkSession): DataFrame = spark.sql(
-    """WITH user_first_sessions AS (
-      |  SELECT user_id, MIN(session_id) as first_session_id
+  /** Per-user facts as window columns — the one shuffle on user_id that
+    * the Q1–Q3 statements share. Each `trusted_events` row with a user
+    * carries its user's first session id and the date of the user's
+    * earliest timestamp, so the cells' joins back to their per-user
+    * `GROUP BY` become predicates on the row's own columns. Rows without
+    * a user are dropped: the cells' equi-joins on `user_id` never matched
+    * them. The explicit filter also gives every consumer the same scan,
+    * so a second read of `ev` in one plan is a reused exchange. */
+  private val ev: String =
+    """ev AS (
+      |  SELECT *,
+      |    MIN(session_id) OVER (PARTITION BY user_id) as first_session_id,
+      |    SUBSTRING(MIN(timestamp) OVER (PARTITION BY user_id), 1, 10) as first_session_date
       |  FROM trusted_events
-      |  GROUP BY user_id
-      |),
-      |first_session_watch_times AS (
-      |  SELECT ufs.user_id, ufs.first_session_id,
-      |    SUM(CAST(e.value AS DOUBLE)) as total_watch_time
-      |  FROM user_first_sessions ufs
-      |  INNER JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id
-      |    AND ufs.first_session_id = e.session_id
-      |  WHERE e.event_name = 'watch_time'
-      |    AND e.value IS NOT NULL
-      |    AND e.value > 0
-      |  GROUP BY ufs.user_id, ufs.first_session_id
-      |)
+      |  WHERE user_id IS NOT NULL
+      |)""".stripMargin
+
+  /** Positive watch time of each user's first session — cells 10–11.
+    * A user with none has no row. */
+  private val firstSessionWatchTimes: String =
+    """first_session_watch_times AS (
+      |  SELECT user_id, first_session_id,
+      |    SUM(CAST(value AS DOUBLE)) as total_watch_time
+      |  FROM ev
+      |  WHERE session_id = first_session_id
+      |    AND event_name = 'watch_time'
+      |    AND value IS NOT NULL
+      |    AND value > 0
+      |  GROUP BY user_id, first_session_id
+      |)""".stripMargin
+
+  /** Q1 — % of users reaching ≥30s watch time in their first session —
+    * cell 10 (left join, conditional distinct counts, NULLIF/ROUND). */
+  def q1Analysis(spark: SparkSession): DataFrame = spark.sql(
+    s"""WITH $ev,
+      |$firstSessionWatchTimes
       |SELECT
       |  COUNT(DISTINCT u.user_id) as total_users,
       |  COUNT(DISTINCT fswt.user_id) as users_with_watch_time,
@@ -123,19 +143,8 @@ object StreamProAnalytics {
 
   /** Users reaching 30s+ — cell 11. */
   def q1SuccessfulUsers(spark: SparkSession): DataFrame = spark.sql(
-    """WITH user_first_sessions AS (
-      |  SELECT user_id, MIN(session_id) as first_session_id
-      |  FROM trusted_events GROUP BY user_id
-      |),
-      |first_session_watch_times AS (
-      |  SELECT ufs.user_id, ufs.first_session_id,
-      |    SUM(CAST(e.value AS DOUBLE)) as total_watch_time
-      |  FROM user_first_sessions ufs
-      |  INNER JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id AND ufs.first_session_id = e.session_id
-      |  WHERE e.event_name = 'watch_time' AND e.value IS NOT NULL AND e.value > 0
-      |  GROUP BY ufs.user_id, ufs.first_session_id
-      |)
+    s"""WITH $ev,
+      |$firstSessionWatchTimes
       |SELECT user_id, first_session_id, total_watch_time
       |FROM first_session_watch_times
       |WHERE total_watch_time >= 30
@@ -151,41 +160,45 @@ object StreamProAnalytics {
       |GROUP BY genre
       |ORDER BY users_exposed DESC""".stripMargin)
 
-  /** Q2 retention quality by first-session genre exposure — cell 14
-    * (non-equi join: equi user key + session-id range + 3-day string
-    * date window). */
-  def q2Enhanced(spark: SparkSession): DataFrame = spark.sql(
-    """WITH user_first_sessions AS (
-      |  SELECT e.user_id,
-      |    MIN(e.session_id) as first_session_id,
-      |    SUBSTRING(MIN(e.timestamp), 1, 10) as first_session_date
-      |  FROM trusted_events e
-      |  GROUP BY e.user_id
-      |),
-      |first_session_genres AS (
-      |  SELECT ufs.user_id, v.genre,
-      |    SUM(CASE WHEN e.event_name = 'watch_time' THEN CAST(e.value AS DOUBLE) ELSE 0 END) as first_session_genre_watch_time
-      |  FROM user_first_sessions ufs
-      |  INNER JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id AND ufs.first_session_id = e.session_id
+  /** Watch time per (user, genre) over the user's first session — cells
+    * 14–15, under the cell's CTE name and watch-time column name.
+    * Events whose video is unknown drop out in the join. */
+  private def firstSessionGenres(name: String, watch: String): String =
+    s"""$name AS (
+      |  SELECT e.user_id, v.genre,
+      |    SUM(CASE WHEN e.event_name = 'watch_time' THEN CAST(e.value AS DOUBLE) ELSE 0 END) as $watch
+      |  FROM ev e
       |  INNER JOIN trusted_videos v ON e.video_id = v.video_id
-      |  GROUP BY ufs.user_id, v.genre
-      |),
-      |second_session_activity AS (
-      |  SELECT ufs.user_id,
-      |    SUM(CASE WHEN e.event_name = 'watch_time' THEN CAST(e.value AS DOUBLE) ELSE 0 END) as subsequent_watch_time,
-      |    COUNT(DISTINCT e.session_id) as subsequent_sessions
-      |  FROM user_first_sessions ufs
-      |  INNER JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id
-      |    AND e.session_id > ufs.first_session_id
-      |    AND SUBSTRING(e.timestamp, 1, 10) <= CAST(date_add(CAST(ufs.first_session_date AS DATE), 3) AS STRING)
-      |  GROUP BY ufs.user_id
-      |)
+      |  WHERE e.session_id = e.first_session_id
+      |  GROUP BY e.user_id, v.genre
+      |)""".stripMargin
+
+  /** Activity after the first session, up to 3 days past its date —
+    * cells 14–15 (the cells' session-range and string date-window join,
+    * now a filter), under the cell's CTE name. A user with no such
+    * event has no row. */
+  private def subsequentActivity(name: String): String =
+    s"""$name AS (
+      |  SELECT user_id,
+      |    SUM(CASE WHEN event_name = 'watch_time' THEN CAST(value AS DOUBLE) ELSE 0 END) as subsequent_watch_time,
+      |    COUNT(DISTINCT session_id) as subsequent_sessions
+      |  FROM ev
+      |  WHERE session_id > first_session_id
+      |    AND SUBSTRING(timestamp, 1, 10) <= CAST(date_add(CAST(first_session_date AS DATE), 3) AS STRING)
+      |  GROUP BY user_id
+      |)""".stripMargin
+
+  /** Q2 retention quality by first-session genre exposure — cell 14.
+    * Both sides hold one row per user per genre group, so the counts
+    * need no DISTINCT. */
+  def q2Enhanced(spark: SparkSession): DataFrame = spark.sql(
+    s"""WITH $ev,
+      |${firstSessionGenres("first_session_genres", "first_session_genre_watch_time")},
+      |${subsequentActivity("second_session_activity")}
       |SELECT fsg.genre,
-      |  COUNT(DISTINCT fsg.user_id) as users_exposed,
-      |  COUNT(DISTINCT ssa.user_id) as users_returned,
-      |  ROUND(100.0 * COUNT(DISTINCT ssa.user_id) / COUNT(DISTINCT fsg.user_id), 1) as return_rate_pct,
+      |  COUNT(fsg.user_id) as users_exposed,
+      |  COUNT(ssa.user_id) as users_returned,
+      |  ROUND(100.0 * COUNT(ssa.user_id) / COUNT(fsg.user_id), 1) as return_rate_pct,
       |  ROUND(AVG(fsg.first_session_genre_watch_time), 1) as avg_first_session_watch_time,
       |  ROUND(AVG(ssa.subsequent_watch_time), 1) as avg_subsequent_watch_time,
       |  ROUND(AVG(ssa.subsequent_sessions), 1) as avg_subsequent_sessions
@@ -195,24 +208,11 @@ object StreamProAnalytics {
       |ORDER BY avg_subsequent_watch_time DESC NULLS LAST""".stripMargin)
 
   /** Q2 dominant-genre analysis — cell 15 (ROW_NUMBER argmax +
-    * engagement quality score). */
+    * engagement quality score). Ties in the argmax stay as unordered as
+    * the cell's. */
   def q2DominantGenre(spark: SparkSession): DataFrame = spark.sql(
-    """WITH user_first_sessions AS (
-      |  SELECT e.user_id,
-      |    MIN(e.session_id) as first_session_id,
-      |    SUBSTRING(MIN(e.timestamp), 1, 10) as first_session_date
-      |  FROM trusted_events e
-      |  GROUP BY e.user_id
-      |),
-      |first_session_genre_watch AS (
-      |  SELECT ufs.user_id, v.genre,
-      |    SUM(CASE WHEN e.event_name = 'watch_time' THEN CAST(e.value AS DOUBLE) ELSE 0 END) as genre_watch_time
-      |  FROM user_first_sessions ufs
-      |  INNER JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id AND ufs.first_session_id = e.session_id
-      |  INNER JOIN trusted_videos v ON e.video_id = v.video_id
-      |  GROUP BY ufs.user_id, v.genre
-      |),
+    s"""WITH $ev,
+      |${firstSessionGenres("first_session_genre_watch", "genre_watch_time")},
       |user_dominant_genres AS (
       |  SELECT user_id, genre as dominant_genre, genre_watch_time
       |  FROM (
@@ -222,21 +222,11 @@ object StreamProAnalytics {
       |  )
       |  WHERE rn = 1
       |),
-      |subsequent_activity AS (
-      |  SELECT ufs.user_id,
-      |    SUM(CASE WHEN e.event_name = 'watch_time' THEN CAST(e.value AS DOUBLE) ELSE 0 END) as subsequent_watch_time,
-      |    COUNT(DISTINCT e.session_id) as subsequent_sessions
-      |  FROM user_first_sessions ufs
-      |  INNER JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id
-      |    AND e.session_id > ufs.first_session_id
-      |    AND SUBSTRING(e.timestamp, 1, 10) <= CAST(date_add(CAST(ufs.first_session_date AS DATE), 3) AS STRING)
-      |  GROUP BY ufs.user_id
-      |)
+      |${subsequentActivity("subsequent_activity")}
       |SELECT udg.dominant_genre,
-      |  COUNT(DISTINCT udg.user_id) as users_with_dominant_genre,
-      |  COUNT(DISTINCT sa.user_id) as users_returned,
-      |  ROUND(100.0 * COUNT(DISTINCT sa.user_id) / COUNT(DISTINCT udg.user_id), 1) as return_rate_pct,
+      |  COUNT(udg.user_id) as users_with_dominant_genre,
+      |  COUNT(sa.user_id) as users_returned,
+      |  ROUND(100.0 * COUNT(sa.user_id) / COUNT(udg.user_id), 1) as return_rate_pct,
       |  ROUND(AVG(udg.genre_watch_time), 1) as avg_dominant_genre_first_watch_time,
       |  ROUND(AVG(sa.subsequent_watch_time), 1) as avg_subsequent_watch_time,
       |  ROUND(AVG(sa.subsequent_sessions), 1) as avg_subsequent_sessions,
@@ -256,11 +246,12 @@ object StreamProAnalytics {
       |GROUP BY device_os, app_version
       |ORDER BY unique_users DESC""".stripMargin)
 
-  /** OS / app-version user distribution (scalar subquery) — cell 19. */
+  /** OS / app-version user distribution (scalar subquery) — cell 19.
+    * The share is NULL, not a division error, when no event has a user. */
   def deviceOsDistribution(spark: SparkSession): DataFrame = spark.sql(
     """SELECT device_os,
       |  COUNT(DISTINCT user_id) as unique_users,
-      |  ROUND(100.0 * COUNT(DISTINCT user_id) / (SELECT COUNT(DISTINCT user_id) FROM trusted_events), 1) as user_pct
+      |  ROUND(100.0 * COUNT(DISTINCT user_id) / NULLIF((SELECT COUNT(DISTINCT user_id) FROM trusted_events), 0), 1) as user_pct
       |FROM trusted_events
       |GROUP BY device_os
       |ORDER BY unique_users DESC""".stripMargin)
@@ -268,127 +259,98 @@ object StreamProAnalytics {
   def appVersionDistribution(spark: SparkSession): DataFrame = spark.sql(
     """SELECT app_version,
       |  COUNT(DISTINCT user_id) as unique_users,
-      |  ROUND(100.0 * COUNT(DISTINCT user_id) / (SELECT COUNT(DISTINCT user_id) FROM trusted_events), 1) as user_pct
+      |  ROUND(100.0 * COUNT(DISTINCT user_id) / NULLIF((SELECT COUNT(DISTINCT user_id) FROM trusted_events), 0), 1) as user_pct
       |FROM trusted_events
       |GROUP BY app_version
       |ORDER BY unique_users DESC""".stripMargin)
 
-  /** Q3 drop-off metrics per device_os × app_version — cell 20 (5 CTEs,
-    * chained LEFT JOINs, conditional distinct counts, day-1 retention as
-    * a string-date equality on a +1-day window, HAVING ≥5 users). */
-  def q3DropOffMetrics(spark: SparkSession): DataFrame = spark.sql(
-    """WITH user_first_sessions AS (
+  /** Distinct (user, device_os, app_version) of each user's first
+    * session — cells 20 and 23. */
+  private val userDeviceInfo: String =
+    """user_device_info AS (
+      |  SELECT DISTINCT user_id, device_os, app_version
+      |  FROM ev
+      |  WHERE session_id = first_session_id
+      |)""".stripMargin
+
+  /** One row per user: cells 20–21's `first_session_watch_times`,
+    * `user_session_counts` and `day1_retention` as one conditional
+    * aggregate over `ev`. The first-session sum has no outer ELSE, so a
+    * user with no first session id keeps a NULL watch time (the cells'
+    * left join found no row); `returned_day1` is 1 iff some later
+    * session falls on the day after the first session's date. */
+  private val userFacts: String =
+    """user_facts AS (
       |  SELECT user_id,
-      |    MIN(session_id) as first_session_id,
-      |    SUBSTRING(MIN(timestamp), 1, 10) as first_session_date
-      |  FROM trusted_events
+      |    SUM(CASE WHEN session_id = first_session_id THEN
+      |      CASE WHEN event_name = 'watch_time' THEN CAST(value AS DOUBLE) ELSE 0 END END) as first_session_watch_time,
+      |    CAST(size(collect_set(session_id)) AS BIGINT) as total_sessions,
+      |    MAX(CASE WHEN session_id > first_session_id
+      |      AND SUBSTRING(timestamp, 1, 10) = CAST(date_add(CAST(first_session_date AS DATE), 1) AS STRING)
+      |      THEN 1 ELSE 0 END) as returned_day1
+      |  FROM ev
       |  GROUP BY user_id
-      |),
-      |user_device_info AS (
-      |  SELECT DISTINCT ufs.user_id, e.device_os, e.app_version
-      |  FROM user_first_sessions ufs
-      |  INNER JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id AND ufs.first_session_id = e.session_id
-      |),
-      |first_session_watch_times AS (
-      |  SELECT ufs.user_id,
-      |    SUM(CASE WHEN e.event_name = 'watch_time' THEN CAST(e.value AS DOUBLE) ELSE 0 END) as first_session_watch_time
-      |  FROM user_first_sessions ufs
-      |  INNER JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id AND ufs.first_session_id = e.session_id
-      |  GROUP BY ufs.user_id
-      |),
-      |user_session_counts AS (
-      |  SELECT user_id, COUNT(DISTINCT session_id) as total_sessions
-      |  FROM trusted_events
-      |  GROUP BY user_id
-      |),
-      |day1_retention AS (
-      |  SELECT ufs.user_id,
-      |    CASE WHEN COUNT(DISTINCT e.session_id) > 0 THEN 1 ELSE 0 END as returned_day1
-      |  FROM user_first_sessions ufs
-      |  LEFT JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id
-      |    AND e.session_id > ufs.first_session_id
-      |    AND SUBSTRING(e.timestamp, 1, 10) = CAST(date_add(CAST(ufs.first_session_date AS DATE), 1) AS STRING)
-      |  GROUP BY ufs.user_id
-      |)
+      |)""".stripMargin
+
+  /** Q3 drop-off metrics per device_os × app_version — cell 20
+    * (conditional counts, HAVING ≥5 users). `user_device_info` and
+    * `user_facts` hold one row per user per group, so the counts need no
+    * DISTINCT. */
+  def q3DropOffMetrics(spark: SparkSession): DataFrame = spark.sql(
+    s"""WITH $ev,
+      |$userDeviceInfo,
+      |$userFacts
       |SELECT udi.device_os, udi.app_version,
-      |  COUNT(DISTINCT udi.user_id) as total_users,
-      |  COUNT(DISTINCT CASE WHEN usc.total_sessions = 1 THEN udi.user_id END) as users_single_session,
-      |  ROUND(100.0 * COUNT(DISTINCT CASE WHEN usc.total_sessions = 1 THEN udi.user_id END) / COUNT(DISTINCT udi.user_id), 1) as single_session_rate_pct,
-      |  COUNT(DISTINCT CASE WHEN fswt.first_session_watch_time < 5 THEN udi.user_id END) as users_low_watch_time,
-      |  ROUND(100.0 * COUNT(DISTINCT CASE WHEN fswt.first_session_watch_time < 5 THEN udi.user_id END) / COUNT(DISTINCT udi.user_id), 1) as low_watch_time_rate_pct,
-      |  COUNT(DISTINCT CASE WHEN dr.returned_day1 = 0 THEN udi.user_id END) as users_no_day1_return,
-      |  ROUND(100.0 * COUNT(DISTINCT CASE WHEN dr.returned_day1 = 0 THEN udi.user_id END) / COUNT(DISTINCT udi.user_id), 1) as no_day1_return_rate_pct,
-      |  ROUND(AVG(fswt.first_session_watch_time), 1) as avg_first_session_watch_time,
-      |  ROUND(AVG(usc.total_sessions), 1) as avg_total_sessions
+      |  COUNT(udi.user_id) as total_users,
+      |  COUNT(CASE WHEN uf.total_sessions = 1 THEN udi.user_id END) as users_single_session,
+      |  ROUND(100.0 * COUNT(CASE WHEN uf.total_sessions = 1 THEN udi.user_id END) / COUNT(udi.user_id), 1) as single_session_rate_pct,
+      |  COUNT(CASE WHEN uf.first_session_watch_time < 5 THEN udi.user_id END) as users_low_watch_time,
+      |  ROUND(100.0 * COUNT(CASE WHEN uf.first_session_watch_time < 5 THEN udi.user_id END) / COUNT(udi.user_id), 1) as low_watch_time_rate_pct,
+      |  COUNT(CASE WHEN uf.returned_day1 = 0 THEN udi.user_id END) as users_no_day1_return,
+      |  ROUND(100.0 * COUNT(CASE WHEN uf.returned_day1 = 0 THEN udi.user_id END) / COUNT(udi.user_id), 1) as no_day1_return_rate_pct,
+      |  ROUND(AVG(uf.first_session_watch_time), 1) as avg_first_session_watch_time,
+      |  ROUND(AVG(uf.total_sessions), 1) as avg_total_sessions
       |FROM user_device_info udi
-      |LEFT JOIN first_session_watch_times fswt ON udi.user_id = fswt.user_id
-      |LEFT JOIN user_session_counts usc ON udi.user_id = usc.user_id
-      |LEFT JOIN day1_retention dr ON udi.user_id = dr.user_id
+      |LEFT JOIN user_facts uf ON udi.user_id = uf.user_id
       |GROUP BY udi.device_os, udi.app_version
-      |HAVING COUNT(DISTINCT udi.user_id) >= 5
+      |HAVING COUNT(udi.user_id) >= 5
       |ORDER BY single_session_rate_pct DESC""".stripMargin)
 
-  /** Q3 overall benchmarks — cell 21. */
+  /** Q3 overall benchmarks — cell 21, over the same `user_facts` as the
+    * drop-off metrics. The rates are NULL, not a division error, when no
+    * event has a user. */
   def q3OverallBenchmarks(spark: SparkSession): DataFrame = spark.sql(
-    """WITH user_first_sessions AS (
-      |  SELECT user_id,
-      |    MIN(session_id) as first_session_id,
-      |    SUBSTRING(MIN(timestamp), 1, 10) as first_session_date
-      |  FROM trusted_events
-      |  GROUP BY user_id
-      |),
-      |first_session_watch_times AS (
-      |  SELECT ufs.user_id,
-      |    SUM(CASE WHEN e.event_name = 'watch_time' THEN CAST(e.value AS DOUBLE) ELSE 0 END) as first_session_watch_time
-      |  FROM user_first_sessions ufs
-      |  INNER JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id AND ufs.first_session_id = e.session_id
-      |  GROUP BY ufs.user_id
-      |),
-      |user_session_counts AS (
-      |  SELECT user_id, COUNT(DISTINCT session_id) as total_sessions
-      |  FROM trusted_events GROUP BY user_id
-      |),
-      |day1_retention AS (
-      |  SELECT ufs.user_id,
-      |    CASE WHEN COUNT(DISTINCT e.session_id) > 0 THEN 1 ELSE 0 END as returned_day1
-      |  FROM user_first_sessions ufs
-      |  LEFT JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id
-      |    AND e.session_id > ufs.first_session_id
-      |    AND SUBSTRING(e.timestamp, 1, 10) = CAST(date_add(CAST(ufs.first_session_date AS DATE), 1) AS STRING)
-      |  GROUP BY ufs.user_id
-      |)
+    s"""WITH $ev,
+      |$userFacts
       |SELECT 'OVERALL' as category,
-      |  COUNT(DISTINCT ufs.user_id) as total_users,
-      |  COUNT(DISTINCT CASE WHEN usc.total_sessions = 1 THEN ufs.user_id END) as users_single_session,
-      |  ROUND(100.0 * COUNT(DISTINCT CASE WHEN usc.total_sessions = 1 THEN ufs.user_id END) / COUNT(DISTINCT ufs.user_id), 1) as single_session_rate_pct,
-      |  COUNT(DISTINCT CASE WHEN fswt.first_session_watch_time < 5 THEN ufs.user_id END) as users_low_watch_time,
-      |  ROUND(100.0 * COUNT(DISTINCT CASE WHEN fswt.first_session_watch_time < 5 THEN ufs.user_id END) / COUNT(DISTINCT ufs.user_id), 1) as low_watch_time_rate_pct,
-      |  COUNT(DISTINCT CASE WHEN dr.returned_day1 = 0 THEN ufs.user_id END) as users_no_day1_return,
-      |  ROUND(100.0 * COUNT(DISTINCT CASE WHEN dr.returned_day1 = 0 THEN ufs.user_id END) / COUNT(DISTINCT ufs.user_id), 1) as no_day1_return_rate_pct,
-      |  ROUND(AVG(fswt.first_session_watch_time), 1) as avg_first_session_watch_time,
-      |  ROUND(AVG(usc.total_sessions), 1) as avg_total_sessions
-      |FROM user_first_sessions ufs
-      |LEFT JOIN first_session_watch_times fswt ON ufs.user_id = fswt.user_id
-      |LEFT JOIN user_session_counts usc ON ufs.user_id = usc.user_id
-      |LEFT JOIN day1_retention dr ON ufs.user_id = dr.user_id""".stripMargin)
+      |  COUNT(uf.user_id) as total_users,
+      |  COUNT(CASE WHEN uf.total_sessions = 1 THEN uf.user_id END) as users_single_session,
+      |  ROUND(100.0 * COUNT(CASE WHEN uf.total_sessions = 1 THEN uf.user_id END) / NULLIF(COUNT(uf.user_id), 0), 1) as single_session_rate_pct,
+      |  COUNT(CASE WHEN uf.first_session_watch_time < 5 THEN uf.user_id END) as users_low_watch_time,
+      |  ROUND(100.0 * COUNT(CASE WHEN uf.first_session_watch_time < 5 THEN uf.user_id END) / NULLIF(COUNT(uf.user_id), 0), 1) as low_watch_time_rate_pct,
+      |  COUNT(CASE WHEN uf.returned_day1 = 0 THEN uf.user_id END) as users_no_day1_return,
+      |  ROUND(100.0 * COUNT(CASE WHEN uf.returned_day1 = 0 THEN uf.user_id END) / NULLIF(COUNT(uf.user_id), 0), 1) as no_day1_return_rate_pct,
+      |  ROUND(AVG(uf.first_session_watch_time), 1) as avg_first_session_watch_time,
+      |  ROUND(AVG(uf.total_sessions), 1) as avg_total_sessions
+      |FROM user_facts uf""".stripMargin)
 
   /** Q3 composite drop-off scoring — cell 22's pandas post-pass as
     * DataFrame ops: deviations vs the overall benchmarks and
     * 0.4/0.3/0.3-weighted composite, worst first. One lazy plan: the
     * one-row benchmarks are broadcast and cross-joined in, so building
-    * the frame runs no job. */
-  def q3CompositeScores(spark: SparkSession): DataFrame = {
+    * the frame runs no job, and the benchmarks' `user_facts` shuffle is
+    * the drop-off side's, reused. */
+  def q3CompositeScores(spark: SparkSession): DataFrame =
+    compositeScores(q3DropOffMetrics(spark), q3OverallBenchmarks(spark))
+
+  /** Cell 22 over given drop-off metrics and overall benchmarks. */
+  private[analytics] def compositeScores(dropOff: DataFrame, benchmarks: DataFrame): DataFrame = {
     val rates = Seq("single_session_rate_pct", "low_watch_time_rate_pct", "no_day1_return_rate_pct")
     // ROUND yields DecimalType; the deviations are doubles
-    val overall = q3OverallBenchmarks(spark)
+    val overall = benchmarks
       .select(rates.map(r => col(r).cast("double").as(s"overall_$r")): _*)
     def deviation(r: String): Column = col(r) - col(s"overall_$r")
-    q3DropOffMetrics(spark).crossJoin(broadcast(overall))
+    dropOff.crossJoin(broadcast(overall))
       .withColumn("single_session_deviation", deviation("single_session_rate_pct"))
       .withColumn("low_watch_deviation", deviation("low_watch_time_rate_pct"))
       .withColumn("no_day1_deviation", deviation("no_day1_return_rate_pct"))
@@ -404,16 +366,8 @@ object StreamProAnalytics {
     * SQL round-trip driven by the previous result). Values bind as named
     * parameters rather than interpolating into the SQL text. */
   def q3WorstComboUsers(spark: SparkSession, deviceOs: String, appVersion: String): DataFrame = spark.sql(
-    """WITH user_first_sessions AS (
-      |  SELECT user_id, MIN(session_id) as first_session_id
-      |  FROM trusted_events GROUP BY user_id
-      |),
-      |user_device_info AS (
-      |  SELECT DISTINCT ufs.user_id, e.device_os, e.app_version
-      |  FROM user_first_sessions ufs
-      |  INNER JOIN trusted_events e
-      |    ON ufs.user_id = e.user_id AND ufs.first_session_id = e.session_id
-      |)
+    s"""WITH $ev,
+      |$userDeviceInfo
       |SELECT user_id
       |FROM user_device_info
       |WHERE device_os = :deviceOs AND app_version = :appVersion

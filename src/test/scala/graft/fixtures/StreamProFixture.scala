@@ -1,6 +1,6 @@
 package graft.fixtures
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
 /** Deterministic regeneration of the reference's StreamPro dataset shape
@@ -124,6 +124,57 @@ object StreamProFixture {
       }
     }
     write(landing.resolve(s"events_$IngestionDate.jsonl"), events.toSeq)
+  }
+
+  /** One event line; `null` fields are JSON nulls. */
+  private def event(ts: String, user: String, session: String, name: String,
+      value: String, video: String, os: String = "iOS", appVer: String = "2.0.1"): String = {
+    def q(v: String) = if (v == null) "null" else s""""$v""""
+    s"""{"timestamp": ${q(ts)}, "account_id": "acct_h", "video_id": "$video", "user_id": ${q(user)}, "event_name": "$name", "value": $value, "device": "mobile", "app_version": "$appVer", "device_os": "$os", "network_type": "wifi", "ip": "10.0.0.1", "country": "US", "session_id": ${q(session)}}"""
+  }
+
+  /** Hostile users 101–105 (all in trusted_users; the iOS + 2.0.1
+    * combo unless noted), each an edge of the per-user session facts:
+    *
+    *   - events with a null user_id (and a users row with a null id);
+    *   - user_1 gains a watch event with a null session_id and an earlier
+    *     timestamp, which moves the user's first-session date back a day;
+    *   - user_101's only session id is null (no first session);
+    *   - user_102's first session has a null timestamp, a null and a
+    *     negative watch value; a later session has a null timestamp;
+    *   - user_103's timestamps are all null (no first-session date);
+    *   - user_104's first session watches only an unknown video, 35s;
+    *   - user_105's first session spans two genres and two app versions.
+    */
+  private val HostileEvents: Seq[String] = Seq(
+    event("2025-04-01T06:30:00", null, "ghost_sess_0_0", "watch_time", "50.0", "video_1"),
+    event("2025-04-02T06:30:00", null, "ghost_sess_1_0", "watch_time", "2.0", "video_2"),
+    event("2025-03-31T23:00:00", "user_1", null, "watch_time", "100.0", "video_2", "Android", "1.0.6"),
+    event("2025-04-01T06:00:00", "user_101", null, "play", "null", "video_1"),
+    event("2025-04-01T06:01:00", "user_101", null, "watch_time", "12.0", "video_1"),
+    event(null, "user_102", "user_102_sess_0_0", "play", "null", "video_1"),
+    event("2025-04-01T06:01:00", "user_102", "user_102_sess_0_0", "watch_time", "null", "video_1"),
+    event("2025-04-01T06:02:00", "user_102", "user_102_sess_0_0", "watch_time", "-3.0", "video_1"),
+    event("2025-04-01T06:03:00", "user_102", "user_102_sess_0_0", "watch_time", "4.0", "video_1"),
+    event(null, "user_102", "user_102_sess_1_0", "watch_time", "8.0", "video_5"),
+    event("2025-04-02T06:00:00", "user_102", "user_102_sess_1_1", "watch_time", "2.5", "video_5"),
+    event(null, "user_103", "user_103_sess_0_0", "watch_time", "6.0", "video_3"),
+    event(null, "user_103", "user_103_sess_1_0", "watch_time", "6.0", "video_3"),
+    event("2025-04-01T06:00:00", "user_104", "user_104_sess_0_0", "watch_time", "35.0", "video_999"),
+    event("2025-04-02T06:00:00", "user_104", "user_104_sess_1_0", "watch_time", "3.0", "video_2"),
+    event("2025-04-01T06:00:00", "user_105", "user_105_sess_0_0", "watch_time", "5.0", "video_1"),
+    event("2025-04-01T06:01:00", "user_105", "user_105_sess_0_0", "watch_time", "6.0", "video_2", "Android", "1.0.6"),
+    event("2025-04-03T06:00:00", "user_105", "user_105_sess_2_0", "watch_time", "1.0", "video_2"))
+
+  /** [[writeLanding]] plus [[HostileEvents]] and their users. */
+  def writeHostileLanding(dir: Path): Unit = {
+    writeLanding(dir)
+    val landing = dir.resolve("landing")
+    def append(file: String, lines: Seq[String]): Unit = Files.write(landing.resolve(file),
+      lines.mkString("\n", "\n", "").getBytes(StandardCharsets.UTF_8), StandardOpenOption.APPEND)
+    append(s"users_$IngestionDate.csv",
+      ",2025-03-01,Free,18-25,Male" +: (101 to 105).map(i => s"user_$i,2025-03-01,Free,18-25,Male"))
+    append(s"events_$IngestionDate.jsonl", HostileEvents)
   }
 
   private def write(p: Path, lines: Seq[String]): Unit =
