@@ -265,7 +265,7 @@ object StreamProAnalytics {
       |ORDER BY unique_users DESC""".stripMargin)
 
   /** Distinct (user, device_os, app_version) of each user's first
-    * session — cells 20 and 23. */
+    * session — cell 23. */
   private val userDeviceInfo: String =
     """user_device_info AS (
       |  SELECT DISTINCT user_id, device_os, app_version
@@ -274,46 +274,59 @@ object StreamProAnalytics {
       |)""".stripMargin
 
   /** One row per user: cells 20–21's `first_session_watch_times`,
-    * `user_session_counts` and `day1_retention` as one conditional
-    * aggregate over `ev`. The first-session sum has no outer ELSE, so a
-    * user with no first session id keeps a NULL watch time (the cells'
-    * left join found no row); `returned_day1` is 1 iff some later
-    * session falls on the day after the first session's date. */
+    * `user_session_counts`, `day1_retention` and cell 20's
+    * `user_device_info` as one conditional aggregate over `ev`. The
+    * first-session sum has no outer ELSE, so a user with no first
+    * session id keeps a NULL watch time (the cells' left join found no
+    * row); `returned_day1` is 1 iff some later session falls on the day
+    * after the first session's date. `sessions` is the user's set of
+    * distinct (session, device_os, app_version): its session ids give
+    * `total_sessions`, and the first session's entries give
+    * `first_devices`, the distinct (device_os, app_version) pairs of the
+    * first session. Both Q3 statements thus read the same `ev` columns,
+    * and the benchmarks side of `q3CompositeScores` reuses the drop-off
+    * side's one exchange. */
   private val userFacts: String =
     """user_facts AS (
-      |  SELECT user_id,
-      |    SUM(CASE WHEN session_id = first_session_id THEN
-      |      CASE WHEN event_name = 'watch_time' THEN CAST(value AS DOUBLE) ELSE 0 END END) as first_session_watch_time,
-      |    CAST(size(collect_set(session_id)) AS BIGINT) as total_sessions,
-      |    MAX(CASE WHEN session_id > first_session_id
-      |      AND SUBSTRING(timestamp, 1, 10) = CAST(date_add(CAST(first_session_date AS DATE), 1) AS STRING)
-      |      THEN 1 ELSE 0 END) as returned_day1
-      |  FROM ev
-      |  GROUP BY user_id
+      |  SELECT user_id, first_session_watch_time, returned_day1,
+      |    CAST(size(array_distinct(transform(sessions, s -> s.session_id))) AS BIGINT) as total_sessions,
+      |    transform(filter(sessions, s -> s.session_id = first_session_id),
+      |      s -> named_struct('device_os', s.device_os, 'app_version', s.app_version)) as first_devices
+      |  FROM (
+      |    SELECT user_id, first_session_id,
+      |      SUM(CASE WHEN session_id = first_session_id THEN
+      |        CASE WHEN event_name = 'watch_time' THEN CAST(value AS DOUBLE) ELSE 0 END END) as first_session_watch_time,
+      |      collect_set(CASE WHEN session_id IS NOT NULL THEN
+      |        named_struct('session_id', session_id, 'device_os', device_os, 'app_version', app_version) END) as sessions,
+      |      MAX(CASE WHEN session_id > first_session_id
+      |        AND SUBSTRING(timestamp, 1, 10) = CAST(date_add(CAST(first_session_date AS DATE), 1) AS STRING)
+      |        THEN 1 ELSE 0 END) as returned_day1
+      |    FROM ev
+      |    GROUP BY user_id, first_session_id
+      |  )
       |)""".stripMargin
 
   /** Q3 drop-off metrics per device_os × app_version — cell 20
-    * (conditional counts, HAVING ≥5 users). `user_device_info` and
-    * `user_facts` hold one row per user per group, so the counts need no
-    * DISTINCT. */
+    * (conditional counts, HAVING ≥5 users). Each user counts once per
+    * distinct (device_os, app_version) of their first session, so the
+    * counts need no DISTINCT. */
   def q3DropOffMetrics(spark: SparkSession): DataFrame = spark.sql(
     s"""WITH $ev,
-      |$userDeviceInfo,
       |$userFacts
-      |SELECT udi.device_os, udi.app_version,
-      |  COUNT(udi.user_id) as total_users,
-      |  COUNT(CASE WHEN uf.total_sessions = 1 THEN udi.user_id END) as users_single_session,
-      |  ROUND(100.0 * COUNT(CASE WHEN uf.total_sessions = 1 THEN udi.user_id END) / COUNT(udi.user_id), 1) as single_session_rate_pct,
-      |  COUNT(CASE WHEN uf.first_session_watch_time < 5 THEN udi.user_id END) as users_low_watch_time,
-      |  ROUND(100.0 * COUNT(CASE WHEN uf.first_session_watch_time < 5 THEN udi.user_id END) / COUNT(udi.user_id), 1) as low_watch_time_rate_pct,
-      |  COUNT(CASE WHEN uf.returned_day1 = 0 THEN udi.user_id END) as users_no_day1_return,
-      |  ROUND(100.0 * COUNT(CASE WHEN uf.returned_day1 = 0 THEN udi.user_id END) / COUNT(udi.user_id), 1) as no_day1_return_rate_pct,
+      |SELECT d.device_os, d.app_version,
+      |  COUNT(uf.user_id) as total_users,
+      |  COUNT(CASE WHEN uf.total_sessions = 1 THEN uf.user_id END) as users_single_session,
+      |  ROUND(100.0 * COUNT(CASE WHEN uf.total_sessions = 1 THEN uf.user_id END) / COUNT(uf.user_id), 1) as single_session_rate_pct,
+      |  COUNT(CASE WHEN uf.first_session_watch_time < 5 THEN uf.user_id END) as users_low_watch_time,
+      |  ROUND(100.0 * COUNT(CASE WHEN uf.first_session_watch_time < 5 THEN uf.user_id END) / COUNT(uf.user_id), 1) as low_watch_time_rate_pct,
+      |  COUNT(CASE WHEN uf.returned_day1 = 0 THEN uf.user_id END) as users_no_day1_return,
+      |  ROUND(100.0 * COUNT(CASE WHEN uf.returned_day1 = 0 THEN uf.user_id END) / COUNT(uf.user_id), 1) as no_day1_return_rate_pct,
       |  ROUND(AVG(uf.first_session_watch_time), 1) as avg_first_session_watch_time,
       |  ROUND(AVG(uf.total_sessions), 1) as avg_total_sessions
-      |FROM user_device_info udi
-      |LEFT JOIN user_facts uf ON udi.user_id = uf.user_id
-      |GROUP BY udi.device_os, udi.app_version
-      |HAVING COUNT(udi.user_id) >= 5
+      |FROM user_facts uf
+      |LATERAL VIEW explode(uf.first_devices) t AS d
+      |GROUP BY d.device_os, d.app_version
+      |HAVING COUNT(uf.user_id) >= 5
       |ORDER BY single_session_rate_pct DESC""".stripMargin)
 
   /** Q3 overall benchmarks — cell 21, over the same `user_facts` as the

@@ -96,17 +96,6 @@ object TextFunctions {
     ColumnBridge.column(graft.plans.SpanKeys(ColumnBridge.expression(tok), k, fast))
   }
 
-  /** MinHash signature: `k` independent min-hashes over `shingleArr`.
-    * Component i is min over shingles of universal-hash_i(baseHash(shingle)).
-    *
-    * Shaped as ONE `aggregate` over the shingle array (element-wise min
-    * of per-shingle hash vectors) rather than `transform(0..k-1, i =>
-    * array_min(...))`: higher-order functions are interpreted (no
-    * codegen/CSE), so in the transform-outside shape Catalyst's
-    * CollapseProject inlines the shingle-building expression into the
-    * outer lambda and it is re-evaluated k times per row — measured 64×
-    * slowdown at sf0.1. With the array as the aggregate *input* it is
-    * evaluated exactly once per row. Still zero shuffles. */
   /** k universal-hash coefficient pairs (fixed seed → identical on every
     * executor and embeddable as oracle-SQL literals); h_i = (a_i*h + b_i)
     * mod P with h,a,b < P, so products stay < 2^62 (no ANSI overflow)
@@ -118,19 +107,6 @@ object TextFunctions {
     val a = Array.fill(k)(draw(1L))
     val b = Array.fill(k)(draw(0L))
     (a, b)
-  }
-
-  def minhashSignature(shingleArr: Column, k: Int, fast: Boolean = false): Column = {
-    val (coefA, coefB) = minhashCoefficients(k)
-    val aLit = array(coefA.map(lit): _*)
-    val bLit = array(coefB.map(lit): _*)
-    aggregate(
-      transform(shingleArr, s => baseHash(s, fast)),
-      array_repeat(lit(Long.MaxValue), k),
-      (acc, h) => zip_with(
-        acc,
-        zip_with(aLit, bLit, (a, b) => pmod(a * h + b, lit(P))),
-        (x, y) => least(x, y)))
   }
 
   /** Estimated Jaccard from two equal-length MinHash signatures: the

@@ -305,7 +305,7 @@ object BandIndex {
     // for pHash that is the corpus DECODE pass, measured as ~7 s of
     // dd_phash_multiprobe's ~10 s task time at sf0.1 (Spark reuses
     // exchanges, not projection subtrees). 24 B/row, one cheap pin.
-    val staged = banded.transform(Materialize.stage(_))
+    val staged = banded.localCheckpoint(eager = false)
     bandMatches(multiprobe(staged, plan), build(staged, maxBucket), Seq("band", "bkey"))
       .groupBy(least(col("delta_id"), col("corpus_id")).as("doc_a"),
         greatest(col("delta_id"), col("corpus_id")).as("doc_b"))

@@ -106,7 +106,7 @@ object Curation {
     // re-opened after this scan no matter which stages are on.
     val base = qualityLangFilter(
       docs.select(col(idCol), col(textCol)), idCol, textCol, cfg)
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     // exact dedup: one row per content fingerprint (canonical = min id)
     val canon = base
       .select(col(idCol).as("__id"), md5(lower(trim(col(textCol)))).as("__fp"))
@@ -119,27 +119,38 @@ object Curation {
     val dropped = Dedup.duplicateClusters(pairs)
       .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as(idCol))
-    val unique0 = exact.join(dropped, Seq(idCol), "left_anti")
-    // with the span stage on, `unique` fans out into three consumers
-    // (split assignment, the trim's posting self-join, and the trim's
-    // text rebuild); Spark reuses exchanges, not projection subtrees,
-    // so the whole quality→dedup pipeline above would re-run per
-    // consumer — materialize the survivor set once. LAZY checkpoint
-    // (the bm25 convention): constructing the curated frame stays
-    // plan-only; the pipeline runs at the FIRST action and the
-    // materialized survivors are shared by all three consumers
+    finish(exact.join(dropped, Seq(idCol), "left_anti"), idCol, textCol, cfg)
+  }
+
+  /** The curation tail after document-level dedup — stages 4c (LM
+    * perplexity), 4d (trained classifier), 5 (split) and 4b (span
+    * trim) over the deduped survivors, with the output projection.
+    * Shared by [[curate]] and the streaming twin's finalization
+    * (StreamingCuration.curatedFromSinks), so the two postures pin the
+    * same frames and emit the same columns. */
+  private[graft] def finish(survivors: DataFrame, idCol: String,
+      textCol: String, cfg: Config): DataFrame = {
+    // with any later stage on, the survivors fan out into several
+    // consumers (split assignment, the trim's posting self-join and
+    // text rebuild, the LM and classifier training and join-back);
+    // Spark reuses exchanges, not projection subtrees, so the whole
+    // pipeline above would re-run per consumer — materialize the
+    // survivor set once. LAZY checkpoint (the bm25 convention):
+    // constructing the curated frame stays plan-only; the pipeline runs
+    // at the FIRST action and the pinned survivors are shared by all
+    // consumers
     val multiConsumer = cfg.trimSpans || cfg.perplexityFilter || cfg.classifierFilter
-    val unique = if (multiConsumer) unique0.transform(Materialize.stage(_)) else unique0
+    val unique = if (multiConsumer) survivors.localCheckpoint(eager = false) else survivors
     // stage 4c — LM-perplexity cut over the deduped survivors;
     // materialize the post-cut set when a later stage re-consumes it
     val kept1raw = withPerplexityFilter(unique, idCol, textCol, cfg)
     val kept1 = if (cfg.perplexityFilter && (cfg.classifierFilter || cfg.trimSpans))
-      kept1raw.transform(Materialize.stage(_)) else kept1raw
+      kept1raw.localCheckpoint(eager = false) else kept1raw
     // stage 4d — trained-classifier cut (the model trains on the
     // surviving corpus itself, so it runs over the post-LM set)
     val kept0 = withClassifierFilter(kept1, idCol, textCol, cfg)
     val kept = if (cfg.classifierFilter && cfg.trimSpans)
-      kept0.transform(Materialize.stage(_)) else kept0
+      kept0.localCheckpoint(eager = false) else kept0
     val outCols =
       Seq(col(idCol), col("predicted_lang"), col("quality_score"), col("split")) ++
         (if (cfg.perplexityFilter) Seq(col("perplexity")) else Nil) ++
@@ -171,7 +182,7 @@ object Curation {
         QualityClassifier.DefaultNumFeatures,
         QualityClassifier.DefaultLowQ, QualityClassifier.DefaultHighQ,
         seedScoreCol = Some("quality_score"), labeledOnly = false)
-        .transform(Materialize.stage(_))
+        .localCheckpoint(eager = false)
       val w = QualityClassifier.trainWeightsFromRows(
         rows.filter(col("y").isNotNull),
         QualityClassifier.DefaultNumFeatures,
@@ -213,7 +224,7 @@ object Curation {
       val perp = TextAnalysis.bigramPerplexity(
         survivors.select(col(idCol), col(textCol)), idCol, textCol, cfg.lmAlpha)
         .select(col(idCol), col("perplexity"))
-        .transform(Materialize.stage(_))
+        .localCheckpoint(eager = false)
       val byVal = perp.groupBy("perplexity").agg(count(lit(1)).as("__c"))
       val win = org.apache.spark.sql.expressions.Window
         .orderBy("perplexity")

@@ -173,7 +173,7 @@ object Dedup {
         // positionalPosting recipe): the guard consumes it twice (the
         // doc-freq aggregate and the keep join), and without the pin
         // the full tokenize→shingle scan runs once per consumer
-        val shc = sh.transform(Materialize.stage(_))
+        val shc = sh.localCheckpoint(eager = false)
         val keep = shc.groupBy("s").agg(count(lit(1)).as("df"))
           .crossJoin(broadcast(limitDf))
           .filter(col("df") <= col("df_limit")).select("s")
@@ -185,7 +185,7 @@ object Dedup {
     // the pin the whole posting pipeline executes twice per call
     // (dd_ngram_jaccard's first-ever wall clock, round 14: 7.96 s, was
     // dominated by exactly this)
-    val postingC = posting.transform(Materialize.stage(_))
+    val postingC = posting.localCheckpoint(eager = false)
     val a = postingC.as("a")
     val b = postingC.as("b")
     a.join(b, col("a.s") === col("b.s") && col("a.doc") < col("b.doc"))
@@ -291,7 +291,7 @@ object Dedup {
         // the checkpoint the eval tokenize→shingle→md5 scan runs once
         // per consumer (the round-13 verdict's measured cost shape for
         // this operator).
-        val e0c = e0.transform(Materialize.stage(_))
+        val e0c = e0.localCheckpoint(eager = false)
         val keep = e0c.groupBy("h").agg(count(lit(1)).as("df"))
           .crossJoin(broadcast(limitDf))
           .filter(col("df") <= col("df_limit")).select("h")
@@ -345,10 +345,11 @@ object Dedup {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
     // codegen'd Catalyst expression (graft.plans.MinHashSignature) —
-    // bit-identical to the HOF TextFunctions.minhashSignature, but the
-    // k×n loop compiles instead of interpreting. `fast` swaps the
-    // md5-derived base hash for xxhash64 (the production mode when no
-    // cross-engine oracle is needed; see TextFunctions.baseHash).
+    // bit-identical to the test-side HOF reference
+    // ReferenceModels.minhashSignature, but the k×n loop compiles
+    // instead of interpreting. `fast` swaps the md5-derived base hash
+    // for xxhash64 (the production mode when no cross-engine oracle is
+    // needed; see TextFunctions.baseHash).
     val sigCol = NativeFunctions.minhash(shinglesFromTokens(col("toks"), n), k, fast)
     val sig = df
       .select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
@@ -479,7 +480,7 @@ object Dedup {
     def loop(): DataFrame = propagateLabels(pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .transform(Materialize.stage(_, eager = true)), maxIters)
+      .localCheckpoint(eager = true), maxIters)
     val ab = pairs.select(col("doc_a"), col("doc_b"))
     if (!ab.schema.forall(_.dataType == LongType)) return loop()
     val maxPairs = CcDriverMaxEdges / 2
@@ -529,12 +530,10 @@ object Dedup {
     // exponentially across rounds (each round references the previous
     // labels twice) until even rendering it for AQE OOMs the driver —
     // the standard iterative-algorithm failure GraphX solves the same
-    // way. A production run with executor churn would point
-    // spark.checkpoint.dir at reliable storage and use checkpoint().
-    var (labels, releaseLabels) = Materialize.staged(
-      edges.select(col("src").as("doc")).distinct()
-        .withColumn("label", col("doc")),
-      eager = true)
+    // way.
+    var labels = edges.select(col("src").as("doc")).distinct()
+      .withColumn("label", col("doc"))
+      .localCheckpoint(eager = true)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
@@ -542,20 +541,12 @@ object Dedup {
         .join(labels.withColumnRenamed("doc", "dst2"), col("dst") === col("dst2"))
         .groupBy(col("src").as("doc"))
         .agg(min("label").as("nlabel"))
-      val (next, releaseNext) = Materialize.staged(
-        labels.withColumnRenamed("label", "old")
-          .join(neighborMin, "doc")
-          .select(col("doc"), least(col("old"), col("nlabel")).as("label"), col("old")),
-        eager = true)
+      val next = labels.withColumnRenamed("label", "old")
+        .join(neighborMin, "doc")
+        .select(col("doc"), least(col("old"), col("nlabel")).as("label"), col("old"))
+        .localCheckpoint(eager = true)
       converged = next.filter(col("label") =!= col("old")).isEmpty
-      // the superseded round's pin is released only AFTER its successor
-      // is eagerly materialized — under the `disk` posture a persist()
-      // pin otherwise lives in the CacheManager for the app lifetime,
-      // one replicated block set per round (round-16 ADVICE); the FINAL
-      // round's pin stays, the caller reads it
-      releaseLabels()
       labels = next.select("doc", "label")
-      releaseLabels = releaseNext
       iter += 1
     }
     labels.select(col("doc").as("doc_id"), col("label").as("cluster_id"))
@@ -622,28 +613,28 @@ object Dedup {
     // (tiny × tiny) anti join on the probe result
     val nodes = newPairs.select(col("doc_a").as("doc"))
       .union(newPairs.select(col("doc_b").as("doc"))).distinct()
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val matched = lab.join(broadcast(nodes), Seq("doc"))
-      .transform(Materialize.stage(_)) // ≤ |nodes| rows
+      .localCheckpoint(eager = false) // ≤ |nodes| rows
     val fresh = nodes
       .join(broadcast(matched.select(col("doc"))), Seq("doc"), "left_anti")
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val nodeLab = matched.select(col("doc"), col("cluster_id").as("lab"))
       .unionByName(fresh.select(col("doc"), col("doc").as("lab")))
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     // label-level edges: tiny, so the iterative propagation is cheap
     val labelEdges = newPairs
       .join(broadcast(nodeLab.select(col("doc").as("doc_a"), col("lab").as("la"))), Seq("doc_a"))
       .join(broadcast(nodeLab.select(col("doc").as("doc_b"), col("lab").as("lb"))), Seq("doc_b"))
       .select(col("la").as("doc_a"), col("lb").as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b")).distinct()
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val mapping =
       if (labelEdges.isEmpty)
         labelEdges.select(col("doc_a").as("old_lab"), col("doc_b").as("new_lab"))
       else duplicateClusters(labelEdges, maxIters)
         .select(col("doc_id").as("old_lab"), col("cluster_id").as("new_lab"))
-        .transform(Materialize.stage(_))
+        .localCheckpoint(eager = false)
     ClusterMergeParts(mapping, nodeLab, fresh)
   }
 
@@ -918,7 +909,7 @@ object Dedup {
       .join(broadcast(parts.mapping), col("lab") === col("old_lab"), "left")
       .select(col("doc").as("doc_id"),
         coalesce(col("new_lab"), col("lab")).as("cid"))
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val deltaRows = TextAnalysis.qualityScore(delta, idCol, textCol)
       .select(col(idCol).cast("long").as("doc_id"), col("quality_score"))
       .join(broadcast(nodeNew), Seq("doc_id"), "left")
@@ -1134,7 +1125,7 @@ object Dedup {
         // the dominant cost of every span gate at sf0.1). At corpus
         // scale the checkpoint is a disk-backed (doc, pos, h) spill of
         // ~24 B/shingle — strictly cheaper than re-hashing the corpus.
-        val shc = sh.transform(Materialize.stage(_))
+        val shc = sh.localCheckpoint(eager = false)
         val limitDf = df.select(greatest(lit(MinDocFreqFloor.toDouble),
           count(lit(1)).cast("double") * f).as("df_limit"))
         val keep = shc.groupBy("h").agg(countDistinct("doc").as("df"))
@@ -1154,7 +1145,7 @@ object Dedup {
     // runs once per self-join side without this — the whole keep-join
     // executed twice per call
     val posting = positionalPosting(df, idCol, textCol, k, maxDocFreqFraction, fast)
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val a = posting.as("a")
     val b = posting.as("b")
     a.join(b, col("a.h") === col("b.h") && col("a.doc") < col("b.doc"))

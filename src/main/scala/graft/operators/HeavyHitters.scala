@@ -337,7 +337,7 @@ object HeavyHitters {
     val dCounts = dGrams.toDF()
       .join(broadcast(allCand), Seq("gram"), "left_semi")
       .groupBy("gram").agg(count(lit(1)).as("d_cnt"))
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
 
     // New entrants need their exact corpus count (0 when absent) — the
     // only corpus access, restricted to a candidate-sized gram set.
@@ -354,7 +354,7 @@ object HeavyHitters {
       .join(dCounts, Seq("gram"))
       .filter(col("d_cnt") * lit(m.capacity.toLong) > lit(dTotal))
       .select("gram")
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val corpusCounts =
       if (freshDf.isEmpty) idx
       else {
@@ -420,7 +420,7 @@ object HeavyHitters {
     val dCounts = dGrams.toDF()
       .join(broadcast(allCand), Seq("gram"), "left_semi")
       .groupBy("gram").agg(count(lit(1)).as("d_cnt"))
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
 
     // fresh possible crossers: bounded (≤ the delta sketch size), so
     // the collect is model-state-sized — and empty means NO corpus job

@@ -289,7 +289,7 @@ object PerceptualHash {
       .select(posexplode_outer(col("coefs")).as(Seq("i", "v")))
       .filter(col("i").isNotNull)
       .groupBy("i", "v").agg(count(lit(1)).as("c"))
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val n = hist.filter(col("i") === 0).agg(sum("c")).head.getLong(0)
     require(n > 0, "phashMedians needs at least one decodable image")
     val k = (n + 1L) / 2L
@@ -379,7 +379,7 @@ object PerceptualHash {
     // unchanged; the frozen-model entry points (phashMedians +
     // phashSignaturesWithMedians) keep their one-pass-each contracts
     // for the incremental posture.
-    val coefs = acTable(media).transform(Materialize.stage(_))
+    val coefs = acTable(media).localCheckpoint(eager = false)
     val meds = phashMediansFromCoefs(coefs)
     val sig = (0 until PhashBits).map { i =>
       when(element_at(col("coefs"), i + 1) > lit(meds(i)), lit(1L << i))
@@ -391,7 +391,7 @@ object PerceptualHash {
     // Generate-filter lesson — measured as 2 extra ~1 s jobs here);
     // 16 bytes/row, one cheap pin
     val sigs = coefs.select(col("media_id"), sig.as("sig"))
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     Dedup.packedSignaturePairs(
       sigs, "media_id", "sig", plan, maxBucket, maxScore = Some(maxHamming))
       .transform(Dedup.withinHamming(plan, maxHamming))

@@ -222,7 +222,7 @@ object ProductQuantization {
       // corpus-rows × 16 bytes spread across executors (memory+disk),
       // the width the two-level reduction already assumes.
       val slim = scored.select(col("vec_id").cast("long"), col("score"))
-        .transform(Materialize.stage(_))
+        .localCheckpoint(eager = false)
       val ids = slim.as[(Long, Double)]
         .mapPartitions(heapTop(_, rerank))
         .repartition(PoolFanIn)
@@ -439,7 +439,7 @@ object ProductQuantization {
           argminCell(books(mi), subVec(col("v"), mi, sub)).getField("idx")): _*)
           .as("codes"),
         argminCell(cents, col("v")).getField("cid").as("cell"))
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     enc.select("vec_id", "codes", "cell")
       .write.mode("overwrite").partitionBy("cell").parquet(path)
     // drift baseline: mean squared reconstruction error over the

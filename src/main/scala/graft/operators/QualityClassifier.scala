@@ -200,7 +200,7 @@ object QualityClassifier {
       rows: DataFrame, nf: Int, iters: Int, lr: Double): Array[Long] = {
     require(nf >= 1 && iters >= 1)
     val labeled = rows.select(col("n"), col("y"), col("fs"))
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val counts = labeled.agg(
       count(lit(1)).as("n"), sum("y").as("pos")).head
     val nTrain = counts.getLong(0)
@@ -381,7 +381,7 @@ object QualityClassifier {
       lr: Double = DefaultLearningRate,
       lowQ: Double = DefaultLowQ, highQ: Double = DefaultHighQ): DataFrame = {
     val all = featureRows(docs, idCol, textCol, nf, lowQ, highQ,
-      seedScoreCol = None, labeledOnly = false).transform(Materialize.stage(_))
+      seedScoreCol = None, labeledOnly = false).localCheckpoint(eager = false)
     val w = trainWeightsFromRows(
       all.filter(col("y").isNotNull), nf, iters, lr)
     scoreFromRows(all, idCol, w)

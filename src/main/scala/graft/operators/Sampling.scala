@@ -312,9 +312,8 @@ object Sampling {
       // any data scale. The guard inside the aggregation still fires at
       // staging time; the materialized bytes are identical, so every
       // oracle gate hashes unchanged.
-      Materialize.stage(
-        tk.groupBy(col(groupCol)).agg(sum(guardedTaken).as("__base0")),
-        eager = true)
+      tk.groupBy(col(groupCol)).agg(sum(guardedTaken).as("__base0"))
+        .localCheckpoint(eager = true)
     }
     val bases0 = keyed
       .groupBy(col(groupCol), col("__st"))

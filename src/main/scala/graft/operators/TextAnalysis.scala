@@ -323,9 +323,7 @@ object TextAnalysis {
     * one aggregate-struct fold: |terms| passes over the token array beat
     * the fold's per-token struct rebuild by ~1.5× measured (both are
     * interpreted HOFs; the fold allocates a |terms|-field struct per
-    * token, the filters allocate nothing). A production deployment with
-    * executor churn would swap the localCheckpoint for checkpoint() on
-    * reliable storage, same as duplicateClusters. */
+    * token, the filters allocate nothing). */
   def bm25(
       df: DataFrame, idCol: String, textCol: String, terms: Seq[String],
       k1: Double = 1.2, b: Double = 0.75, roundDp: Int = 6): DataFrame = {
@@ -342,7 +340,7 @@ object TextAnalysis {
       // the returned plan (the stats broadcast runs first and computes
       // it; the scoring scan then reads it back), so merely BUILDING the
       // DataFrame stays job-free and plan-only callers pay nothing
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val statCols = count(lit(1)).as("n_docs") +:
       sum(col("dl")).as("sum_dl") +:
       terms.indices.map(i =>
@@ -405,7 +403,7 @@ object TextAnalysis {
     // stays checkpoint-free (checkpoints are illegal on streams).
     val toks = df
       .select(col(idCol), tokens(col(textCol)).as("t"))
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val (uni, bi) = bigramLmModelFromToks(toks.select(col("t")))
     scoreTokenized(toks, Seq(idCol), uni, bi, alpha, roundDp)
   }
@@ -669,7 +667,7 @@ object TextAnalysis {
         col(textCol), lit(BpePattern), lit(0))).as("word"))
       .filter(col("word").isNotNull) // outer + drop: skips InferFiltersFromGenerate (regex ×3 otherwise)
       .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("cnt"))
-      .transform(Materialize.stage(_))
+      .localCheckpoint(eager = false)
     val (_, words) = bpeTrainLoopFromWordFreq(
       posting.groupBy("word").agg(sum("cnt").as("freq")), rounds)
     val vocab = words.select(col("word"),

@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * one compiled Scala kernel (`MinHashSignature.signature`), so the loop
   * runs as JVM bytecode inside the surrounding WholeStageCodegen span.
   *
-  * Semantics are bit-identical to
-  * `graft.functions.TextFunctions.minhashSignature` (same md5-derived
+  * Semantics are bit-identical to the interpreted higher-order-function
+  * reference `ReferenceModels.minhashSignature` (test side; same md5-derived
   * 60-bit base hash — chosen so DuckDB can recompute it and the whole
   * dedup pipeline is oracle-gated — same (a_i·h + b_i) mod 2³¹−1
   * universal-hash family, same fixed coefficient seed), which the spec

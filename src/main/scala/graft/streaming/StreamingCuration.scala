@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Sampling}
+import graft.operators.Curation
 
 /** Streaming twin of `Curation.curate` — the curation decision made at
   * ARRIVAL time for continuously ingested documents, instead of in a
@@ -82,40 +82,19 @@ object StreamingCuration {
     * candidates minus noticed doc ids, with the key-stable split —
     * exactly the batch output shape (id, predicted_lang, quality_score,
     * split; + span-trimmed textCol and removed_tokens when
-    * `cfg.trimSpans` is on, via the SAME `Curation.withSpanTrim` the
-    * batch pipeline runs — finalization is batch-side, so the
-    * substring-dedup stage composes with zero semantic delta).
+    * `cfg.trimSpans` is on, via the SAME `Curation.finish` tail the
+    * batch pipeline runs — finalization is batch-side, so the LM,
+    * classifier and substring-dedup stages compose with zero semantic
+    * delta).
     * `notices` may carry several rows per dropped doc (one per
     * colliding band); only id-presence matters. */
   def curatedFromSinks(candidates: DataFrame, notices: DataFrame,
       idCol: String,
       cfg: Curation.Config = Curation.Config(),
       textCol: String = "text"): DataFrame = {
-    val keptRaw = candidates.join(
+    val kept = candidates.join(
       notices.select(col("doc_id").cast(candidates.schema(idCol).dataType).as(idCol)),
       Seq(idCol), "left_anti")
-    // the batch pipeline's multi-consumer materialization discipline
-    // (Curation.curate): each later stage fans out over the previous
-    // stage's survivors several times, so checkpoint at the same
-    // fan-out points — lazily, nothing runs until the first action
-    val multiConsumer = cfg.trimSpans || cfg.perplexityFilter || cfg.classifierFilter
-    val kept0 = if (multiConsumer) keptRaw.localCheckpoint(false) else keptRaw
-    // stages 4c/4d — the SAME LM-perplexity and trained-classifier cuts
-    // the batch pipeline runs (Curation.withPerplexityFilter /
-    // withClassifierFilter), over the post-dedup survivors;
-    // finalization is batch-side, so the stages compose with zero
-    // semantic delta
-    val kept1raw = Curation.withPerplexityFilter(kept0, idCol, textCol, cfg)
-    val kept1 = if (cfg.perplexityFilter && (cfg.classifierFilter || cfg.trimSpans))
-      kept1raw.localCheckpoint(false) else kept1raw
-    val kept2 = Curation.withClassifierFilter(kept1, idCol, textCol, cfg)
-    val kept = if (cfg.classifierFilter && cfg.trimSpans)
-      kept2.localCheckpoint(false) else kept2
-    val outCols =
-      Seq(col(idCol), col("predicted_lang"), col("quality_score"), col("split")) ++
-        (if (cfg.perplexityFilter) Seq(col("perplexity")) else Nil) ++
-        (if (cfg.classifierFilter) Seq(col("clf_prob")) else Nil)
-    val out = Sampling.splitByKey(kept, idCol, cfg.splits).select(outCols: _*)
-    Curation.withSpanTrim(out, kept, idCol, textCol, cfg)
+    Curation.finish(kept, idCol, textCol, cfg)
   }
 }

@@ -22,9 +22,9 @@ class NotebookBudgetSpec extends SparkSpecBase {
     "q1SuccessfulUsers" -> 4,
     "q2Enhanced" -> 8,
     "q2DominantGenre" -> 8,
-    "q3DropOffMetrics" -> 7,
+    "q3DropOffMetrics" -> 5,
     "q3OverallBenchmarks" -> 3,
-    "q3CompositeScores" -> 9,
+    "q3CompositeScores" -> 7,
     "q3WorstComboUsers" -> 2)
 
   test("every Q1-Q3 statement runs within its job budget") {

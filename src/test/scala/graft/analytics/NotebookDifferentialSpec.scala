@@ -6,7 +6,9 @@ import scala.math.BigDecimal.RoundingMode
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpecBase
@@ -52,8 +54,18 @@ class NotebookDifferentialSpec extends SparkSpecBase with AdaptiveSparkPlanHelpe
     planted
     val df = StreamProAnalytics.q3CompositeScores(spark)
     df.collect()
-    val reused = collect(df.queryExecution.executedPlan) { case r: ReusedExchangeExec => r }
-    assert(reused.nonEmpty, df.queryExecution.executedPlan.toString)
+    val plan = df.queryExecution.executedPlan
+    val reused = collect(plan) { case r: ReusedExchangeExec => r }
+    assert(reused.nonEmpty, plan.toString)
+    // the drop-off side's first-session devices and its per-user facts
+    // read one exchange of trusted_events on user_id, not one each
+    val byUser = collect(plan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name == "user_id"
+        case _ => false
+      }) => e
+    }
+    assert(byUser.size === 1, plan.toString)
   }
 
   test("hostile fixture: null user, null session, user without a session id, null timestamps and values, unknown video") {

@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.{JobCounter, SparkSpecBase}
@@ -23,6 +24,19 @@ class DuplicateClustersDriverSpec extends SparkSpecBase {
 
   private def onDriver(clusters: DataFrame): Boolean =
     clusters.queryExecution.analyzed.collectFirst { case r: LocalRelation => r }.isDefined
+
+  /** The loop's answer is read back from its last round's eager
+    * localCheckpoint: its final projection sits over a LogicalRDD, and
+    * no round's join is left in the analyzed plan. */
+  private def assertLineageCut(clusters: DataFrame): Unit = {
+    val plan = clusters.queryExecution.analyzed
+    val pinned = plan match {
+      case Project(_, child) => child.collectFirst { case r: LogicalRDD => r }.isDefined
+      case _ => false
+    }
+    assert(pinned, plan.treeString)
+    assert(plan.collectFirst { case j: Join => j }.isEmpty, plan.treeString)
+  }
 
   /** Disjoint 2-node components (2i, 2i + 1), i < n: the union-find
     * answer labels both members 2i. */
@@ -95,6 +109,7 @@ class DuplicateClustersDriverSpec extends SparkSpecBase {
       val (pairs, expected) = disjointPairs(Dedup.CcDriverMaxEdges / 2 + 1, partitions)
       val clusters = Dedup.duplicateClusters(pairs)
       assert(!onDriver(clusters), s"$partitions partitions")
+      assertLineageCut(clusters)
       assert(canon(clusters) === expected, s"$partitions partitions")
     }
     val (atBound, _) = disjointPairs(Dedup.CcDriverMaxEdges / 2, 4)
@@ -112,6 +127,7 @@ class DuplicateClustersDriverSpec extends SparkSpecBase {
       col("doc_a").cast("decimal(20,0)").as("doc_a"), col("doc_b").cast("decimal(20,0)").as("doc_b"))
     val clusters = Dedup.duplicateClusters(decimal)
     assert(!onDriver(clusters))
+    assertLineageCut(clusters)
     assert(canon(clusters) === canon(Dedup.duplicateClusters(pairs)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
@@ -52,14 +52,35 @@ object ReferenceModels {
   def estJaccard(x: Seq[Long], y: Seq[Long]): Double =
     x.zip(y).count { case (a, b) => a == b }.toDouble / x.size.toDouble
 
+  /** MinHash signature as an interpreted higher-order-function column:
+    * `k` independent min-hashes over `shingleArr`, component i the min
+    * over shingles of universal-hash_i(baseHash(shingle)) with the
+    * coefficients of `TextFunctions.minhashCoefficients`. The reference
+    * the native `graft_minhash` expression is compared against
+    * bit-for-bit. One `aggregate` over the shingle array (element-wise
+    * min of per-shingle hash vectors), so the array is evaluated once
+    * per row. */
+  def minhashSignature(shingleArr: Column, k: Int, fast: Boolean = false): Column = {
+    val (coefA, coefB) = TextFunctions.minhashCoefficients(k)
+    val aLit = array(coefA.map(lit): _*)
+    val bLit = array(coefB.map(lit): _*)
+    aggregate(
+      transform(shingleArr, s => TextFunctions.baseHash(s, fast)),
+      array_repeat(lit(Long.MaxValue), k),
+      (acc, h) => zip_with(
+        acc,
+        zip_with(aLit, bLit, (a, b) => pmod(a * h + b, lit(TextFunctions.P))),
+        (x, y) => least(x, y)))
+  }
+
   /** (doc, signature) rows of minhashPairs' signature stage, computed
-    * with the HOF TextFunctions.minhashSignature: docs with fewer than
+    * with the HOF [[minhashSignature]]: docs with fewer than
     * `n` tokens have no shingles and are left out. */
   def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = Dedup.DefaultShingleN, k: Int = Dedup.DefaultMinhashK): Seq[(Long, Seq[Long])] =
     docs.select(col(idCol).cast("long").as("doc"), TextFunctions.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= n)
-      .select(col("doc"), TextFunctions.minhashSignature(
+      .select(col("doc"), minhashSignature(
         TextFunctions.shinglesFromTokens(col("toks"), n), k).as("sig"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
 

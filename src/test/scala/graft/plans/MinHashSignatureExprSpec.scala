@@ -16,7 +16,7 @@ class MinHashSignatureExprSpec extends SparkSpecBase {
       .select(col("doc_id"), TextFunctions.shinglesFromTokens(col("toks"), 3).as("sh"))
     val both = docs.select(
       col("doc_id"),
-      TextFunctions.minhashSignature(col("sh"), 64).as("hof"),
+      ReferenceModels.minhashSignature(col("sh"), 64).as("hof"),
       call_function("graft_minhash", col("sh"), lit(64)).as("native"))
     val mismatches = both.filter(col("hof") =!= col("native")).count()
     assert(mismatches === 0)
@@ -33,7 +33,7 @@ class MinHashSignatureExprSpec extends SparkSpecBase {
 
   test("minhashPairs native and HOF paths agree end-to-end") {
     // the native operator vs the reference banded walk over signatures
-    // computed by the HOF TextFunctions.minhashSignature
+    // computed by the HOF ReferenceModels.minhashSignature
     val docs = Tables.documents(spark, sfDir)
     val nat = Dedup.minhashPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -53,9 +53,9 @@ class MinHashSignatureExprSpec extends SparkSpecBase {
       .select(col("doc_id"), TextFunctions.shinglesFromTokens(col("toks"), 3).as("sh"))
       .filter(size(col("sh")) > 0)
     val both = docs.select(
-      TextFunctions.minhashSignature(col("sh"), 64, fast = true).as("hof_xx"),
+      ReferenceModels.minhashSignature(col("sh"), 64, fast = true).as("hof_xx"),
       call_function("graft_minhash", col("sh"), lit(64), lit(true)).as("native_xx"),
-      TextFunctions.minhashSignature(col("sh"), 64).as("hof_md5"),
+      ReferenceModels.minhashSignature(col("sh"), 64).as("hof_md5"),
       call_function("graft_minhash", col("sh"), lit(64)).as("native_md5"))
     assert(both.filter(col("hof_xx") =!= col("native_xx")).count() === 0)
     assert(both.filter(col("hof_md5") =!= col("native_md5")).count() === 0)
