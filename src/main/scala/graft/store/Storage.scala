@@ -27,6 +27,9 @@ case class LayerPaths(
   def landing: String = s"$root/$landingPrefix"
   def raw: String = s"$root/$rawPrefix"
   def trusted: String = s"$root/$trustedPrefix"
+  /** Snapshot base of one gold table (beyond the reference, whose
+    * notebook aggregates the trusted views on every run). */
+  def goldTable(name: String): String = s"$root/gold/$name"
   /** Hive-style raw key for one daily file
     * (landing_to_raw_processor.py:95). */
   def rawKey(date: String, fileName: String): String =

@@ -8,8 +8,9 @@ import graft.pipeline.Pipeline
 
 /** Job budget of each Q1–Q3 statement: building and collecting it on the
   * planted fixture starts at most the Spark jobs declared here, and
-  * fewer than the literal cell SQL of [[NotebookReference]], whose joins
-  * back to a per-user aggregate the shared `ev` pass replaced. The
+  * fewer than the literal cell SQL of [[NotebookReference]], whose
+  * per-user aggregates and joins back to `trusted_events` the gold
+  * `gold_user_sessions` table replaced. The
   * ceilings are the counts measured on a 4-slot session with 4 shuffle
   * partitions (`SparkSpecBase`); the reference's counts are in the
   * failure message. */
@@ -18,14 +19,14 @@ class NotebookBudgetSpec extends SparkSpecBase {
 
   /** statement → job ceiling. */
   val Budgets: Map[String, Int] = Map(
-    "q1Analysis" -> 5,
-    "q1SuccessfulUsers" -> 4,
-    "q2Enhanced" -> 8,
+    "q1Analysis" -> 4,
+    "q1SuccessfulUsers" -> 3,
+    "q2Enhanced" -> 7,
     "q2DominantGenre" -> 8,
-    "q3DropOffMetrics" -> 5,
-    "q3OverallBenchmarks" -> 3,
-    "q3CompositeScores" -> 7,
-    "q3WorstComboUsers" -> 2)
+    "q3DropOffMetrics" -> 4,
+    "q3OverallBenchmarks" -> 2,
+    "q3CompositeScores" -> 6,
+    "q3WorstComboUsers" -> 1)
 
   test("every Q1-Q3 statement runs within its job budget") {
     assert(Statements.map(_.name).toSet === Budgets.keySet)

@@ -5,15 +5,11 @@ import java.nio.file.{Files, Path}
 import scala.math.BigDecimal.RoundingMode
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpecBase
 import graft.fixtures.StreamProFixture
-import graft.pipeline.{Pipeline, SchemaRegistry}
+import graft.pipeline.{Pipeline, SchemaRegistry, UserSessions}
 
 /** Every rewritten Q1–Q3 statement of [[StreamProAnalytics]] answers what
   * the literal cell SQL of [[NotebookReference]] answers: the same column
@@ -21,7 +17,7 @@ import graft.pipeline.{Pipeline, SchemaRegistry}
   * the planted fixture and on the hostile one. Where the statement
   * orders its rows, the sequence of sort-key values matches too (rows
   * that tie on the key may come in any order, in both). */
-class NotebookDifferentialSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
+class NotebookDifferentialSpec extends SparkSpecBase {
   import NotebookDifferentialSpec._
 
   private def load(write: Path => Unit): Unit = {
@@ -50,22 +46,10 @@ class NotebookDifferentialSpec extends SparkSpecBase with AdaptiveSparkPlanHelpe
     compareAll()
   }
 
-  test("q3CompositeScores: the benchmarks side reuses the drop-off side's user_facts shuffle") {
+  test("q3CompositeScores scans no trusted_events: both sides read the gold table") {
     planted
-    val df = StreamProAnalytics.q3CompositeScores(spark)
-    df.collect()
-    val plan = df.queryExecution.executedPlan
-    val reused = collect(plan) { case r: ReusedExchangeExec => r }
-    assert(reused.nonEmpty, plan.toString)
-    // the drop-off side's first-session devices and its per-user facts
-    // read one exchange of trusted_events on user_id, not one each
-    val byUser = collect(plan) {
-      case e: ShuffleExchangeExec if (e.outputPartitioning match {
-        case HashPartitioning(Seq(a: Attribute), _) => a.name == "user_id"
-        case _ => false
-      }) => e
-    }
-    assert(byUser.size === 1, plan.toString)
+    val files = StreamProAnalytics.q3CompositeScores(spark).inputFiles
+    assert(files.nonEmpty && files.forall(_.contains("/gold/user_sessions/")), files.mkString("\n"))
   }
 
   test("hostile fixture: null user, null session, user without a session id, null timestamps and values, unknown video") {
@@ -77,9 +61,12 @@ class NotebookDifferentialSpec extends SparkSpecBase with AdaptiveSparkPlanHelpe
   }
 
   test("no event with a user: NULL rates instead of DIVIDE_BY_ZERO") {
-    def events(rows: Seq[Row]): Unit = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows), SchemaRegistry.events.withPartition)
-      .createOrReplaceTempView(SchemaRegistry.events.trustedName)
+    def events(rows: Seq[Row]): Unit = {
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows), SchemaRegistry.events.withPartition)
+      df.createOrReplaceTempView(SchemaRegistry.events.trustedName)
+      UserSessions.facts(df).createOrReplaceTempView(UserSessions.ViewName)
+    }
     val rates = Seq("single_session_rate_pct", "low_watch_time_rate_pct", "no_day1_return_rate_pct")
     def overallIsNull(): Unit = {
       val overall = StreamProAnalytics.q3OverallBenchmarks(spark).collect()

@@ -29,6 +29,24 @@ class PipelineSpec extends SparkSpecBase with TimeLimits {
     assert(results.forall(_.success), results.map(_.error).mkString("; "))
   }
 
+  test("Pipeline.run returns exactly the two stage results, the trusted row count last") {
+    assert(results.map(_.jobName) === Seq(s"landing_to_raw[$Date]", s"raw_to_trusted[$Date]"))
+    val trustedRows = SchemaRegistry.all.map(t =>
+      spark.table(t.trustedName).where(col(SchemaRegistry.PartitionCol) === Date).count()).sum
+    assert(results.last.recordsProcessed === trustedRows)
+  }
+
+  test("running the raw→trusted phases one by one also registers gold_user_sessions") {
+    val paths = rawLake()
+    spark.catalog.dropTempView(UserSessions.ViewName)
+    val stage = new RawToTrusted(spark, paths, Date)
+    stage.preProcess()
+    val rows = stage.load(stage.transform(stage.extract()))
+    stage.postProcess(JobResult(stage.jobName, success = true, 0.0, rows))
+    assert(spark.table(UserSessions.ViewName).count() ===
+      spark.table("trusted_events").where(col("user_id").isNotNull).select("user_id").distinct().count())
+  }
+
   test("landing→raw copies bytes verbatim into the hive-partitioned raw layer") {
     results
     val paths = LayerPaths(root)
