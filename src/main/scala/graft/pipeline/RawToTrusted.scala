@@ -23,7 +23,7 @@ import graft.store.{LayerPaths, Storage}
   * tables load concurrently, one driver thread each. Reads and writes
   * stream through executors (nothing is collected to the driver), and
   * the partition layout gives downstream queries pruning on
-  * ingestion_date for free. Post-processing also maintains the gold
+  * ingestion_date for free. Post-processing also rebuilds the gold
   * `gold_user_sessions` table ([[UserSessions]]) the notebook's Q1–Q3
   * statements read, so `Pipeline.run` still returns one result per
   * stage.
@@ -121,17 +121,19 @@ class RawToTrusted(
   /** Register trusted views for analytics — ref duckdb_client.py:308-348
     * (`setup_trusted_tables_from_parquet`). Views are lazy; partition
     * pruning applies when queries filter ingestion_date. Then, when this
-    * run loaded the events, commit the gold [[UserSessions]] table for
-    * its date; otherwise the previous gold snapshot stays current. Either
-    * way `gold_user_sessions` is registered over the current snapshot,
-    * if there is one. */
+    * run loaded the events, rebuild the gold [[UserSessions]] table from
+    * all of them; a failed build is reported as the failed table
+    * `gold_user_sessions`, and the previous snapshot stays current until
+    * a later build succeeds. Either way `gold_user_sessions` is
+    * registered over the current snapshot, if there is one. */
   override def postProcess(result: JobResult): Unit = {
     registerTrusted()
     val gold = paths.goldTable(UserSessions.Table)
     val events = SchemaRegistry.events
     if (result.success && tables.exists(_.name == events.name) && !failedTables.contains(events.name))
-      UserSessions.refresh(spark, gold, spark.table(events.trustedName), ingestionDate)
-    else UserSessions.register(spark, gold)
+      Try(UserSessions.refresh(spark, gold, spark.table(events.trustedName)))
+        .failed.foreach(_ => failedTables :+= UserSessions.ViewName)
+    UserSessions.register(spark, gold)
   }
 
   private def registerTrusted(): Unit =

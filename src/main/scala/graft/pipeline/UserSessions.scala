@@ -27,15 +27,12 @@ import graft.store.{Snapshot, Storage}
   *     query-time join with `trusted_videos` sums and multiplies as the
   *     cells' join does; `subsequent_watch_time`, `subsequent_sessions`
   *     and `has_subsequent`: activity after the first session up to 3
-  *     days past its date;
-  *   - `ingestion_dates`: the dates of the user's events.
+  *     days past its date.
   *
-  * Maintenance: each ingestion date recomputes only the users with
-  * events in that date's partition, plus the users the previous snapshot
-  * records under that date (a rerun may have dropped their events), each
-  * from all of the user's events; every other row carries over. Every
-  * build is a [[Snapshot]] commit, so readers of the previous table
-  * never see it overwritten. */
+  * Every successful events load rebuilds the table from all trusted
+  * events as one [[Snapshot]] commit, so readers of the previous table
+  * never see it overwritten, and a date whose build failed is repaired
+  * by the next date's. */
 object UserSessions {
 
   /** The registered view the notebook statements read. */
@@ -67,8 +64,7 @@ object UserSessions {
        |  named_struct('video_id', video_id, 'watch', $Watch) END)) as first_session_video_events""".stripMargin,
     s"SUM(CASE WHEN $Subsequent THEN $Watch END) as subsequent_watch_time",
     s"CAST(size(collect_set(CASE WHEN $Subsequent THEN session_id END)) AS BIGINT) as subsequent_sessions",
-    s"MAX(CASE WHEN $Subsequent THEN 1 ELSE 0 END) = 1 as has_subsequent",
-    s"array_sort(collect_set(${SchemaRegistry.PartitionCol})) as ingestion_dates")
+    s"MAX(CASE WHEN $Subsequent THEN 1 ELSE 0 END) = 1 as has_subsequent")
 
   /** The table's rows for `events`' users: one shuffle on user_id for the
     * window, which the aggregate keeps. Rows without a user are dropped;
@@ -88,31 +84,17 @@ object UserSessions {
         """array_sort(transform(filter(sessions, s -> s.session_id = first_session_id),
           |  s -> named_struct('device_os', s.device_os, 'app_version', s.app_version))) as first_devices""".stripMargin,
         "first_session_video_events", "subsequent_watch_time", "subsequent_sessions",
-        "has_subsequent", "ingestion_dates")
+        "has_subsequent")
   }
-
-  /** The current snapshot under `base`, None before the first build. */
-  private def current(spark: SparkSession, base: String): Option[DataFrame] =
-    Snapshot.currentPath(spark, base, Frame).map(Storage.readParquet(spark, _))
 
   /** Register [[ViewName]] over the current snapshot, if there is one. */
   def register(spark: SparkSession, base: String): Unit =
-    current(spark, base).foreach(_.createOrReplaceTempView(ViewName))
+    Snapshot.currentPath(spark, base, Frame)
+      .foreach(Storage.readParquet(spark, _).createOrReplaceTempView(ViewName))
 
-  /** Commit the table as of `events` after `date`'s partition was
-    * written, then register it. The first build aggregates every event;
-    * later ones recompute the date's users and carry the others over. */
-  def refresh(spark: SparkSession, base: String, events: DataFrame, date: String): Unit = {
-    val next = current(spark, base) match {
-      case None => facts(events)
-      case Some(previous) =>
-        val touched = events.where(col(SchemaRegistry.PartitionCol) === date).select("user_id")
-          .union(previous.where(array_contains(col("ingestion_dates"), date)).select("user_id"))
-        previous.join(touched, Seq("user_id"), "left_anti")
-          .unionByName(facts(events.join(touched, Seq("user_id"), "left_semi")))
-    }
-    Snapshot.commit(spark, base, Map(Frame -> next))
+  /** Commit the table as of all of `events`. */
+  def refresh(spark: SparkSession, base: String, events: DataFrame): Unit = {
+    Snapshot.commit(spark, base, Map(Frame -> facts(events)))
     Snapshot.vacuum(spark, base)
-    register(spark, base)
   }
 }

@@ -6,17 +6,17 @@ import java.nio.file.{Files, Path, StandardOpenOption}
 import scala.math.BigDecimal.RoundingMode
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpecBase
 import graft.fixtures.StreamProFixture
 import graft.store.{LayerPaths, Snapshot}
 
-/** The gold `gold_user_sessions` table, maintained one ingestion date at
-  * a time, equals a rebuild from all trusted events: after a second
-  * date, after a rerun of a date, and after a rerun that drops a user.
-  * Rows of users a date does not touch carry over, and a failed events
-  * load keeps the previous snapshot current. */
+/** The gold `gold_user_sessions` table, committed by each ingestion
+  * date, equals a rebuild from all trusted events: after a second date,
+  * after a rerun of a date, after a rerun that drops a user, and after a
+  * date whose own build failed. A failed events load keeps the previous
+  * snapshot current, and a failed build is reported in the result. */
 class UserSessionsSpec extends SparkSpecBase {
   import UserSessionsSpec._
 
@@ -81,7 +81,6 @@ class UserSessionsSpec extends SparkSpecBase {
     assertRebuilt()
     assert(Snapshot.currentVersion(spark, gold(twoDays)) === Some(1L))
     assert(fact("user_300", "returned_day1") === 1)
-    assert(fact("user_300", "ingestion_dates") === Seq(Day1, Day2))
     assert(fact("user_1", "first_session_id") === "user_1_sess_-1_0")
     assert(fact("user_1", "first_session_date") === "2025-03-30")
     assert(fact("user_400", "first_session_positive_watch_time") === 31.0)
@@ -102,20 +101,6 @@ class UserSessionsSpec extends SparkSpecBase {
     assert(rows(table()).length === before.length - 1)
   }
 
-  test("a date recomputes only its own users; the others' rows carry over") {
-    val root = lake(SecondDay)
-    assert(run(root, Day1).forall(_.success))
-    // mark an untouched user's row in the current snapshot
-    val marked = table().withColumn("total_sessions",
-      when(col("user_id") === "user_50", lit(-1L)).otherwise(col("total_sessions")))
-    Snapshot.commit(spark, gold(root), Map("facts" -> marked))
-    assert(run(root, Day2).forall(_.success))
-    assert(fact("user_50", "total_sessions") === -1L)
-    val touched = Seq("user_1", "user_300", "user_400")
-    assert(rows(table().where(col("user_id").isin(touched: _*))) ===
-      rows(rebuild().where(col("user_id").isin(touched: _*))))
-  }
-
   test("a failed events load keeps the previous snapshot current") {
     val root = lake(SecondDay :+ """{"user_id": "user_1", "session_id": "user_1_sess_9_0", "value": "abc"}""")
     assert(run(root, Day1).forall(_.success))
@@ -124,6 +109,25 @@ class UserSessionsSpec extends SparkSpecBase {
     assert(run(root, Day2).last.failedTables === Seq("events"))
     assert(Snapshot.currentVersion(spark, gold(root)) === Some(0L))
     assert(rows(table()) === before)
+  }
+
+  test("a failed gold build fails the result; the next date's build repairs the table") {
+    val root = lake(SecondDay)
+    // a file where the gold table's directory goes makes its commit fail
+    val blocker = Files.createDirectories(java.nio.file.Paths.get(gold(root)).getParent)
+      .resolve(UserSessions.Table)
+    Files.write(blocker, Array[Byte]())
+    spark.catalog.dropTempView(UserSessions.ViewName)
+    val day1 = run(root, Day1)
+    assert(day1.last.failedTables === Seq(UserSessions.ViewName))
+    assert(!day1.last.success)
+    assert(day1.last.recordsProcessed > 0)
+    assert(spark.table("trusted_events").count() > 0)
+    assert(!spark.catalog.tableExists(UserSessions.ViewName))
+    Files.delete(blocker)
+    assert(run(root, Day2).forall(_.success))
+    assertRebuilt()
+    assert(fact("user_105", "total_sessions") === 2L) // a first-date user
   }
 }
 
