@@ -19,10 +19,6 @@ import org.apache.spark.sql.SparkSession
   *     The cache is keyed by generated source and lives per JVM, so the
   *     value depends on the number of distinct plans in the workload,
   *     not on core count or data scale.
-  *   - `spark.hadoop.fs.file.impl = store.NioLocalFileSystem`: local
-  *     writes set file and directory permissions in-process instead of
-  *     starting one `chmod` process per file and directory (Hadoop's
-  *     path when native Hadoop is absent).
   *
   * Shuffle partitioning, AQE knobs and broadcast thresholds are NOT
   * engine defaults: they are machine/data-scale decisions left to AQE and
@@ -41,7 +37,6 @@ object Sessions {
   /** Apply the resident-engine settings to a session builder. */
   def withEngineDefaults(b: SparkSession.Builder): SparkSession.Builder =
     b.config(CodegenCacheKey, CodegenCacheEntries)
-      .config("spark.hadoop.fs.file.impl", classOf[store.NioLocalFileSystem].getName)
 
   /** A `local[cpus]` session with `cpus` shuffle partitions, UTC session
     * time, no UI, WARN logging and the engine defaults. */
