@@ -336,12 +336,14 @@ object Dedup {
   /** The banded LSH index rows (`doc, sig, band, bkey`) minhashPairs
     * buckets on — exposed as the occupancy-observability surface (feed
     * to `Occupancy.stats(_, cap, "band", "bkey")` to see the skew regime
-    * the hot-bucket guard would face). */
+    * the hot-bucket guard would face). `carry` names columns of `df`
+    * passed through after `doc` (the streaming twin's event time); the
+    * default carries none. */
   def minhashBanded(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
       bands: Int = DefaultMinhashBands,
-      fast: Boolean = false): DataFrame = {
+      fast: Boolean = false, carry: Seq[String] = Nil): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
     // codegen'd Catalyst expression (graft.plans.MinHashSignature) —
@@ -351,13 +353,14 @@ object Dedup {
     // for xxhash64 (the production mode when no cross-engine oracle is
     // needed; see TextFunctions.baseHash).
     val sigCol = NativeFunctions.minhash(shinglesFromTokens(col("toks"), n), k, fast)
+    val kept = carry.map(col)
     val sig = df
-      .select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
+      .select(col(idCol).as("doc") +: kept :+ tokens(col(textCol)).as("toks"): _*)
       // docs shorter than the shingle width have NO shingles; left in,
       // they would all share the identity signature and spuriously pair
       // with each other at est_jaccard = 1.0
       .filter(size(col("toks")) >= n)
-      .select(col("doc"), sigCol.as("sig"))
+      .select(col("doc") +: kept :+ sigCol.as("sig"): _*)
     // band keys in one projection: each signature slice rendered as a
     // string (not hashed — the join key must be recomputable by the
     // DuckDB oracle, and the slice itself is exactly as shuffle-compact
@@ -365,11 +368,10 @@ object Dedup {
     // posexplode_OUTER + null-drop (see packedSignatureBanded): a
     // non-outer generate's inferred filter would substitute the full
     // graft_minhash expression and re-evaluate it twice more per row
-    sig.select(
-      col("doc"), col("sig"),
+    sig.select(col("doc") +: kept :+ col("sig") :+
       posexplode_outer(transform(sequence(lit(0), lit(bands - 1)), i =>
         array_join(slice(col("sig"), i * r + 1, lit(r)).cast("array<string>"), "_")))
-        .as(Seq("band", "bkey")))
+        .as(Seq("band", "bkey")): _*)
       .filter(col("band").isNotNull)
   }
 
@@ -662,10 +664,13 @@ object Dedup {
     * slice is an ARITHMETIC shift masked to r bits, whose kept positions
     * [0, r) carry the true bits [b·r, b·r+r) for every band that tiles
     * the word (sign fill only reaches positions ≥ 64 − b·r, all masked
-    * away). Multiprobe never changes these rows. */
+    * away). Multiprobe never changes these rows. `carry` names columns
+    * of `sigs` passed through after `doc` (the streaming twins' event
+    * time); the default carries none. */
   def packedSignatureBanded(sigs: DataFrame, idCol: String, sigCol: String,
-      plan: BandPlan): DataFrame = {
+      plan: BandPlan, carry: Seq[String] = Nil): DataFrame = {
     val r = plan.r
+    val kept = carry.map(col)
     val mask = (1L << r) - 1
     // posexplode_OUTER + null-drop: a non-outer generate feeds
     // InferFiltersFromGenerate, and pushdown substitutes `sig`'s whole
@@ -673,12 +678,12 @@ object Dedup {
     // inferred (size > 0, isnotnull) filter — two extra signature
     // evaluations per row (see ngramJaccardPairs). The band array is
     // never empty (bands ≥ 1), so the filter drops nothing.
-    sigs.select(col(idCol).as("doc"), col(sigCol).cast("long").as("sig"))
-      .select(col("doc"), col("sig"),
+    sigs.select(col(idCol).as("doc") +: kept :+ col(sigCol).cast("long").as("sig"): _*)
+      .select(col("doc") +: kept :+ col("sig") :+
         posexplode_outer(transform(sequence(lit(0), lit(plan.bands - 1)), b =>
           call_function("shiftright", col("sig"), (b * r).cast("int"))
             .bitwiseAND(lit(mask))))
-          .as(Seq("band", "bkey")))
+          .as(Seq("band", "bkey")): _*)
       .filter(col("band").isNotNull)
   }
 

@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   * and the unsorted multi-table/IVF form additionally ships EVERY scored
   * candidate into the top-k aggregator instead of k per visitor.
   * Semantics are identical:
-  *   - candidates = pool members with id ≠ visitor id;
+  *   - candidates = pool members with id ≠ visitor id and a non-NULL
+  *     vector; a visitor with a NULL vector has none;
   *   - cos = dot(a.v, b.v) / (a.nrm · b.nrm), dot strictly sequential
   *     (the DotProduct contract — bit-identical cross-engine);
   *   - rank = (cos DESC, neighbor_id ASC) under Java double comparison
@@ -106,8 +107,11 @@ object ScoreTopK {
     while (i < np) {
       val row = pool.getStruct(i, poolFields)
       pid(i) = row.getLong(0)
-      pv(i) = row.getArray(1).toDoubleArray()
-      pn(i) = row.getDouble(2)
+      // a NULL vector stays null here and is never a candidate
+      if (!row.isNullAt(1)) {
+        pv(i) = row.getArray(1).toDoubleArray()
+        pn(i) = row.getDouble(2)
+      }
       i += 1
     }
     val out = new scala.collection.mutable.ArrayBuffer[InternalRow]()
@@ -117,13 +121,14 @@ object ScoreTopK {
     var a = 0
     while (a < nv) {
       val row = vs.getStruct(a, vsFields)
+      // a NULL vector has no neighbours (NULL vectors share one bucket)
+      val av = if (row.isNullAt(1)) null else row.getArray(1).toDoubleArray()
       val aid = row.getLong(0)
-      val av = row.getArray(1).toDoubleArray()
       val an = row.getDouble(2)
       var nBest = 0
       var b = 0
-      while (b < np) {
-        if (pid(b) != aid) {
+      while (av != null && b < np) {
+        if (pid(b) != aid && pv(b) != null) {
           // strictly sequential dot — the DotProduct/list_dot_product
           // cross-engine contract
           val x = av; val y = pv(b)

@@ -57,7 +57,7 @@ object StreamingCuration {
 
   /** Drop notices among the stage 1–2 survivors: one row per flagged
     * (doc, band) naming an earlier in-horizon arrival it duplicates
-    * (see StreamingDedup for the state/watermark contract).
+    * (see HorizonBuckets for the state/watermark contract).
     *
     * Dedup runs over `lower(trim(text))` with short-doc fingerprinting
     * ON, so the EXACT-duplicate semantics match the batch pipeline's

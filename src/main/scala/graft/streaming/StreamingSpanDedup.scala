@@ -2,14 +2,14 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Dedup
+import graft.streaming.HorizonBuckets.{Arrival, Member}
 
 /** Streaming SPAN-level duplicate detection — the arrival-time twin of
-  * `Dedup.sharedSpans` (copied-passage dedup), completing the streaming
-  * twin family (MinHash: `StreamingDedup.minhashDupStream`; embeddings:
-  * `embeddingDupStream`; curation: `StreamingCuration`).
+  * `Dedup.sharedSpans` (copied-passage dedup). Its siblings are the
+  * notice twins of `StreamingDedup` (MinHash, embedding, SimHash,
+  * pHash) and the curation twin `StreamingCuration`.
   *
   * Architecture — the two-sink split StreamingCuration established,
   * because a span verdict is NOT per-shingle-decidable: an island of
@@ -17,11 +17,12 @@ import graft.operators.Dedup
   * stateful group can see a whole span. Instead:
   *
   *   1. [[spanMatchStream]] (streaming, ONE stateful operator): the
-  *      positional shingle posting index lives in state keyed by the
-  *      60-bit shingle key; each arriving document's postings emit one
-  *      match row per earlier in-horizon posting of the same key —
-  *      exactly the rows `Dedup.selfSpanMatches`' equi-join produces,
-  *      restricted to (later arrival, earlier arrival). Sink them.
+  *      positional shingle posting index lives in [[HorizonBuckets]]
+  *      state keyed by the 60-bit shingle key; each arriving document's
+  *      postings emit one match row per earlier in-horizon posting of
+  *      the same key — exactly the rows `Dedup.selfSpanMatches`'
+  *      equi-join produces, restricted to (later arrival, earlier
+  *      arrival). Sink them.
   *   2. [[spansFromMatches]] (batch, at finalization): gaps-and-islands
   *      fold of the match sink via the SAME `Dedup.spanFold` the batch
   *      operator uses — maximal spans ≥ `minSpanTokens` per (new, old)
@@ -29,20 +30,19 @@ import graft.operators.Dedup
   *      are emitted in that document's micro-batch, so the fold needs
   *      no cross-batch state and is exact.
   *
-  * Scale/state contract, mirroring the sibling twins: the projection
-  * (tokenize → positional shingles → 60-bit key) is the batch
-  * operator's own zero-shuffle, codegen'd projection; the only stateful
-  * shuffle keys on the shingle key; state per key is the in-horizon
-  * posting list, watermark-pruned each visit, reclaimed whole by
-  * EventTimeTimeout, and capped at `maxPostings` most-recent entries —
-  * the streaming form of the batch doc-freq guard (a boilerplate
-  * shingle key must not accumulate O(corpus) postings or emit
-  * O(occupancy) matches per arrival; like the batch guard, the cap
-  * UNDER-reports — spans can only shrink or vanish, never appear). */
+  * The projection (tokenize → positional shingles → 60-bit key) is the
+  * batch operator's own zero-shuffle, codegen'd projection; the only
+  * stateful shuffle keys on the shingle key. The posting cap
+  * [[DefaultMaxPostings]] stands in for the batch doc-freq guard, a
+  * corpus fraction a stream cannot compute: a boilerplate shingle key
+  * must not accumulate O(corpus) postings or emit O(occupancy) matches
+  * per arrival. Like the batch guard, the cap UNDER-reports — spans can
+  * only shrink or vanish, never appear. */
 object StreamingSpanDedup {
 
-  case class PostRow(h: Long, doc_id: Long, event_time: java.sql.Timestamp, pos: Int)
-  case class PostingState(members: List[(Long, Long, Int)]) // (doc, arrivalMs, pos)
+  /** Postings kept per shingle key. */
+  val DefaultMaxPostings = 64
+
   case class SpanMatch(
       doc_id: Long, event_time: java.sql.Timestamp,
       matched_doc_id: Long, pos_new: Int, pos_old: Int)
@@ -52,17 +52,17 @@ object StreamingSpanDedup {
     * STREAMING DataFrame carrying `idCol`, `textCol`, and event-time
     * `timeCol`; `horizonMinutes` is both the watermark and the dedup
     * memory. Emits one [[SpanMatch]] per (new posting, stored posting)
-    * key collision; feed the sink to [[spansFromMatches]]. */
+    * key collision — EVERY earlier in-horizon posting, not the first
+    * only, because the island fold needs the full diagonal structure;
+    * feed the sink to [[spansFromMatches]]. */
   def spanMatchStream(
       spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
       timeCol: String = "timestamp", horizonMinutes: Int = 10,
-      k: Int = Dedup.DefaultSpanK, maxPostings: Int = 64,
+      k: Int = Dedup.DefaultSpanK, maxPostings: Int = DefaultMaxPostings,
       fast: Boolean = false): DataFrame = {
     require(horizonMinutes >= 1)
-    require(maxPostings >= 2, "maxPostings must be >= 2")
     import spark.implicits._
     import graft.functions.TextFunctions._
-    val horizonMs = horizonMinutes * 60 * 1000L
 
     val posted = docs
       .withColumn("event_time", to_timestamp(col(timeCol)))
@@ -76,42 +76,15 @@ object StreamingSpanDedup {
         // Dedup.positionalPosting)
         posexplode_outer(positionalShingleKeys(col("toks"), k, fast)).as(Seq("pos", "h")))
       .filter(col("h").isNotNull)
-      .select(col("h"), col("doc_id"), col("event_time"), col("pos"))
-      .as[PostRow]
+      .select(col("h").as("key"), col("doc_id"), col("event_time"), col("pos").as("payload"))
+      .as[Arrival[Long, Int]]
 
-    posted
-      .groupByKey(_.h)
-      .flatMapGroupsWithState[PostingState, SpanMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[PostRow], state: GroupState[PostingState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val wm = state.getCurrentWatermarkMs()
-            // newest-first list: arrivals prepend in ascending order, so
-            // the posting cap keeps the most recent entries
-            var members = state.getOption.map(_.members).getOrElse(Nil)
-              .filter(_._2 >= wm - horizonMs)
-            val out = List.newBuilder[SpanMatch]
-            // deterministic within-batch order: (event_time, doc, pos)
-            rows.toSeq.sortBy(e => (e.event_time.getTime, e.doc_id, e.pos)).foreach { e =>
-              val t = e.event_time.getTime
-              // EVERY earlier in-horizon posting matches (unlike the
-              // notice twins' first-match-only: the island fold needs
-              // the full diagonal structure) — bounded by the cap
-              members.foreach { case (d, at, p) =>
-                if (d != e.doc_id && at <= t && t - at <= horizonMs)
-                  out += SpanMatch(e.doc_id, e.event_time, d, e.pos, p)
-              }
-              members = ((e.doc_id, t, e.pos) :: members).take(maxPostings)
-            }
-            state.update(PostingState(members))
-            val newest = members.iterator.map(_._2).max
-            state.setTimeoutTimestamp(math.max(newest + horizonMs, wm + 1))
-            out.result().iterator
-          }
-      }.toDF()
+    // deterministic within-batch order: (event_time, doc, pos)
+    val order = Ordering.by((m: Member[Int]) => (m.arrivalMs, m.doc, m.payload))
+    HorizonBuckets(posted, horizonMinutes * 60 * 1000L, maxPostings, order) { (a, earlier) =>
+      earlier.map(m =>
+        SpanMatch(a.doc, new java.sql.Timestamp(a.arrivalMs), m.doc, a.payload, m.payload))
+    }.toDF()
   }
 
   /** Batch finalization over the match sink: maximal shared spans

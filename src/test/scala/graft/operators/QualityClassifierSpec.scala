@@ -15,7 +15,7 @@ class QualityClassifierSpec extends SparkSpecBase {
   test("distributed training + scoring equals the driver-side reference bit-for-bit") {
     val rows = docs.select(col("doc_id").cast("long"), col("text"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val want = QualityClassifier.referenceClassify(
+    val want = ReferenceModels.referenceClassify(
       rows, QualityClassifier.DefaultNumFeatures,
       QualityClassifier.DefaultIters, QualityClassifier.DefaultLearningRate,
       QualityClassifier.DefaultLowQ, QualityClassifier.DefaultHighQ)

@@ -120,4 +120,69 @@ object ReferenceModels {
     }.distinct.groupBy(_._1).values.flatMap { cands =>
       cands.sortWith { (x, y) => x._3 > y._3 || (x._3 == y._3 && x._2 < y._2) }.take(k)
     }.toSet
+
+  /** Feature bucket of token `w`: the first 15 md5 hex digits mod `nf`
+    * (QualityClassifier's hashed unigram feature). */
+  def hashToken(w: String, nf: Int): Int = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hex = md.digest(w.getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString.substring(0, 15)
+    (java.lang.Long.parseLong(hex, 16) % nf).toInt
+  }
+
+  /** `QualityClassifier.classify` over collected (id, text) rows in
+    * plain Scala collections — no Spark, no SQL: the same hashed-unigram
+    * features, seed labels, fixed-point logistic-regression steps and
+    * scoring, so the distributed implementation is checked against an
+    * independent simple one. Rows are (id, n_tokens, clf_prob,
+    * clf_label), sorted by id. */
+  def referenceClassify(
+      rows: Seq[(Long, String)], nf: Int, iters: Int, lr: Double,
+      lowQ: Double, highQ: Double): Seq[(Long, Long, Double, Int)] = {
+    val scale = QualityClassifier.Scale
+    val stop = Set("the", "a")
+    def feats(text: String): (Long, Map[Int, Long]) = {
+      val t = text.split(" ", -1)
+      val n = t.length.toLong
+      val hashed = t.groupBy(w => hashToken(w, nf)).map { case (f, ws) =>
+        f -> ws.length.toLong }
+      val eng = Map(
+        nf -> t.distinct.length.toLong,
+        (nf + 1) -> math.floor(math.min(n.toDouble * n / 100.0, n.toDouble)).toLong,
+        (nf + 2) -> n)
+      (n, hashed ++ eng)
+    }
+    def quality(text: String): Double = {
+      val t = text.split(" ", -1)
+      val n = t.length
+      t.distinct.length.toDouble / n + math.min(n / 100.0, 1.0) -
+        t.count(stop).toDouble / n
+    }
+    val docFeats = rows.map { case (id, text) => (id, feats(text)) }
+    val labels = rows.flatMap { case (id, text) =>
+      val q = quality(text)
+      if (q >= highQ) Some(id -> 1L)
+      else if (q <= lowQ) Some(id -> 0L) else None
+    }.toMap
+    var w = Array.fill(nf + 3)(0L)
+    for (_ <- 1 to iters) {
+      val g = Array.fill(nf + 3)(0L)
+      docFeats.foreach { case (id, (n, fs)) =>
+        labels.get(id).foreach { y =>
+          val dot = fs.map { case (f, c) => w(f) * c }.sum
+          val p = 1.0 / (1.0 + math.exp(-(dot.toDouble / (scale * n))))
+          val resid = math.floor((p - y) / n * scale + 0.5).toLong
+          fs.foreach { case (f, c) => g(f) += resid * c }
+        }
+      }
+      w = Array.tabulate(nf + 3)(f =>
+        w(f) - math.floor(lr * g(f).toDouble / labels.size + 0.5).toLong)
+    }
+    docFeats.map { case (id, (n, fs)) =>
+      val dot = fs.map { case (f, c) => w(f) * c }.sum
+      val p = 1.0 / (1.0 + math.exp(-(dot.toDouble / (scale * n))))
+      val prob = math.floor(p * scale + 0.5) / scale
+      (id, n, prob, if (prob >= 0.5) 1 else 0)
+    }.sortBy(_._1)
+  }
 }

@@ -198,4 +198,16 @@ class SimilaritySearchSpec extends SparkSpecBase {
     assert(r3 >= r1, s"recall@1 one table $r1, three tables $r3")
     assert(r3 > 0.0)
   }
+
+  test("lshNeighbors skips NULL vectors, also when two of them share the NULL bucket") {
+    val corpus = spark.createDataFrame(Seq[(Long, Option[Seq[Double]])](
+      (1L, Some(Seq(1.0, 2.0, 3.0, 4.0))), (2L, Some(Seq(1.0, 2.0, 3.0, 4.0))),
+      (3L, None), (4L, None))).toDF("id", "v")
+    for (tables <- Seq(1, 2)) {
+      val pairs = SimilaritySearch.lshNeighbors(
+        corpus, "id", "v", dim = 4, nBits = 2, k = 3, nTables = tables)
+        .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("neighbor_id"))).toSet
+      assert(pairs === Set((1L, 2L), (2L, 1L)), s"nTables = $tables")
+    }
+  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
 import graft.functions.NativeFunctions
-import graft.functions.VectorFunctions
+import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Eval ≡ codegen for the native kernels that eval and codegen share:
   * the same query runs once fully compiled (whole-stage codegen on,
@@ -112,6 +112,43 @@ class KernelModesSpec extends SparkSpecBase {
     val df = stored("nearests", vectors.toDF("id", "v"))
     assertModesAgree(df, "graft_nearest_centers",
       NativeFunctions.nearestCenters(col("v"), centers, cids, 3).as("cs"))
+  }
+
+  private val tokenArrays = Seq[(Long, Option[Seq[String]])](
+    (1L, Some(Seq("the", "quick", "brown", "fox", "jumps"))),
+    (2L, None),                              // null array
+    (3L, Some(Seq.empty)),                   // empty
+    (4L, Some(Seq("solo"))),                 // single token
+    (5L, Some(Seq("a", null, "b", "c"))))    // null element
+
+  test("SimHash64: eval and codegen agree (null, empty, single token, null element)") {
+    val df = stored("simhash", tokenArrays.toDF("id", "toks"))
+    assertModesAgree(df, "graft_simhash64",
+      NativeFunctions.simhash64(col("toks")).as("sig"))
+  }
+
+  test("SpanKeys: eval and codegen agree (null, empty, single token, md5 and fast hashes)") {
+    val df = stored("spankeys", tokenArrays.toDF("id", "toks"))
+    assertModesAgree(df, "graft_span_keys",
+      TextFunctions.positionalShingleKeys(col("toks"), 1).as("k1"),
+      TextFunctions.positionalShingleKeys(col("toks"), 3).as("k3"),
+      TextFunctions.positionalShingleKeys(col("toks"), 3, fast = true).as("k3x"))
+  }
+
+  test("ScoreTopK: eval and codegen agree with NULL-vector members") {
+    val df = stored("scoretopk", Seq[(Long, Option[Seq[(Long, Option[Seq[Double]], Option[Double])]])](
+      (1L, Some(Seq((1L, Some(Seq(1.0, 0.0)), Some(1.0)),
+        (2L, Some(Seq(1.0, 1.0)), Some(math.sqrt(2.0))),
+        (3L, None, None), (4L, None, None)))),
+      (2L, Some(Seq((5L, None, None), (6L, None, None)))), // only NULL vectors
+      (3L, None),
+      (4L, Some(Seq.empty))).toDF("id", "ms"))
+    assertModesAgree(df, "graft_score_topk",
+      NativeFunctions.scoreTopK(col("ms"), col("ms"), 2).as("top"))
+    val top = df.select(NativeFunctions.scoreTopK(col("ms"), col("ms"), 2))
+      .collect().flatMap(r => Option(r.getSeq[Row](0)).toSeq.flatten)
+      .map(p => (p.getLong(0), p.getLong(1))).toSet
+    assert(top === Set((1L, 2L), (2L, 1L)))
   }
 
   override def afterAll(): Unit = {

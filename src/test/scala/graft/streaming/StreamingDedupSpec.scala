@@ -117,4 +117,31 @@ class StreamingDedupSpec extends SparkSpecBase {
     q2.stop()
     assert(spark.table("sdd_h2_out").collect().map(_.getAs[Long]("doc_id")).toSet === Set(2L))
   }
+
+  test("one bucket past Dedup.DefaultMaxBucket identical docs: every doc after the first flags") {
+    // identical docs share all 16 band buckets; the state of each stays
+    // at the cap, and the second micro-batch reads that capped state
+    val n = Dedup.DefaultMaxBucket + 100
+    val text = (0 until 24).map(w => s"hot_$w").mkString(" ")
+    val src = Files.createTempDirectory("graft-sdd-hot-src").toString
+    val ckpt = Files.createTempDirectory("graft-sdd-hot-ckpt").toString
+    Seq((0L until n - 50L, "2024-01-01T10:00:00"), (n - 50L until n, "2024-01-01T10:01:00"))
+      .foreach { case (ids, ts) =>
+        ids.map(id => (id, text, ts)).toDF("doc_id", "text", "ts")
+          .coalesce(1).write.mode("append").json(src)
+      }
+    val q = StreamingDedup.minhashDupStream(spark,
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src),
+      "doc_id", "text", timeCol = "ts", horizonMinutes = 600)
+      .writeStream.format("memory").queryName("sdd_hot_out")
+      .outputMode("append").option("checkpointLocation", ckpt)
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    val notices = spark.table("sdd_hot_out").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("matched_doc_id")))
+    assert(notices.map(_._1).toSet === (1L until n).toSet)
+    // the newest member is the first match: each doc names its predecessor
+    assert(notices.forall { case (d, m) => m == d - 1 })
+  }
 }

@@ -144,4 +144,29 @@ class StreamingEmbedDedupSpec extends SparkSpecBase {
     q2.stop()
     assert(spark.table("sed_h2_out").collect().map(_.getAs[Long]("doc_id")).toSet === Set(2L))
   }
+
+  test("NULL vectors drop in the projection: the flagged set equals the batch anchor's") {
+    // two NULL rows, so the batch walk's one NULL bucket holds two members
+    val rows = corpus.map { case (id, v, ts) => (id, Option(v), ts) } ++ Seq(
+      (100L, None, "2024-01-01T10:30:00"), (101L, None, "2024-01-01T10:31:00"))
+    val batch = rows.toDF("doc_id", "vec", "ts")
+    val expected = SimilaritySearch.lshNeighbors(
+      batch, "doc_id", "vec", dim = Dim, nBits = Bits, k = 26)
+      .filter(col("cos") >= Threshold && col("vec_id") < col("neighbor_id"))
+      .select("neighbor_id").collect().map(_.getLong(0)).toSet
+    assert(expected === batchFlagged, "the NULL rows pair with nothing in the batch walk")
+    val src = Files.createTempDirectory("graft-sed-null-src").toString
+    batch.coalesce(1).write.mode("append").json(src)
+    val ckpt = Files.createTempDirectory("graft-sed-null-ckpt").toString
+    val q = StreamingDedup.embeddingDupStream(spark,
+      spark.readStream.schema(schema).json(src), "doc_id", "vec",
+      dim = Dim, nBits = Bits, timeCol = "ts", horizonMinutes = 600,
+      threshold = Threshold)
+      .writeStream.format("memory").queryName("sed_null_out")
+      .outputMode("append").option("checkpointLocation", ckpt)
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    assert(spark.table("sed_null_out").collect().map(_.getAs[Long]("doc_id")).toSet === expected)
+  }
 }
