@@ -89,7 +89,4 @@ object SchemaRegistry {
   val all: Seq[TableDef] = Seq(users, videos, devices, events)
 
   def get(name: String): Option[TableDef] = all.find(_.name == name)
-
-  /** ref schema_registry.py:72-74. */
-  def allTrustedTables: Seq[String] = all.map(_.trustedName)
 }

@@ -87,10 +87,13 @@ object UserSessions {
         "has_subsequent")
   }
 
-  /** Register [[ViewName]] over the current snapshot, if there is one. */
+  /** Register [[ViewName]] over the current snapshot, if there is one.
+    * A snapshot Spark reads as one split is registered as one partition
+    * ([[Storage.readParquetOneSplit]]), so the statements' per-user
+    * aggregates, windows and sorts over it plan no exchange. */
   def register(spark: SparkSession, base: String): Unit =
     Snapshot.currentPath(spark, base, Frame)
-      .foreach(Storage.readParquet(spark, _).createOrReplaceTempView(ViewName))
+      .foreach(Storage.readParquetOneSplit(spark, _).createOrReplaceTempView(ViewName))
 
   /** Commit the table as of all of `events`. */
   def refresh(spark: SparkSession, base: String, events: DataFrame): Unit = {

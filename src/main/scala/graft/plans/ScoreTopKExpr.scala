@@ -20,8 +20,9 @@ import org.apache.spark.sql.types._
   * and the unsorted multi-table/IVF form additionally ships EVERY scored
   * candidate into the top-k aggregator instead of k per visitor.
   * Semantics are identical:
-  *   - candidates = pool members with id ≠ visitor id and a non-NULL
-  *     vector; a visitor with a NULL vector has none;
+  *   - candidates = pool members with id ≠ visitor id, a non-NULL
+  *     vector and a non-NULL norm; a visitor with a NULL vector or a
+  *     NULL norm (a vector with a NULL element) has none;
   *   - cos = dot(a.v, b.v) / (a.nrm · b.nrm), dot strictly sequential
   *     (the DotProduct contract — bit-identical cross-engine);
   *   - rank = (cos DESC, neighbor_id ASC) under Java double comparison
@@ -107,8 +108,8 @@ object ScoreTopK {
     while (i < np) {
       val row = pool.getStruct(i, poolFields)
       pid(i) = row.getLong(0)
-      // a NULL vector stays null here and is never a candidate
-      if (!row.isNullAt(1)) {
+      // a NULL vector or norm stays null here and is never a candidate
+      if (!row.isNullAt(1) && !row.isNullAt(2)) {
         pv(i) = row.getArray(1).toDoubleArray()
         pn(i) = row.getDouble(2)
       }
@@ -121,8 +122,11 @@ object ScoreTopK {
     var a = 0
     while (a < nv) {
       val row = vs.getStruct(a, vsFields)
-      // a NULL vector has no neighbours (NULL vectors share one bucket)
-      val av = if (row.isNullAt(1)) null else row.getArray(1).toDoubleArray()
+      // a NULL vector or norm has no neighbours (NULL vectors share one
+      // bucket; a NULL element reads as 0.0 in toDoubleArray and makes
+      // the norm NULL)
+      val av =
+        if (row.isNullAt(1) || row.isNullAt(2)) null else row.getArray(1).toDoubleArray()
       val aid = row.getLong(0)
       val an = row.getDouble(2)
       var nBest = 0

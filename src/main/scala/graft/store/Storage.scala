@@ -129,10 +129,41 @@ object Storage {
     * `binaryAsString` and the other conversion confs of one session are
     * never served to another. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    Try(schemaFooter(spark, path).map(ParquetFileFormat.readSchemaFromFooter(
-      _, new ParquetToSparkSchemaConverter(spark.sessionState.conf)))).toOption.flatten match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None => spark.read.parquet(path)
+    footerScan(spark, path)._1
+
+  /** [[readParquet]] planned as one partition when Spark reads `path` as
+    * one split anyway: the path holds exactly one data file, no longer
+    * than `min(spark.sql.files.maxPartitionBytes,
+    * spark.sql.files.openCostInBytes)`, the bound under which
+    * `FilePartition.maxSplitBytes` never splits it, whatever the
+    * minimum partition count. The scan is then wrapped in
+    * `coalesce(1)`, which reports `SinglePartition`, so every clustered
+    * or ordered distribution above it is met without an exchange; the
+    * read is the same one task. With more files or a larger one the
+    * frame is exactly [[readParquet]]'s. The file count and length come
+    * from the listing the footer read makes, and the confs are read
+    * when the frame is built. */
+  def readParquetOneSplit(spark: SparkSession, path: String): DataFrame = {
+    val (df, dataFiles) = footerScan(spark, path)
+    val conf = spark.sessionState.conf
+    dataFiles match {
+      case Seq(file) if file.getLen <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes) =>
+        df.coalesce(1)
+      case _ => df
+    }
+  }
+
+  /** The footer-schema scan of `path` and the data files of the listing
+    * its footer came from; no files when the scan infers. */
+  private def footerScan(spark: SparkSession, path: String): (DataFrame, Seq[FileStatus]) =
+    Try {
+      val leaves = leafListing(spark, path)
+      schemaFooter(spark, leaves).map(footer => (ParquetFileFormat.readSchemaFromFooter(
+        footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf)), leaves))
+    }.toOption.flatten match {
+      case Some((schema, leaves)) =>
+        (spark.read.schema(schema).parquet(path), leaves.filterNot(s => isSummary(s.getPath.getName)))
+      case None => (spark.read.parquet(path), Nil)
     }
 
   /** Footer metadata per file path, valid while the file keeps the
@@ -140,20 +171,26 @@ object Storage {
   private val footers =
     new java.util.concurrent.ConcurrentHashMap[Path, (Long, Long, FileMetaData)]()
 
-  /** The footer [[readParquet]] takes its schema from; None when `path`
-    * holds no parquet file. */
-  private def schemaFooter(spark: SparkSession, path: String): Option[Footer] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+  /** `path` itself when it is a file, else the files under it that
+    * Spark's file index lists, in path order. */
+  private def leafListing(spark: SparkSession, path: String): Seq[FileStatus] = {
     val f = fs(spark, path)
     val root = f.getFileStatus(new Path(path))
-    val file =
-      if (!root.isDirectory) Some(root)
-      else {
-        val leaves = leafFiles(f, root).sortBy(_.getPath.toString)
-        val summaries = Seq("_common_metadata", "_metadata")
-        summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
-          .orElse(leaves.find(s => !summaries.contains(s.getPath.getName)))
-      }
+    if (!root.isDirectory) Seq(root) else leafFiles(f, root).sortBy(_.getPath.toString)
+  }
+
+  private val Summaries = Seq("_common_metadata", "_metadata")
+
+  /** A parquet summary file, which [[leafFiles]] keeps and Spark's scan
+    * does not read as data. */
+  private def isSummary(name: String): Boolean = Summaries.exists(name.startsWith)
+
+  /** The footer [[readParquet]] takes its schema from, among the
+    * `leaves` of a [[leafListing]]; None when they hold no parquet file. */
+  private def schemaFooter(spark: SparkSession, leaves: Seq[FileStatus]): Option[Footer] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = Summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+      .orElse(leaves.find(s => !Summaries.contains(s.getPath.getName)))
     file.map { st =>
       val key = st.getPath
       val cached = Option(footers.get(key))
@@ -178,7 +215,7 @@ object Storage {
       val n = s.getPath.getName
       val hidden = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
         n.endsWith("._COPYING_")
-      !hidden || n.startsWith("_common_metadata") || n.startsWith("_metadata")
+      !hidden || isSummary(n)
     }.flatMap(s => if (s.isDirectory) leafFiles(f, s) else Seq(s))
 
   /** Typed parquet scan over a trusted table (schema-on-read like the
@@ -242,14 +279,4 @@ object Storage {
     try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
     finally in.close()
   }
-
-  /** ORC scan/sink — the other columnar format Spark executes natively
-    * (vectorized reader, predicate pushdown, column pruning), for
-    * interchange with Hive/Trino-flavored warehouses. Beyond the
-    * reference (whose trusted layer is parquet-only). */
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
 }

@@ -129,13 +129,16 @@ object StreamingDedup {
       .withWatermark("event_time", s"$horizonMinutes minutes")
       .select(col(idCol).cast("long").as("doc_id"), col("event_time"),
         VectorFunctions.asDoubles(col(vecCol)).as("v"))
-      .filter(col("v").isNotNull)
+      .select(col("*"), VectorFunctions.norm(col("v")).as("nrm"))
+      // a NULL vector, or one with a NULL element (its norm is NULL), is
+      // never a candidate in the batch walk either (plans.ScoreTopK)
+      .filter(col("nrm").isNotNull)
       .select(
         // table t's key is prefixed inside lshBucketCols when nTables>1;
         // the scalar cast keeps nTables=1 keys string-typed too
         explode(array(bucketCols.map(_.cast("string")): _*)).as("key"),
         col("doc_id"), col("event_time"),
-        struct(col("v").as("_1"), VectorFunctions.norm(col("v")).as("_2")).as("payload"))
+        struct(col("v").as("_1"), col("nrm").as("_2")).as("payload"))
       .as[Arrival[String, (Seq[Double], Double)]]
 
     // exact cosine, same left-to-right accumulation as the batch

@@ -20,12 +20,12 @@ class NotebookBudgetSpec extends SparkSpecBase {
   /** statement → job ceiling. */
   val Budgets: Map[String, Int] = Map(
     "q1Analysis" -> 4,
-    "q1SuccessfulUsers" -> 3,
-    "q2Enhanced" -> 7,
-    "q2DominantGenre" -> 8,
-    "q3DropOffMetrics" -> 4,
-    "q3OverallBenchmarks" -> 2,
-    "q3CompositeScores" -> 6,
+    "q1SuccessfulUsers" -> 1,
+    "q2Enhanced" -> 2,
+    "q2DominantGenre" -> 2,
+    "q3DropOffMetrics" -> 1,
+    "q3OverallBenchmarks" -> 1,
+    "q3CompositeScores" -> 2,
     "q3WorstComboUsers" -> 1)
 
   test("every Q1-Q3 statement runs within its job budget") {

@@ -210,4 +210,18 @@ class SimilaritySearchSpec extends SparkSpecBase {
       assert(pairs === Set((1L, 2L), (2L, 1L)), s"nTables = $tables")
     }
   }
+
+  test("lshNeighbors skips vectors with a NULL element: their NULL norm never divides a cosine") {
+    val valid = Seq(Some(1.0), Some(2.0), Some(3.0), Some(4.0))
+    val nullElement = Seq(Some(1.0), None, Some(3.0), Some(4.0))
+    val corpus = spark.createDataFrame(Seq[(Long, Seq[Option[Double]])](
+      (1L, valid), (2L, valid), (3L, nullElement), (4L, nullElement))).toDF("id", "v")
+    for (tables <- Seq(1, 2)) {
+      val rows = SimilaritySearch.lshNeighbors(
+        corpus, "id", "v", dim = 4, nBits = 2, k = 3, nTables = tables).collect()
+      val pairs = rows.map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("neighbor_id"))).toSet
+      assert(pairs === Set((1L, 2L), (2L, 1L)), s"nTables = $tables")
+      assert(rows.forall(r => !r.getAs[Double]("cos").isInfinite), s"nTables = $tables")
+    }
+  }
 }

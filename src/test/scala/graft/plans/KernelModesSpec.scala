@@ -151,6 +151,20 @@ class KernelModesSpec extends SparkSpecBase {
     assert(top === Set((1L, 2L), (2L, 1L)))
   }
 
+  test("ScoreTopK: eval and codegen agree with NULL-norm members (a vector with a NULL element)") {
+    val df = stored("scoretopk_nullnorm", Seq[(Long, Seq[(Long, Seq[Option[Double]], Option[Double])])](
+      (1L, Seq((1L, Seq(Some(1.0), Some(0.0)), Some(1.0)),
+        (2L, Seq(Some(1.0), Some(1.0)), Some(math.sqrt(2.0))),
+        (3L, Seq(Some(1.0), None), None), (4L, Seq(Some(1.0), None), None))),
+      (2L, Seq((5L, Seq(None, Some(1.0)), None), (6L, Seq(None, Some(1.0)), None)))).toDF("id", "ms"))
+    assertModesAgree(df, "graft_score_topk",
+      NativeFunctions.scoreTopK(col("ms"), col("ms"), 2).as("top"))
+    val top = df.select(NativeFunctions.scoreTopK(col("ms"), col("ms"), 2))
+      .collect().flatMap(r => Option(r.getSeq[Row](0)).toSeq.flatten)
+      .map(p => (p.getLong(0), p.getLong(1))).toSet
+    assert(top === Set((1L, 2L), (2L, 1L)))
+  }
+
   override def afterAll(): Unit = {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     super.afterAll()

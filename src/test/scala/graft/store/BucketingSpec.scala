@@ -37,18 +37,4 @@ class BucketingSpec extends SparkSpecBase {
       spark.sql("DROP TABLE IF EXISTS bkt_orders")
     }
   }
-
-  test("ORC sink/scan round-trips and pushes filters to the scan") {
-    val dir = Files.createTempDirectory("graft_orc").toString
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "lang", "n_chars")
-    Storage.writeOrc(docs, s"$dir/docs_orc")
-    val back = Storage.readOrc(spark, s"$dir/docs_orc")
-    assert(back.count() === docs.count())
-    assert(back.orderBy("doc_id").collect().map(_.toSeq).toSeq ===
-      docs.orderBy("doc_id").collect().map(_.toSeq).toSeq)
-    val filtered = back.filter(col("lang") === "en").select("doc_id")
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("lang"),
-      s"ORC scan must push the lang filter:\n$plan")
-  }
 }

@@ -9,6 +9,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 import graft.{JobCounter, SparkSpecBase}
@@ -16,7 +17,9 @@ import graft.sources.Tables
 
 /** [[Storage.readParquet]]: the footer-read schema is the schema Spark's
   * own inference gives, it follows a rewritten file, it is converted
-  * under each calling session's conf, and reading starts no Spark job. */
+  * under each calling session's conf, and reading starts no Spark job.
+  * [[Storage.readParquetOneSplit]] is one partition exactly when Spark
+  * reads the path as one split. */
 class StorageSpec extends SparkSpecBase {
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
@@ -102,6 +105,27 @@ class StorageSpec extends SparkSpecBase {
     assert(Storage.readParquet(ltz, events).schema("ts").dataType === TimestampType)
     assert(Storage.readParquet(ltz, events).schema === ltz.read.parquet(events).schema)
     assert(Storage.readParquet(ntz, events).schema === ntz.read.parquet(events).schema)
+  }
+
+  test("readParquetOneSplit: one file within the split bound is one partition, else the readParquet frame") {
+    val dir = Files.createTempDirectory("graft-one-split")
+    spark.range(0, 40, 1, 1).write.parquet(s"$dir/one")
+    spark.range(0, 40, 1, 2).write.parquet(s"$dir/two")
+    def partitioning(p: String) = {
+      val (df, jobs) = JobCounter.count(spark)(Storage.readParquetOneSplit(spark, p))
+      assert(jobs === 0, p)
+      assert(df.collect().toSet === spark.read.parquet(p).collect().toSet, p)
+      df.queryExecution.sparkPlan.outputPartitioning
+    }
+    assert(partitioning(s"$dir/one") === SinglePartition)
+    assert(partitioning(s"$dir/two").isInstanceOf[UnknownPartitioning])
+    val openCost = "spark.sql.files.openCostInBytes"
+    val before = spark.conf.getOption(openCost)
+    try {
+      spark.conf.set(openCost, "1")
+      assert(partitioning(s"$dir/one").isInstanceOf[UnknownPartitioning])
+    } finally before.fold(spark.conf.unset(openCost))(spark.conf.set(openCost, _))
+    assert(partitioning(s"$dir/one") === SinglePartition)
   }
 
   test("building every table's frame starts no Spark job") {

@@ -145,28 +145,43 @@ class StreamingEmbedDedupSpec extends SparkSpecBase {
     assert(spark.table("sed_h2_out").collect().map(_.getAs[Long]("doc_id")).toSet === Set(2L))
   }
 
-  test("NULL vectors drop in the projection: the flagged set equals the batch anchor's") {
-    // two NULL rows, so the batch walk's one NULL bucket holds two members
-    val rows = corpus.map { case (id, v, ts) => (id, Option(v), ts) } ++ Seq(
-      (100L, None, "2024-01-01T10:30:00"), (101L, None, "2024-01-01T10:31:00"))
+  /** The corpus plus `extra` rows, batch and streamed: the stream's
+    * flagged set equals the batch anchor's, and `extra` adds no pair to
+    * the anchor. */
+  private def assertExtraRowsPairWithNothing(extra: Seq[(Long, Option[Seq[Option[Double]]], String)],
+      name: String): Unit = {
+    val rows = corpus.map { case (id, v, ts) => (id, Option(v.map(Option(_))), ts) } ++ extra
     val batch = rows.toDF("doc_id", "vec", "ts")
     val expected = SimilaritySearch.lshNeighbors(
       batch, "doc_id", "vec", dim = Dim, nBits = Bits, k = 26)
       .filter(col("cos") >= Threshold && col("vec_id") < col("neighbor_id"))
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
-    assert(expected === batchFlagged, "the NULL rows pair with nothing in the batch walk")
-    val src = Files.createTempDirectory("graft-sed-null-src").toString
+    assert(expected === batchFlagged, s"the $name rows pair with nothing in the batch walk")
+    val src = Files.createTempDirectory(s"graft-sed-$name-src").toString
     batch.coalesce(1).write.mode("append").json(src)
-    val ckpt = Files.createTempDirectory("graft-sed-null-ckpt").toString
+    val ckpt = Files.createTempDirectory(s"graft-sed-$name-ckpt").toString
     val q = StreamingDedup.embeddingDupStream(spark,
       spark.readStream.schema(schema).json(src), "doc_id", "vec",
       dim = Dim, nBits = Bits, timeCol = "ts", horizonMinutes = 600,
       threshold = Threshold)
-      .writeStream.format("memory").queryName("sed_null_out")
+      .writeStream.format("memory").queryName(s"sed_${name}_out")
       .outputMode("append").option("checkpointLocation", ckpt)
       .start()
     q.processAllAvailable()
     q.stop()
-    assert(spark.table("sed_null_out").collect().map(_.getAs[Long]("doc_id")).toSet === expected)
+    assert(spark.table(s"sed_${name}_out").collect().map(_.getAs[Long]("doc_id")).toSet === expected)
+  }
+
+  test("NULL vectors drop in the projection: the flagged set equals the batch anchor's") {
+    // two NULL rows, so the batch walk's one NULL bucket holds two members
+    assertExtraRowsPairWithNothing(Seq(
+      (100L, None, "2024-01-01T10:30:00"), (101L, None, "2024-01-01T10:31:00")), "null")
+  }
+
+  test("vectors with a NULL element drop in the projection: the flagged set equals the batch anchor's") {
+    // two copies, so the batch walk buckets them together; their norm is NULL
+    val v = Some(Some(1.0) +: None +: Seq.fill(Dim - 2)(Some(0.5)))
+    assertExtraRowsPairWithNothing(Seq(
+      (100L, v, "2024-01-01T10:30:00"), (101L, v, "2024-01-01T10:31:00")), "null_element")
   }
 }
