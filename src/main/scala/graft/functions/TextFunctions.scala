@@ -115,59 +115,6 @@ object TextFunctions {
     aggregate(zip_with(sigA, sigB, (a, b) => when(a === b, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / size(sigA)
 
-  /** SimHash bit vector (length `bits`, must be 64) over whitespace
-    * tokens: bit j is 1 iff the sum over tokens of ±1 votes is positive,
-    * where token t's vote for bit j is bit j of t's 64-bit hash — the
-    * classic single-hash SimHash. The hash is md5's first 16 hex chars
-    * split into two 32-bit words (cross-engine verifiable: DuckDB
-    * recomputes them with the same substr/hex-cast, so dd_simhash is
-    * oracle-gated). Per-token hashes are materialized FIRST (the
-    * aggregate input — evaluated once per token), never inside the vote
-    * lambda where interpreted HOFs would recompute md5 per bit. One
-    * projection, no shuffle. */
-  def simhashBits(tokenArr: Column, bits: Int): Column = {
-    require(bits == 64, "simhashBits derives votes from one 64-bit hash")
-    // hash words: [hi32, lo32] from md5 hex chars 1-8 / 9-16
-    val tokHashes = transform(tokenArr, t => array(
-      conv(substring(md5(t), 1, 8), 16, 10).cast("long"),
-      conv(substring(md5(t), 9, 8), 16, 10).cast("long")))
-    transform(
-      aggregate(
-        tokHashes,
-        array_repeat(lit(0L), bits),
-        (acc, h) => zip_with(
-          acc,
-          transform(sequence(lit(0), lit(bits - 1)), j => {
-            // bit j of the 64-bit hash: word hi for j<32, lo after;
-            // (word >> (31 - j%32)) & 1 — identical arithmetic in DuckDB
-            val word = element_at(h, when(j < 32, 1).otherwise(2))
-            val bit = call_function("shiftright", word, lit(31) - pmod(j, lit(32)))
-              .bitwiseAND(lit(1L))
-            when(bit === 1, 1L).otherwise(-1L)
-          }),
-          (a, b) => a + b)),
-      v => when(v > 0, 1).otherwise(0))
-  }
-
-  /** A `bits`-element (≤ 64) 0/1 bit array packed into ONE long: bit i
-    * of the result = element i of the array (position-preserving — the
-    * packed form's band-b shift+mask slice equals the array form's
-    * slice, the contract Dedup's packed machinery rides). Bit 63 lands
-    * in the sign position, which is fine: xor/bit_count/masked-shift
-    * are all sign-agnostic. `bits` is an explicit literal so `bitsArr`
-    * is referenced EXACTLY ONCE — a size(bitsArr)-based range would be
-    * a second reference, and CollapseProject then macro-expands a
-    * non-attribute argument (the whole simhash vote tree) once per
-    * reference: measured 3.65s → 7.07s on the banding stage before
-    * this was a parameter. */
-  def packBits(bitsArr: Column, bits: Int): Column = {
-    require(bits >= 1 && bits <= 64, s"packBits packs 1..64 bits, got $bits")
-    aggregate(
-      zip_with(bitsArr, sequence(lit(0), lit(bits - 1)),
-        (b, i) => call_function("shiftleft", b.cast("long"), i)),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
   /** Exact Jaccard similarity of two (distinct-element) arrays. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") /

@@ -22,15 +22,11 @@ object VectorFunctions {
     * the inner loop of bucketing, scoring, and assignment. The column
     * carries the expression itself, so it needs nothing registered on
     * the session. Accumulation order (sequential left-to-right) is
-    * bit-identical to `dotHof` and to DuckDB's list_dot_product
+    * bit-identical to the test-side HOF reference `ReferenceModels.dotHof`
+    * and to DuckDB's list_dot_product
     * (asserted in spec), so oracle parity is unchanged. */
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** The HOF formulation — kept as the executable spec of `dot`'s
-    * accumulation order. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 

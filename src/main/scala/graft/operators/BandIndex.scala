@@ -17,15 +17,15 @@ import graft.store.Bucketing
   *   - [[pairs]]: all pairs of one frame, one grouped bucket walk;
   *   - [[build]]: the key-stable per-bucket occupancy cap, applied when
   *     an index is built (capping is idempotent);
-  *   - [[write]] / [[append]]: the persisted layout, bucketed and sorted
-  *     on the fused band key `bb`;
+  *   - [[write]]: the persisted layout, bucketed and sorted on the
+  *     fused band key `bb`;
   *   - [[probe]]: the O(Δ) delta × corpus join;
   *   - [[multiprobe]] / [[probePairs]]: flipped-key probing for the
   *     wide-band rungs of a [[BandPlan]], chosen by [[planFor]].
   *
   * A production ingest loop builds (and caps) the corpus index once per
-  * corpus version, persists it with [[write]], grows it with [[append]],
-  * and serves every delta batch with [[probe]]: the delta pays one
+  * corpus version, persists it with [[write]], and serves every delta
+  * batch with [[probe]]: the delta pays one
   * signature projection and one equi-join, and a bucketed corpus side
   * shuffles nothing. */
 object BandIndex {
@@ -207,15 +207,6 @@ object BandIndex {
   def write(index: DataFrame, table: String, nBuckets: Int,
       path: Option[String] = None): Unit =
     Bucketing.writeBucketed(withBandKey(index), table, "bb", nBuckets, path)
-
-  /** APPEND a batch's band rows into a table written by [[write]], with
-    * the build-time decisions FROZEN: the occupancy cap is not re-run
-    * (appends can push a bucket past it; rebuilding — idempotent over
-    * the stored index — re-caps), and the layout is preserved so probes
-    * stay delta-only-exchange. The batch must be banded at the index's
-    * band cut. */
-  def append(banded: DataFrame, table: String, nBuckets: Int): Unit =
-    Bucketing.appendBucketed(withBandKey(banded), table, "bb", nBuckets)
 
   /** The delta × corpus band join: probing rows meet index rows on the
     * band key, and identical-id pairs drop there (the cheapest point,

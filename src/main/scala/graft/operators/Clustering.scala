@@ -133,16 +133,4 @@ object Clustering {
       .select(col("id").as("vec_id"),
         assignCol(cents, literalMaxTerms).as("cluster_id"))
   }
-
-  /** Cluster assignment plus per-cluster size and the member's rank by
-    * id within its cluster — the shape a curation pass consumes when
-    * capping per-cluster contributions (semantic diversity sampling). */
-  def kmeansWithSizes(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int = 8, iters: Int = 2, roundDp: Int = 6): DataFrame = {
-    val assigned = kmeansAssign(corpus, idCol, vecCol, k, iters, roundDp)
-    val sizes = assigned.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    assigned.join(broadcast(sizes), "cluster_id")
-      .select(col("vec_id"), col("cluster_id"), col("cluster_size"))
-  }
 }

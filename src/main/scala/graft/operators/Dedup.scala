@@ -99,27 +99,6 @@ object Dedup {
         count(lit(1)).as("n_docs"),
         min(col(idCol)).as("canonical_id"))
 
-  /** INCREMENTAL exact dedup: delta docs whose content fingerprint
-    * already exists in the corpus, with the corpus canonical they
-    * duplicate — the O(Δ)-per-ingest filter a pipeline runs before
-    * admitting a batch. The corpus side is its persistable
-    * (fingerprint, canonical_id) index — [[exactGroups]]' output, 16 B
-    * fingerprints + one id per distinct content, storable as parquet —
-    * so an ingest pays one delta fingerprint projection and one
-    * equi-join on the 32-char key. A re-ingested doc that IS its
-    * group's canonical is not its own duplicate (filtered); a
-    * re-ingested non-canonical member still reports the canonical it
-    * duplicates, which is the answer the admit filter wants. */
-  def exactDuplicatesIncremental(
-      delta: DataFrame, corpus: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val idx = exactGroups(corpus, idCol, textCol)
-      .select(col("fingerprint"), col("canonical_id"))
-    delta.select(col(idCol).as("delta_id"), md5(col(textCol)).as("fingerprint"))
-      .join(idx, Seq("fingerprint"))
-      .filter(col("delta_id") =!= col("canonical_id"))
-      .select(col("delta_id"), col("canonical_id"), col("fingerprint"))
-  }
-
   /** Near-duplicate pairs by exact n-gram Jaccard, generated through an
     * inverted shingle index (shingle → posting list) instead of a
     * cartesian product: docs sharing no shingle are never paired.
@@ -765,18 +744,17 @@ object Dedup {
       "doc", "sig", plan, maxBucket, maxScore = Some(maxHamming))
       .transform(withinHamming(plan, maxHamming))
 
-  /** (doc, sig: long) packed SimHash signatures — [[simhashBits]]'s 64
-    * votes folded into one long (bit i = classic signature position i,
-    * TextFunctions.packBits). */
+  /** (doc, sig: long) packed SimHash signatures — the 64 classic
+    * SimHash votes folded into one long (bit i = signature position i). */
   private def simhashPackedSigs(
       df: DataFrame, idCol: String, textCol: String,
       bits: Int, minTokens: Int): DataFrame = {
     // codegen'd Catalyst expression (graft.plans.SimHash64) —
-    // bit-identical to packBits(simhashBits(toks)) by differential spec,
-    // but the 64-vote loop compiles instead of interpreting 64 per-bit
-    // expression trees per token (profiled at ~5 s of dd_simhash's 6 s
-    // at sf0.1; the md5 calls themselves — the cross-engine-
-    // verifiability anchor — are negligible).
+    // bit-identical to the test-side ReferenceModels' HOF SimHash by
+    // differential spec, but the 64-vote loop compiles instead of
+    // interpreting 64 per-bit expression trees per token (profiled at
+    // ~5 s of dd_simhash's 6 s at sf0.1; the md5 calls themselves — the
+    // cross-engine-verifiability anchor — are negligible).
     require(bits == 64, s"SimHash signatures are 64 bits; bits = $bits is not supported")
     df.select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
       // degenerate-doc guard: tokens('') = [''] so every empty/whitespace
@@ -1048,26 +1026,6 @@ object Dedup {
     graft.store.Bucketing.writeBucketed(
       spanPostingIndex(corpus, idCol, textCol, k, maxDocFreqFraction, fast),
       table, "h", nBuckets, path)
-
-  /** APPEND a new batch's postings into an existing bucketed span
-    * posting index — the O(Δ) index-maintenance flow, under the SAME
-    * frozen-decision contract as `ProductQuantization.appendToIvfPqIndex`:
-    * the original corpus's doc-freq guard decisions stay as built (the
-    * appended postings ship unguarded — a shingle's boilerplate-ness is
-    * re-judged only at rebuild, where the guard is recomputed over the
-    * union; the guard and caps are idempotent, so rebuilding FROM the
-    * stored index re-applies them correctly). Layout is preserved
-    * (`Bucketing.appendBucketed` routes rows into the existing
-    * buckets), so ingest searches stay single-exchange. Spec contract:
-    * search after append ≡ search against the union of the guarded
-    * corpus index and the delta's unguarded postings. */
-  def appendToSpanPostingIndexBucketed(
-      batch: DataFrame, idCol: String, textCol: String,
-      table: String, nBuckets: Int,
-      k: Int = DefaultSpanK, fast: Boolean = false): Unit =
-    graft.store.Bucketing.appendBucketed(
-      positionalPosting(batch, idCol, textCol, k, None, fast),
-      table, "h", nBuckets)
 
   /** [[sharedSpansIncremental]] against an already-built (possibly
     * persisted-and-reloaded) [[spanPostingIndex]]. */

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.{asDoubles, reassembleByPos}
+import graft.functions.VectorFunctions.asDoubles
 
 /** Feature-space preprocessing for embedding columns — the
   * normalization pass before clustering/ANN indexing when dimensions
@@ -32,12 +32,4 @@ object Features {
           .otherwise((col("x") - col("mn")) / (col("mx") - col("mn")))
           .as("x_norm"))
   }
-
-  /** Same normalization reassembled into an `array<double>` column —
-    * the form the clustering/ANN operators consume. One extra
-    * groupBy(id) to regroup components. */
-  def minMaxNormalizeVectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    minMaxNormalize(df, idCol, vecCol)
-      .groupBy(idCol)
-      .agg(reassembleByPos(col("pos"), col("x_norm")).as("embedding_norm"))
 }

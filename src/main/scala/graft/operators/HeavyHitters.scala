@@ -205,8 +205,8 @@ object HeavyHitters {
 
   // ------------------------------------------------------------------
   // Persisted candidate index + exact O(Δ)-ingest incremental search —
-  // the frozen-contract posture the MinHash/SimHash/span/IVF-PQ
-  // families use: build once over the corpus, serve thresholds from
+  // the build-once posture of the MinHash/SimHash/span/IVF-PQ
+  // indexes: build once over the corpus, serve thresholds from
   // the index alone, ingest deltas without re-counting the corpus.
   // ------------------------------------------------------------------
 
@@ -221,14 +221,11 @@ object HeavyHitters {
     * guarantee than the index was built with (the `_lsh_meta.txt`
     * lesson), so every consumer derives them from the index and
     * VALIDATES φ against the built capacity. Versioning through the
-    * snapshot pointer makes counts+total change TOGETHER: the
-    * round-12 flat layout wrote candidates then meta as two separate
-    * steps, so a crash between them served merged counts against a
-    * stale total (wrong thresholds) and a retried append
-    * double-counted the delta — under the pointer, a reader resolves
-    * one version of BOTH or (mid-crash) the previous version of both,
-    * and a retried [[appendToIndex]] re-runs against the still-current
-    * old snapshot, which makes retry idempotent instead of forbidden. */
+    * snapshot pointer makes counts+total change TOGETHER: a flat layout
+    * that wrote candidates then meta as two separate steps could, after
+    * a crash between them, serve new counts against a stale total
+    * (wrong thresholds) — under the pointer, a reader resolves one
+    * version of BOTH or (mid-crash) the previous version of both. */
   private val MetaFile = "_hh_meta.txt"
 
   private[operators] case class HhMeta(gramN: Int, capacity: Int, total: Long)
@@ -291,89 +288,6 @@ object HeavyHitters {
     readCandidates(spark, indexPath)
       .filter(col("cnt") >= math.ceil(phi * m.total).toLong)
       .orderBy(col("cnt").desc, col("gram"))
-  }
-
-  /** APPEND a delta into the persisted index under the BUILT capacity —
-    * the frozen-contract ingest every other persisted-index family has
-    * (BandIndex.append, appendToSpanPostingIndexBucketed,
-    * appendToEmbBucketIndexBucketed): after the merge, the index serves
-    * ANY φ with capacity > 1/φ exactly, same as a from-scratch
-    * [[buildIndex]] over corpus ∪ delta.
-    *
-    * Why the merged superset stays sufficient at the SAME capacity: a
-    * gram outside BOTH candidate sets has corpus count ≤ N/capacity and
-    * delta count ≤ M/capacity (the per-side MG survival bounds), so its
-    * combined count is ≤ (N+M)/capacity — below every servable
-    * threshold. Stored counts stay EXACT: indexed grams absorb one
-    * exact delta count (one delta scan over the merged candidate set);
-    * the delta's new candidates get a corpus recount RESTRICTED to
-    * exactly those grams — one bounded corpus job, skipped entirely
-    * when the delta introduces no new candidates (the dominant ingest
-    * posture; `corpus` is never otherwise touched). The sidecar total
-    * advances to N + M. Returns the reloaded merged index.
-    *
-    * Publish is ONE snapshot commit (counts+total in the same
-    * version, atomic pointer rename — see the index-layout scaladoc),
-    * so a crash anywhere leaves the pre-append index fully servable
-    * and a RETRY after partial failure is idempotent: it re-reads the
-    * still-current old snapshot and re-merges the same delta once. */
-  def appendToIndex(
-      corpus: DataFrame, delta: DataFrame, textCol: String,
-      indexPath: String): DataFrame = {
-    val spark = delta.sparkSession
-    import spark.implicits._
-    val m = readMeta(spark, indexPath)
-    val idx = readCandidates(spark, indexPath)
-
-    val dGrams = gramStream(delta, textCol, m.gramN)
-    val (dTotal, dCandSeq) = collectSummaries(dGrams, m.capacity)
-    val dCand = dCandSeq.toDF("gram")
-
-    // one delta scan counts the union candidate set exactly — LEFT SEMI
-    // against the (possibly overlapping) union: the semi join keeps each
-    // gram occurrence at most once however many candidate rows match, so
-    // the former `.distinct()` exchange+job over the union is free to go
-    val allCand = idx.select("gram").union(dCand)
-    val dCounts = dGrams.toDF()
-      .join(broadcast(allCand), Seq("gram"), "left_semi")
-      .groupBy("gram").agg(count(lit(1)).as("d_cnt"))
-      .localCheckpoint(eager = false)
-
-    // New entrants need their exact corpus count (0 when absent) — the
-    // only corpus access, restricted to a candidate-sized gram set.
-    // NEVER-SERVABLE candidates drop first: an unindexed gram has
-    // corpus count ≤ N/capacity (MG bound), so unless its exact delta
-    // count exceeds M/capacity its combined count is ≤ (N+M)/capacity —
-    // below ⌈φ·(N+M)⌉ for every valid φ > 1/capacity, now and under
-    // the same invariant after any future append. Dropping them keeps
-    // the dominant same-distribution ingest corpus-free (O(Δ) — the
-    // spec proves it by physically deleting the corpus files), exactly
-    // like heavyHittersIncremental's crosser filter, while recounted
-    // survivors keep every stored count exact.
-    val freshDf = dCand.join(idx.select("gram"), Seq("gram"), "left_anti")
-      .join(dCounts, Seq("gram"))
-      .filter(col("d_cnt") * lit(m.capacity.toLong) > lit(dTotal))
-      .select("gram")
-      .localCheckpoint(eager = false)
-    val corpusCounts =
-      if (freshDf.isEmpty) idx
-      else {
-        val recount = gramStream(corpus, textCol, m.gramN).toDF()
-          .join(broadcast(freshDf), "gram")
-          .groupBy("gram").agg(count(lit(1)).as("cnt"))
-        idx.unionByName(freshDf.join(recount, Seq("gram"), "left")
-          .select(col("gram"), coalesce(col("cnt"), lit(0L)).as("cnt")))
-      }
-
-    val merged = corpusCounts.join(dCounts, Seq("gram"), "left")
-      .select(col("gram"),
-        (col("cnt") + coalesce(col("d_cnt"), lit(0L))).as("cnt"))
-    // no eager checkpoint needed: the snapshot commit writes v<N+1>
-    // WHILE v<N>'s parquet files stay live (versioned dirs never
-    // overwrite their own inputs), and vacuum keeps v<N> as the
-    // in-flight readers' grace window
-    commitIndex(spark, indexPath, merged, HhMeta(m.gramN, m.capacity, m.total + dTotal))
-    readCandidates(spark, indexPath)
   }
 
   /** Exact heavy hitters over corpus ∪ delta, touching the corpus text

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Data-layout optimization: multi-dimensional clustering via Z-order
@@ -36,21 +36,4 @@ object Layout {
     * exactly these positions). */
   def zorderKey(x: Column, y: Column, bitsPer: Int = 21): Column =
     zorderKey(Seq(x, y), bitsPer)
-
-  /** Write `df` clustered by the Z-order of `cols` into `nFiles`
-    * range-partitioned, internally sorted parquet files. Range
-    * partitioning (not hash) keeps the key space contiguous per file —
-    * that contiguity is what bounds each file's min/max extent in every
-    * source dimension. */
-  def zorderWrite(df: DataFrame, cols: Seq[String], nFiles: Int,
-      path: String, bitsPer: Int): Unit =
-    df.withColumn("__z", zorderKey(cols.map(col), bitsPer))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-
-  def zorderWrite(df: DataFrame, xCol: String, yCol: String,
-      nFiles: Int, path: String, bitsPer: Int = 21): Unit =
-    zorderWrite(df, Seq(xCol, yCol), nFiles, path, bitsPer)
 }

@@ -56,8 +56,8 @@ object MediaCodec {
     // BMP stores rows BOTTOM-UP (positive height) in B,G,R channel
     // order; write both so a conforming decoder (javax.imageio) returns
     // EXACTLY the input array — before round 11 the rows were copied
-    // verbatim, which decodeBmp/resizeBmp24 never noticed (mean and
-    // storage-space resample are order-invariant) but made an ImageIO
+    // verbatim, which decodeBmp never noticed (the mean is
+    // order-invariant) but made an ImageIO
     // decode of our own BMP vertically mirrored vs a PNG of the same
     // pixels, breaking cross-container perceptual-hash equality.
     val rowBytes = width * 3
@@ -108,41 +108,6 @@ object MediaCodec {
     }
     val n = rowBytesL * height
     Some(BmpInfo(width, height, bpp, sum.toDouble / n))
-  }
-
-  /** Nearest-neighbor resize of a 24bpp BMP (the classic integer-only
-    * resample: src pixel = (dst·srcDim)/dstDim, floor). Decode →
-    * resample → re-encode, all pure JVM; None if the input isn't a
-    * well-formed 24bpp BMP or the target stride isn't 4-byte aligned. */
-  def resizeBmp24(bytes: Array[Byte], newWidth: Int, newHeight: Int): Option[Array[Byte]] = {
-    if (newWidth <= 0 || newHeight <= 0 || newWidth * 3 % 4 != 0 ||
-      newWidth.toLong * newHeight * 3 > Int.MaxValue - BmpHeaderSize) return None
-    decodeBmp(bytes).map { info =>
-      val dataOff = rd32(bytes, 10)
-      val stride = (info.width * 3 + 3) / 4 * 4
-      // work in LOGICAL space (top-down rows, R,G,B): storage row s is
-      // logical row h-1-s in B,G,R — encodeBmp24 converts back, so the
-      // resample anchors at the logical top-left like every other
-      // resize in the codebase, independent of BMP's bottom-up storage
-      val out = new Array[Byte](newWidth * newHeight * 3)
-      var y = 0
-      while (y < newHeight) {
-        val sy = (y.toLong * info.height / newHeight).toInt
-        val srcRow = dataOff + (info.height - 1 - sy) * stride
-        var x = 0
-        while (x < newWidth) {
-          val sx = (x.toLong * info.width / newWidth).toInt
-          val src = srcRow + sx * 3
-          val dst = (y * newWidth + x) * 3
-          out(dst) = bytes(src + 2) // R
-          out(dst + 1) = bytes(src + 1) // G
-          out(dst + 2) = bytes(src) // B
-          x += 1
-        }
-        y += 1
-      }
-      encodeBmp24(newWidth, newHeight, out)
-    }
   }
 
   // ---- JPEG / PNG via javax.imageio (public JDK API) -----------------

@@ -1,31 +1,25 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) column plumbing for training-data
   * pipelines: media travels as opaque `binary` columns with typed
-  * metadata structs; decode / feature-extraction / resize / frame-sample
-  * run per-partition over iterators so a real codec drops in without
-  * touching the dataflow.
+  * metadata structs, and decode / feature extraction run per-partition
+  * over iterators so a real codec drops in without touching the
+  * dataflow.
   *
-  * Decoding is REAL for two public formats: BMP and WAV payloads are
+  * Decoding is REAL for the public formats: BMP and WAV payloads are
   * parsed byte-for-byte by `MediaCodec` (magic, header geometry, sample
-  * stats), and `extractDecodedFeatures` dispatches by sniffing the
-  * payload — an undecodable container (here: the mp4 rows; in
-  * production: any corrupt member) degrades to a metadata-only row
-  * rather than failing the job. `decodeStub` remains as the
-  * content-agnostic pseudo-feature path (checksum/entropy work on any
-  * bytes); a JNI/javacv codec for further formats drops into the same
-  * mapPartitions contract.
+  * stats), PNG and JPEG through `javax.imageio`, and the extractors
+  * dispatch by sniffing the payload — an undecodable container (here:
+  * the mp4 rows; in production: any corrupt member) degrades to a
+  * metadata-only row rather than failing the job.
   *
-  * Scale notes: media rows are 10⁴-10⁷ bytes, so the operative limits
-  * are row-group size and partition bytes, not row counts. `repartitionForMedia`
-  * targets a budget of bytes per partition (decode is CPU-bound, so
-  * partitions ≈ cores × small multiple). Features detach from bytes
-  * early (`select` away the blob) so downstream shuffles never carry
-  * media payloads.
+  * Scale note: media rows are 10⁴-10⁷ bytes, so the operative limits
+  * are row-group size and partition bytes, not row counts. Features
+  * detach from bytes early (`select` away the blob) so downstream
+  * shuffles never carry media payloads.
   */
 object Multimodal {
 
@@ -38,117 +32,6 @@ object Multimodal {
       height: Int,
       duration_ms: Long,
       bytes: Array[Byte])
-
-  /** Extracted per-item features (what downstream training filters on). */
-  case class MediaFeatures(
-      media_id: Long,
-      kind: String,
-      n_bytes: Long,
-      checksum: Long,
-      brightness: Double, // stub: mean byte value / 255
-      entropy: Double, // stub: byte-histogram entropy
-      aspect_ratio: Double)
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("format", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false),
-    StructField("bytes", BinaryType, nullable = true)))
-
-  /** STUB decode: deterministic features from raw bytes. A real
-    * implementation decodes the payload (libjpeg/ffmpeg/…) here; the
-    * signature — bytes in, fixed-width features out, executed inside
-    * mapPartitions — is the contract that survives the swap. */
-  private[operators] def decodeStub(r: MediaRow): MediaFeatures = {
-    val bytes = Option(r.bytes).getOrElse(Array.emptyByteArray)
-    val hist = new Array[Long](256)
-    var sum = 0L
-    var crc = 17L
-    var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i) & 0xff
-      hist(b) += 1
-      sum += b
-      crc = crc * 31 + b
-      i += 1
-    }
-    val n = bytes.length.toDouble
-    val entropy = if (n == 0) 0.0 else {
-      var e = 0.0
-      var j = 0
-      while (j < 256) {
-        if (hist(j) > 0) { val p = hist(j) / n; e -= p * math.log(p) / math.log(2) }
-        j += 1
-      }
-      e
-    }
-    MediaFeatures(
-      r.media_id, r.kind, bytes.length.toLong, crc,
-      if (n == 0) 0.0 else sum / n / 255.0,
-      entropy,
-      if (r.height == 0) 0.0 else r.width.toDouble / r.height)
-  }
-
-  /** Repartition a media Dataset so each partition holds roughly
-    * `targetBytes` of payload (decode parallelism follows data volume,
-    * not row count). Uses a cheap metadata pass over byte lengths. */
-  def repartitionForMedia(df: DataFrame, bytesCol: String, targetBytes: Long): DataFrame = {
-    val total = df.select(sum(coalesce(length(col(bytesCol)), lit(0))))
-      .collect()(0).get(0) match {
-      case null => 0L
-      case n: Long => n
-      case n: Number => n.longValue()
-    }
-    val parts = math.max(1, math.min(10000, (total / math.max(1L, targetBytes)).toInt + 1))
-    df.repartition(parts)
-  }
-
-  /** Feature extraction: typed mapPartitions so a real decoder can hold
-    * per-partition state (codec contexts, buffers) across rows. The blob
-    * column is dropped on output — features are shuffle-safe. */
-  def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(decodeStub))
-  }
-
-  /** Image resize: nearest-neighbor downscale of every decodable 24bpp
-    * BMP to (`newWidth`, `newHeight`) — the standard thumbnail/
-    * normalization pass before feature extraction. A REAL resample
-    * (MediaCodec.resizeBmp24 decodes, resamples, re-encodes); rows that
-    * aren't well-formed BMPs pass through with null output bytes rather
-    * than failing the batch (per-item error isolation, like
-    * extractDecodedFeatures). Typed mapPartitions, streaming — one
-    * output row per input row, no per-partition accumulation. */
-  def resizeImages(media: Dataset[MediaRow], newWidth: Int, newHeight: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { r =>
-      val resized = Option(r.bytes)
-        .flatMap(b => MediaCodec.resizeBmp24(b, newWidth, newHeight))
-      (r.media_id, r.kind, Option(r.bytes).map(_.length).getOrElse(0),
-        resized.orNull, resized.map(_ => newWidth), resized.map(_ => newHeight))
-    }).toDF("media_id", "kind", "orig_n_bytes", "resized", "width", "height")
-  }
-
-  /** Frame sampling plumbing for video rows: emits (media_id, frame_idx,
-    * frame_bytes) slices every `everyMs` without decoding — the slice
-    * boundaries are the stub; a real sampler seeks keyframes. One input
-    * row fans out to duration/everyMs rows (flatMap keeps it streaming,
-    * nothing accumulates per partition). */
-  def sampleFrames(media: Dataset[MediaRow], everyMs: Long): DataFrame = {
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      val frames = math.max(0L, r.duration_ms / math.max(1L, everyMs))
-      val bytes = Option(r.bytes).getOrElse(Array.emptyByteArray)
-      (0L until frames).map { f =>
-        val from = ((f * math.max(1, bytes.length)) / math.max(1L, frames)).toInt
-        val until = math.min(bytes.length, from + 64)
-        (r.media_id, f, bytes.slice(from, until))
-      }
-    }.toDF("media_id", "frame_idx", "frame_bytes")
-  }
 
   /** Decoded per-item features — every non-null value here came out of
     * a REAL header/sample parse (MediaCodec), which is what makes the

@@ -253,24 +253,13 @@ object PerceptualHash {
   // property of the corpus's true duplication structure, detected
   // pre-flight by the [[phashBanded]] occupancy probe and bounded by
   // the hot-bucket cap — while the packed representation keeps each
-  // surviving candidate at one XOR+POPCNT. The medians are a FROZEN
-  // MODEL (63 longs — the quality-classifier convention): built once
-  // over the corpus, shipped as plan literals, reused verbatim for
-  // delta scoring so signatures never shift under ingest.
-
-  /** Per-position corpus lower-medians of the 63 AC coefficients — the
-    * de-biased variant's frozen model. The k-th smallest
-    * (k = ⌈n/2⌉ = (n+1)/2, integer) is computed per position from a
-    * count-per-distinct-value histogram + cumulative window (63
-    * bounded partitions — never a per-position value list in one
-    * buffer), so the build is one linear pass + one histogram-sized
-    * sort however large the corpus. */
-  def phashMedians(media: Dataset[Multimodal.MediaRow]): Array[Long] =
-    phashMediansFromCoefs(acTable(media))
+  // surviving candidate at one XOR+POPCNT. The medians are 63 longs
+  // (the quality-classifier convention): computed once over the
+  // corpus and shipped as plan literals.
 
   /** The (media_id, coefs) AC-coefficient table — ONE decode+DCT pass;
-    * the de-biased entry points below stage it so medians and
-    * signatures share a single decode of the corpus. */
+    * [[phashSignaturesDebiased]] stages it so medians and signatures
+    * share a single decode of the corpus. */
   private def acTable(media: Dataset[Multimodal.MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.flatMap { m =>
@@ -279,7 +268,13 @@ object PerceptualHash {
     }).toDF("media_id", "coefs")
   }
 
-  private def phashMediansFromCoefs(coefs: DataFrame): Array[Long] = {
+  /** Per-position corpus lower-medians of the 63 AC coefficients of a
+    * [[acTable]]. The k-th smallest (k = ⌈n/2⌉ = (n+1)/2, integer) is
+    * computed per position from a count-per-distinct-value histogram +
+    * cumulative window (63 bounded partitions — never a per-position
+    * value list in one buffer), so the build is one linear pass + one
+    * histogram-sized sort however large the corpus. */
+  private def phashMedians(coefs: DataFrame): Array[Long] = {
     import org.apache.spark.sql.expressions.Window
     val hist = coefs
       // outer + null-drop: skips InferFiltersFromGenerate (a non-outer
@@ -301,29 +296,6 @@ object PerceptualHash {
     val med = new Array[Long](PhashBits)
     rows.foreach(r => med(r.getInt(0)) = r.getLong(1))
     med
-  }
-
-  /** Packed de-biased signatures AGAINST A FROZEN median model: bit i =
-    * (ac_i > medians(i)). The medians enter the mapPartitions closure as
-    * literals — scoring a delta against a persisted model touches only
-    * the delta (the frozen-model incremental contract). */
-  def phashSignaturesWithMedians(media: Dataset[Multimodal.MediaRow],
-      medians: Array[Long]): DataFrame = {
-    require(medians.length == PhashBits, s"need $PhashBits medians")
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { m =>
-      MediaCodec.decodeRgb(Option(m.bytes).getOrElse(Array.emptyByteArray))
-        .map { img =>
-          val ac = acOfRgb(img)
-          var sig = 0L
-          var i = 0
-          while (i < ac.length) {
-            if (ac(i) > medians(i)) sig |= (1L << i)
-            i += 1
-          }
-          (m.media_id, sig)
-        }
-    }).toDF("media_id", "sig")
   }
 
   /** End-to-end IMAGE curation — the tp_curate of the image modality:
@@ -357,15 +329,10 @@ object PerceptualHash {
         col("quality_score").cast("long").as("pixels"), col("cluster_size"))
   }
 
-  /** De-biased image near-duplicate pairs: [[phashPairs]]'s banded walk
-    * over corpus-median signatures (self-trained — the model is the
-    * corpus's own medians; production ingest freezes [[phashMedians]]
-    * once and scores deltas with [[phashSignaturesWithMedians]]).
-    * Output (doc_a, doc_b, hamming). */
-  def phashPairsDebiased(media: Dataset[Multimodal.MediaRow],
-      plan: BandPlan = DefaultPhashPlan,
-      maxHamming: Int = DefaultMaxHamming,
-      maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)): DataFrame = {
+  /** Packed de-biased signatures (media_id, sig): bit i = (ac_i >
+    * the corpus lower-median of AC position i), so every bit is ~50/50
+    * balanced over the corpus by construction. */
+  private[operators] def phashSignaturesDebiased(media: Dataset[Multimodal.MediaRow]): DataFrame = {
     // ONE decode+DCT pass: the former composition ran the full
     // decode+AC pipeline TWICE per execution — once inside
     // phashMedians' histogram and again for the signatures. At the
@@ -376,11 +343,9 @@ object PerceptualHash {
     // 63-long coefficient table (~0.5 KB/image) stages once and feeds
     // both. Medians and the (ac_i > med_i) packing are
     // formula-identical, so pairs — and the DuckDB gate hash — are
-    // unchanged; the frozen-model entry points (phashMedians +
-    // phashSignaturesWithMedians) keep their one-pass-each contracts
-    // for the incremental posture.
+    // unchanged.
     val coefs = acTable(media).localCheckpoint(eager = false)
-    val meds = phashMediansFromCoefs(coefs)
+    val meds = phashMedians(coefs)
     val sig = (0 until PhashBits).map { i =>
       when(element_at(col("coefs"), i + 1) > lit(meds(i)), lit(1L << i))
         .otherwise(lit(0L))
@@ -390,10 +355,18 @@ object PerceptualHash {
     // band slice and pair comparison downstream (the §18
     // Generate-filter lesson — measured as 2 extra ~1 s jobs here);
     // 16 bytes/row, one cheap pin
-    val sigs = coefs.select(col("media_id"), sig.as("sig"))
+    coefs.select(col("media_id"), sig.as("sig"))
       .localCheckpoint(eager = false)
-    Dedup.packedSignaturePairs(
-      sigs, "media_id", "sig", plan, maxBucket, maxScore = Some(maxHamming))
-      .transform(Dedup.withinHamming(plan, maxHamming))
   }
+
+  /** De-biased image near-duplicate pairs: [[phashPairs]]'s banded walk
+    * over [[phashSignaturesDebiased]] (the model is the corpus's own
+    * medians). Output (doc_a, doc_b, hamming). */
+  def phashPairsDebiased(media: Dataset[Multimodal.MediaRow],
+      plan: BandPlan = DefaultPhashPlan,
+      maxHamming: Int = DefaultMaxHamming,
+      maxBucket: Option[Int] = Some(Dedup.DefaultMaxBucket)): DataFrame =
+    Dedup.packedSignaturePairs(phashSignaturesDebiased(media),
+      "media_id", "sig", plan, maxBucket, maxScore = Some(maxHamming))
+      .transform(Dedup.withinHamming(plan, maxHamming))
 }

@@ -418,7 +418,7 @@ object ProductQuantization {
     * Write cost: one signature/encode scan + one shuffle-free
     * partitioned write (each scan task writes its rows' cells directly;
     * at production scale repartition by cell first if small files
-    * matter — `Compaction` covers that concern separately). */
+    * matter). */
   def buildIvfPqIndex(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
       dim: Int, nCells: Int = 16, coarseIters: Int = 2,
@@ -453,96 +453,12 @@ object ProductQuantization {
   }
 
   /** Per-row squared reconstruction error |v − x̂|² of a (v, codes) row
-    * under `codebooks` — the quantization-quality measure both the
-    * build-time baseline and [[indexHealth]]'s drift probe compute. */
+    * under `codebooks` — the quantization-quality measure behind the
+    * build-time baseline `IvfPqModel.trainQuantErr`. */
   private def reconstructionErr(
       codebooks: IndexedSeq[Seq[(Long, Array[Double])]]): Column = {
     val diff = zip_with(col("v"), xhatFromCodes(codebooks), (a, b) => a - b)
     dot(diff, diff)
-  }
-
-  /** APPEND a new batch to an existing persisted index — the O(Δ)
-    * ingest flow of a production vector store: the delta encodes under
-    * the index's FROZEN model (coarse centroids + codebooks load from
-    * the path; retraining would silently re-route existing vectors to
-    * different cells and orphan their files) and its code rows append
-    * into the same `partitionBy(cell)` layout, so searches see the new
-    * vectors immediately with zero touch of existing files. Standard
-    * IVF-PQ operational trade, stated plainly: quantization error on
-    * the appended data reflects the original training distribution —
-    * after major drift, rebuild (the spec proves append ≡ encoding the
-    * union under the same model, which is exactly that contract). */
-  def appendToIvfPqIndex(
-      delta: DataFrame, idCol: String, vecCol: String, path: String): IvfPqModel = {
-    val model = IvfPqModel.load(path, delta.sparkSession)
-    val m = model.codebooks.size
-    val sub = model.dim / m
-    delta
-      .select(col(idCol).cast("long").as("vec_id"), asDoubles(col(vecCol)).as("v"))
-      .select(
-        col("vec_id"),
-        array((0 until m).map(mi =>
-          argminCell(model.codebooks(mi), subVec(col("v"), mi, sub))
-            .getField("idx")): _*).as("codes"),
-        argminCell(model.centroids, col("v")).getField("cid").as("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
-    model
-  }
-
-  /** One-row index-health summary — the WHEN-to-rebuild signal for the
-    * append-only maintenance contract: [[appendToIvfPqIndex]] encodes
-    * under the FROZEN model, so quantization quality on appended data
-    * silently decays as the ingest distribution drifts from the
-    * training distribution. This probe makes that decay an observable:
-    *
-    *   - per-cell occupancy (`n_cells_occupied`, `occ_max`, `occ_mean`,
-    *     `occ_skew` = max/mean) from the index's own code rows — a cell
-    *     absorbing the bulk of appends means the coarse router no
-    *     longer spreads the data (probe-cost skew);
-    *   - `delta_qerr`: mean squared reconstruction error |v − x̂|² of
-    *     the sampled delta batch encoded under the frozen model, vs
-    *     `train_qerr`, the build-time baseline persisted in the model
-    *     file;
-    *   - `drift_flagged`: delta_qerr > `driftFactor` × train_qerr
-    *     (NULL when the model predates the baseline).
-    *
-    * Observability, not a gated operator (the OccupancyProbe
-    * convention): no oracle, spec-anchored with a planted-drift fixture
-    * (IvfPqIndexSpec — shifted-distribution appends flag, i.i.d.
-    * appends don't). Cost: one scan of the index's (slim) code rows +
-    * one scan of the delta sample — run it on a sampled delta, not the
-    * full ingest. */
-  def indexHealth(
-      indexPath: String, delta: DataFrame, idCol: String, vecCol: String,
-      driftFactor: Double = 2.0): DataFrame = {
-    require(driftFactor > 0, "driftFactor must be positive")
-    val spark = delta.sparkSession
-    val model = IvfPqModel.load(indexPath, spark)
-    val m = model.codebooks.size
-    val sub = model.dim / m
-    val occ = spark.read.schema(IndexReadSchema).parquet(indexPath)
-      .groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .agg(
-        count(lit(1)).as("n_cells_occupied"),
-        max("cnt").as("occ_max"),
-        avg("cnt").as("occ_mean"))
-    val deltaErr = delta
-      .select(asDoubles(col(vecCol)).as("v"))
-      .select(col("v"),
-        array((0 until m).map(mi =>
-          argminCell(model.codebooks(mi), subVec(col("v"), mi, sub))
-            .getField("idx")): _*).as("codes"))
-      .select(reconstructionErr(model.codebooks).as("e"))
-      .agg(avg("e").as("delta_qerr"))
-    val trainErr = model.trainQuantErr
-      .map(e => lit(e)).getOrElse(lit(null).cast("double"))
-    occ.crossJoin(deltaErr)
-      .select(
-        col("n_cells_occupied"), col("occ_max"), col("occ_mean"),
-        (col("occ_max").cast("double") / col("occ_mean")).as("occ_skew"),
-        trainErr.as("train_qerr"),
-        col("delta_qerr"),
-        (col("delta_qerr") > trainErr * lit(driftFactor)).as("drift_flagged"))
   }
 
   /** Search the PERSISTED index: the query picks its `nProbe` cells on
@@ -679,17 +595,16 @@ final case class IvfPqModel(
     centroids: Seq[(Long, Array[Double])],
     codebooks: IndexedSeq[Seq[(Long, Array[Double])]],
     /** Mean squared reconstruction error |v − x̂|² over the TRAINING
-      * corpus at build time — the drift baseline
-      * [[ProductQuantization.indexHealth]] compares appended batches
-      * against. None on models persisted before the health check
-      * existed (health then reports drift as undeterminable). */
+      * corpus at build time — the index's quantization-quality
+      * baseline, persisted in the model file. None on models persisted
+      * before the baseline existed. */
     trainQuantErr: Option[Double] = None)
 
 object IvfPqModel {
   private val FileName = "_ivfpq_model.txt"
 
   /** Lines: `dim N` | `qerr E` (optional — mean training quantization
-    * error, the drift baseline for [[ProductQuantization.indexHealth]])
+    * error, [[IvfPqModel.trainQuantErr]])
     * | `cent <cid> v,…` | `book <mi> <cid> v,…` — underscore-prefixed
     * filename keeps it invisible to the parquet scanner reading the
     * surrounding index directory. IO goes through the Hadoop FS layer

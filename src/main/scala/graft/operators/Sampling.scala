@@ -36,13 +36,6 @@ object Sampling {
     TextFunctions.baseHash(concat(key.cast("string"), lit(salt)))
       .cast("double") / lit(P.toDouble)
 
-  /** Keep each row with probability `fraction`, keyed (deterministic). */
-  def sampleByKey(df: DataFrame, keyCol: String, fraction: Double,
-      salt: String = "sample"): DataFrame = {
-    require(fraction >= 0 && fraction <= 1)
-    df.filter(unitHash(col(keyCol), salt) < fraction)
-  }
-
   /** Cumulative upper bounds for `splitByKey` — exposed so oracle SQL
     * can interpolate the EXACT double bounds the operator compares
     * against (recomputing them independently could differ in the last

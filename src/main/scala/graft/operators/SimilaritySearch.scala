@@ -380,21 +380,6 @@ object SimilaritySearch {
       embBucketIndex(corpus, idCol, vecCol, dim, nBits, maxBucket),
       table, "bucket", nBuckets, path)
 
-  /** `BandIndex.append`'s embedding counterpart: append
-    * a batch's (id, vec, norm, bucket) rows into the existing bucketed
-    * layout with the build-time occupancy-cap decisions FROZEN (appends
-    * can push a bucket past the cap; rebuild — idempotent over the
-    * stored index — re-caps). `dim`/`nBits` must match the build
-    * exactly (the hyperplanes are pure functions of them — mismatched
-    * knobs would bucket the batch against DIFFERENT planes and corrupt
-    * the index silently, so keep them with the table's metadata). */
-  def appendToEmbBucketIndexBucketed(
-      batch: DataFrame, idCol: String, vecCol: String,
-      table: String, nBuckets: Int, dim: Int, nBits: Int): Unit =
-    graft.store.Bucketing.appendBucketed(
-      embBucketIndex(batch, idCol, vecCol, dim, nBits, maxBucket = None),
-      table, "bucket", nBuckets)
-
   /** Table-indexed hyperplane bucket expressions over the vector column
     * `v` — table t's planes draw from a disjoint splitmix64 range.
     * Package-visible: StreamingDedup.embeddingDupStream keys its state

@@ -51,19 +51,4 @@ object Skew {
       .groupBy(keys.map(col): _*)
       .agg(finals.head, finals.tail: _*)
   }
-
-  /** Salted broadcast-side replication for a skewed *join*: explode the
-    * small side `saltFactor`× with a salt column, salt the big side's
-    * rows, join on (key, salt). Only needed when the small side is too
-    * big to broadcast AND the key is hot; with broadcast available,
-    * Spark never shuffles the big side at all. */
-  def saltedJoin(
-      big: DataFrame, small: DataFrame, key: String,
-      saltFactor: Int = 16): DataFrame = {
-    val bigSalted = big.withColumn("__salt",
-      pmod(xxhash64(col(key), spark_partition_id()), lit(saltFactor)))
-    val smallReplicated = small.withColumn("__salt",
-      explode(sequence(lit(0L), lit(saltFactor - 1L))))
-    bigSalted.join(smallReplicated, Seq(key, "__salt")).drop("__salt")
-  }
 }

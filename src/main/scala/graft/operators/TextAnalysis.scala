@@ -122,29 +122,6 @@ object TextAnalysis {
     * cannot differ between engines. */
   val BpePattern = " ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+"
 
-  /** n-grams WITH duplicates (unlike shinglesFromTokens): frequency is
-    * the point for repetition signals. */
-  private[graft] def grams(tok: Column, n: Int): Column = {
-    val g = transform(
-      sequence(lit(0), size(tok) - n),
-      i => concat_ws(" ", (0 until n).map(k => element_at(tok, i + k + 1)): _*))
-    when(size(tok) >= n, g).otherwise(array().cast("array<string>"))
-  }
-
-  /** The HOF formulation of max gram multiplicity (longest run in the
-    * sorted array) — with [[grams]], the executable spec of
-    * `graft_maxmult_ngram` (equality asserted in MaxMultiplicityExprSpec). */
-  private[graft] def topRunCountHof(gramArr: Column): Column = aggregate(
-    array_sort(gramArr),
-    struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-    (acc, x) => {
-      val run = when(x === acc.getField("prev"), acc.getField("run") + 1)
-        .otherwise(lit(1L))
-      struct(x.as("prev"), run.as("run"),
-        greatest(acc.getField("best"), run).as("best"))
-    },
-    acc => acc.getField("best"))
-
   /** Repetition signals (Gopher-style quality filters): the fraction of
     * the document covered by its most frequent token bigram/trigram —
     * high values flag boilerplate, keyword stuffing, and generation
@@ -512,9 +489,10 @@ object TextAnalysis {
     * Output: one row per learned merge — (merge_rank, lhs, rhs,
     * pair_count) — the merge table a BPE tokenizer ships. Training
     * stops early if no pair is left (every word fully merged).
-    * Differential-tested against [[bpeTrainReference]] in
-    * TextAnalysisSpec and oracle-gated as ta_bpe_train (the DuckDB
-    * oracle unrolls the same rounds; greedy overlap resolved by a
+    * Differential-tested against the test-side
+    * `ReferenceModels.bpeTrainReference` in BpeTrainSpec and
+    * oracle-gated as ta_bpe_train (the DuckDB oracle unrolls the same
+    * rounds; greedy overlap resolved by a
     * keep-every-other-match-in-a-run window, which equals the fold
     * because overlapping matches only arise when lhs = rhs). */
   def bpeTrain(df: DataFrame, textCol: String, rounds: Int): DataFrame = {
@@ -678,80 +656,5 @@ object TextAnalysis {
       .agg(sum(col("cnt") *
         coalesce(col("n_syms"), length(col("word")).cast("long")))
         .as("n_bpe_tokens"))
-  }
-
-  /** Driver-side reference BPE trainer over a plain word-count map —
-    * the differential-test twin of [[bpeTrain]] (same seed convention,
-    * same tie-break, same greedy application), used by TextAnalysisSpec
-    * exactly like the k-means/zorder reference implementations. */
-  private[operators] def bpeTrainReference(
-      wordFreq: Map[String, Long], rounds: Int): Seq[(Int, String, String, Long)] = {
-    // CODE-POINT symbols (not UTF-16 chars): Spark's substring slices
-    // by code point, so a supplementary-plane character (emoji) must be
-    // ONE reference symbol too, never a surrogate half
-    def codePoints(w: String): Vector[String] = {
-      val out = Vector.newBuilder[String]
-      var i = 0
-      while (i < w.length) {
-        val cp = w.codePointAt(i)
-        out += new String(Character.toChars(cp))
-        i += Character.charCount(cp)
-      }
-      out.result()
-    }
-    // tie-break in UTF-8 BYTE order — the binary ordering Spark's
-    // orderBy uses on strings; Java's compareTo orders by UTF-16 unit,
-    // which ranks [U+E000, U+FFFF] above supplementary characters
-    def utf8Lt(a: String, b: String): Boolean = {
-      val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-      var i = 0
-      while (i < x.length && i < y.length) {
-        val c = (x(i) & 0xff) - (y(i) & 0xff)
-        if (c != 0) return c < 0
-        i += 1
-      }
-      x.length < y.length
-    }
-    var words: Map[Vector[String], Long] = wordFreq.toSeq
-      .map { case (w, f) => codePoints(w) -> f }
-      .groupMapReduce(_._1)(_._2)(_ + _)
-    val out = Seq.newBuilder[(Int, String, String, Long)]
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
-      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-      words.foreach { case (syms, f) =>
-        syms.sliding(2).foreach {
-          case Seq(x, y) => counts((x, y)) = counts.getOrElse((x, y), 0L) + f
-          case _ =>
-        }
-      }
-      if (counts.isEmpty) done = true
-      else {
-        val ord = new Ordering[((String, String), Long)] {
-          def compare(p: ((String, String), Long), q: ((String, String), Long)): Int = {
-            if (p._2 != q._2) return java.lang.Long.compare(q._2, p._2)
-            if (p._1._1 != q._1._1)
-              return if (utf8Lt(p._1._1, q._1._1)) -1 else 1
-            if (p._1._2 == q._1._2) 0
-            else if (utf8Lt(p._1._2, q._1._2)) -1 else 1
-          }
-        }
-        val ((a, b), cnt) = counts.min(ord)
-        out += ((r, a, b, cnt))
-        words = words.toSeq.map { case (syms, f) =>
-          val merged = Vector.newBuilder[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
-              merged += (a + b); i += 2
-            } else { merged += syms(i); i += 1 }
-          }
-          merged.result() -> f
-        }.groupMapReduce(_._1)(_._2)(_ + _)
-        r += 1
-      }
-    }
-    out.result()
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   *
   * and substitute the codegen'd native [[DotProduct]] — so a user who
   * writes the idiomatic higher-order-function formulation (or any query
-  * built on VectorFunctions.dotHof) gets the compiled inner loop for
+  * built on it) gets the compiled inner loop for
   * free. This is the `Rule[LogicalPlan]` extension point of
   * SparkSessionExtensions doing what it is for: teaching the optimizer
   * a domain rewrite the built-in rules cannot know.

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Max multiplicity of the word `n`-grams of a token array — the fused
-  * form of `TextAnalysis.topRunCountHof(TextAnalysis.grams(toks, n))`,
+  * form of `topRunCountHof(grams(toks, n))` (test-side `ReferenceModels`),
   * the per-document inner loop of the repetition quality signals. The composed
   * pipeline materializes every gram as a concat_ws STRING through an
   * interpreted `transform` (n element_at evaluations + one allocation

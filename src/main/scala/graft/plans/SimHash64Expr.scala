@@ -9,10 +9,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native packed SimHash over an array<string> of tokens — the 64-bit
   * signature as ONE long, bit-identical to the composed
-  * `TextFunctions.packBits(TextFunctions.simhashBits(toks, 64), 64)`
-  * (same md5 hi/lo 32-bit words, same big-endian bit extraction, same
-  * strictly-positive vote threshold, same LSB-is-position-0 packing),
-  * which the differential spec asserts.
+  * `packBits(simhashBits(toks, 64), 64)` of the test-side
+  * `ReferenceModels` (same md5 hi/lo 32-bit words, same big-endian bit
+  * extraction, same strictly-positive vote threshold, same
+  * LSB-is-position-0 packing), which the differential spec asserts.
   *
   * Why native (the `graft_minhash` argument, SURVEY.md §2.F): Spark's
   * higher-order functions are interpreted — the composed form evaluates

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table layout — the shuffle-elimination strategy for the
   * joins a 100 TB warehouse runs every day. Writing both sides of a
@@ -26,30 +26,5 @@ object Bucketing {
     val w = df.write.mode("overwrite").format("parquet")
       .bucketBy(nBuckets, keyCol).sortBy(keyCol)
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
-  }
-
-  /** Append rows into an EXISTING bucketed table, preserving its
-    * layout: Spark's bucketed writer routes the new rows into the same
-    * bucket ids (same hash, same count — `nBuckets` must match the
-    * table's spec), adding one file per bucket per append. Scans stay
-    * `Bucketed: true` and joins on the bucket key stay exchange-free;
-    * only the per-file sort guarantee weakens to per-FILE sorted, which
-    * a sort-merge join repairs with an in-partition sort, never a
-    * shuffle. Compact when the file count hurts (store.Compaction). */
-  def appendBucketed(df: DataFrame, table: String, keyCol: String,
-      nBuckets: Int): Unit = {
-    require(nBuckets >= 1)
-    df.write.mode("append").format("parquet")
-      .bucketBy(nBuckets, keyCol).sortBy(keyCol).saveAsTable(table)
-  }
-
-  /** Inner equi-join of two co-bucketed tables on their shared bucket
-    * key — with matching bucket counts this plans shuffle-free (asserted
-    * in BucketingSpec). */
-  def coLocatedJoin(spark: SparkSession, leftTable: String,
-      rightTable: String, leftKey: String, rightKey: String): DataFrame = {
-    val l = spark.table(leftTable)
-    val r = spark.table(rightTable)
-    l.join(r, l(leftKey) === r(rightKey))
   }
 }

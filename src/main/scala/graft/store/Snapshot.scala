@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Snapshot-manifest commits — a minimal multi-frame atomic-publish
-  * primitive for the maintained-state operators (the survivor
-  * pipeline's labels + keep-best state, the heavy-hitters candidate
-  * index + its meta sidecar, any frozen-model pair that must change
-  * TOGETHER):
+  * primitive for the maintained-state operators (the heavy-hitters
+  * candidate index + its meta sidecar, the `gold_user_sessions` table,
+  * any frozen-model pair that must change TOGETHER):
   *
   *   - each commit writes its frames under `base/v<N>/<name>/` (fresh
   *     directories — never overwriting live data), then publishes by
@@ -20,20 +19,19 @@ import org.apache.spark.sql.types.StructType
   *     new one, never a truncated prefix;
   *   - readers resolve the pointer first, then read that version's
   *     directories, so a reader mid-commit sees the previous fully
-  *     written snapshot, never a torn mix of old labels + new state;
+  *     written snapshot, never a torn mix of two versions' frames;
   *   - a crash before the pointer rename leaves orphaned v<N> data and
-  *     a perfectly consistent current snapshot — the failed fold's
-  *     batch simply re-runs (the callers' folds are designed
-  *     re-runnable against the old snapshot). [[vacuum]] reclaims the
+  *     a perfectly consistent current snapshot — the failed build
+  *     simply re-runs against the old snapshot. [[vacuum]] reclaims the
   *     orphan.
   *
   * Concurrency contract, both halves explicit:
   *
-  *   - SINGLE WRITER: exactly one process calls [[commit]]/[[vacuum]]
-  *     (the stream's micro-batch loop). Versions are allocated by
-  *     reading the pointer, so two concurrent writers would race to
-  *     the same v<N>. vacuum is a WRITER-side call under the same
-  *     contract — it must never run concurrently with a commit (it
+  *   - SINGLE WRITER: exactly one process calls [[commit]]/[[vacuum]].
+  *     Versions are allocated by reading the pointer, so two
+  *     concurrent writers would race to the same v<N>. vacuum is a
+  *     WRITER-side call under the same contract — it must never run
+  *     concurrently with a commit (it
   *     deletes versions above the pointer as crashed-commit orphans,
   *     which an in-flight commit would be indistinguishable from).
   *   - READERS are wait-free but keep `keep ≥ 2` in mind: a reader

@@ -1,16 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{IvfPqModel, ProductQuantization}
 
 /** Streaming twin of `ProductQuantization.ivfPqTopKBatchFromIndex` —
   * vector-search SERVING: a stream of query vectors is answered
   * micro-batch by micro-batch against the FROZEN persisted IVF-PQ
-  * index, completing the index lifecycle (build → append under the
-  * frozen model → health/drift probe → batch search → THIS).
+  * index, completing the index lifecycle (build → batch search →
+  * THIS).
   *
   * Shape: `foreachBatch`, not a native streaming plan — deliberately.
   * IVF's whole point is that each query batch selects its probed cells
@@ -75,22 +74,5 @@ object StreamingAnn {
           dim = dim, nBits = nBits, k = k, probeBits = probeBits)
         sink(answered, batchId)
       }
-  }
-
-  /** One-shot convenience for bounded replays (tests, backfills): run
-    * the serving query over everything currently in the source with
-    * AvailableNow and block until drained. */
-  def serveAvailableNow(
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      indexPath: String, corpus: DataFrame, idCol: String, vecCol: String,
-      sink: (DataFrame, Long) => Unit, checkpointDir: String,
-      nProbe: Int = 4, rerank: Int = 100, topK: Int = 10)(
-      implicit spark: SparkSession): Unit = {
-    val q = serve(queries, qidCol, qvecCol, indexPath, corpus, idCol, vecCol,
-      sink, nProbe, rerank, topK)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Dedup
 
@@ -64,22 +64,5 @@ object StreamingDecontamination {
           gatedIds, batch(idCol) === gatedIds("__contaminated_id"), "left_anti")
         sink(survivors, pairs, batchId)
       }
-  }
-
-  /** One-shot convenience for bounded replays (tests, backfills):
-    * drain everything currently in the source with AvailableNow. */
-  def gateAvailableNow(
-      docs: DataFrame, idCol: String, textCol: String,
-      evalIndexPath: String,
-      sink: (DataFrame, DataFrame, Long) => Unit, checkpointDir: String,
-      n: Int = Dedup.DefaultShingleN, threshold: Double = 0.5,
-      fast: Boolean = false, broadcastEval: Boolean = true)(
-      implicit spark: SparkSession): Unit = {
-    val q = gate(docs, idCol, textCol, evalIndexPath, sink, n, threshold,
-      fast, broadcastEval)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 }

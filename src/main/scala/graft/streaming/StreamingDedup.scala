@@ -203,7 +203,7 @@ object StreamingDedup {
         TextFunctions.tokens(col(textCol)).as("__t"))
       .filter(size(array_remove(col("__t"), "")) >= minTokens)
       // the batch side's native signature (graft.plans.SimHash64):
-      // bit-identical to packBits(simhashBits(·)), codegen'd
+      // bit-identical to the test-side HOF SimHash, codegen'd
       .select(col("doc_id"), col("event_time"),
         NativeFunctions.simhash64(col("__t")).as("sig"))
       .withWatermark("event_time", s"$horizonMinutes minutes")

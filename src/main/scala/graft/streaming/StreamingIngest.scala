@@ -67,41 +67,6 @@ object StreamingIngest {
       .select(col("w.start").as("window_start"), col("user_id"),
         col("watch_seconds"), col("watch_events"))
 
-  /** Streaming exact dedup: drop events whose key was already seen
-    * within the watermark horizon — the streaming twin of
-    * `Dedup.exactGroups`, for at-least-once sources that can replay
-    * (file redelivery, kafka rewinds). State is bounded: a key's entry
-    * is reclaimed once the event-time watermark passes it, which is the
-    * only state-retention contract that survives at stream scale
-    * (unbounded `dropDuplicates` state grows forever). */
-  def dedupStream(events: DataFrame, keyCols: Seq[String],
-      eventTimeCol: String = "timestamp", horizon: String = "10 minutes"): DataFrame =
-    events
-      .withColumn("event_time", to_timestamp(col(eventTimeCol)))
-      .withWatermark("event_time", horizon)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Stream-stream correlation join: pair each left event with the
-    * right-stream events of the same key that occur within `within` of
-    * it (event time). Both sides carry watermarks and the join predicate
-    * bounds `rightTime` to a window anchored at `leftTime`, which is
-    * what lets Spark RECLAIM join state — an unbounded stream-stream
-    * join would buffer both streams forever. Caller pre-projects both
-    * sides to disjoint column names; the time columns are parsed to
-    * event-time timestamps here. */
-  def correlateStreams(left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTime: String, rightTime: String,
-      within: String, watermark: String = "10 minutes"): DataFrame = {
-    val l = left.withColumn(leftTime, to_timestamp(col(leftTime)))
-      .withWatermark(leftTime, watermark)
-    val r = right.withColumn(rightTime, to_timestamp(col(rightTime)))
-      .withWatermark(rightTime, watermark)
-    l.join(r, col(leftKey) === col(rightKey) &&
-      col(rightTime) >= col(leftTime) &&
-      col(rightTime) <= col(leftTime) + expr(s"INTERVAL $within"))
-  }
-
   /** Batch twin of `sessionize`: gap-based sessions via lag + a running
     * sum of session-start flags — the standard window formulation. Kept
     * semantically in lockstep with the streaming path and asserted equal

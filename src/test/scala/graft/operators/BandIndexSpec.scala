@@ -13,10 +13,9 @@ import graft.sources.Tables
   * SimHash and pHash families and over band plans (the pHash fine cut
   * and both multiprobe rungs, SimHash's deep rung): an incremental
   * search against a built index returns exactly the cross-split subset
-  * of the full pairs, scores included, and a written-then-appended
-  * bucketed index probes with one delta-side exchange and the
-  * union-of-band-rows answer. Split convention: doc_id%5 = 0 is the
-  * delta, the rest the corpus. */
+  * of the full pairs, scores included, and a written bucketed index
+  * probes with one delta-side exchange and the in-plan index's answer.
+  * Split convention: doc_id%5 = 0 is the delta, the rest the corpus. */
 class BandIndexSpec extends SparkSpecBase {
 
   private def docs = Tables.documents(spark, sfDir)
@@ -95,19 +94,15 @@ class BandIndexSpec extends SparkSpecBase {
 
   for (f <- Seq(minhash, simhash(Dedup.DefaultSimhashPlan), simhash(BandPlan(64, 2, 1)),
       phash(phashPlan(3, 2))))
-    test(s"${f.name}: write, append, probe — delta-only exchange, " +
-      "equals capped base ∪ uncapped batch") {
-      val isBase = !isDelta && pmod(col("doc_id"), lit(2)) === 1
-      val isBatch = !isDelta && pmod(col("doc_id"), lit(2)) === 0
+    test(s"${f.name}: write, probe — delta-only exchange, " +
+      "equals the in-plan capped index") {
       val table = "band_idx_spec_" + f.name.replaceAll("[^a-z0-9]", "_")
       spark.sql(s"DROP TABLE IF EXISTS $table")
-      BandIndex.write(BandIndex.build(f.banded(isBase)), table, nBuckets = 4,
+      BandIndex.write(BandIndex.build(f.banded(!isDelta)), table, nBuckets = 4,
         path = Some(Files.createTempDirectory("graft-band-idx").toString))
-      BandIndex.append(f.banded(isBatch), table, nBuckets = 4)
       try withNoBroadcast {
         val via = f.inc(isDelta, spark.table(table))
-        val reference = f.inc(isDelta, BandIndex.build(f.banded(isBase))
-          .unionByName(BandIndex.build(f.banded(isBatch), maxBucket = None)))
+        val reference = f.inc(isDelta, BandIndex.build(f.banded(!isDelta)))
         def rows(df: DataFrame) = df.orderBy("delta_id", "corpus_id").collect().toSeq
         val got = rows(via)
         assert(got.nonEmpty && got === rows(reference))

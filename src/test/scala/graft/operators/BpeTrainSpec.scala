@@ -23,7 +23,7 @@ class BpeTrainSpec extends SparkSpecBase {
         lit(TextAnalysis.BpePattern), lit(0))).as("word"))
       .groupBy("word").count()
       .as[(String, Long)].collect().toMap
-    val want = TextAnalysis.bpeTrainReference(wordFreq, rounds = 8)
+    val want = ReferenceModels.bpeTrainReference(wordFreq, rounds = 8)
     assert(got === want)
     assert(got.size === 8, "fixture corpus must sustain 8 merge rounds")
     // ranks are 1..8 and counts non-increasing is NOT required (a merge

@@ -94,13 +94,4 @@ class ClusteringSpec extends SparkSpecBase {
     assert(perCluster.map(_.getLong(1)).sum <= 256L * 4)
     assert(secs < 180, s"production-k SemDeDup pass took ${secs}s")
   }
-
-  test("kmeansWithSizes sizes sum to the corpus") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val out = Clustering.kmeansWithSizes(emb, "vec_id", "embedding", k = 4, iters = 1)
-    assert(out.count() === emb.count())
-    val bySize = out.select("cluster_id", "cluster_size").distinct()
-      .collect().map(r => r.getLong(1)).sum
-    assert(bySize === emb.count())
-  }
 }

@@ -51,7 +51,7 @@ class DedupSpec extends SparkSpecBase {
     val arraySigs = docs
       .select(col("doc_id").as("doc"), TextFunctions.tokens(col("text")).as("toks"))
       .filter(size(array_remove(col("toks"), "")) >= 1)
-      .select(col("doc"), TextFunctions.simhashBits(col("toks"), 64).as("sig"))
+      .select(col("doc"), ReferenceModels.simhashBits(col("toks"), 64).as("sig"))
     // 1. packBits is position-preserving, bit 63 (sign position) included,
     //    and the native codegen'd expression (graft.plans.SimHash64 — the
     //    production signature since round 14) equals the composed form
@@ -61,8 +61,8 @@ class DedupSpec extends SparkSpecBase {
       .select(col("doc_id").as("doc"), TextFunctions.tokens(col("text")).as("toks"))
       .filter(size(array_remove(col("toks"), "")) >= 1)
       .select(col("doc"),
-        TextFunctions.simhashBits(col("toks"), 64).as("sig"),
-        TextFunctions.packBits(TextFunctions.simhashBits(col("toks"), 64), 64).as("packed"),
+        ReferenceModels.simhashBits(col("toks"), 64).as("sig"),
+        ReferenceModels.packBits(ReferenceModels.simhashBits(col("toks"), 64), 64).as("packed"),
         call_function("graft_simhash64", col("toks")).as("native"))
       .collect().foreach { r =>
         val arr = r.getSeq[Int](1); val p = r.getLong(2); val nv = r.getLong(3)
@@ -533,23 +533,6 @@ class DedupSpec extends SparkSpecBase {
       delta, spark.read.parquet(s"$dir/span"), "doc_id", "text")
       .collect().map(_.toSeq).toSet
     assert(spReloaded === spDirect)
-  }
-
-  test("exactDuplicatesIncremental reports the corpus canonical for verbatim re-arrivals only") {
-    val corpus = spanDocs(
-      1L -> "alpha beta gamma", 2L -> "alpha beta gamma", 5L -> "delta epsilon")
-    val delta = spanDocs(
-      10L -> "alpha beta gamma", 11L -> "zeta eta", 1L -> "alpha beta gamma")
-    val out = Dedup.exactDuplicatesIncremental(delta, corpus, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // 10 duplicates group {1,2} (canonical 1); 11 is new content; the
-    // re-ingested canonical itself (1) must not be its own duplicate
-    assert(out === Set((10L, 1L)))
-    // a re-ingested NON-canonical member still reports its canonical
-    val out2 = Dedup.exactDuplicatesIncremental(
-      spanDocs(2L -> "alpha beta gamma"), corpus, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(out2 === Set((2L, 1L)))
   }
 
   test("simhashPairsIncremental equals the cross-split subset of full-corpus simhash pairs") {

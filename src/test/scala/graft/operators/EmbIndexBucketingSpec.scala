@@ -58,35 +58,4 @@ class EmbIndexBucketingSpec extends SparkSpecBase {
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
-
-  test("embedding append preserves layout and equals the union contract") {
-    val base = corpus.filter(pmod(col("vec_id"), lit(2)) === 1)
-    val batch = corpus.filter(pmod(col("vec_id"), lit(2)) === 0)
-    val table = "emb_idx_append_spec"
-    val path = Files.createTempDirectory("graft-emb-aidx").toString
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    SimilaritySearch.writeEmbBucketIndexBucketed(
-      base, "vec_id", "embedding", table, nBuckets = 4,
-      dim = dim, nBits = nBits, path = Some(path))
-    SimilaritySearch.appendToEmbBucketIndexBucketed(
-      batch, "vec_id", "embedding", table, nBuckets = 4,
-      dim = dim, nBits = nBits)
-    val viaAppended = SimilaritySearch.lshNeighborsIncrementalFromIndex(
-      delta, spark.table(table), "vec_id", "embedding",
-      dim = dim, nBits = nBits, k = 5)
-      .orderBy("delta_id", "corpus_id")
-    val reference = SimilaritySearch.lshNeighborsIncrementalFromIndex(
-      delta,
-      SimilaritySearch.embBucketIndex(base, "vec_id", "embedding", dim, nBits)
-        .unionByName(SimilaritySearch.embBucketIndex(
-          batch, "vec_id", "embedding", dim, nBits, maxBucket = None)),
-      "vec_id", "embedding", dim = dim, nBits = nBits, k = 5)
-      .orderBy("delta_id", "corpus_id")
-    val got = viaAppended.collect().toSeq
-    assert(got.nonEmpty && got === reference.collect().toSeq)
-    val plan = viaAppended.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    assert(plan.contains("Bucketed: true"), plan)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
 }

@@ -25,19 +25,4 @@ class FeaturesSpec extends SparkSpecBase {
     assert(out((1L, 0L)) === 0.0 && out((2L, 0L)) === 0.0)
     assert(out((1L, 1L)) === 0.0 && out((2L, 1L)) === 1.0)
   }
-
-  test("minMaxNormalizeVectors reassembles components in order") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val vecs = Features.minMaxNormalizeVectors(emb, "vec_id", "embedding")
-    val exploded = Features.minMaxNormalize(emb, "vec_id", "embedding")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val sample = vecs.filter(col("vec_id") < 5).collect()
-    sample.foreach { r =>
-      val id = r.getLong(0)
-      val arr = r.getSeq[Double](1)
-      arr.zipWithIndex.foreach { case (x, i) =>
-        assert(x === exploded((id, i.toLong)), s"vec $id pos $i")
-      }
-    }
-  }
 }

@@ -167,112 +167,6 @@ class HeavyHittersSpec extends SparkSpecBase {
     assert(got.nonEmpty)
   }
 
-  test("index append: post-append serving equals a from-scratch rebuild at every servable phi") {
-    val spark2 = spark
-    import spark2.implicits._
-    val rnd = new Random(31)
-    val corpus = Seq.tabulate(80)(i => (i.toLong, skewedStream(rnd, 25, 30).mkString(" ")))
-    val cdf = corpus.toDF("doc_id", "text").repartition(4)
-    val path = java.nio.file.Files.createTempDirectory("hh-idx-app").toString
-    HeavyHitters.buildIndex(cdf, "text", path, n = 2, capacity = 64)
-
-    // append 1 — dormant recount: same distribution, no new candidates
-    // expected to matter; append 2 — active recount: a gram ABSENT from
-    // the corpus ("zz qq" hammered) must enter via the restricted
-    // corpus recount with an exact zero corpus count
-    val delta1 = Seq.tabulate(20)(i => (1000L + i, skewedStream(rnd, 25, 30).mkString(" ")))
-    HeavyHitters.appendToIndex(cdf, delta1.toDF("doc_id", "text"), "text", path)
-    for (phi <- Seq(0.02, 0.05)) {
-      val got = HeavyHitters.heavyHittersFromIndex(spark, path, phi)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(got == exactHh(corpus ++ delta1, phi), s"append 1, phi=$phi")
-    }
-
-    val delta2 = Seq.tabulate(10)(i =>
-      (2000L + i, Seq.fill(30)("zz qq").mkString(" ")))
-    // the already-appended rows are part of the standing corpus now —
-    // the recount must see them (corpus ∪ delta1 is what's indexed)
-    val standing = (corpus ++ delta1).toDF("doc_id", "text").repartition(4)
-    HeavyHitters.appendToIndex(standing, delta2.toDF("doc_id", "text"), "text", path)
-    for (phi <- Seq(0.02, 0.05)) {
-      val got = HeavyHitters.heavyHittersFromIndex(spark, path, phi)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val want = exactHh(corpus ++ delta1 ++ delta2, phi)
-      assert(got == want, s"append 2, phi=$phi")
-      if (phi == 0.05)
-        assert(want.exists(_._1 == "zz qq"), "fixture must exercise a fresh entrant")
-    }
-    // the capacity guard survives appends unchanged
-    intercept[IllegalArgumentException] {
-      HeavyHitters.heavyHittersFromIndex(spark, path, 0.01)
-    }
-  }
-
-  test("index append is crash-atomic and retry-idempotent (snapshot pointer)") {
-    val spark2 = spark
-    import spark2.implicits._
-    val rnd = new Random(47)
-    val corpus = Seq.tabulate(60)(i => (i.toLong, skewedStream(rnd, 25, 30).mkString(" ")))
-    val cdf = corpus.toDF("doc_id", "text").repartition(4)
-    val path = java.nio.file.Files.createTempDirectory("hh-idx-retry").toString
-    HeavyHitters.buildIndex(cdf, "text", path, n = 2, capacity = 64)
-    val delta = Seq.tabulate(20)(i => (1000L + i, skewedStream(rnd, 25, 30).mkString(" ")))
-
-    // the reference answer: one clean append
-    HeavyHitters.appendToIndex(cdf, delta.toDF("doc_id", "text"), "text", path)
-    val want = HeavyHitters.heavyHittersFromIndex(spark, path, 0.05)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-
-    // simulate the append CRASHING before its pointer publish: roll the
-    // pointer back one version (the merged v1 data sits orphaned above
-    // it — exactly the on-disk state a mid-commit crash leaves)
-    graft.store.Storage.writeTextFileAtomic(spark, s"$path/_current.txt", "0\n")
-    // pre-retry serving is the intact PRE-APPEND index (counts and
-    // total from the SAME version — never merged counts over a stale
-    // total, the round-12 torn pairing)
-    val preRetry = HeavyHitters.heavyHittersFromIndex(spark, path, 0.05)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(preRetry == exactHh(corpus, 0.05))
-
-    // RETRY the whole append — idempotent: it re-merges the same delta
-    // against the still-current old snapshot, never double-counts
-    HeavyHitters.appendToIndex(cdf, delta.toDF("doc_id", "text"), "text", path)
-    val got = HeavyHitters.heavyHittersFromIndex(spark, path, 0.05)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(got == want)
-    assert(got == exactHh(corpus ++ delta, 0.05))
-  }
-
-  test("index append with no servable new candidates never opens the corpus (physical deletion)") {
-    val spark2 = spark
-    import spark2.implicits._
-    // vocabulary of 6 words → ≤ 36 distinct bigrams < capacity 64, so
-    // the corpus MG pass never evicts and EVERY corpus gram is indexed;
-    // a same-vocabulary delta therefore introduces no unindexed
-    // candidate and the never-servable filter leaves freshDf empty
-    val rnd = new Random(41)
-    val corpus = Seq.tabulate(60)(i => (i.toLong, skewedStream(rnd, 25, 6).mkString(" ")))
-    val corpusDir = java.nio.file.Files.createTempDirectory("hh-app-corpus").toString
-    corpus.toDF("doc_id", "text").write.mode("overwrite").parquet(corpusDir)
-    val corpusDf = spark.read.parquet(corpusDir)
-    val path = java.nio.file.Files.createTempDirectory("hh-idx-app-del").toString
-    HeavyHitters.buildIndex(corpusDf, "text", path, n = 2, capacity = 64)
-
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(corpusDir)).iterator().asScala
-      .toSeq.reverse.foreach(java.nio.file.Files.delete)
-
-    // the LshIndexSpec convention: if the append touched the deleted
-    // corpus files at all it would throw — a green run PROVES the
-    // dominant-ingest O(Δ) claim physically, not just in-plan
-    val delta = Seq.tabulate(15)(i => (500L + i, skewedStream(rnd, 25, 6).mkString(" ")))
-    HeavyHitters.appendToIndex(corpusDf, delta.toDF("doc_id", "text"), "text", path)
-    val got = HeavyHitters.heavyHittersFromIndex(spark, path, 0.05)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(got == exactHh(corpus ++ delta, 0.05))
-    assert(got.nonEmpty)
-  }
-
   test("short and empty documents contribute no n-grams") {
     val spark2 = spark
     import spark2.implicits._

@@ -97,40 +97,13 @@ class IvfPqIndexSpec extends SparkSpecBase {
       "search over the probed-cells-only remnant must be byte-identical")
   }
 
-  test("append encodes the delta under the frozen model and search sees the union") {
-    // build on the even-id half, append the odd-id half; the result
-    // must equal building codes for the UNION under the SAME model —
-    // the frozen-model contract (no silent re-route of existing cells)
-    val half = corpus.filter(pmod(col("vec_id"), lit(2)) === 0)
-    val rest = corpus.filter(pmod(col("vec_id"), lit(2)) =!= 0)
-    val path = Files.createTempDirectory("graft-ivfpq-append").toString
-    val model = ProductQuantization.buildIvfPqIndex(
-      half, "vec_id", "embedding", path,
-      dim = dim, nCells = 16, coarseIters = 2, m = 8, k = 16, iters = 1)
-    val loaded = ProductQuantization.appendToIvfPqIndex(
-      rest, "vec_id", "embedding", path)
-    assert(loaded.centroids.map(_._1) === model.centroids.map(_._1))
-
-    val afterAppend = ProductQuantization.ivfPqTopKFromIndex(
-      path, corpus, "vec_id", "embedding", query,
-      nProbe = 16, rerank = 100, topK = 10, model = Some(model))
-      .collect().toSeq
-    // reference: encode the whole corpus under the SAME half-trained
-    // model via the stored-codes search (nProbe = nCells → no pruning
-    // on either side, so only the encode provenance differs)
-    val enc = ProductQuantization.encode(
-      corpus, "vec_id", "embedding", model.codebooks, dim)
-    val reference = ProductQuantization.pqTopKFromCodes(
-      enc, corpus, "vec_id", "embedding", query, model.codebooks,
-      rerank = 100, topK = 10)
-      .collect().toSeq
-    assert(afterAppend === reference)
-  }
-
   test("the persisted model round-trips exactly and the search needs only the index path") {
     val (path, built) = buildIndex()
     val loaded = IvfPqModel.load(path)
     assert(loaded.dim === built.dim)
+    // the build's training quantization-error baseline persists too
+    assert(built.trainQuantErr.exists(_ > 0))
+    assert(loaded.trainQuantErr === built.trainQuantErr)
     assert(loaded.centroids.map(_._1) === built.centroids.map(_._1))
     loaded.centroids.zip(built.centroids).foreach { case ((_, a), (_, b)) =>
       assert(a.toSeq === b.toSeq)
@@ -150,65 +123,6 @@ class IvfPqIndexSpec extends SparkSpecBase {
       nProbe = 4, rerank = 100, topK = 10, model = Some(built))
       .collect().toSeq
     assert(viaLoad === viaBuilt)
-  }
-
-  test("compaction after appends preserves search results and shrinks the file count") {
-    val (path, model) = buildIndex()
-    // three appends leave every touched cell with several small files
-    (1 to 3).foreach { i =>
-      ProductQuantization.appendToIvfPqIndex(
-        corpus.filter(pmod(col("vec_id"), lit(11)) === i)
-          .withColumn("vec_id", col("vec_id") + i * 100000),
-        "vec_id", "embedding", path)
-    }
-    val before = ProductQuantization.ivfPqTopKFromIndex(
-      path, corpus, "vec_id", "embedding", query,
-      nProbe = 4, rerank = 100, topK = 10, model = Some(model)).collect().toSeq
-    def fileCount = new java.io.File(path).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-      .map(_.listFiles().count(f => f.getName.endsWith(".parquet"))).sum
-    val filesBefore = fileCount
-    val reports = graft.store.Compaction.compactTable(spark, path)
-    assert(reports.nonEmpty, "appends must have produced compactable cells")
-    assert(fileCount < filesBefore)
-    // the model sidecar survives (underscore file at the root, outside
-    // the partition dirs compaction rewrites)
-    assert(IvfPqModel.load(path).dim === model.dim)
-    val after = ProductQuantization.ivfPqTopKFromIndex(
-      path, corpus, "vec_id", "embedding", query,
-      nProbe = 4, rerank = 100, topK = 10, model = Some(model)).collect().toSeq
-    assert(after === before)
-  }
-
-  test("indexHealth: i.i.d. appends don't flag drift; shifted-distribution appends do") {
-    val (path, model) = buildIndex()
-    // the build persists the drift baseline and it round-trips
-    assert(model.trainQuantErr.exists(_ > 0))
-    assert(IvfPqModel.load(path).trainQuantErr === model.trainQuantErr)
-
-    // an i.i.d. batch (a slice of the training distribution, re-keyed):
-    // quantization error under the frozen model matches the baseline
-    val iid = corpus.filter(pmod(col("vec_id"), lit(7)) === 3)
-      .withColumn("vec_id", col("vec_id") + 100000)
-    ProductQuantization.appendToIvfPqIndex(iid, "vec_id", "embedding", path)
-    val ok = ProductQuantization.indexHealth(
-      path, iid, "vec_id", "embedding").collect().head
-    assert(!ok.getAs[Boolean]("drift_flagged"),
-      s"i.i.d. append must not flag drift: $ok")
-    assert(ok.getAs[Double]("train_qerr") === model.trainQuantErr.get)
-    assert(ok.getAs[Double]("occ_skew") >= 1.0)
-    assert(ok.getAs[Long]("n_cells_occupied") >= 1L)
-
-    // a planted-drift batch (every component shifted far outside the
-    // training range): reconstruction error under the frozen codebooks
-    // explodes, and the operator is told to rebuild
-    val shifted = iid.withColumn("embedding",
-      transform(col("embedding"), x => x + lit(5.0)))
-    val bad = ProductQuantization.indexHealth(
-      path, shifted, "vec_id", "embedding").collect().head
-    assert(bad.getAs[Boolean]("drift_flagged"),
-      s"shifted-distribution append must flag drift: $bad")
-    assert(bad.getAs[Double]("delta_qerr") > 2 * bad.getAs[Double]("train_qerr"))
   }
 
   test("multi-query batch search equals the single-query search, query by query") {

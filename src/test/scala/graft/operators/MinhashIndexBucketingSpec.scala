@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * shuffle ONLY the delta side — the corpus band rows read
   * bucket-in-place — and return exactly what the direct
   * (recompute-the-corpus) incremental path returns. The
-  * write → append → probe contract is BandIndexSpec's, per family. */
+  * write → probe contract is BandIndexSpec's, per family. */
 class MinhashIndexBucketingSpec extends SparkSpecBase {
 
   private def docs = Tables.documents(spark, sfDir)

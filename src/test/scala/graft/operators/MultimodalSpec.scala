@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpecBase
+import graft.fixtures.MediaFixtures
 import graft.sources.Tables
 
 class MultimodalSpec extends SparkSpecBase {
@@ -15,17 +14,6 @@ class MultimodalSpec extends SparkSpecBase {
     assert(schema("bytes").dataType.typeName === "binary")
     assert(schema("media_id").dataType.typeName === "long")
     assert(media.count() === 500)
-  }
-
-  test("feature extraction is deterministic, drops the payload, and preserves cardinality") {
-    val f1 = Multimodal.extractFeatures(media).collect().sortBy(_.media_id)
-    val f2 = Multimodal.extractFeatures(media).collect().sortBy(_.media_id)
-    assert(f1.length === 500)
-    assert(f1.map(_.checksum).sameElements(f2.map(_.checksum)))
-    // brightness/entropy in sane ranges; text bytes are ASCII-ish
-    assert(f1.forall(f => f.brightness > 0 && f.brightness < 1))
-    assert(f1.forall(f => f.entropy > 0 && f.entropy <= 8))
-    assert(f1.forall(_.n_bytes > 0))
   }
 
   test("BMP codec round-trip with hand-computed golden values") {
@@ -78,38 +66,16 @@ class MultimodalSpec extends SparkSpecBase {
     assert(vid.width.isEmpty && vid.sample_rate.isEmpty && vid.mean_byte.isEmpty)
   }
 
-  test("repartitionForMedia sizes partitions by payload bytes") {
-    val df = media.toDF()
-    val re = Multimodal.repartitionForMedia(df, "bytes", targetBytes = 16 * 1024)
-    assert(re.rdd.getNumPartitions >= 5) // ~130KB corpus / 16KB target
-    assert(re.count() === 500)
-  }
-
-  test("frame sampling fans out video rows without accumulating state") {
-    val frames = Multimodal.sampleFrames(media.filter(col("kind") === "video"), everyMs = 5000)
-    val n = frames.count()
-    assert(n > 0)
-    val perMedia = frames.groupBy("media_id").count().collect()
-    // duration_ms = 100×chars; 5s sampling → chars/50 frames per item
-    assert(perMedia.forall(_.getAs[Long]("count") >= 1))
-    assert(frames.schema("frame_bytes").dataType.typeName === "binary")
-  }
-  test("resizeImages: real nearest-neighbor BMP downscale, exact pixel provenance") {
-    import spark.implicits._
+  test("resizeBmp24 fixture: real nearest-neighbor BMP downscale, exact pixel provenance") {
     // hand-built 4x4 BMP whose pixel (x,y) encodes its coordinates
     val px = Array.tabulate(4 * 4 * 3) { i =>
       val p = i / 3; ((p % 4) * 16 + (p / 4)).toByte
     }
     val bmp = MediaCodec.encodeBmp24(4, 4, px)
-    val rows = Seq(
-      Multimodal.MediaRow(1L, "image", "bmp", 4, 4, 0L, bmp),
-      Multimodal.MediaRow(2L, "video", "mp4", 0, 0, 1000L, Array[Byte](1, 2, 3))).toDS()
-    val out = Multimodal.resizeImages(rows, 4, 2)
-      .collect().map(r => r.getLong(0) ->
-        (Option(r.get(3)).map(_.asInstanceOf[Array[Byte]]), r.get(4))).toMap
-    // non-BMP row degrades to null output, not a failure
-    assert(out(2L)._1.isEmpty && out(2L)._2 == null)
-    val resized = out(1L)._1.get
+    // a non-BMP payload and an unaligned target stride give None
+    assert(MediaFixtures.resizeBmp24(Array[Byte](1, 2, 3), 4, 2).isEmpty)
+    assert(MediaFixtures.resizeBmp24(bmp, 3, 2).isEmpty)
+    val resized = MediaFixtures.resizeBmp24(bmp, 4, 2).get
     val info = MediaCodec.decodeBmp(resized).get
     assert(info.width === 4 && info.height === 2)
     // nearest-neighbor in LOGICAL space: output pixel (x,y) takes source

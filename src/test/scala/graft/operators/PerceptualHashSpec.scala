@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.fixtures.MediaFixtures
 import graft.operators.BandIndex.BandPlan
 import graft.operators.Multimodal.MediaRow
 
@@ -79,7 +80,7 @@ class PerceptualHashSpec extends SparkSpecBase {
 
   test("resize invariance: a half-size copy hashes within maxHamming") {
     val bmp = MediaCodec.encodeBmp24(W, H, baseA)
-    val small = MediaCodec.resizeBmp24(bmp, W / 2, H / 2).get
+    val small = MediaFixtures.resizeBmp24(bmp, W / 2, H / 2).get
     val d = ham(hashOf(bmp), hashOf(small))
     assert(d <= PerceptualHash.DefaultMaxHamming,
       s"2x downscale moved the hash $d bits")
@@ -96,7 +97,7 @@ class PerceptualHashSpec extends SparkSpecBase {
     MediaRow(1L, "image", "png", W, H, 0L, MediaCodec.encodePng24(W, H, baseA)),
     MediaRow(2L, "image", "jpeg", W, H, 0L, MediaCodec.encodeJpeg24(W, H, baseA)),
     MediaRow(3L, "image", "bmp", W / 2, H / 2,
-      0L, MediaCodec.resizeBmp24(MediaCodec.encodeBmp24(W, H, baseA), W / 2, H / 2).get),
+      0L, MediaFixtures.resizeBmp24(MediaCodec.encodeBmp24(W, H, baseA), W / 2, H / 2).get),
     MediaRow(4L, "image", "png", W, H, 0L, MediaCodec.encodePng24(W, H, baseB)),
     MediaRow(5L, "image", "bin", 0, 0, 0L, Array[Byte](1, 2, 3)))
 
@@ -143,9 +144,7 @@ class PerceptualHashSpec extends SparkSpecBase {
 
   test("debiased: corpus-median bits are ~50/50 balanced by construction") {
     import spark.implicits._
-    val media = spark.createDataset(debiasRows)
-    val meds = PerceptualHash.phashMedians(media)
-    val sigs = PerceptualHash.phashSignaturesWithMedians(media, meds)
+    val sigs = PerceptualHash.phashSignaturesDebiased(spark.createDataset(debiasRows))
       .collect().map(_.getLong(1))
     val n = sigs.length.toDouble
     (0 until PerceptualHash.PhashBits).foreach { i =>
@@ -164,24 +163,6 @@ class PerceptualHashSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L), (1L, 3L), (2L, 3L)),
       s"expected the {1,2,3} copy cluster, got $pairs")
-  }
-
-  test("debiased frozen-median delta scoring equals the self-trained signatures") {
-    import spark.implicits._
-    val corpus = spark.createDataset(debiasRows.filter(_.media_id != 2L))
-    val delta = spark.createDataset(debiasRows.filter(_.media_id == 2L))
-    val meds = PerceptualHash.phashMedians(corpus)
-    // frozen model: the delta's signature must depend only on the
-    // stored medians — score it against the corpus's banded index
-    val idx = BandIndex.build(Dedup.packedSignatureBanded(
-      PerceptualHash.phashSignaturesWithMedians(corpus, meds),
-      "media_id", "sig", PerceptualHash.DefaultPhashPlan))
-    val inc = Dedup.packedSignaturePairsIncremental(
-      PerceptualHash.phashSignaturesWithMedians(delta, meds), idx,
-      "media_id", "sig", PerceptualHash.DefaultPhashPlan)
-      .filter(col("score") <= PerceptualHash.DefaultMaxHamming)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(inc == Set((2L, 1L), (2L, 3L)), s"got $inc")
   }
 
   test("curateImages keeps the LARGEST copy per cluster; corrupt rows drop") {
@@ -249,35 +230,6 @@ class PerceptualHashSpec extends SparkSpecBase {
       assert(got.nonEmpty && got === direct.collect().toSeq)
       assertDeltaOnlyExchange(via)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
-  test("phash append preserves layout and equals the union-of-band-rows contract") {
-    import spark.implicits._
-    val delta = spark.createDataset(mediaRows.filter(_.media_id == 2L))
-    // base {1, 5}, appended batch {3, 4}: post-append, delta 2 must see
-    // both its base pair (2,1) and its appended pair (2,3)
-    val base = spark.createDataset(mediaRows.filter(m => Set(1L, 5L)(m.media_id)))
-    val batch = spark.createDataset(mediaRows.filter(m => Set(3L, 4L)(m.media_id)))
-    val table = "ph_idx_append_spec"
-    val path = java.nio.file.Files.createTempDirectory("graft-ph-aidx").toString
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    BandIndex.write(phashIndex(base), table, nBuckets = 4, path = Some(path))
-    BandIndex.append(PerceptualHash.phashBanded(batch), table, nBuckets = 4)
-    withNoBroadcast {
-      val viaAppended = PerceptualHash.phashPairsIncremental(delta, spark.table(table))
-        .orderBy("delta_id", "corpus_id")
-      // frozen-decision reference: capped base index ∪ uncapped batch rows
-      val reference = PerceptualHash.phashPairsIncremental(
-        delta,
-        phashIndex(base).unionByName(phashIndex(batch, maxBucket = None)))
-        .orderBy("delta_id", "corpus_id")
-      val got = viaAppended.collect().toSeq
-      assert(got.map(r => (r.getLong(0), r.getLong(1))).toSet ==
-        Set((2L, 1L), (2L, 3L)), s"got $got")
-      assert(got === reference.collect().toSeq)
-      assertDeltaOnlyExchange(viaAppended)
-    }
-    spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   // ---- corpus-scaled band plans + multiprobe --------------------------

@@ -185,4 +185,148 @@ object ReferenceModels {
       (id, n, prob, if (prob >= 0.5) 1 else 0)
     }.sortBy(_._1)
   }
+
+  /** Dot product as a higher-order-function column: the executable spec
+    * of `VectorFunctions.dot`'s accumulation order (sequential,
+    * left-to-right), which the native `graft_dot` must equal
+    * bit-for-bit. */
+  def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+
+  /** SimHash bit vector (length `bits`, must be 64) over whitespace
+    * tokens: bit j is 1 iff the sum over tokens of ±1 votes is positive,
+    * where token t's vote for bit j is bit j of t's 64-bit hash (md5's
+    * first 16 hex chars split into two 32-bit words, the words DuckDB
+    * recomputes for the dd_simhash oracle). With [[packBits]], the
+    * interpreted spec of the native `graft_simhash64`. */
+  def simhashBits(tokenArr: Column, bits: Int): Column = {
+    require(bits == 64, "simhashBits derives votes from one 64-bit hash")
+    // hash words: [hi32, lo32] from md5 hex chars 1-8 / 9-16
+    val tokHashes = transform(tokenArr, t => array(
+      conv(substring(md5(t), 1, 8), 16, 10).cast("long"),
+      conv(substring(md5(t), 9, 8), 16, 10).cast("long")))
+    transform(
+      aggregate(
+        tokHashes,
+        array_repeat(lit(0L), bits),
+        (acc, h) => zip_with(
+          acc,
+          transform(sequence(lit(0), lit(bits - 1)), j => {
+            // bit j of the 64-bit hash: word hi for j<32, lo after;
+            // (word >> (31 - j%32)) & 1 — identical arithmetic in DuckDB
+            val word = element_at(h, when(j < 32, 1).otherwise(2))
+            val bit = call_function("shiftright", word, lit(31) - pmod(j, lit(32)))
+              .bitwiseAND(lit(1L))
+            when(bit === 1, 1L).otherwise(-1L)
+          }),
+          (a, b) => a + b)),
+      v => when(v > 0, 1).otherwise(0))
+  }
+
+  /** A `bits`-element (≤ 64) 0/1 bit array packed into one long: bit i
+    * of the result = element i of the array, so the packed form's
+    * band-b shift+mask slice equals the array form's slice. */
+  def packBits(bitsArr: Column, bits: Int): Column = {
+    require(bits >= 1 && bits <= 64, s"packBits packs 1..64 bits, got $bits")
+    aggregate(
+      zip_with(bitsArr, sequence(lit(0), lit(bits - 1)),
+        (b, i) => call_function("shiftleft", b.cast("long"), i)),
+      lit(0L), (acc, x) => acc.bitwiseOR(x))
+  }
+
+  /** Word n-grams WITH duplicates: frequency is the point for
+    * repetition signals. */
+  def grams(tok: Column, n: Int): Column = {
+    val g = transform(
+      sequence(lit(0), size(tok) - n),
+      i => concat_ws(" ", (0 until n).map(k => element_at(tok, i + k + 1)): _*))
+    when(size(tok) >= n, g).otherwise(array().cast("array<string>"))
+  }
+
+  /** Max gram multiplicity as the longest run in the sorted array —
+    * with [[grams]], the interpreted spec of `graft_maxmult_ngram`. */
+  def topRunCountHof(gramArr: Column): Column = aggregate(
+    array_sort(gramArr),
+    struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
+    (acc, x) => {
+      val run = when(x === acc.getField("prev"), acc.getField("run") + 1)
+        .otherwise(lit(1L))
+      struct(x.as("prev"), run.as("run"),
+        greatest(acc.getField("best"), run).as("best"))
+    },
+    acc => acc.getField("best"))
+
+  /** BPE training over a plain word-count map — the differential twin
+    * of `TextAnalysis.bpeTrain` (same tie-break, same greedy
+    * application), compared in BpeTrainSpec. */
+  def bpeTrainReference(
+      wordFreq: Map[String, Long], rounds: Int): Seq[(Int, String, String, Long)] = {
+    // CODE-POINT symbols (not UTF-16 chars): Spark's substring slices
+    // by code point, so a supplementary-plane character (emoji) must be
+    // ONE reference symbol too, never a surrogate half
+    def codePoints(w: String): Vector[String] = {
+      val out = Vector.newBuilder[String]
+      var i = 0
+      while (i < w.length) {
+        val cp = w.codePointAt(i)
+        out += new String(Character.toChars(cp))
+        i += Character.charCount(cp)
+      }
+      out.result()
+    }
+    // tie-break in UTF-8 BYTE order — the binary ordering Spark's
+    // orderBy uses on strings; Java's compareTo orders by UTF-16 unit,
+    // which ranks [U+E000, U+FFFF] above supplementary characters
+    def utf8Lt(a: String, b: String): Boolean = {
+      val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
+      var i = 0
+      while (i < x.length && i < y.length) {
+        val c = (x(i) & 0xff) - (y(i) & 0xff)
+        if (c != 0) return c < 0
+        i += 1
+      }
+      x.length < y.length
+    }
+    var words: Map[Vector[String], Long] = wordFreq.toSeq
+      .map { case (w, f) => codePoints(w) -> f }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    val out = Seq.newBuilder[(Int, String, String, Long)]
+    var r = 1
+    var done = false
+    while (r <= rounds && !done) {
+      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
+      words.foreach { case (syms, f) =>
+        syms.sliding(2).foreach {
+          case Seq(x, y) => counts((x, y)) = counts.getOrElse((x, y), 0L) + f
+          case _ =>
+        }
+      }
+      if (counts.isEmpty) done = true
+      else {
+        val ord = new Ordering[((String, String), Long)] {
+          def compare(p: ((String, String), Long), q: ((String, String), Long)): Int = {
+            if (p._2 != q._2) return java.lang.Long.compare(q._2, p._2)
+            if (p._1._1 != q._1._1)
+              return if (utf8Lt(p._1._1, q._1._1)) -1 else 1
+            if (p._1._2 == q._1._2) 0
+            else if (utf8Lt(p._1._2, q._1._2)) -1 else 1
+          }
+        }
+        val ((a, b), cnt) = counts.min(ord)
+        out += ((r, a, b, cnt))
+        words = words.toSeq.map { case (syms, f) =>
+          val merged = Vector.newBuilder[String]
+          var i = 0
+          while (i < syms.length) {
+            if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
+              merged += (a + b); i += 2
+            } else { merged += syms(i); i += 1 }
+          }
+          merged.result() -> f
+        }.groupMapReduce(_._1)(_._2)(_ + _)
+        r += 1
+      }
+    }
+    out.result()
+  }
 }

@@ -25,20 +25,6 @@ class SamplingSpec extends SparkSpecBase {
     assert(math.abs(frac("test") - 0.1) < 0.03, frac)
   }
 
-  test("sampleByKey is partitioning-invariant and salt-independent") {
-    val df = (1L to 2000L).toDF("id")
-    def ids(d: org.apache.spark.sql.DataFrame, salt: String): Set[Long] =
-      Sampling.sampleByKey(d, "id", 0.3, salt).collect().map(_.getLong(0)).toSet
-    // same rows regardless of physical layout
-    assert(ids(df, "a") === ids(df.repartition(13), "a"))
-    // different salts draw (near-)independent samples
-    val a = ids(df, "a")
-    val b = ids(df, "b")
-    assert(a !== b)
-    val overlap = (a & b).size.toDouble
-    assert(math.abs(overlap / 2000.0 - 0.09) < 0.04, s"overlap $overlap") // ≈ 0.3²
-  }
-
   test("capPerGroup keeps at most N per group, key-stable as other groups grow") {
     val df = (1L to 900L).map(i => (i, Seq("a", "b", "c")((i % 3).toInt)))
       .toDF("id", "grp")

@@ -34,20 +34,6 @@ class SkewSpec extends SparkSpecBase {
     }
   }
 
-  test("saltedJoin equals plain join") {
-    val ev = Tables.events(spark, sfDir).select("event_id", "user_id", "value")
-    val users = Tables.events(spark, sfDir)
-      .select(col("user_id")).distinct()
-      .withColumn("user_tag", concat(lit("u"), col("user_id")))
-    val direct = ev.join(users, "user_id")
-      .select("event_id", "user_tag")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val salted = Skew.saltedJoin(ev, users, "user_id", saltFactor = 4)
-      .select("event_id", "user_tag")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(salted === direct)
-  }
-
   test("AQE splits a skewed shuffle join at runtime (the config-level skew path)") {
     import spark.implicits._
     // the other half of the skew story next to manual salting: AQE's

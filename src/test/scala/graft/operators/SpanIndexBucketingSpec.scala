@@ -56,46 +56,4 @@ class SpanIndexBucketingSpec extends SparkSpecBase {
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
-
-  test("append preserves layout and equals the union-of-postings contract") {
-    // split the corpus: build on 'base', append 'batch'; searching the
-    // delta must equal searching the in-memory union of the GUARDED
-    // base index and the batch's UNGUARDED postings (the frozen
-    // doc-freq-decision contract), and the plan must stay bucketed
-    val base = corpus.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val batch = corpus.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val table = "span_idx_append_spec"
-    val path = Files.createTempDirectory("graft-span-aidx").toString
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    Dedup.writeSpanPostingIndexBucketed(
-      base, "doc_id", "text", table, nBuckets = 4, path = Some(path))
-    Dedup.appendToSpanPostingIndexBucketed(
-      batch, "doc_id", "text", table, nBuckets = 4)
-
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val viaAppended = Dedup.sharedSpansIncrementalFromIndex(
-        delta, spark.table(table), "doc_id", "text")
-        .orderBy("delta_id", "corpus_id")
-      val reference = Dedup.sharedSpansIncrementalFromIndex(
-        delta,
-        Dedup.spanPostingIndex(base, "doc_id", "text")
-          .unionByName(Dedup.spanPostingIndex(
-            batch, "doc_id", "text", maxDocFreqFraction = None)),
-        "doc_id", "text")
-        .orderBy("delta_id", "corpus_id")
-      val got = viaAppended.collect().toSeq
-      assert(got.nonEmpty && got === reference.collect().toSeq)
-      val plan = viaAppended.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(plan.contains("Bucketed: true"),
-        s"appended table must still scan bucketed:\n$plan")
-      val hExchanges = """Exchange hashpartitioning\(h#""".r.findAllIn(plan).length
-      assert(hExchanges === 1, s"append must not reintroduce a corpus exchange:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
-  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{GraftExtensions, SparkSpecBase}
 import graft.functions.VectorFunctions
+import graft.operators.ReferenceModels
 import graft.sources.Tables
 
 class DotProductExprSpec extends SparkSpecBase {
@@ -18,7 +19,7 @@ class DotProductExprSpec extends SparkSpecBase {
       .limit(2000)
       .select(
         VectorFunctions.dot(col("a.v"), col("b.v")).as("native"),
-        VectorFunctions.dotHof(col("a.v"), col("b.v")).as("hof"))
+        ReferenceModels.dotHof(col("a.v"), col("b.v")).as("hof"))
     // bitwise compare (=== on doubles treats -0.0/NaN loosely; cast to
     // binary representation via string of exact double is overkill —
     // equality + a zero-diff check covers the accumulation-order claim)

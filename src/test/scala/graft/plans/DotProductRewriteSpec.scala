@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{GraftExtensions, SparkSpecBase}
 import graft.functions.VectorFunctions
+import graft.operators.ReferenceModels
 import graft.sources.Tables
 
 class DotProductRewriteSpec extends SparkSpecBase {
@@ -11,7 +12,7 @@ class DotProductRewriteSpec extends SparkSpecBase {
   test("the optimizer rewrites the HOF dot-product idiom to native graft_dot") {
     GraftExtensions.register(spark)
     val q = Tables.embeddings(spark, sfDir)
-      .select(VectorFunctions.dotHof(
+      .select(ReferenceModels.dotHof(
         VectorFunctions.asDoubles(col("embedding")),
         VectorFunctions.asDoubles(col("embedding"))).as("d"))
     val optimized = q.queryExecution.optimizedPlan.toString
@@ -55,7 +56,7 @@ class DotProductRewriteSpec extends SparkSpecBase {
         (2L, Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](3.0, 4.0)),
         (3L, Seq[java.lang.Double](1.0), Seq[java.lang.Double](3.0, 4.0)))
         .toDF("id", "a", "b")
-      val out = df.select(col("id"), VectorFunctions.dotHof(col("a"), col("b")).as("d"))
+      val out = df.select(col("id"), ReferenceModels.dotHof(col("a"), col("b")).as("d"))
       assert(out.queryExecution.optimizedPlan.toString.contains("graft_dot"),
         out.queryExecution.optimizedPlan.toString)
       val rows = out.collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap

@@ -165,6 +165,56 @@ class KernelModesSpec extends SparkSpecBase {
     assert(top === Set((1L, 2L), (2L, 1L)))
   }
 
+  // bucket members as (doc, sig) structs: null and empty member arrays,
+  // one member, duplicate doc ids, and a 5-member bucket that cap = 2
+  // sends through the survivor + chain branch; band 1 exercises the
+  // first-colliding-band skip
+  private val packedBuckets = Seq[(Long, Option[Seq[(Long, Long)]], Int)](
+    (1L, Some(Seq((3L, 0x0F0FL), (1L, 0x0F0EL), (2L, 0xF0F0L))), 0),
+    (2L, None, 0),
+    (3L, Some(Seq.empty), 0),
+    (4L, Some(Seq((9L, 0x1234L))), 0),
+    (5L, Some(Seq((7L, 0x00FFL), (7L, 0x00FEL), (8L, 0x00FFL))), 0),
+    (6L, Some(Seq((15L, 0x0F01L), (11L, 0x0F03L), (14L, 0xFF01L),
+      (12L, 0x0F01L), (13L, 0x0001L))), 1))
+
+  test("BucketPairs (packed): eval and codegen agree (null, empty, one member, duplicate ids, cap = 2)") {
+    val df = stored("packed_pairs", packedBuckets.toDF("id", "ms", "band"))
+    assertModesAgree(df, "graft_packed_pairs",
+      NativeFunctions.packedPairs(col("ms"), col("band"), 4, -1, -1).as("all"),
+      NativeFunctions.packedPairs(col("ms"), col("band"), 4, 2, -1).as("capped"),
+      NativeFunctions.packedPairs(col("ms"), col("band"), 4, 2, 3).as("capped_near"))
+  }
+
+  test("BucketPairs (Jaccard): eval and codegen agree (null, empty, one member, duplicate ids, cap = 2)") {
+    def sig(bits: Long): Seq[Long] = (0 until 4).map(i => (bits >> (4 * i)) & 0xFL)
+    val df = stored("jaccard_pairs", packedBuckets.map { case (id, ms, band) =>
+      (id, ms.map(_.map { case (doc, s) => (doc, sig(s)) }), band)
+    }.toDF("id", "ms", "band"))
+    assertModesAgree(df, "graft_jaccard_pairs",
+      NativeFunctions.jaccardPairs(col("ms"), col("band"), 1, -1, -1.0).as("all"),
+      NativeFunctions.jaccardPairs(col("ms"), col("band"), 1, 2, -1.0).as("capped"),
+      NativeFunctions.jaccardPairs(col("ms"), col("band"), 1, 2, 0.5).as("capped_near"))
+  }
+
+  test("Md5Word60: eval and codegen agree (null, empty, non-ASCII strings)") {
+    val df = stored("md5w60", Seq[(Long, Option[String])](
+      (1L, Some("the quick brown fox")), (2L, None), (3L, Some("")),
+      (4L, Some("naïve café ☕")), (5L, Some("the quick brown fox"))).toDF("id", "s"))
+    assertModesAgree(df, "graft_md5w60",
+      TextFunctions.shingleKey(col("s")).as("h"))
+  }
+
+  test("NGramMaxMultiplicity: eval and codegen agree (null, empty, null tokens, n > tokens)") {
+    val df = stored("maxmult", (tokenArrays ++ Seq[(Long, Option[Seq[String]])](
+      (6L, Some(Seq("a", "b", "a", "b", "a", "b"))),
+      (7L, Some(Seq("x", null, "x", null, "x"))))).toDF("id", "toks"))
+    assertModesAgree(df, "graft_maxmult_ngram",
+      NativeFunctions.maxMultNgram(col("toks"), 1).as("m1"),
+      NativeFunctions.maxMultNgram(col("toks"), 2).as("m2"),
+      NativeFunctions.maxMultNgram(col("toks"), 8).as("m8"))
+  }
+
   override def afterAll(): Unit = {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     super.afterAll()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
 import graft.functions.NativeFunctions.maxMultNgram
-import graft.operators.TextAnalysis.{grams, topRunCountHof}
+import graft.operators.ReferenceModels.{grams, topRunCountHof}
 
 class MaxMultiplicityExprSpec extends SparkSpecBase {
 

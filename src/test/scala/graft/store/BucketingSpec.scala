@@ -22,8 +22,8 @@ class BucketingSpec extends SparkSpecBase {
       // eliminates the exchanges — the shape that matters when BOTH
       // sides are 100 TB facts
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.coLocatedJoin(spark,
-        "bkt_customer", "bkt_orders", "c_custkey", "o_custkey")
+      val joined = spark.table("bkt_customer")
+        .join(spark.table("bkt_orders"), col("c_custkey") === col("o_custkey"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
       // and it still computes the right join

@@ -19,7 +19,8 @@ import graft.sources.Tables
   * own inference gives, it follows a rewritten file, it is converted
   * under each calling session's conf, and reading starts no Spark job.
   * [[Storage.readParquetOneSplit]] is one partition exactly when Spark
-  * reads the path as one split. */
+  * reads the path as one split. [[Storage.writeCsv]] round-trips through
+  * the typed [[Storage.readCsv]]. */
 class StorageSpec extends SparkSpecBase {
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
@@ -126,6 +127,22 @@ class StorageSpec extends SparkSpecBase {
       assert(partitioning(s"$dir/one").isInstanceOf[UnknownPartitioning])
     } finally before.fold(spark.conf.unset(openCost))(spark.conf.set(openCost, _))
     assert(partitioning(s"$dir/one") === SinglePartition)
+  }
+
+  test("writeCsv: the typed readCsv returns the rows, every part has the header, a rewrite replaces") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-csv").resolve("out").toString
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, name STRING, score DOUBLE")
+    val first = Seq((1L, "a", 0.5), (2L, "b, quoted", -1.25), (3L, "c", 3.0))
+    Storage.writeCsv(first.toDF("id", "name", "score").repartition(2), dir)
+    def read() = Storage.readCsv(spark, dir, schema).as[(Long, String, Double)].collect().toSet
+    assert(read() === first.toSet)
+    val parts = Storage.listObjects(spark, dir).filter(_.endsWith(".csv"))
+    assert(parts.nonEmpty)
+    parts.foreach(p => assert(Storage.readCsvHeader(spark, p) === Some(Seq("id", "name", "score")), p))
+    val second = Seq((9L, "z", 9.0))
+    Storage.writeCsv(second.toDF("id", "name", "score"), dir)
+    assert(read() === second.toSet)
   }
 
   test("building every table's frame starts no Spark job") {

@@ -65,9 +65,9 @@ class StreamingAnnSpec extends SparkSpecBase {
           (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3), id))
       }
     val ckpt = Files.createTempDirectory("graft-sann-ckpt").toString
-    StreamingAnn.serveAvailableNow(
+    AvailableNow.drain(StreamingAnn.serve(
       stream, "qid", "qvec", path, corpus, "vec_id", "embedding",
-      sink, ckpt, nProbe = 4, rerank = 100, topK = 10)(spark)
+      sink, nProbe = 4, rerank = 100, topK = 10), ckpt)
 
     // every query answered exactly once, in its own micro-batch
     assert(collected.map(_._1).distinct.sorted === Seq(0L, 1L, 2L, 3L, 4L))
@@ -102,17 +102,12 @@ class StreamingAnnSpec extends SparkSpecBase {
     val stream = spark.readStream.schema(qSchema).json(s"$src/f*")
     val collected = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Double, Int)]
-    val q = StreamingAnn.serveLsh(
+    AvailableNow.drain(StreamingAnn.serveLsh(
       stream, "qid", "qvec", path, dim, nBits,
       (batch, _) => collected.synchronized {
         collected ++= batch.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-      })
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-sann-lsh-ck").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }), Files.createTempDirectory("graft-sann-lsh-ck").toString)
     (0L until 5L).foreach { qid =>
       val got = collected.filter(_._1 == qid).sortBy(_._4)
         .map(t => (t._2, t._3)).toSeq

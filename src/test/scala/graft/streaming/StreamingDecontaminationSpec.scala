@@ -58,8 +58,8 @@ class StreamingDecontaminationSpec extends SparkSpecBase {
       }
     }
     val ckpt = Files.createTempDirectory("graft-sdecon-ckpt").toString
-    StreamingDecontamination.gateAvailableNow(
-      stream, "doc_id", "text", idxPath, sink, ckpt)(spark)
+    AvailableNow.drain(StreamingDecontamination.gate(
+      stream, "doc_id", "text", idxPath, sink), ckpt)
 
     // survivor set equals the batch anti-join exactly, each id once
     assert(survivors.map(_._1).toSet === truthSurvivors)

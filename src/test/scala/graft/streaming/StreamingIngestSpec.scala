@@ -85,65 +85,6 @@ class StreamingIngestSpec extends SparkSpecBase {
     assert(spark.table("sessions").filter(col("n_events") <= 0).count() === 0)
   }
 
-  test("streaming dedup drops replayed events within the watermark horizon") {
-    val events = spark.read.schema(SchemaRegistry.events.schema)
-      .json(s"$landing/*.jsonl")
-      .filter(col("user_id") === "user_2")
-    val dir = Files.createTempDirectory("graft-dedup-src")
-    // simulate an at-least-once source: the same batch lands twice
-    events.coalesce(1).write.mode("overwrite").json(s"$dir/drop1")
-    events.coalesce(1).write.mode("append").json(s"$dir/drop1")
-    val stream = spark.readStream.schema(SchemaRegistry.events.schema)
-      .json(s"$dir/drop1")
-    val ckpt = Files.createTempDirectory("graft-dedup-ckpt").toString
-    val q = StreamingIngest.dedupStream(
-      stream, Seq("user_id", "session_id", "timestamp", "event_name"))
-      .writeStream
-      .format("memory").queryName("dedup_out")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val distinctInput = events
-      .select("user_id", "session_id", "timestamp", "event_name").distinct().count()
-    assert(spark.table("dedup_out").count() === distinctInput,
-      "duplicated drop must collapse to the distinct event set")
-  }
-
-  test("stream-stream correlation joins plays to watch events within the time bound") {
-    def src() = spark.readStream.schema(SchemaRegistry.events.schema)
-      .json(s"$landing/*.jsonl")
-      .filter(col("user_id") === "user_4")
-    val plays = src().filter(col("event_name") === "play")
-      .select(col("user_id").as("p_user"), col("timestamp").as("p_ts"),
-        col("session_id").as("p_session"))
-    val watches = src().filter(col("event_name") === "watch_time")
-      .select(col("user_id").as("w_user"), col("timestamp").as("w_ts"),
-        col("value").as("w_value"))
-    val ckpt = Files.createTempDirectory("graft-corr-ckpt").toString
-    val q = StreamingIngest.correlateStreams(
-      plays, watches, "p_user", "w_user", "p_ts", "w_ts", within = "3 minutes")
-      .writeStream
-      .format("memory").queryName("correlated")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("correlated").collect()
-    // fixture: every session is play at minute m, watch events at m+1/m+2
-    // → each play matches exactly its session's 2 watch events
-    assert(rows.nonEmpty)
-    assert(rows.forall { r =>
-      val p = r.getAs[java.sql.Timestamp]("p_ts").getTime
-      val w = r.getAs[java.sql.Timestamp]("w_ts").getTime
-      w >= p && w - p <= 3 * 60 * 1000L
-    })
-    // 10 sessions × 2 watch events for user_4 (non-first sessions emit 2)
-    assert(rows.length === 20, s"got ${rows.length} correlated pairs")
-  }
-
   test("checkpointed kill/restart: session state recovers, sink stays exactly-once, output equals batch") {
     val events = spark.read.schema(SchemaRegistry.events.schema)
       .json(s"$landing/*.jsonl")

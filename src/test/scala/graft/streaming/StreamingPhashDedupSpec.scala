@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.types._
 
 import graft.SparkSpecBase
+import graft.fixtures.MediaFixtures
 import graft.operators.{MediaCodec, Multimodal, PerceptualHash}
 
 /** Streaming pHash near-duplicate detection — arrival-time parity with
@@ -54,7 +55,7 @@ class StreamingPhashDedupSpec extends SparkSpecBase {
   private def payloads: Seq[(Long, Array[Byte])] = Seq(
     1L -> MediaCodec.encodePng24(W, H, baseA),
     2L -> MediaCodec.encodeJpeg24(W, H, baseA),
-    3L -> MediaCodec.resizeBmp24(MediaCodec.encodeBmp24(W, H, baseA), W / 2, H / 2).get,
+    3L -> MediaFixtures.resizeBmp24(MediaCodec.encodeBmp24(W, H, baseA), W / 2, H / 2).get,
     4L -> MediaCodec.encodePng24(W, H, baseB),
     5L -> Array[Byte](1, 2, 3))
 
@@ -99,7 +100,7 @@ class StreamingPhashDedupSpec extends SparkSpecBase {
       (1L, MediaCodec.encodePng24(W, H, baseA), "2024-01-01T10:00:00"),
       (4L, MediaCodec.encodePng24(W, H, baseB), "2024-01-01T10:05:00"),
       (6L, MediaCodec.encodeJpeg24(W, H, baseA), "2024-01-01T10:30:00"),
-      (7L, MediaCodec.resizeBmp24(
+      (7L, MediaFixtures.resizeBmp24(
         MediaCodec.encodeBmp24(W, H, baseA), W / 2, H / 2).get, "2024-01-01T10:32:00"))
     val src = Files.createTempDirectory("graft-sph-h-src").toString
     rows.toDF("media_id", "bytes", "ts")

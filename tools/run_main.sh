@@ -1,9 +1,12 @@
 #!/bin/bash
 # Run a graft main directly against the compiled classes + the image's
 # Spark jars, bypassing the sbt launcher (and its project lock) — same
-# JVM flags as build.sbt's `run / javaOptions`.
+# JVM flags as build.sbt's `run / javaOptions`. The classes are those of
+# the checkout this script sits in (run `sbt compile` there first); the
+# jars come from $SPARK_HOME (default /opt/spark).
 #   tools/run_main.sh graft.Bench [args...]
 CLASS="$1"; shift
+REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -20,5 +23,5 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:${SPARK_HOME:-/opt/spark}/jars/*" \
   "$CLASS" "$@"
