@@ -5,12 +5,13 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 import graft.plans._
 
-/** Columns over the native Catalyst expressions in `graft.plans`.
-  * Each one constructs its expression directly (ColumnBridge), so an
-  * operator built on them runs on any session without installing
-  * anything into its FunctionRegistry. The `graft_*` SQL names exist
-  * only for SQL text (GraftExtensions); the plans are the same either
-  * way. */
+/** Columns over the native Catalyst expressions in `graft.plans` —
+  * with `VectorFunctions.dot` and the `TextFunctions` key builders, the
+  * only way to reach a native kernel. Each one constructs its
+  * expression directly (ColumnBridge), so an operator built on them
+  * runs on any session without installing anything into its
+  * FunctionRegistry or optimizer. The `graft_*` names are the
+  * expressions' `prettyName`s in plans, not registered functions. */
 object NativeFunctions {
 
   /** k-component MinHash signature of an array<string> of shingles. */

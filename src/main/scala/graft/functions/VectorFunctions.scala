@@ -17,7 +17,7 @@ object VectorFunctions {
   def asDoubles(v: Column): Column = v.cast("array<double>")
 
   /** Dot product via the native codegen'd expression (graft.plans.
-    * DotProduct, `graft_dot` in SQL text): the d-length loop compiles
+    * DotProduct, `graft_dot` in plans): the d-length loop compiles
     * to straight Java instead of ~4·d interpreted HOF node evaluations —
     * the inner loop of bucketing, scoring, and assignment. The column
     * carries the expression itself, so it needs nothing registered on

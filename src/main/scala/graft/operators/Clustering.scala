@@ -28,8 +28,9 @@ import graft.functions.VectorFunctions._
   *     same trick SimilaritySearch.ivfNeighbors uses for its quantizer);
   *   - assignment: argmin L2 distance, computed as argmax of
   *     (v·c − ½·|c|²) so every FP operation is a sequential dot product
-  *     (bit-identical to DuckDB's list_dot_product — proven in
-  *     DotProductRewriteSpec) plus one correctly-rounded multiply and
+  *     (bit-identical to the HOF formulation — DotProductExprSpec —
+  *     and to DuckDB's list_dot_product, which the k-means oracle gates
+  *     hash-match) plus one correctly-rounded multiply and
   *     subtract; ties break toward the smaller centroid id;
   *   - mean update: component means are ROUNDED to `roundDp` decimals
   *     each round, so the engines' different partial-sum orders (both

@@ -192,7 +192,7 @@ object Dedup {
       n: Int = DefaultShingleN, threshold: Double = 0.5,
       maxDocFreq: Option[Long] = None,
       maxDocFreqFraction: Option[Double] = Some(DefaultMaxDocFreqFraction),
-      fast: Boolean = false, broadcastEval: Boolean = true): DataFrame = {
+      fast: Boolean = false): DataFrame = {
     // Postings carry the 60-bit md5 shingle KEY (TextFunctions.shingleKey
     // — the span family's convention since round 9), not the n-token
     // string: the cross-corpus join and the doc-freq guard exchange 8 B
@@ -203,22 +203,21 @@ object Dedup {
     // distinct-shingle count (n_sh), so a (negligible, spec-bounded)
     // key collision can only perturb `common` identically cross-engine.
     //
-    // `broadcastEval` (default ON — the production asymmetry: eval/
+    // The eval side is always broadcast (the production asymmetry: eval/
     // benchmark suites are orders of magnitude smaller than the training
     // corpus, and the doc-freq guard prunes them further): the guarded
-    // eval posting rides to every task as a broadcast, so the train
-    // posting — the 100 TB side — NEVER shuffles, and the per-(train,
-    // eval) match counts collapse in the map-side partial aggregate
-    // before the only exchange (pair-sized, not match-sized). Without
-    // it the shingle-match set — quadratic-ish in common-phrase density
-    // — is exchanged raw, which profiling showed was this operator's
-    // entire >2×-DuckDB gap at sf0.1 (7.5 s → scan-bound). Set false
-    // only for an eval corpus too large for executor memory.
+    // eval posting rides to every task, so the train posting — the
+    // 100 TB side — NEVER shuffles, and the per-(train, eval) match
+    // counts collapse in the map-side partial aggregate before the only
+    // exchange (pair-sized, not match-sized). A shuffled join would
+    // exchange the shingle-match set raw — quadratic-ish in
+    // common-phrase density — which profiling showed was this
+    // operator's entire >2×-DuckDB gap at sf0.1 (7.5 s → scan-bound).
     contaminationPairsFromIndex(
       train,
       evalPostingIndex(evalCorpus, idCol, textCol, n,
         maxDocFreq, maxDocFreqFraction, fast),
-      idCol, textCol, n, threshold, fast, broadcastEval)
+      idCol, textCol, n, threshold, fast)
   }
 
   /** The EVAL side of [[contaminationPairs]] as a PERSISTABLE index —
@@ -281,14 +280,14 @@ object Dedup {
   /** [[contaminationPairs]] against an already-built (possibly
     * parquet-reloaded) [[evalPostingIndex]] — the per-ingest search:
     * the train batch pays one tokenize→shingle→key scan and one
-    * (broadcast by default) equi-join; the eval corpus is never
+    * broadcast equi-join; the eval corpus is never
     * re-read. Same output contract as the full operator — layout must
     * not change results (proven by the shared oracle of the _idx gate,
     * the convention every persisted index here follows). */
   def contaminationPairsFromIndex(
       train: DataFrame, evalIndex: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, threshold: Double = 0.5,
-      fast: Boolean = false, broadcastEval: Boolean = true): DataFrame = {
+      fast: Boolean = false): DataFrame = {
     val t = train
       .select(col(idCol).as("train_id"), tokens(col(textCol)).as("toks"))
       .select(col("train_id"), shinglesFromTokens(col("toks"), n).as("sh"))
@@ -296,7 +295,7 @@ object Dedup {
       .filter(col("s").isNotNull)
       .select(col("train_id"), shingleKey(col("s"), fast).as("h"))
     val e = evalIndex.select(col("eval_id"), col("n_sh"), col("h"))
-    t.join(if (broadcastEval) broadcast(e) else e, "h")
+    t.join(broadcast(e), "h")
       .groupBy(col("train_id"), col("eval_id"), col("n_sh"))
       .agg(count(lit(1)).as("common"))
       .withColumn("containment", col("common").cast("double") / col("n_sh"))
@@ -1228,22 +1227,18 @@ object Dedup {
       train: DataFrame, evalCorpus: DataFrame, idCol: String, textCol: String,
       k: Int = DefaultSpanK, minSpanTokens: Int = DefaultMinSpanTokens,
       maxDocFreqFraction: Option[Double] = Some(DefaultMaxDocFreqFraction),
-      fast: Boolean = false, broadcastEval: Boolean = true): DataFrame = {
+      fast: Boolean = false): DataFrame = {
     val t = positionalPosting(train, idCol, textCol, k, None, fast)
     val e = positionalPosting(evalCorpus, idCol, textCol, k, maxDocFreqFraction, fast)
     // t.doc =!= e.doc: an id collision across the two corpora would
     // otherwise report a full-length diagonal-0 self-span as
     // contamination (ids are disjoint in the gated split, but the
     // operator shouldn't rely on that).
-    // broadcast(e) by default: the contaminationPairs asymmetry —
-    // eval/benchmark suites are orders of magnitude smaller than the
-    // training corpus and guard-pruned further, so the train posting
-    // (the 100 TB side) never shuffles for this join. broadcastEval =
-    // false is the off-switch for a giant eval union that outgrows
-    // executor memory (mirrors contaminationPairs' knob): the join
-    // falls back to a hash-shuffle on h.
-    val eSide = if (broadcastEval) broadcast(e.as("e")) else e.as("e")
-    val matches = t.as("t").join(eSide,
+    // broadcast(e): the contaminationPairs asymmetry — eval/benchmark
+    // suites are orders of magnitude smaller than the training corpus
+    // and guard-pruned further, so the train posting (the 100 TB side)
+    // never shuffles for this join.
+    val matches = t.as("t").join(broadcast(e.as("e")),
         col("t.h") === col("e.h") && col("t.doc") =!= col("e.doc"))
       .select(
         col("t.doc").as("doc_a"), col("e.doc").as("doc_b"),

@@ -508,7 +508,7 @@ object ProductQuantization {
     * per-query jobs. Per query the result is row-for-row identical to
     * [[ivfPqTopKFromIndex]] at the same knobs (same probe ranking, same
     * ADC expression, same (score DESC, vec_id ASC) total order —
-    * ProductQuantizationSpec asserts the equality query-by-query).
+    * IvfPqIndexSpec asserts the equality query-by-query).
     *
     * Shape: the batch's (query, probed-cells) routing is computed
     * driver-side with the SAME [[probeCells]] ranking the single-query
@@ -520,12 +520,12 @@ object ProductQuantization {
     * query probing them. Queries ride back in as a broadcast (qid, q,
     * cell) routing table joined on `cell`, so a code row is scored only
     * against the queries that probed its cell. Per-query pools and the
-    * final top-k reduce through [[graft.functions.TopKAggregator]] —
-    * partial map-side heaps, shuffle carries ≤ rerank·queries rows, no
-    * per-query window over the scan. The payload is (score, −vec_id):
-    * the aggregator keeps the k LARGEST pairs, so negating the id makes
-    * its score-tie prefer the SMALLER vec_id — the single-query plan's
-    * TakeOrdered order, kept bit-compatible.
+    * final top-k reduce through [[SimilaritySearch.topKPerVector]] (the
+    * native `TopKPairsAgg`) — partial map-side buffers, shuffle carries
+    * ≤ rerank·queries rows, no per-query window over the scan. Its
+    * (score DESC, vec_id ASC) order prefers the SMALLER vec_id on a
+    * score tie — the single-query plan's TakeOrdered order, kept
+    * bit-compatible.
     *
     * Output: (qid, vec_id, cos, rank) with rank 1 = best, one block of
     * ≤ topK rows per query; a query whose probed cells hold no vectors

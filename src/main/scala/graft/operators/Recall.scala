@@ -17,7 +17,8 @@ import graft.functions.VectorFunctions._
   * Scale design: ground truth is exact but only over a SAMPLED query
   * set — Q query vectors broadcast (Q·dim doubles, KB–MB scale) against
   * one distributed corpus scan, per-query top-k bounded map-side by
-  * TopKAggregator. Sampling the queries, never the corpus: recall@k is
+  * the native top-k aggregate (`SimilaritySearch.topKPerVector`).
+  * Sampling the queries, never the corpus: recall@k is
   * an average over queries, so a query sample estimates it with
   * ~1/√Q error, while sampling the CORPUS would change every query's
   * true neighbor set and measure recall against the wrong truth.

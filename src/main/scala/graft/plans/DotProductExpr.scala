@@ -20,9 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * keeps every LSH/IVF query hash-matchable cross-engine (asserted in
   * DotProductExprSpec). Null semantics match the HOF form exactly:
   * length mismatch yields NULL (zip_with pads with null) and ANY null
-  * element yields NULL (null poisons the running Add) — exactness here
-  * is what makes the DotProductRewrite optimizer rule a safe
-  * substitution on arbitrary inputs, not just trusted dense vectors.
+  * element yields NULL (null poisons the running Add), so it equals
+  * the HOF form on arbitrary inputs, not just trusted dense vectors
+  * (DotProductExprSpec, KernelModesSpec).
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

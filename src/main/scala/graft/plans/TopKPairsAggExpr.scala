@@ -16,10 +16,11 @@ import org.apache.spark.sql.types._
   *
   * Duplicate collapse is part of the CONTRACT (multi-table LSH feeds
   * the same (cos, neighbor) once per colliding table; a duplicate must
-  * not occupy two of the k slots) — compare-equality on the raw double
-  * bits via ==, matching the List.distinct of the typed aggregator this
-  * replaces (NaN scores: Double.compare orders them strongest, also
-  * matching the Scala Ordering the old buffer used).
+  * not occupy two of the k slots). Scores order and collapse as in
+  * Spark SQL's `DISTINCT` + `ORDER BY score DESC` (the window
+  * formulation this aggregate replaces): each score is normalized on
+  * insert as Spark normalizes grouping keys, -0.0 to 0.0 and every NaN
+  * to the canonical NaN, which then ranks above every number.
   */
 final class TopKPairsBuffer(val k: Int) {
   val scores = new Array[Double](k)
@@ -32,14 +33,13 @@ final class TopKPairsBuffer(val k: Int) {
     c > 0 || (c == 0 && id1 < id2)
   }
 
-  def insert(s: Double, id: Long): Unit = {
+  def insert(score: Double, id: Long): Unit = {
+    val s = if (score.isNaN) Double.NaN else if (score == 0.0) 0.0 else score
     if (n == k && !stronger(s, id, scores(n - 1), ids(n - 1))) return
     // find insertion point among the ≤k kept entries (linear: k is tiny)
     var pos = 0
     while (pos < n && stronger(scores(pos), ids(pos), s, id)) pos += 1
-    // exact dup: bit-image equality (boxed java.lang.Double semantics, the
-    // contract of the typed aggregator this replaced) — NaN dups collapse,
-    // (+0.0,-0.0) pairs do NOT
+    // exact dup: bit-image equality of the normalized score
     if (pos < n && ids(pos) == id &&
         java.lang.Double.doubleToLongBits(scores(pos)) == java.lang.Double.doubleToLongBits(s)) return
     if (pos >= k) return
@@ -57,21 +57,22 @@ final class TopKPairsBuffer(val k: Int) {
   }
 }
 
-/** Native map-side-bounded top-k aggregate — `graft_topk(score, id, k)`
-  * → `array<struct<cos:double, neighbor_id:bigint>>`, strongest first
-  * (score DESC, id ASC), exact (score, id) duplicates collapsed.
+/** Native map-side-bounded top-k aggregate (`NativeFunctions.topK`,
+  * shown as `graft_topk` in plans): (score, id) →
+  * `array<struct<cos:double, neighbor_id:bigint>>`, strongest first
+  * (score DESC, id ASC), exact (score, id) duplicates collapsed, NULL
+  * scores and NULL ids skipped.
   *
   * This is the hot reduce of every ANN/recall surface (brute-force
   * ground truth, multi-table LSH, IVF, PQ rerank): each map task
-  * reduces its partition to ≤k entries per group BEFORE the exchange —
-  * same shuffle contract as the typed `TopKAggregator` it replaces, but
-  * evaluated directly on InternalRow columns: no Tuple2/List encoder
-  * round-trip per input row, no object churn per update (the typed
-  * Dataset formulation paid a DeserializeToObject → SerializeFromObject
-  * pass over the full pair stream plus a List re-sort per insert —
-  * measured ~2-3× the whole gate's DuckDB budget at sf0.1). Buffer
-  * serde (partial → final exchange) is a fixed-width byte image of the
-  * two primitive arrays.
+  * reduces its partition to ≤k entries per group BEFORE the exchange,
+  * evaluated directly on InternalRow columns: no encoder round-trip
+  * per input row, no object churn per update (a typed-Dataset
+  * aggregator paid a DeserializeToObject → SerializeFromObject pass
+  * over the full pair stream plus a List re-sort per insert — measured
+  * ~2-3× the whole gate's DuckDB budget at sf0.1). Buffer serde
+  * (partial → final exchange) is a fixed-width byte image of the two
+  * primitive arrays.
   */
 case class TopKPairsAgg(
     left: Expression,

@@ -58,7 +58,8 @@ object AnnQueries {
     * collides in ANY of the plane tables; duplicate candidates collapse
     * (identical cosine from the same vectors) and the per-vector top-k
     * uses the same (cos DESC, neighbor ASC) order the single-table gate
-    * pins. Spark bounds the top-k map-side via TopKAggregator; the
+    * pins. Spark bounds the top-k map-side via the native top-k
+    * aggregate (`SimilaritySearch.topKPerVector`); the
     * oracle's DISTINCT + row_number is the closed form of the same
     * result. */
   private val LshMultiTables = 2

@@ -49,15 +49,17 @@ object Storage {
   private[store] def fileSystem(spark: SparkSession, path: String): FileSystem =
     fs(spark, path)
 
-  /** Recursive listing by prefix — ref minio_client.py:106-112. */
+  /** Recursive listing by prefix, every object listed (hidden names
+    * too) — ref minio_client.py:106-112. Walks `listStatus` like
+    * [[leafFiles]]: `listFiles` would build a `LocatedFileStatus` per
+    * file, which on the local filesystem loads its permission through
+    * a forked `ls -ld`. */
   def listObjects(spark: SparkSession, prefix: String): Seq[String] = {
     val f = fs(spark, prefix)
+    def walk(p: Path): Seq[String] = f.listStatus(p).toSeq.flatMap(s =>
+      if (s.isDirectory) walk(s.getPath) else Seq(s.getPath.toString))
     val p = new Path(prefix)
-    if (!f.exists(p)) return Seq.empty
-    val it = f.listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) buf += it.next().getPath.toString
-    buf.toSeq
+    if (f.exists(p)) walk(p) else Seq.empty
   }
 
   /** Byte-identical copy (landing → raw keeps source formats verbatim —

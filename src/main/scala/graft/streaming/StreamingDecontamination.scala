@@ -42,18 +42,17 @@ object StreamingDecontamination {
       evalIndexPath: String,
       sink: (DataFrame, DataFrame, Long) => Unit,
       n: Int = Dedup.DefaultShingleN, threshold: Double = 0.5,
-      fast: Boolean = false, broadcastEval: Boolean = true): DataStreamWriter[Row] = {
+      fast: Boolean = false): DataStreamWriter[Row] = {
     require(docs.isStreaming, "gate expects a streaming document frame")
     val spark = docs.sparkSession
     // the frozen index loads once on the driver side of the plan; each
-    // micro-batch broadcasts the (guarded, pruned) posting rows —
-    // broadcastEval = false is the giant-eval-union off-switch, passed
-    // straight through to the batch operator
+    // micro-batch broadcasts the (guarded, pruned) posting rows through
+    // the batch operator
     val evalIndex = graft.store.Storage.readParquet(spark, evalIndexPath)
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val pairs = Dedup.contaminationPairsFromIndex(
-          batch, evalIndex, idCol, textCol, n, threshold, fast, broadcastEval)
+          batch, evalIndex, idCol, textCol, n, threshold, fast)
           .localCheckpoint() // both halves of the split read it
         // alias the pairs side: a caller whose idCol is literally named
         // "train_id" would otherwise make batch(idCol) === col("train_id")

@@ -10,9 +10,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * technique (Delta/Frameless do the same) for Spark 4's sql-api
   * `Column`, whose Expression constructor moved behind
   * `classic.ExpressionUtils`. Every operator builds its native
-  * expressions through this (graft.functions.NativeFunctions), so
-  * sessions never need `GraftExtensions.register`, which is only for
-  * writing `graft_*` SQL text. */
+  * expressions through this (graft.functions.NativeFunctions), so no
+  * session needs a function or rule registered. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

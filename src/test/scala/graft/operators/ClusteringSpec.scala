@@ -28,7 +28,6 @@ class ClusteringSpec extends SparkSpecBase {
   test("Lloyd rounds strictly improve (or hold) the k-means objective") {
     val emb = Tables.embeddings(spark, sfDir)
     import graft.functions.VectorFunctions._
-    graft.GraftExtensions.register(spark)
     // objective after `iters` rounds: mean squared L2 distance to the
     // assigned centroid, centroids recomputed from the final assignment
     def objective(iters: Int): Double = {

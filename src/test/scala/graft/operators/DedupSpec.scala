@@ -56,14 +56,13 @@ class DedupSpec extends SparkSpecBase {
     //    and the native codegen'd expression (graft.plans.SimHash64 — the
     //    production signature since round 14) equals the composed form
     //    bit-for-bit on every document
-    graft.GraftExtensions.register(spark)
     docs
       .select(col("doc_id").as("doc"), TextFunctions.tokens(col("text")).as("toks"))
       .filter(size(array_remove(col("toks"), "")) >= 1)
       .select(col("doc"),
         ReferenceModels.simhashBits(col("toks"), 64).as("sig"),
         ReferenceModels.packBits(ReferenceModels.simhashBits(col("toks"), 64), 64).as("packed"),
-        call_function("graft_simhash64", col("toks")).as("native"))
+        graft.functions.NativeFunctions.simhash64(col("toks")).as("native"))
       .collect().foreach { r =>
         val arr = r.getSeq[Int](1); val p = r.getLong(2); val nv = r.getLong(3)
         assert(nv == p,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.functions.NativeFunctions
 
 /** Seeded-random differential tests: each scale-safe operator plan must
   * equal its naive (obviously-correct, quadratic) formulation on
@@ -51,23 +52,6 @@ class RandomizedDifferentialSpec extends SparkSpecBase {
     assert(got.length === got.toSet.size)
   }
 
-  test("TopKAggregator equals sort-take-k per group on random scores") {
-    val rnd = new scala.util.Random(0x70FF)
-    val rows = (1 to 2000).map(i =>
-      ((rnd.nextInt(20)).toLong, rnd.nextInt(50).toDouble, i.toLong))
-    val k = 5
-    val agg = new graft.functions.TopKAggregator(k).toColumn.name("top")
-    val got = rows.toDS()
-      .map { case (g, s, p) => (g, (s, p)) }
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(agg)
-      .collect().map { case (g, top) => g -> top.toList }.toMap
-    val naive = rows.groupBy(_._1).map { case (g, rs) =>
-      g -> rs.map(r => (r._2, r._3)).sorted(Ordering[(Double, Long)].reverse).take(k).toList
-    }
-    assert(got === naive)
-  }
-
   test("native graft_md5w60 equals conv(substring(md5(s),1,15),16,10) on random strings") {
     import org.apache.spark.sql.functions.{col, conv, md5, substring}
     val rnd = new scala.util.Random(0x5EED)
@@ -109,10 +93,9 @@ class RandomizedDifferentialSpec extends SparkSpecBase {
   }
 
   test("native graft_topk (topKPerVector) equals sort-take-k with dup collapse on random scores") {
-    // the native TypedImperativeAggregate replacing the typed
-    // TopKAggregator (round 15): same total order (score DESC, id ASC),
-    // same exact-duplicate collapse — checked against a naive driver
-    // reduction over random pairs INCLUDING injected exact duplicates
+    // total order (score DESC, id ASC), exact duplicates collapsed —
+    // checked against a naive driver reduction over random pairs
+    // INCLUDING injected exact duplicates
     val rnd = new scala.util.Random(0xA11CE)
     val base = (1 to 3000).map(_ =>
       ((rnd.nextInt(25)).toLong, rnd.nextInt(40).toDouble, rnd.nextInt(200).toLong))
@@ -313,16 +296,15 @@ class RandomizedDifferentialSpec extends SparkSpecBase {
       ((-1L, nanCent) +: (base ++ Array(base(0).clone(), base(1).clone(), base(2).clone()))
         .zipWithIndex.map { case (c, i) => (i.toLong * 7, c) }.toSeq).sortBy(_._1)
     val vecs = (0L until 200L).map(i => i -> Array.fill(dim)(rnd.nextGaussian()))
-    graft.GraftExtensions.register(spark)
     val df = vecs.map { case (i, v) => (i, v.toSeq) }.toDF("id", "v")
       .select(col("id"), col("v").cast("array<double>").as("v"))
     val gotNearest = df.select(col("id"),
-      call_function("graft_nearest_center", col("v"),
-        typedLit(cents.map(_._2.toSeq)), typedLit(cents.map(_._1))).as("c"))
+      NativeFunctions.nearestCenter(col("v"), cents.map(_._2).toArray,
+        cents.map(_._1).toArray).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val gotTop = df.select(col("id"),
-      call_function("graft_nearest_centers", col("v"),
-        typedLit(cents.map(_._2.toSeq)), typedLit(cents.map(_._1)), lit(p)).as("cs"))
+      NativeFunctions.nearestCenters(col("v"), cents.map(_._2).toArray,
+        cents.map(_._1).toArray, p).as("cs"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
     def l2Scores(v: Array[Double]) = cents.map { case (cid, c) =>
       val dot = c.indices.foldLeft(0.0)((s, j) => s + v(j) * c(j))

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpecBase}
+import graft.SparkSpecBase
 import graft.functions.VectorFunctions
 import graft.operators.ReferenceModels
 import graft.sources.Tables
@@ -10,8 +10,6 @@ import graft.sources.Tables
 class DotProductExprSpec extends SparkSpecBase {
 
   test("native graft_dot is bit-identical to the HOF formulation") {
-    // no registration: the DotProductRewrite rule it installs would turn
-    // the HOF side into graft_dot as well
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), VectorFunctions.asDoubles(col("embedding")).as("v"))
     val paired = e.as("a").crossJoin(e.as("b"))
@@ -37,10 +35,9 @@ class DotProductExprSpec extends SparkSpecBase {
   }
 
   test("length mismatch yields null (zip_with-compatible), not an error") {
-    GraftExtensions.register(spark)
-    val row = spark.sql(
-      "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d)) AS d," +
-        " graft_dot(array(1.0d, 2.0d), array(3.0d, 10.0d)) AS ok")
+    val row = spark.range(1).select(
+      VectorFunctions.dot(array(lit(1.0), lit(2.0)), array(lit(3.0))).as("d"),
+      VectorFunctions.dot(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(10.0))).as("ok"))
       .collect().head
     assert(row.isNullAt(0))
     assert(row.getDouble(1) === 23.0)

@@ -15,8 +15,12 @@ import graft.functions.{TextFunctions, VectorFunctions}
   * codegen off, NO_CODEGEN), over hostile inputs — null arrays, null
   * elements, length/dim mismatch, empty arrays. Inputs are read back
   * from parquet so no optimizer rule can evaluate the projection
-  * before execution. */
+  * before execution. The one native aggregate, TopKPairsAgg, is pinned
+  * the same way across its execution paths: object hash, sort-based
+  * fallback and sort aggregation. */
 class KernelModesSpec extends SparkSpecBase {
+
+  private object PlanNodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
   import spark.implicits._
 
@@ -213,6 +217,107 @@ class KernelModesSpec extends SparkSpecBase {
       NativeFunctions.maxMultNgram(col("toks"), 1).as("m1"),
       NativeFunctions.maxMultNgram(col("toks"), 2).as("m2"),
       NativeFunctions.maxMultNgram(col("toks"), 8).as("m8"))
+  }
+
+  // (g, score, id) rows in three parquet files, read back as three
+  // partitions. Each small group puts one hostile case at the top-k
+  // boundary: ±0.0 scores (g 2), NaN and ±Infinity scores with NULL
+  // scores and ids (g 3), Long.MinValue/MaxValue ids tied on score
+  // (g 4), an all-NULL group (g 5) and the pair (0.5, 42) in every file
+  // (g 6); g 1 is 300 rows, far over k, mixing all of them
+  private val topKFiles: Seq[Seq[(Long, Option[Double], Option[Long])]] = {
+    val small = Seq[(Long, Option[Double], Option[Long])](
+      (2L, Some(0.0), Some(7L)), (2L, Some(-0.0), Some(3L)),
+      (2L, Some(-0.0), Some(7L)), (2L, Some(-1.0), Some(1L)),
+      (3L, Some(Double.NaN), Some(5L)), (3L, Some(Double.NaN), Some(2L)),
+      (3L, None, Some(1L)), (3L, Some(Double.PositiveInfinity), None),
+      (3L, Some(Double.PositiveInfinity), Some(Long.MaxValue)),
+      (3L, Some(Double.NegativeInfinity), Some(Long.MinValue)),
+      (4L, Some(0.5), Some(Long.MaxValue)), (4L, Some(0.5), Some(0L)),
+      (4L, Some(0.5), Some(Long.MinValue)), (4L, Some(0.25), Some(Long.MinValue)),
+      (5L, None, None), (5L, None, Some(2L)), (5L, Some(1.0), None))
+    val big = (0 until 300).map { i =>
+      val score = i % 9 match {
+        case 0 => Some(Double.NaN)
+        case 1 => Some(if (i % 2 == 0) 0.0 else -0.0)
+        case 2 => None
+        case r => Some((i % 5).toDouble - r)
+      }
+      val id = i % 13 match {
+        case 0 => None
+        case 1 => Some(Long.MinValue)
+        case 2 => Some(Long.MaxValue)
+        case _ => Some((i % 37).toLong)
+      }
+      (1L, score, id)
+    }
+    val dup = (6L, Some(0.5), Some(42L))
+    Seq(small.take(7) ++ big.take(100) :+ dup :+ ((2L, Some(0.0), Some(7L))),
+      small.drop(7) ++ big.slice(100, 200) :+ dup :+ ((3L, Some(Double.NaN), Some(5L))),
+      big.drop(200) :+ dup :+ ((6L, Some(0.25), Some(41L))) :+ ((2L, Some(-0.0), Some(3L))))
+  }
+
+  test("TopKPairsAgg: hash, sort-fallback and sort aggregation agree with DISTINCT + row_number") {
+    val path = s"$dir/topk"
+    topKFiles.zipWithIndex.foreach { case (rows, i) =>
+      rows.toDF("g", "score", "id").coalesce(1)
+        .write.mode(if (i == 0) "overwrite" else "append").parquet(path)
+    }
+    val input = spark.read.parquet(path)
+    assert(input.rdd.getNumPartitions === topKFiles.size)
+    val ks = Seq(1, 3)
+    // g -> per-k list of (score bits, id), strongest first
+    def canonTop(rows: Array[Row]): Map[Long, Seq[List[(Long, Long)]]] =
+      rows.map(r => r.getLong(0) -> ks.indices.map(i =>
+        r.getSeq[Row](i + 1).map(p =>
+          (java.lang.Double.doubleToLongBits(p.getDouble(0)), p.getLong(1))).toList)).toMap
+    def run(mode: String, kv: (String, String)*): Map[Long, Seq[List[(Long, Long)]]] =
+      withConf(kv: _*) {
+        val df = input.groupBy("g").agg(
+          NativeFunctions.topK(col("score"), col("id"), ks.head).as("top1"),
+          NativeFunctions.topK(col("score"), col("id"), ks(1)).as("top3"))
+        val out = canonTop(df.collect())
+        val plan = df.queryExecution.executedPlan
+        val aggs = PlanNodes.collect(plan) {
+          case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
+          case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
+        }
+        assert(aggs.nonEmpty && aggs.forall(_.nodeName == mode), s"$mode expected in:\n$plan")
+        if (kv.exists(_._1.endsWith("fallbackThreshold"))) {
+          val fellBack = aggs.map(_.metrics("numTasksFallBacked").value).sum
+          assert(fellBack > 0, s"no task fell back to sort-based aggregation:\n$plan")
+        }
+        out
+      }
+    val hash = run("ObjectHashAggregate")
+    val fallback = run("ObjectHashAggregate",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1")
+    val sorted = run("SortAggregate",
+      "spark.sql.execution.useObjectHashAggregateExec" -> "false")
+    assert(fallback === hash)
+    assert(sorted === hash)
+
+    input.createOrReplaceTempView("topk_input")
+    val reference = ks.map { k =>
+      spark.sql(
+        s"""SELECT g, score, id FROM (
+           |  SELECT g, score, id,
+           |    row_number() OVER (PARTITION BY g ORDER BY score DESC, id ASC) AS rn
+           |  FROM (SELECT DISTINCT g, score, id FROM topk_input
+           |        WHERE score IS NOT NULL AND id IS NOT NULL))
+           |WHERE rn <= $k ORDER BY g, rn""".stripMargin)
+        .collect().toSeq
+        .groupBy(_.getLong(0)).view.mapValues(_.map(r =>
+          (java.lang.Double.doubleToLongBits(r.getDouble(1)), r.getLong(2))).toList).toMap
+    }
+    assert(hash.keySet === (1L to 6L).toSet)
+    hash.foreach { case (g, tops) =>
+      ks.indices.foreach { i =>
+        assert(tops(i) === reference(i).getOrElse(g, Nil), s"g=$g k=${ks(i)}")
+      }
+    }
+    assert(hash(5L) === Seq(Nil, Nil), "a group with no complete pair keeps an empty top-k")
+    assert(hash(6L)(1).count(_._2 == 42L) === 1, "the pair in every file takes one slot")
   }
 
   override def afterAll(): Unit = {

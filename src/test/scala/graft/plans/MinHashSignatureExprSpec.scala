@@ -2,30 +2,28 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpecBase}
-import graft.functions.TextFunctions
+import graft.SparkSpecBase
+import graft.functions.{NativeFunctions, TextFunctions}
 import graft.operators.{Dedup, ReferenceModels}
 import graft.sources.Tables
 
 class MinHashSignatureExprSpec extends SparkSpecBase {
 
   test("native expression is bit-identical to the HOF formulation") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
       .select(col("doc_id"), TextFunctions.shinglesFromTokens(col("toks"), 3).as("sh"))
     val both = docs.select(
       col("doc_id"),
       ReferenceModels.minhashSignature(col("sh"), 64).as("hof"),
-      call_function("graft_minhash", col("sh"), lit(64)).as("native"))
+      NativeFunctions.minhash(col("sh"), 64, fast = false).as("native"))
     val mismatches = both.filter(col("hof") =!= col("native")).count()
     assert(mismatches === 0)
   }
 
   test("native expression participates in codegen (no fallback)") {
-    GraftExtensions.register(spark)
     val plan = Tables.documents(spark, sfDir)
-      .select(call_function("graft_minhash", split(col("text"), " "), lit(16)))
+      .select(NativeFunctions.minhash(split(col("text"), " "), 16, fast = false))
       .queryExecution.executedPlan.toString
     // the "*(n)" prefix marks operators inside a WholeStageCodegen stage
     assert(plan.contains("*(1) Project [graft_minhash"), plan)
@@ -47,16 +45,15 @@ class MinHashSignatureExprSpec extends SparkSpecBase {
   }
 
   test("fast (xxhash64) mode: native and HOF agree bit-for-bit; md5 default untouched") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
       .select(col("doc_id"), TextFunctions.shinglesFromTokens(col("toks"), 3).as("sh"))
       .filter(size(col("sh")) > 0)
     val both = docs.select(
       ReferenceModels.minhashSignature(col("sh"), 64, fast = true).as("hof_xx"),
-      call_function("graft_minhash", col("sh"), lit(64), lit(true)).as("native_xx"),
+      NativeFunctions.minhash(col("sh"), 64, fast = true).as("native_xx"),
       ReferenceModels.minhashSignature(col("sh"), 64).as("hof_md5"),
-      call_function("graft_minhash", col("sh"), lit(64)).as("native_md5"))
+      NativeFunctions.minhash(col("sh"), 64, fast = false).as("native_md5"))
     assert(both.filter(col("hof_xx") =!= col("native_xx")).count() === 0)
     assert(both.filter(col("hof_md5") =!= col("native_md5")).count() === 0)
     // and fast mode is a genuinely different hash family, not a no-op
@@ -71,17 +68,5 @@ class MinHashSignatureExprSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (truth & found).size.toDouble / truth.size
     assert(recall >= 0.9, s"fast-hash recall $recall over ${truth.size} true pairs")
-  }
-
-  test("SQL registration via extensions class") {
-    // simulate spark.sql.extensions wiring
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    // runtime registry path already covered; here just assert the SQL
-    // surface works end-to-end
-    GraftExtensions.register(spark)
-    val row = spark.sql(
-      "SELECT graft_minhash(array('a b c','b c d'), 8) AS sig").collect().head
-    assert(row.getSeq[Long](0).length === 8)
   }
 }

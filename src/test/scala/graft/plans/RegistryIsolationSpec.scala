@@ -8,7 +8,8 @@ import graft.sources.Tables
 
 /** Operators build their native columns directly (ColumnBridge), so they
   * run on a session that never registered anything and leave its
-  * FunctionRegistry untouched: `graft_*` names are only for SQL text. */
+  * FunctionRegistry and optimizer untouched: the `graft_*` names are only
+  * the expressions' `prettyName`s in plans, never registered functions. */
 class RegistryIsolationSpec extends SparkSpecBase {
 
   private val operators: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(

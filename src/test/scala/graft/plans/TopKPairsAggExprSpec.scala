@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
+import graft.functions.NativeFunctions
 
 /** Plan- and buffer-level locks for the native top-k aggregate: the
   * differential spec (RandomizedDifferentialSpec) proves VALUES; these
@@ -13,11 +14,10 @@ class TopKPairsAggExprSpec extends SparkSpecBase {
 
   test("partial graft_topk sits BELOW the exchange (map-side bounding)") {
     import spark.implicits._
-    graft.GraftExtensions.register(spark)
     val df = (1 to 10000).map(i => ((i % 7).toLong, (i % 101).toDouble, i.toLong))
       .toDF("vec_id", "cos", "neighbor_id")
     val agg = df.groupBy(col("vec_id"))
-      .agg(call_function("graft_topk", col("cos"), col("neighbor_id"), lit(3)).as("top"))
+      .agg(NativeFunctions.topK(col("cos"), col("neighbor_id"), 3).as("top"))
     agg.collect()
     val plan = agg.queryExecution.executedPlan.toString
     val partialIdx = plan.indexOf("partial_graft_topk")
@@ -42,22 +42,24 @@ class TopKPairsAggExprSpec extends SparkSpecBase {
     assert(back.scores.take(back.n).map(java.lang.Double.doubleToRawLongBits).toSeq
       === buf.scores.take(buf.n).map(java.lang.Double.doubleToRawLongBits).toSeq)
     assert(back.ids.take(back.n).toSeq === buf.ids.take(buf.n).toSeq)
-    // NaN ranks strongest (Double.compare order, matching the old typed
-    // buffer); the 0.9 tie orders id ASC; dup (0.3, 9) collapsed
+    // NaN ranks strongest (SQL's DESC order); the 0.9 tie orders id
+    // ASC; dup (0.3, 9) collapsed
     assert(back.ids.take(back.n).toSeq === Seq(7L, 1L, 2L, 4L, 9L))
   }
 
-  test("dup collapse is bit-image equality: NaN dups collapse, ±0.0 don't") {
-    // boxed java.lang.Double semantics — the contract of the typed
-    // aggregator this replaced (round-15 ADVICE): primitive == kept NaN
-    // dups apart (NaN != NaN) and wrongly merged (+0.0, -0.0)
+  test("dup collapse is SQL equality: NaN dups collapse, and so do ±0.0") {
+    // Spark SQL's DISTINCT normalizes -0.0 to 0.0 and every NaN to the
+    // canonical NaN: primitive == would keep NaN dups apart (NaN != NaN),
+    // and Double.compare would rank 0.0 above -0.0 where SQL ties them
+    // and breaks the tie on id
     val buf = new TopKPairsBuffer(5)
-    Seq((Double.NaN, 7L), (Double.NaN, 7L), (0.0, 3L), (-0.0, 3L))
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff0000000000001L)
+    Seq((Double.NaN, 7L), (otherNaN, 7L), (0.0, 5L), (-0.0, 3L), (-0.0, 5L))
       .foreach { case (s, id) => buf.insert(s, id) }
-    assert(buf.n === 3, "NaN dup must collapse; +0.0/-0.0 are distinct")
-    assert(buf.ids.take(buf.n).toSeq === Seq(7L, 3L, 3L))
+    assert(buf.n === 3, "NaN dups and the ±0.0 dup must collapse")
+    assert(buf.ids.take(buf.n).toSeq === Seq(7L, 3L, 5L))
     assert(buf.scores.take(buf.n).map(java.lang.Double.doubleToRawLongBits).toSeq
-      === Seq(Double.NaN, 0.0, -0.0).map(java.lang.Double.doubleToRawLongBits))
+      === Seq(Double.NaN, 0.0, 0.0).map(java.lang.Double.doubleToRawLongBits))
   }
 
   test("merge of two full buffers keeps the global strongest k") {
